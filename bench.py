@@ -441,6 +441,24 @@ def _round_of(path: str) -> int:
     return int(m.group(1)) if m else -1
 
 
+#: Core count of the full machine the driver records on: the count a
+#: record without a ``cpus`` field (or a ``c<N>`` file-name tag) was
+#: measured at, and the one count whose BENCH_LOCAL stem carries no tag.
+FULL_MACHINE_CPUS = 32
+
+
+def _record_cpus(path: str, doc: dict) -> int:
+    """The core count ``doc`` (read from ``path``) was recorded at: its
+    ``cpus`` field, else the file name's ``c<N>`` tag
+    (BENCH_r17_c8.json, BENCH_LOCAL_c8_r17.json), else the full
+    machine — never the host reading it (a 4-core host used to take a
+    cpus-less c32 record as its own)."""
+    if doc.get("cpus"):
+        return doc["cpus"]
+    m = re.search(r"(?:^|_)c(\d+)(?:_|\.json$)", os.path.basename(path))
+    return int(m.group(1)) if m else FULL_MACHINE_CPUS
+
+
 def _run_cpus() -> int:
     """The core count this run executes under (the driver contract's
     $SPARK_GRAFT_CPUS, falling back to the host)."""
@@ -543,7 +561,7 @@ def _bench_history(
         # r17 c8 diagnostic ratchet against the c32 r16 record and
         # exit rc=1 on the mapInPandas family (honestly ~2x slower at
         # 1/4 the cores).
-        rec_cpus = doc.get("cpus") or (os.cpu_count() or cpus)
+        rec_cpus = _record_cpus(path, doc)
         if not any_cpus and rec_cpus != cpus:
             continue
         # Heal drift-poisoned write-backs in PRE-r17 records (the same
@@ -592,15 +610,11 @@ def _write_local(record: dict) -> None:
     rounds = [_round_of(p) for p in glob.glob(os.path.join(here, "BENCH_r*.json"))]
     n = (max(rounds) if rounds else 0) + 1
     sf = record.get("sf")
-    # Low-core diagnostic runs get their own stem (VERDICT r16 #6): the
-    # driver's c8 scaling run used to OVERWRITE the same-round c32
-    # record, clobbering the main ratchet's baseline.
+    # Every core count but the full machine's gets its own stem
+    # (VERDICT r16 #6): the driver's c8 scaling run used to OVERWRITE
+    # the same-round c32 record, clobbering the main ratchet's baseline.
     cpus = record.get("cpus")
-    c_tag = (
-        f"c{cpus}_"
-        if cpus is not None and cpus != (os.cpu_count() or cpus)
-        else ""
-    )
+    c_tag = f"c{cpus}_" if cpus not in (None, FULL_MACHINE_CPUS) else ""
     stem = (
         f"BENCH_LOCAL_{c_tag}r{n:02d}.json"
         if sf in (None, 0.1)
@@ -907,7 +921,8 @@ def main() -> None:
     # unchanged (session cache hits either way).
     import tempfile
 
-    from hive_gateway_spark.operators.similarity import persist_ivf_index
+    from hive_gateway_spark.operators.similarity import _IVF_CACHE, persist_ivf_index
+    from hive_gateway_spark.session import load_tables
 
     ann_idx = os.path.join(tempfile.mkdtemp(prefix="bench_ann_"), "index")
     persist_ivf_index(spark, sf_dir, ann_idx)
@@ -915,12 +930,7 @@ def main() -> None:
     # the publish leaves the trained index in the session cache — drop
     # it so the first IVF consumer pays the real serve path (load the
     # partitioned artifact), not a RAM hit the driver would never see
-    from hive_gateway_spark.operators.similarity import _IVF_CACHE
-    from hive_gateway_spark.staging import evict as _evict
-
-    _per_ivf = _IVF_CACHE.get(spark)
-    if _per_ivf:
-        _evict(_per_ivf, 0)
+    _IVF_CACHE.pop(spark, None, plan=load_tables(spark, sf_dir)["embeddings"])
 
     import gc
 

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from hive_gateway_spark.registry import query
 from hive_gateway_spark.session import load_tables
-from hive_gateway_spark.staging import evict, touch
+from hive_gateway_spark.staging import SessionCache
 
 #: Merge budget. 32 keeps the fixture loop quick while learning every
 #: high-frequency word; production vocabularies just raise it (the loop
@@ -83,61 +83,39 @@ def _base_symbols(wf: DataFrame) -> DataFrame:
     )
 
 
-#: session → {documents-plan key: learned merge list}. Learning is one
+#: (documents plan, n_merges) → learned merge list. Learning is one
 #: distributed aggregate + a driver-local recurrence; q_bpe_vocab and
 #: q_bpe_encode start from the identical vocabulary, so the trained
-#: merges are session-cached like every other staging artifact
-#: (dedup._SHINGLE_CACHE pattern). On a cluster this is the persisted
+#: merges are session-cached. On a cluster this is the persisted
 #: tokenizer artifact training jobs load.
-import weakref as _weakref
-
-_MERGES_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+_MERGES_CACHE = SessionCache("bpe.merges")
 
 
-#: session → {documents-plan key: checkpointed (word, n_sub) frame}.
-#: The 32 chained interpreted folds over the distinct vocabulary are
-#: the encoder's whole cost — materialized once per (session, corpus)
-#: so every consumer broadcast-joins plain rows (bench warm 6.6 →
-#: 0.3 s; on a cluster this is the persisted subword-vocab table).
-_ENC_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: documents plan → checkpointed (word, n_sub) frame. The 32 chained
+#: interpreted folds over the distinct vocabulary are the encoder's
+#: whole cost — materialized once per (session, corpus) so every
+#: consumer broadcast-joins plain rows (bench warm 6.6 → 0.3 s; on a
+#: cluster this is the persisted subword-vocab table).
+_ENC_CACHE = SessionCache("bpe.encoded_vocab")
 
 
 def _encoded_vocab(docs: DataFrame) -> DataFrame:
-    per = _ENC_CACHE.setdefault(docs.sparkSession, {})
-    try:
-        key = docs.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = id(docs)
-    out = per.get(key)
-    if out is not None:
-        touch(per, key)  # LRU: a hit must survive overflow
-    if out is None:
-        evict(per)
+    def build() -> DataFrame:
         merges = learned_merges(docs)
         wf = word_frequencies(docs)
-        out = (
+        return (
             encode_words(wf, merges)
             .select("word", F.size("subwords").alias("n_sub"))
             .localCheckpoint()
         )
-        per[key] = out
-    return out
+
+    return _ENC_CACHE.get_or_build(docs.sparkSession, None, build, plan=docs)
 
 
 def learned_merges(docs: DataFrame, n_merges: int = BPE_MERGES) -> list[tuple[str, str, int]]:
-    per = _MERGES_CACHE.setdefault(docs.sparkSession, {})
-    try:
-        key = (docs.semanticHash(), n_merges)
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = (id(docs), n_merges)
-    out = per.get(key)
-    if out is not None:
-        touch(per, key)
-    if out is None:
-        evict(per)
-        out = learn_bpe(docs, n_merges)
-        per[key] = out
-    return out
+    return _MERGES_CACHE.get_or_build(
+        docs.sparkSession, n_merges, lambda: learn_bpe(docs, n_merges), plan=docs
+    )
 
 
 #: Driver-side learning vocabulary bound (VERDICT r7 task #4): the

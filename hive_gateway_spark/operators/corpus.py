@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from hive_gateway_spark.operators.text import QC_B, _qc_weight_sql
 from hive_gateway_spark.registry import query
 from hive_gateway_spark.session import load_tables
-from hive_gateway_spark.staging import evict, release, stage, touch
+from hive_gateway_spark.staging import SessionCache, release, stage
 
 #: Duplicated-span width in tokens. Lee et al. use 50-token character
 #: spans on web corpora; the fixture docs run 10-99 tokens, so k=8
@@ -147,14 +147,13 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_report(load_tables(spark, sf_dir)["documents"])
 
 
-import weakref as _gram_weakref
-
-#: session → {semanticHash key: staged gram file} — LRU-capped (ADVICE
-#: r16 #1). Cap 4: the full corpus + the curation winner subsets in
-#: flight; these are the largest staged frames in the system, so the
-#: cap is deliberately tighter than staging.CACHE_CAP.
-_GRAM_LRU: "_gram_weakref.WeakKeyDictionary" = _gram_weakref.WeakKeyDictionary()
-_GRAM_CAP = 4
+#: word-frame plan → staged gram file (ADVICE r16 #1). At most 4 per
+#: session (cap 3 plus the entry a miss inserts): the full corpus + the
+#: curation winner subsets in flight; these are the largest staged
+#: frames in the system, so the bound is deliberately tighter than
+#: staging.CACHE_CAP. Without a cap every distinct caller plan pinned a
+#: corpus-scale checkpoint for the session's lifetime.
+_GRAM_CACHE = SessionCache("corpus.gram", cap=3)
 
 
 def _gram_file(w: DataFrame) -> DataFrame:
@@ -167,45 +166,35 @@ def _gram_file(w: DataFrame) -> DataFrame:
     The checkpoint follows dedup.py's _shingles_checkpointed
     discipline: repartition the raw word rows FIRST so the interpreted
     transform()/slice() projection parallelizes instead of running in
-    the fixture's single scan task, then materialize once. Slots are
-    suffixed by the input's semanticHash so the corpus queries and the
-    curation callers (winner subsets) stage independently instead of
-    thrashing one slot.
+    the fixture's single scan task, then materialize once. Entries are
+    keyed by the input plan, so the corpus queries and the curation
+    callers (winner subsets) stage independently.
 
     The gram STRING never leaves the row: it collapses to a 64-bit
     xxhash64 before the DF aggregate and the span join, so the
     corpus-sized shuffle moves 8 B keys instead of ~50 B strings (the
     q_dedup_ngram staging trick; the oracle keeps the string form,
     which is value-identical short of a 64-bit collision)."""
-    npart = int(
-        w.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    g = w.repartition(npart).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(words) - {SPAN_K}), "
-                f"i -> xxhash64(concat_ws(' ', slice(words, i + 1, {SPAN_K}))))"
+    def build() -> DataFrame:
+        npart = int(
+            w.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+        return (
+            w.repartition(npart)
+            .select(
+                "doc_id",
+                F.posexplode(
+                    F.expr(
+                        f"transform(sequence(0, size(words) - {SPAN_K}), "
+                        f"i -> xxhash64(concat_ws(' ', slice(words, i + 1, {SPAN_K}))))"
+                    )
+                ).alias("pos", "h"),
             )
-        ).alias("pos", "h"),
-    ).select("doc_id", F.col("pos").cast("bigint").alias("pos"), "h")
-    try:
-        key = str(w.semanticHash())
-    except Exception:  # pragma: no cover - non-classic session
-        key = "na"
-    out = stage(g, f"corpus.substring.g.{key}")
-    # r17 (ADVICE r16 #1): the semanticHash-suffixed slots are distinct
-    # per caller plan (full corpus + each curation winner subset), so
-    # without a cap every distinct caller pinned a corpus-scale
-    # checkpoint for the session's lifetime with no supersede. Track
-    # them in a capped LRU like every other staging cache — releasing
-    # an entry also drops its stage() slot, so a re-use after eviction
-    # transparently re-stages.
-    per = _GRAM_LRU.setdefault(w.sparkSession, {})
-    per[key] = out
-    touch(per, key)
-    evict(per, _GRAM_CAP)
-    return out
+            .select("doc_id", F.col("pos").cast("bigint").alias("pos"), "h")
+            .localCheckpoint()
+        )
+
+    return _GRAM_CACHE.get_or_build(w.sparkSession, None, build, plan=w)
 
 
 def substring_report(docs: DataFrame) -> DataFrame:
@@ -654,9 +643,8 @@ def dsir_report(docs: DataFrame, top: int = DSIR_TOP) -> DataFrame:
     """Core of q_dsir_weights over any (doc_id, lang, text) frame.
 
     The occurrence→bucket stream feeds both the model (coefficients)
-    and the scoring fold, so it is staged once (localCheckpoint — the
-    same staging-table pattern as dedup._SHINGLE_CACHE; on a cluster
-    this is the materialized hashed-feature table)."""
+    and the scoring fold, so it is staged once (localCheckpoint; on a
+    cluster this is the materialized hashed-feature table)."""
     hb = stage(_dsir_token_buckets(docs), "dsir.hashed_buckets")
     coef = dsir_coefficients(docs, hb=hb)
     scored = (
@@ -821,30 +809,23 @@ def q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session → {documents-plan key: checkpointed v3 survivor frame}. The
-#: rebuild → gate → exact-dedup → substring-drop subtree has SIX
-#: downstream consumers (substring_report's three reads of the word
-#: arrays, the anti-join, the DSIR stages, the lang join) — unstaged,
-#: the chunk explode re-ran per consumer (warm sf0.1 8.0 → 4.1 s with
-#: per-call checkpoints, → 1.0 s session-cached). Same staging-table
-#: pattern as dedup._PAIRS_CACHE: on a cluster this is the
+#: documents plan → checkpointed v3 survivor frame. The rebuild →
+#: gate → exact-dedup → substring-drop subtree has SIX downstream
+#: consumers (substring_report's three reads of the word arrays, the
+#: anti-join, the DSIR stages, the lang join) — unstaged, the chunk
+#: explode re-ran per consumer (warm sf0.1 8.0 → 4.1 s with per-call
+#: checkpoints, → 1.0 s session-cached). On a cluster this is the
 #: intermediate corpus version a multi-stage build materializes.
-import weakref as _weakref
-
-_V3_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+_V3_CACHE = SessionCache("corpus.v3_survivors")
 
 
 def _v3_survivors(docs: DataFrame) -> DataFrame:
-    per = _V3_CACHE.setdefault(docs.sparkSession, {})
-    try:
-        key = docs.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = id(docs)
-    out = per.get(key)
-    if out is not None:
-        touch(per, key)  # LRU: a hit must survive overflow
-        return out
-    evict(per)
+    return _V3_CACHE.get_or_build(
+        docs.sparkSession, None, lambda: _v3_survivors_build(docs), plan=docs
+    )
+
+
+def _v3_survivors_build(docs: DataFrame) -> DataFrame:
     rebuilt = boilerplate_report(docs).select("doc_id", "clean_text")
     ntok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
     gated = (
@@ -863,7 +844,6 @@ def _v3_survivors(docs: DataFrame) -> DataFrame:
     ).select("doc_id")
     out = winners.join(dropped, "doc_id", "left_anti").localCheckpoint()
     release(winners)  # out is materialized; the intermediate is dead weight
-    per[key] = out
     return out
 
 
@@ -1263,11 +1243,12 @@ def q_curation_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     per warm call re-running the whole stage chain before the cache,
     ~0.2 s after), and on a cluster this is the persisted audit table
     the summary reads."""
-    per = _TRACE_CACHE.setdefault(spark, {})
-    cached = per.get(sf_dir)
-    if cached is not None:
-        touch(per, sf_dir)
-        return cached
+    return _TRACE_CACHE.get_or_build(
+        spark, sf_dir, lambda: _curation_trace_build(spark, sf_dir)
+    )
+
+
+def _curation_trace_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
     rebuilt = boilerplate_report(docs).select("doc_id", "clean_text")
     ntok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
@@ -1314,13 +1295,11 @@ def q_curation_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("detail"),
     ).localCheckpoint()
     release(sized)  # out_frame is materialized; the intermediate is dead
-    evict(per)
-    per[sf_dir] = out_frame
     return out_frame
 
 
-#: session → {sf_dir: checkpointed trace frame} (see q_curation_trace).
-_TRACE_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: sf_dir → checkpointed trace frame (see q_curation_trace).
+_TRACE_CACHE = SessionCache("corpus.trace")
 
 
 @query(
@@ -2052,11 +2031,11 @@ _V4_FUNNEL_ORACLE = f"""
     GROUP BY decision
 """
 
-#: session → {sf_dir: {"decisions": frame, "manifest": frame}} — the v4
-#: stage chain has two registered consumers (manifest + funnel) and a
-#: pipeline-facade pin test; staged once per (session, sf_dir) like the
-#: v3 survivor frame and the curation trace.
-_V4_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: (sf_dir, shingle_n) → {"decisions": frame, "manifest": frame} — the
+#: v4 stage chain has two registered consumers (manifest + funnel) and
+#: a pipeline-facade pin test; staged once per (session, sf_dir) like
+#: the v3 survivor frame and the curation trace.
+_V4_CACHE = SessionCache("corpus.v4_state")
 
 
 def _v4_state(
@@ -2076,15 +2055,16 @@ def _v4_state(
     (50 shared words ≫ any n here) is still caught."""
     from hive_gateway_spark.operators.dedup import SHINGLE_N as _DEFAULT_N
 
-    per = _V4_CACHE.setdefault(spark, {})
     # normalize: an explicit shingle_n == the default must hit the same
     # cache entry as shingle_n=None (else the whole v4 chain re-runs
     # and double-checkpoints for a semantically identical request)
-    cache_key = (sf_dir, _DEFAULT_N if shingle_n is None else shingle_n)
-    st = per.get(cache_key)
-    if st is not None:
-        touch(per, cache_key)
-        return st
+    n_sh = _DEFAULT_N if shingle_n is None else shingle_n
+    return _V4_CACHE.get_or_build(
+        spark, (sf_dir, n_sh), lambda: _v4_state_build(spark, sf_dir, n_sh)
+    )
+
+
+def _v4_state_build(spark: SparkSession, sf_dir: str, n_sh: int) -> dict:
     from pyspark.sql import Window
 
     from hive_gateway_spark.operators.dedup import (
@@ -2129,7 +2109,6 @@ def _v4_state(
     # 8 B hash — never a corpus broadcast (q_contamination's plan).
     from hive_gateway_spark.operators.dedup import SHINGLE_N, shingle_expr
 
-    n_sh = SHINGLE_N if shingle_n is None else shingle_n
     if n_sh == SHINGLE_N:
         # fixture width: reuse the session-wide checkpointed staging
         sh_fix = _shingles_checkpointed(t).select("doc_id", "h")
@@ -2300,10 +2279,7 @@ def _v4_state(
     )
     for frame in (d, nwin, surv, gok, contam_ids, tail_ids, sdrop, sel):
         release(frame)  # decisions+manifest are materialized; free the stages
-    evict(per)
-    st = {"decisions": decisions, "manifest": manifest}
-    per[cache_key] = st
-    return st
+    return {"decisions": decisions, "manifest": manifest}
 
 
 @query("q_curation_v4", oracle=_V4_ORACLE)

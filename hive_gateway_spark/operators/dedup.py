@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from hive_gateway_spark.registry import query
 from hive_gateway_spark.session import load_tables
+from hive_gateway_spark.staging import SessionCache, release, stage
 
 #: Word-n-gram shingle width (3-grams discriminate well: random-pair
 #: Jaccard p99 ≈ 0.014 on the fixture, planted near-dups reach 0.99).
@@ -111,87 +112,77 @@ def _shingle_hashes(t) -> DataFrame:
 JACCARD_DF_CAP = 512
 
 
-#: session → {documents-plan semanticHash: checkpointed shingle set}.
-#: q_dedup_ngram / q_dedup_clusters / q_training_pipeline all start from
-#: the same materialized (doc_id, h) set; without the cache each query
-#: re-runs the shingle transform + checkpoint (~2.5 s at sf0.1). Weak
-#: session key (checkpoints die with their session, like session._TABLE_
-#: CACHE); the plan's semanticHash distinguishes sf_dirs, so a different
-#: parquet path never hits a stale entry. Bounded per session (cleared
-#: past 8 entries) since checkpoints pin executor storage.
-import weakref as _weakref
-
-_SHINGLE_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: documents plan → checkpointed shingle set. q_dedup_ngram /
+#: q_dedup_clusters / q_training_pipeline all start from the same
+#: materialized (doc_id, h) set; without the cache each query re-runs
+#: the shingle transform + checkpoint (~2.5 s at sf0.1). The plan
+#: distinguishes sf_dirs, so a different parquet path never hits a
+#: stale entry.
+_SHINGLE_CACHE = SessionCache("dedup.shingles")
 
 
 def _shingles_checkpointed(t) -> DataFrame:
     docs = t["documents"]
-    per = _SHINGLE_CACHE.setdefault(docs.sparkSession, {})
-    try:
-        key = docs.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = id(docs)
-    out = per.get(key)
-    if out is not None:
-        touch(per, key)  # LRU: a hit must survive overflow
-    if out is None:
-        evict(per)
-        # keep the in-row set size n too: q_dedup_simhash's verification
-        # joins need it, and it rides along for free (8 B/row)
-        #
-        # TWO repartitions bracket the transform, each load-bearing:
-        #
-        # (1) BEFORE — parallelize the transform itself. The fixture is
-        # one small parquet file, so the scan is ONE input split, and
-        # the shingle projection (transform()/array_distinct higher-
-        # order exprs run INTERPRETED, not codegen'd) would otherwise
-        # execute single-threaded in the scan task: measured 19 s vs
-        # 3 s at sf1 — the whole of q_dedup_ngram's former super-linear
-        # sf1 point (11.4×, VERDICT r14 task #2). Exchanging the raw
-        # (doc_id, text) rows first is cheap (~6 MB at sf1) and lets
-        # every core shingle. At 100 TB real file splits make this a
-        # no-op-sized safety net, never a pessimization.
-        #
-        # (2) AFTER, keyed on h — the staging table's bucketing: the
-        # hot-path shuffles that follow (pair join, DF histogram,
-        # contamination broadcast) read evenly-spread input, and the
-        # checkpoint preserves the clustering for downstream plans.
-        # ~300 docs (≈15k shingles) per partition, capped by the
-        # session's shuffle width: sf0.01 stays 1-2 partitions (task
-        # overhead dominates tiny inputs), sf0.1 gets ~16, and any
-        # production corpus saturates the cap. The count is parquet
-        # metadata — one cheap job per (session, sf_dir).
-        cap = int(
-            t["documents"].sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        npart = max(1, min(cap, t["documents"].count() // 300))
-        src = dict(t)
-        src["documents"] = (
-            t["documents"].select("doc_id", "text").repartition(npart, "doc_id")
-        )
-        out = (
-            _shingle_hashes(src)
-            .select("doc_id", "n", "h")
-            .repartition(npart, "h")
-            .localCheckpoint()
-        )
-        per[key] = out
-    return out
+    return _SHINGLE_CACHE.get_or_build(
+        docs.sparkSession, None, lambda: _shingles_build(t), plan=docs
+    )
 
 
-#: session → {(shingle-plan key, df_cap): checkpointed pair set}. The
-#: pair computation (self-join + group) is the single most expensive
-#: stage in the dedup family and FIVE queries start from the identical
-#: set (q_dedup_ngram/clusters/training_pipeline/curation_v2/
-#: contamination) — the same staging-table pattern as _SHINGLE_CACHE,
-#: one level higher. On a cluster this is a materialized pairs table
-#: every downstream dedup job reads.
-_PAIRS_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+def _shingles_build(t) -> DataFrame:
+    # keep the in-row set size n too: q_dedup_simhash's verification
+    # joins need it, and it rides along for free (8 B/row)
+    #
+    # TWO repartitions bracket the transform, each load-bearing:
+    #
+    # (1) BEFORE — parallelize the transform itself. The fixture is
+    # one small parquet file, so the scan is ONE input split, and
+    # the shingle projection (transform()/array_distinct higher-
+    # order exprs run INTERPRETED, not codegen'd) would otherwise
+    # execute single-threaded in the scan task: measured 19 s vs
+    # 3 s at sf1 — the whole of q_dedup_ngram's former super-linear
+    # sf1 point (11.4×, VERDICT r14 task #2). Exchanging the raw
+    # (doc_id, text) rows first is cheap (~6 MB at sf1) and lets
+    # every core shingle. At 100 TB real file splits make this a
+    # no-op-sized safety net, never a pessimization.
+    #
+    # (2) AFTER, keyed on h — the staging table's bucketing: the
+    # hot-path shuffles that follow (pair join, DF histogram,
+    # contamination broadcast) read evenly-spread input, and the
+    # checkpoint preserves the clustering for downstream plans.
+    # ~300 docs (≈15k shingles) per partition, capped by the
+    # session's shuffle width: sf0.01 stays 1-2 partitions (task
+    # overhead dominates tiny inputs), sf0.1 gets ~16, and any
+    # production corpus saturates the cap. The count is parquet
+    # metadata — one cheap job per (session, sf_dir).
+    cap = int(
+        t["documents"].sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    npart = max(1, min(cap, t["documents"].count() // 300))
+    src = dict(t)
+    src["documents"] = (
+        t["documents"].select("doc_id", "text").repartition(npart, "doc_id")
+    )
+    return (
+        _shingle_hashes(src)
+        .select("doc_id", "n", "h")
+        .repartition(npart, "h")
+        .localCheckpoint()
+    )
 
-#: session → {pairs-plan key: checkpointed weighted edge list} for the
-#: PageRank family (see _pagerank) — degree folded in, partitioned on
-#: src, shared by q_dedup_rank / q_dedup_canonical.
-_EDGES_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+
+#: (documents plan, df_cap) → checkpointed pair set. The pair
+#: computation (self-join + group) is the single most expensive stage
+#: in the dedup family and FIVE queries start from the identical set
+#: (q_dedup_ngram/clusters/training_pipeline/curation_v2/contamination).
+#: On a cluster this is a materialized pairs table every downstream
+#: dedup job reads. The contamination benchmark side, the oriented
+#: edges and the k-core share it under their own keys.
+_PAIRS_CACHE = SessionCache("dedup.pairs")
+
+#: pairs plan → checkpointed weighted edge list for the PageRank family
+#: (see _pagerank) — degree folded in, partitioned on src, shared by
+#: q_dedup_rank / q_dedup_canonical.
+_EDGES_CACHE = SessionCache("dedup.edges")
 
 
 def _jaccard_pairs(
@@ -209,17 +200,16 @@ def _jaccard_pairs(
     bounds — at the cost of an extra action."""
     docs = t["documents"]
     if stats is None:
-        per = _PAIRS_CACHE.setdefault(docs.sparkSession, {})
-        try:
-            key = (docs.semanticHash(), df_cap)
-        except Exception:  # pragma: no cover - non-classic session fallback
-            key = (id(docs), df_cap)
-        cached = per.get(key)
-        if cached is not None:
-            touch(per, key)  # LRU: a hit must survive overflow
-            return cached
-    else:
-        per = key = None
+        return _PAIRS_CACHE.get_or_build(
+            docs.sparkSession,
+            df_cap,
+            lambda: _jaccard_pairs_build(t, df_cap, None).localCheckpoint(),
+            plan=docs,
+        )
+    return _jaccard_pairs_build(t, df_cap, stats)
+
+
+def _jaccard_pairs_build(t, df_cap: int, stats: dict | None) -> DataFrame:
     # Materialize the (doc_id, shingle-hash) set ONCE: it feeds sizes,
     # the DF histogram AND both sides of the pair join — without the
     # checkpoint the shingle transform re-executes per consumer (~6×).
@@ -265,18 +255,13 @@ def _jaccard_pairs(
     # them into the grouping key avoids the two size-lookup joins the
     # previous version paid (the per-doc set size is already on every
     # shingle checkpoint row).
-    out = (
+    return (
         raw.groupBy("doc_a", "doc_b", "sn_a", "sn_b")
         .agg(F.count("*").alias("shared"))
         .withColumn("union_sz", F.col("sn_a") + F.col("sn_b") - F.col("shared"))
         .filter(2 * F.col("shared") >= F.col("union_sz"))
         .select("doc_a", "doc_b", "shared", "union_sz")
     )
-    if per is not None:
-        evict(per)
-        out = out.localCheckpoint()
-        per[key] = out
-    return out
 
 
 def _duck_shingles(src: str = "documents") -> str:
@@ -644,7 +629,6 @@ def _embed_dup_oracle() -> str:
 
 
 from hive_gateway_spark.registry import ORACLES as _ORACLES  # noqa: E402
-from hive_gateway_spark.staging import evict, release, stage, touch
 
 _ORACLES["q_dedup_embedding"] = _embed_dup_oracle()
 
@@ -1002,22 +986,17 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eval-suite shingle table of a production pipeline — built once,
     # screened against forever): drops one filter+union job from every
     # warm run.
-    per = _PAIRS_CACHE.setdefault(spark, {})
-    try:
-        bkey = ("contam_bench", t["documents"].semanticHash())
-    except Exception:  # pragma: no cover - non-classic session fallback
-        bkey = ("contam_bench", id(t["documents"]))
-    bench = per.get(bkey)
-    if bench is not None:
-        touch(per, bkey)
-    if bench is None:
-        bench = (
+    bench = _PAIRS_CACHE.get_or_build(
+        spark,
+        "contam_bench",
+        lambda: (
             sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0)
             .unionByName(sh_planted.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0))
             .select(F.col("doc_id").alias("bench_id"), "h")
             .localCheckpoint()
-        )
-        per[bkey] = bench
+        ),
+        plan=t["documents"],
+    )
     train = (
         sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
         .unionByName(sh_planted.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0))
@@ -1094,14 +1073,13 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_sig_frame(spark, sf_dir)
 
 
-#: session → {documents-plan key: checkpointed signature frame}. The
-#: portable per-char polynomial fingerprint is interpreted expression
-#: work over every exploded shingle (~250k × ~25 chars at sf0.1), and
-#: TWO queries start from the identical frame (q_minhash_signatures,
-#: q_lsh_candidates) — same staging-table pattern as _SHINGLE_CACHE; on
-#: a cluster this is the materialized signatures table every LSH job
-#: reads. Bounded like the other caches.
-_MINHASH_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: documents plan → checkpointed signature frame. The portable
+#: per-char polynomial fingerprint is interpreted expression work over
+#: every exploded shingle (~250k × ~25 chars at sf0.1), and TWO queries
+#: start from the identical frame (q_minhash_signatures,
+#: q_lsh_candidates); on a cluster this is the materialized signatures
+#: table every LSH job reads.
+_MINHASH_CACHE = SessionCache("dedup.minhash")
 
 
 def _minhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1109,19 +1087,12 @@ def _minhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by q_minhash_signatures and q_lsh_candidates (session-cached,
     checkpointed staging)."""
     t = load_tables(spark, sf_dir)
-    per = _MINHASH_CACHE.setdefault(spark, {})
-    try:
-        key = t["documents"].semanticHash()
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = id(t["documents"])
-    out = per.get(key)
-    if out is not None:
-        touch(per, key)
-    if out is None:
-        evict(per)
-        out = _minhash_sig_build(t).localCheckpoint()
-        per[key] = out
-    return out
+    return _MINHASH_CACHE.get_or_build(
+        spark,
+        None,
+        lambda: _minhash_sig_build(t).localCheckpoint(),
+        plan=t["documents"],
+    )
 
 
 def _minhash_sig_build(t) -> DataFrame:
@@ -1460,21 +1431,14 @@ def _pagerank(pairs: DataFrame) -> DataFrame:
     # width — so across iterations the big static side never
     # re-shuffles; only the small rank frame moves.
     spark = pairs.sparkSession
-    per = _EDGES_CACHE.setdefault(spark, {})
-    try:
-        key = pairs.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = id(pairs)
-    edges_w = per.get(key)
-    if edges_w is not None:
-        touch(per, key)
-    if edges_w is None:
-        evict(per)
+
+    def build() -> DataFrame:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         edges_w = edges.join(deg, "src").select("src", "dst", "deg")
         npart = max(1, min(cap, edges_w.count() // 100_000))
-        edges_w = edges_w.repartition(npart, "src").localCheckpoint()
-        per[key] = edges_w
+        return edges_w.repartition(npart, "src").localCheckpoint()
+
+    edges_w = _EDGES_CACHE.get_or_build(spark, None, build, plan=pairs)
     rank = deg.select("src", F.lit(PR_SCALE).cast("bigint").alias("rank"))
     for _ in range(PR_ITERS):
         contrib = edges_w.join(rank, "src").select(
@@ -1747,19 +1711,12 @@ def degree_oriented_edges(e: DataFrame) -> DataFrame:
     degrees and orientation are a pure function of the edge set, so
     like the pair staging they build once per corpus; the degree joins
     (node-scale table) run shuffle-hash, never broadcast."""
-    per = _PAIRS_CACHE.setdefault(e.sparkSession, {})
-    try:
-        key = ("oriented", e.semanticHash())
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = ("oriented", id(e))
-    cached = per.get(key)
-    if cached is not None:
-        touch(per, key)
-        return cached
-    oriented = _orient_edges(e).localCheckpoint()
-    evict(per)
-    per[key] = oriented
-    return oriented
+    return _PAIRS_CACHE.get_or_build(
+        e.sparkSession,
+        "oriented",
+        lambda: _orient_edges(e).localCheckpoint(),
+        plan=e,
+    )
 
 
 def _orient_edges(e: DataFrame) -> DataFrame:
@@ -1910,17 +1867,15 @@ def kcore_nodes(e: DataFrame, k: int = KCORE_K) -> DataFrame:
     final round's checkpoint otherwise leaked one block set per call
     (code-review r9 #6); cached entries release deterministically via
     staging.evict like every other staged frame."""
+    edges, converged = _PAIRS_CACHE.get_or_build(
+        e.sparkSession, ("kcore", k), lambda: _kcore_peel(e, k), plan=e
+    )
+    return _kcore_degrees(edges, converged)
+
+
+def _kcore_peel(e: DataFrame, k: int) -> tuple[DataFrame, bool]:
+    """(converged edge checkpoint, converged?) after peeling ``e``."""
     F_ = F
-    per = _PAIRS_CACHE.setdefault(e.sparkSession, {})
-    try:
-        key = ("kcore", k, e.semanticHash())
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = ("kcore", k, id(e))
-    cached = per.get(key)
-    if cached is not None:
-        touch(per, key)
-        edges, converged = cached
-        return _kcore_degrees(edges, converged)
     edges = e.localCheckpoint()
     converged = False
     for _ in range(KCORE_MAX_ROUNDS):
@@ -1950,9 +1905,7 @@ def kcore_nodes(e: DataFrame, k: int = KCORE_K) -> DataFrame:
         if n_after == n_before:
             converged = True
             break
-    evict(per)
-    per[key] = (edges, converged)
-    return _kcore_degrees(edges, converged)
+    return edges, converged
 
 
 def _kcore_degrees(edges: DataFrame, converged: bool) -> DataFrame:

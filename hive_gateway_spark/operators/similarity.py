@@ -27,16 +27,14 @@ from hive_gateway_spark.functions.vectors import (
 )
 from hive_gateway_spark.registry import query
 from hive_gateway_spark.session import load_tables
-from hive_gateway_spark.staging import evict, release, stage, touch
+from hive_gateway_spark.staging import SessionCache, release, stage
 
-import weakref as _weakref
-
-#: session → {embeddings plan hash: (centers list, checkpointed inverted
-#: file)} — the IVF coarse index is a BUILD artifact (fit + assignment
-#: cost O(N·cells·dim)), amortized across every query against the same
+#: embeddings plan → (centers list, checkpointed inverted file) — the
+#: IVF coarse index is a BUILD artifact (fit + assignment cost
+#: O(N·cells·dim)), amortized across every query against the same
 #: corpus exactly like the dedup pair staging; rebuilding it per call
 #: made cold IVF lose to brute force at the 1M smoke (SCALE.md r9).
-_IVF_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+_IVF_CACHE = SessionCache("similarity.ivf")
 
 #: Pair threshold tuned to the fixture's cosine distribution (within-label
 #: 99.9th pct ≈ 0.38): selective but non-empty at every sf.
@@ -66,42 +64,33 @@ TOP_K = 5
 _REPARTITION_MIN_ROWS = 10_000
 
 
-#: session → {embeddings semanticHash: (emb, quantized frame)} — the
-#: int64 staging is consumed by every exact/ANN query in the family;
-#: above the repartition threshold it is also CHECKPOINTED so a warm
-#: session pays the 64-wide quantization transform once, not per query
-#: (the r13 1M profile charged ~15 s of every "warm" exact/rerank call
-#: to re-projecting the same corpus). Below the threshold the plan is
-#: returned un-materialized, keeping fixture-scale plan assertions and
-#: pushdown shapes exactly as before.
-_QUANT_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: embeddings plan → quantized frame — the int64 staging is consumed by
+#: every exact/ANN query in the family; above the repartition threshold
+#: it is also CHECKPOINTED so a warm session pays the 64-wide
+#: quantization transform once, not per query (the r13 1M profile
+#: charged ~15 s of every "warm" exact/rerank call to re-projecting the
+#: same corpus). Below the threshold the plan is returned
+#: un-materialized (and not cached), keeping fixture-scale plan
+#: assertions and pushdown shapes exactly as before.
+_QUANT_CACHE = SessionCache("similarity.quantized")
 
 
 def _quantized(t) -> DataFrame:
     e = t["embeddings"]
     spark = e.sparkSession
-    per = _QUANT_CACHE.setdefault(spark, {})
-    try:
-        key = e.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session
-        key = id(e)
-    hit = per.get(key)
-    if hit is not None:
-        prev_e, out = hit
-        try:
-            if e.sameSemantics(prev_e):
-                touch(per, key)  # LRU: a hit must survive overflow
-                return out
-        except Exception:  # pragma: no cover
-            pass
-    out = e.select("vec_id", "label", vec_q("embedding").alias("v"))
-    # parquet row count is metadata — one cheap job per (session, dir)
-    if e.count() > _REPARTITION_MIN_ROWS:
+
+    def quantize() -> DataFrame:
+        return e.select("vec_id", "label", vec_q("embedding").alias("v"))
+
+    def build() -> DataFrame | None:
+        # parquet row count is metadata — one cheap job per miss
+        if e.count() <= _REPARTITION_MIN_ROWS:
+            return None
         width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        out = out.repartition(width, "vec_id").localCheckpoint()
-        evict(per)
-        per[key] = (e, out)
-    return out
+        return quantize().repartition(width, "vec_id").localCheckpoint()
+
+    staged = _QUANT_CACHE.get_or_build(spark, None, build, plan=e)
+    return quantize() if staged is None else staged
 
 
 @query(
@@ -382,34 +371,25 @@ def _ivf_index(spark: SparkSession, t, e) -> tuple:
     checkpoint): it is hive-partitioned by cell, so the probe filter in
     q_sim_topk_ivf prunes to assign·probes/cells of the files before
     Spark opens anything."""
+    emb = t["embeddings"]
+    centers_rows, inv_file = _IVF_CACHE.get_or_build(
+        spark, None, lambda: _ivf_build(spark, t, e), plan=emb
+    )
+    centers = spark.createDataFrame(centers_rows, "cell int, center array<double>")
+    return centers, inv_file
+
+
+def _ivf_build(spark: SparkSession, t, e) -> tuple:
+    """(centers rows, inverted file): the persisted index when the
+    session points at one that matches this corpus, else a fresh fit."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    emb = t["embeddings"]
-    per = _IVF_CACHE.setdefault(spark, {})
-    try:
-        key = emb.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session fallback
-        key = id(emb)
-    hit = per.get(key)
-    if hit is not None:
-        touch(per, key)
-        centers_rows, inv_file = hit
-        centers = spark.createDataFrame(
-            centers_rows, "cell int, center array<double>"
-        )
-        return centers, inv_file
     idx_path = spark.conf.get("hive_gateway.ann.index_path", "")
     if idx_path:
-        loaded = _load_persisted_ivf(spark, idx_path, emb)
+        loaded = _load_persisted_ivf(spark, idx_path, t["embeddings"])
         if loaded is not None:
-            evict(per)
-            per[key] = loaded
-            centers_rows, inv_file = loaded
-            return (
-                spark.createDataFrame(centers_rows, "cell int, center array<double>"),
-                inv_file,
-            )
+            return loaded
     # Train the coarse quantizer on a BOUNDED, MATERIALIZED sample: at
     # corpus scale you never k-means the full table for an IVF coarse
     # index (faiss trains on ~max(10k, 50·cells) points). Order matters
@@ -448,10 +428,7 @@ def _ivf_index(spark: SparkSession, t, e) -> tuple:
         (i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())
     ]
     centers = spark.createDataFrame(centers_rows, "cell int, center array<double>")
-    inv_file = _assign_cells(e, centers).localCheckpoint()
-    evict(per)
-    per[key] = (centers_rows, inv_file)
-    return centers, inv_file
+    return centers_rows, _assign_cells(e, centers).localCheckpoint()
 
 
 def _assign_cells(e, centers) -> DataFrame:
@@ -634,17 +611,7 @@ def maybe_rebuild_ivf(spark: SparkSession, sf_dir: str, path: str) -> dict:
         # and any caller's lazy plans over them stay recomputable.
         from hive_gateway_spark import session as _session
 
-        per_i = _IVF_CACHE.get(spark)
-        if per_i:
-            try:
-                stale_key = load_tables(spark, sf_dir)[
-                    "embeddings"
-                ].semanticHash()
-            except Exception:  # pragma: no cover - non-classic session
-                stale_key = None
-            entry = per_i.pop(stale_key, None)
-            if entry is not None:
-                release(entry)
+        _IVF_CACHE.pop(spark, None, plan=load_tables(spark, sf_dir)["embeddings"])
         _session.invalidate(spark, sf_dir)
         n_table = load_tables(spark, sf_dir)["embeddings"].count()
         n_index = man["n_rows"] // man["ivf_assign"]
@@ -1489,8 +1456,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_M = 8    # subvectors
 PQ_K = 256  # centroids per subspace → 8-bit codes (the faiss default)
 
-#: session → {embeddings semanticHash: (m, k, dsub) codebook ndarray}
-_PQ_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: embeddings plan → (m, k, dsub) codebook ndarray
+_PQ_CACHE = SessionCache("similarity.pq_codebooks")
 
 
 def _pq_codebooks(spark: SparkSession, t):
@@ -1503,27 +1470,13 @@ def _pq_codebooks(spark: SparkSession, t):
     8 dims the fit is milliseconds of numpy, not a cluster job.
     Deterministic: fixed seed, fixed iteration count, ties by lowest
     centroid index (argmin)."""
+    emb = t["embeddings"]
+    return _PQ_CACHE.get_or_build(spark, None, lambda: _pq_train(emb), plan=emb)
+
+
+def _pq_train(emb: DataFrame):
     import numpy as np
 
-    emb = t["embeddings"]
-    per = _PQ_CACHE.setdefault(spark, {})
-    try:
-        key = emb.semanticHash()
-    except Exception:  # pragma: no cover
-        key = id(emb)
-    hit = per.get(key)
-    # Confirm the 32-bit hash hit against the stored source plan before
-    # serving (the same collision guard as staging.stage(), ADVICE r11
-    # #3): colliding plans from two different corpora must never share
-    # codebooks.
-    if hit is not None:
-        prev_emb, books = hit
-        try:
-            if emb.sameSemantics(prev_emb):
-                touch(per, key)
-                return books
-        except Exception:  # pragma: no cover - non-classic session
-            pass
     n_vecs = emb.count()
     cap = 10_000
     src = emb
@@ -1556,18 +1509,16 @@ def _pq_codebooks(spark: SparkSession, t):
                 if len(members):
                     C[c] = members.mean(0)
         books[m] = C
-    evict(per)
-    per[key] = (emb, books)
     return books
 
 
-#: session → {embeddings semanticHash: (emb, checkpointed codes frame)}.
-#: EXPLICIT input-keyed cache, NOT a stage() slot: a mapInPandas plan
-#: embeds a fresh broadcast/closure per call, so its semanticHash
-#: differs every time and a plan-hash slot ALWAYS misses — measured at
-#: the 1M smoke as a full 27 s re-encode inside every "warm" ADC query
-#: (r13; the same reason _ivf_index and _PQ_CACHE key on the INPUT).
-_PQ_CODES_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: embeddings plan → checkpointed codes frame. EXPLICIT input-keyed
+#: cache, NOT a stage() slot: a mapInPandas plan embeds a fresh
+#: broadcast/closure per call, so its semanticHash differs every time
+#: and a plan-hash slot ALWAYS misses — measured at the 1M smoke as a
+#: full 27 s re-encode inside every "warm" ADC query (r13; the same
+#: reason _ivf_index and _pq_codebooks key on the INPUT).
+_PQ_CODES_CACHE = SessionCache("similarity.pq_codes")
 
 
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,25 +1528,17 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Encoded ONCE per (session, corpus): the checkpointed codes table
     is the compressed-corpus artifact (PQ_M bytes per vector), served
     to every ADC consumer from the input-keyed session cache."""
+    t = load_tables(spark, sf_dir)
+    return _PQ_CODES_CACHE.get_or_build(
+        spark, None, lambda: _pq_encode_build(spark, t), plan=t["embeddings"]
+    )
+
+
+def _pq_encode_build(spark: SparkSession, t) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
-    per = _PQ_CODES_CACHE.setdefault(spark, {})
-    try:
-        key = emb.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session
-        key = id(emb)
-    hit = per.get(key)
-    if hit is not None:
-        prev_emb, codes = hit
-        try:
-            if emb.sameSemantics(prev_emb):
-                touch(per, key)
-                return codes
-        except Exception:  # pragma: no cover
-            pass
     books = _pq_codebooks(spark, t)
     bc = spark.sparkContext.broadcast(books)
     dsub = books.shape[2]
@@ -1625,14 +1568,11 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    out = (
+    return (
         emb.select("vec_id", "embedding")
         .mapInPandas(encode, "vec_id bigint, codes array<int>")
         .localCheckpoint()
     )
-    evict(per)
-    per[key] = (emb, out)
-    return out
 
 
 def _pq_adc_scored(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -2299,11 +2239,11 @@ q_ivfpq_candidates.__doc__ = q_ivfpq_candidates.__doc__.format(
 )
 
 
-#: session → {embeddings semanticHash: (emb, checkpointed cell-codes)}.
-#: Input-keyed for the same reason as _PQ_CODES_CACHE: the upstream
-#: codes frame is a fresh LogicalRDD per cache rebuild, so a stage()
-#: slot can never hit across calls.
-_IVFPQ_CC_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: embeddings plan → checkpointed cell-codes. Input-keyed for the same
+#: reason as the PQ codes: the upstream codes frame is a fresh
+#: LogicalRDD per cache rebuild, so a stage() slot can never hit across
+#: calls.
+_IVFPQ_CC_CACHE = SessionCache("similarity.ivfpq_cell_codes")
 
 
 def _ivfpq_cell_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2317,26 +2257,18 @@ def _ivfpq_cell_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inverted file itself, and the join below is the one-off
     index-build job."""
     t = load_tables(spark, sf_dir)
-    emb = t["embeddings"]
-    per = _IVFPQ_CC_CACHE.setdefault(spark, {})
-    try:
-        key = emb.semanticHash()
-    except Exception:  # pragma: no cover - non-classic session
-        key = id(emb)
-    hit = per.get(key)
-    if hit is not None:
-        prev_emb, cc = hit
-        try:
-            if emb.sameSemantics(prev_emb):
-                touch(per, key)
-                return cc
-        except Exception:  # pragma: no cover
-            pass
+    return _IVFPQ_CC_CACHE.get_or_build(
+        spark, None, lambda: _ivfpq_cell_codes_build(spark, sf_dir, t),
+        plan=t["embeddings"],
+    )
+
+
+def _ivfpq_cell_codes_build(spark: SparkSession, sf_dir: str, t) -> DataFrame:
     e = _quantized(t).withColumn("n2", norm2_q("v"))
     _, inv_file = _ivf_index(spark, t, e)
     codes = pq_encode(spark, sf_dir)
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    out = (
+    return (
         inv_file.select("neighbor_id", "cell")
         .join(codes, F.col("vec_id") == F.col("neighbor_id"))
         .select("cell", "neighbor_id", "codes")
@@ -2349,9 +2281,6 @@ def _ivfpq_cell_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(width, "neighbor_id")
         .localCheckpoint()
     )
-    evict(per)
-    per[key] = (emb, out)
-    return out
 
 
 #: IVFPQ shortlist depth (faiss k_factor): deeper than the full-scan

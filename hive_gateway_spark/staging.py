@@ -1,18 +1,35 @@
-"""Deterministic block release for localCheckpoint()'ed staging frames.
+"""Session-scoped staging: one cache type, one release path.
 
-Session-scoped staging caches (shingle sets, minhash signatures, BPE
-vocab, curation traces, …) hold ``localCheckpoint()``'ed DataFrames so
-repeated consumers skip the expensive build. Evicting one of those by
-just dropping the Python reference leaves its blocks in the JVM block
-manager until the ContextCleaner happens to GC the RDD — on a
-long-lived session the leaked blocks accumulate for its lifetime
-(ADVICE r8 #4). These helpers make the release DETERMINISTIC: a
-localCheckpoint()'ed frame's analyzed plan is a single ``LogicalRDD``
-node whose backing RDD we unpersist directly the moment the frame is
-superseded or evicted.
+Staging artifacts (shingle sets, minhash signatures, BPE vocab,
+curation traces, IVF/PQ indexes, …) are ``localCheckpoint()``'ed
+DataFrames — or small driver-side values — that repeated consumers
+reuse instead of rebuilding. Every such cache is a ``SessionCache``:
 
-All three helpers are best-effort no-ops off the classic py4j session
-(Connect has no ``_jdf``) — there the ContextCleaner path still applies.
+- **Key.** Entries live per SparkSession (weakly held: they die with
+  their session). A lookup passes a ``key`` and, for plan-derived
+  artifacts, the input ``plan``; the entry is then keyed on
+  ``(plan.semanticHash(), key)``. Exact keys (an ``sf_dir``) pass no
+  plan. A plan whose ``semanticHash()`` raises is built and never
+  cached.
+- **Confirm.** ``semanticHash()`` is 32 bits, so a plan-keyed hit is
+  served only if ``plan.sameSemantics(stored_plan)`` — a collision
+  between different plans is a miss, never another plan's data.
+- **LRU bound.** Hits move an entry to the most-recently-used end
+  (``touch``); a miss first evicts least-recently-used entries down
+  to ``cap`` (``evict``), releasing their blocks before the build, so
+  a cache holds at most ``cap + 1`` entries per session.
+- **Release.** Dropping a Python reference leaves a checkpoint's blocks
+  in the JVM block manager until the ContextCleaner happens to GC the
+  RDD (ADVICE r8 #4); ``release()`` unpersists them NOW. It is the
+  single choke point: it also drops every plan memo (``memo_frame``),
+  ``stage()`` slot and ``SessionCache`` entry that holds the freed
+  frame, so a released checkpoint is never served again.
+
+``stage()`` is the call-site variant: one occupant per named slot,
+superseded (and released) when a different plan arrives.
+``memo_frame()`` memoizes pure plan assembly. All helpers are
+best-effort no-ops off the classic py4j session (Connect has no
+``_jdf``) — there the ContextCleaner path still applies.
 """
 
 from __future__ import annotations
@@ -44,11 +61,11 @@ def release(obj) -> None:
     (ADVICE r11 #3/#5), so the session invalidation lives HERE, not in
     stage()'s supersede branch: before unpersisting, every _FRAMES memo
     for the session is dropped (a memoized final plan may reference the
-    freed checkpoint — truncated lineage cannot recompute) and any
-    _SLOTS entry handing out THIS frame is removed (a released
-    checkpoint must never be served to a later plan-identical stage()
-    call). Memos/slots are pure plan assembly and rebuild on the next
-    call, so the conservative clear is semantics-free."""
+    freed checkpoint — truncated lineage cannot recompute), and any
+    _SLOTS entry or SessionCache entry handing out THIS frame is
+    removed (a released checkpoint must never be served to a later
+    plan-identical lookup). Memos, slots and cache entries rebuild on
+    the next call, so the conservative clear is semantics-free."""
     if isinstance(obj, dict):
         for item in obj.values():
             release(item)
@@ -72,6 +89,8 @@ def release(obj) -> None:
         if slots:
             for name in [n for n, e in slots.items() if e[-1] is obj]:
                 del slots[name]
+        for cache in _CACHES:
+            cache._drop_holders(spark, obj)
     except Exception:
         pass
     try:
@@ -114,6 +133,94 @@ def touch(per: dict, key) -> None:
     as if it were never read."""
     if key in per:
         per[key] = per.pop(key)
+
+
+#: Every SessionCache, so release() can drop the entries holding a frame.
+_CACHES: list["SessionCache"] = []
+
+
+def _holds(value, obj) -> bool:
+    """``value`` is ``obj``, or a composite entry with ``obj`` as a member
+    (the IVF index's (centers, inverted file) tuple, the v4 state's
+    {'decisions', 'manifest'} dict)."""
+    if isinstance(value, dict):
+        value = tuple(value.values())
+    if isinstance(value, tuple):
+        return any(v is obj for v in value)
+    return value is obj
+
+
+def _confirms(plan, stored) -> bool:
+    """A plan-keyed hit is served only if the stored input plan is
+    semantically the same query (ADVICE r11 #3: a bare 32-bit hash
+    collision would otherwise return another plan's data)."""
+    if plan is None:
+        return True
+    try:
+        return stored is not None and plan.sameSemantics(stored)
+    except Exception:  # pragma: no cover - non-classic session
+        return False
+
+
+class SessionCache:
+    """A named, session-scoped LRU of staging artifacts; the module
+    docstring gives the key / confirm / bound / release rules. The
+    per-session ``{key: value}`` dict is what ``touch``/``evict`` see,
+    so their LRU order and block release are the same for every cache;
+    input plans sit in a parallel dict (never released with a value)."""
+
+    def __init__(self, name: str, cap: int = CACHE_CAP) -> None:
+        self.name = name
+        self.cap = cap
+        self._values: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+        self._plans: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+        _CACHES.append(self)
+
+    def get_or_build(self, spark, key, build, plan: DataFrame | None = None):
+        """The entry for (``key``, ``plan``) in ``spark``'s cache, built by
+        ``build()`` on a miss. A build that returns None caches nothing
+        (a caller that stages only above a size threshold)."""
+        try:
+            k = key if plan is None else (plan.semanticHash(), key)
+        except Exception:  # no plan hash (e.g. a non-classic session)
+            return build()
+        per = self._values.setdefault(spark, {})
+        plans = self._plans.setdefault(spark, {})
+        if k in per:
+            if _confirms(plan, plans.get(k)):
+                touch(per, k)
+                return per[k]
+            plans.pop(k, None)
+            release(per.pop(k))  # a hash collision: the new plan takes the key
+        evict(per, self.cap)
+        for gone in plans.keys() - per.keys():
+            del plans[gone]
+        value = build()
+        if value is not None:
+            per[k] = value
+            if plan is not None:
+                plans[k] = plan
+        return value
+
+    def pop(self, spark, key, plan: DataFrame | None = None) -> None:
+        """Drop and release the entry for (``key``, ``plan``) only —
+        scoped invalidation when the files under an unchanged plan grew
+        (``maybe_rebuild_ivf``), or to force a serve path's load."""
+        try:
+            k = key if plan is None else (plan.semanticHash(), key)
+        except Exception:  # pragma: no cover - non-classic session
+            return
+        per = self._values.get(spark)
+        if per and k in per and _confirms(plan, self._plans[spark].get(k)):
+            self._plans[spark].pop(k, None)
+            release(per.pop(k))
+
+    def _drop_holders(self, spark, obj) -> None:
+        per = self._values.get(spark)
+        if per:
+            for k in [k for k, v in per.items() if _holds(v, obj)]:
+                del per[k]
+                self._plans[spark].pop(k, None)
 
 
 #: session → {(query, sf_dir): final DataFrame} plan memo (memo_frame).

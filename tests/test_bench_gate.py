@@ -230,14 +230,28 @@ def test_legacy_cpusless_record_is_full_machine_only(tmp_path, monkeypatch):
     red = bench.REDUCTION
     legacy = {"queries": {"q_a": 1.0}, "sf": 0.1, "reduction": red}
     (tmp_path / "BENCH_LOCAL_r05.json").write_text(json.dumps(legacy))
-    full = str(os.cpu_count() or 8)
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", full)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     name, _ = bench._previous_bench(0.1)
     assert name == "BENCH_LOCAL_r05.json"  # full-machine run: matches
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(max(2, (os.cpu_count() or 8) // 4)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
     assert bench._previous_bench(0.1) is None  # low-core run: re-seeds
     # any_cpus=True (the foreign-cpus marker probe) still sees it
     assert bench._bench_history(0.1, limit=1, any_cpus=True)
+    # A c4 run on a 4-core host: the cpus-less record is c32, whatever
+    # the host's own count, so the run re-seeds (it used to ratchet
+    # against the c32 record) ...
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 4)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert bench._previous_bench(0.1) is None
+    # ... and a cpus-less record whose name carries c4 is a c4 record
+    (tmp_path / "BENCH_r04_c4.json").write_text(json.dumps(legacy))
+    name, _ = bench._previous_bench(0.1)
+    assert name == "BENCH_r04_c4.json"
+    # a c4 record lands on its own stem even when 4 is the host's count
+    bench._write_local({"queries": {"q_a": 2.0}, "sf": 0.1, "reduction": red, "cpus": 4})
+    (written,) = tmp_path.glob("BENCH_LOCAL_c4_r*.json")
+    name, doc = bench._previous_bench(0.1)
+    assert name == written.name and doc["cpus"] == 4
 
 
 def test_multiline_record_file_is_still_readable(tmp_path, monkeypatch):

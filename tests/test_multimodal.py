@@ -919,3 +919,45 @@ def test_video_fingerprint_deterministic(spark, sf_dir):
         ).collect()
     }
     assert one == two and len(one) > 0
+
+
+def test_worker_kernels_run_without_the_package_on_the_path(tmp_path):
+    """The image synthesizer and decoder run inside Python workers,
+    where the package may not be importable: they ship pickled by value
+    (the package __init__ registers it), so they must not import
+    hive_gateway_spark lazily. Load them in a fresh interpreter whose
+    sys.path lacks the package and run every doc_id % 4 container."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from hive_gateway_spark.operators.multimodal import _synth_image_payload, decode_image
+
+    blob = tmp_path / "kernels.pkl"
+    blob.write_bytes(cloudpickle.dumps((_synth_image_payload, decode_image)))
+    script = """
+import importlib.util, pickle, sys
+assert importlib.util.find_spec("hive_gateway_spark") is None
+synth, decode = pickle.loads(open(sys.argv[1], "rb").read())
+for doc_id in range(100, 104):  # ppm, bmp, png, jpeg
+    d = decode(synth(doc_id))
+    assert (d["width"], d["height"]) == (8, 8), (doc_id, d)
+    assert d["pixels"].mean() == doc_id, (doc_id, d["pixels"].mean())
+"""
+    path = [
+        p
+        for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        if p and not os.path.isdir(os.path.join(p, "hive_gateway_spark"))
+    ]
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(path))
+    run = subprocess.run(
+        [sys.executable, "-c", script, str(blob)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert run.returncode == 0, run.stderr

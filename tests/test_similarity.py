@@ -509,14 +509,21 @@ def test_maybe_rebuild_ivf_fires_and_improves(spark, tmp_path):
     # plans over it stay recomputable.
     from hive_gateway_spark.session import load_tables as _lt
 
-    stale_key = _lt(maint, sfd)["embeddings"].semanticHash()
-    per_i = sim._IVF_CACHE.setdefault(maint, {})
+    stale_emb = _lt(maint, sfd)["embeddings"]
     sentinel = ("unrelated-index-sentinel",)
-    per_i["other-corpus"] = sentinel
-    per_i[stale_key] = ("stale-entry",)
+    stale = ("stale-entry",)
+    sim._IVF_CACHE.get_or_build(maint, "other-corpus", lambda: sentinel)
+    sim._IVF_CACHE.get_or_build(maint, None, lambda: stale, plan=stale_emb)
     fired = sim.maybe_rebuild_ivf(maint, sfd, idx)
-    assert per_i.get("other-corpus") is sentinel
-    assert per_i.get(stale_key) != ("stale-entry",)
+
+    def dropped():
+        raise AssertionError("the unrelated entry was dropped")
+
+    assert sim._IVF_CACHE.get_or_build(maint, "other-corpus", dropped) is sentinel
+    assert (
+        sim._IVF_CACHE.get_or_build(maint, None, lambda: "rebuilt", plan=stale_emb)
+        is not stale
+    )
     assert fired["rebuilt"] is True
     assert fired["max_imbalance"] > sim.IVF_REBUILD_IMBALANCE
     # the rebuild retrained on the CURRENT (grown) corpus...

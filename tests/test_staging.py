@@ -5,11 +5,30 @@ the leaked blocks otherwise accumulate for its lifetime."""
 
 from __future__ import annotations
 
-from hive_gateway_spark.staging import evict, release, stage
+import pytest
+
+from hive_gateway_spark.staging import SessionCache, evict, release, stage
 
 
 def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+#: A cache owned by this module's tests, so they never disturb the
+#: operator caches' entries.
+_TEST_CACHE = SessionCache("tests.staging")
+
+
+def _never():
+    raise AssertionError("expected a cache hit")
+
+
+def _forge_collision(cache, spark, incoming, key=None):
+    """Plant a SessionCache entry under ``incoming``'s (semanticHash,
+    key) whose plan and checkpoint belong to a different query."""
+    wrong = spark.range(10).selectExpr("id AS v")
+    wrong.semanticHash = incoming.semanticHash  # forged: collides with incoming
+    cache.get_or_build(spark, key, wrong.localCheckpoint, plan=wrong)
 
 
 def test_release_frees_checkpoint_blocks(spark):
@@ -112,24 +131,119 @@ def test_stage_never_serves_released_checkpoint(spark):
     release(b)
 
 
-def test_stage_hash_collision_guard(spark):
+@pytest.mark.parametrize("site", ["stage", "SessionCache", "minhash_site"])
+def test_stage_hash_collision_guard(spark, sf_dir, site):
     """A 32-bit semanticHash() collision between genuinely different
-    plans must NOT serve the other plan's data: the reuse path confirms
-    with sameSemantics against the stored input plan. Simulated by
-    forging a slot entry whose recorded key matches the incoming plan's
-    hash but whose plan/checkpoint belong to a different query."""
-    from hive_gateway_spark.staging import _SLOTS
+    plans must NOT serve the other plan's data: every plan-keyed reuse
+    path confirms with sameSemantics against the stored input plan.
+    Simulated by forging an entry whose recorded key matches the
+    incoming plan's hash but whose plan/checkpoint belong to a
+    different query — in a stage() slot, in a bare SessionCache, and
+    in a real operator cache (the minhash signature staging)."""
+    if site == "stage":
+        from hive_gateway_spark.staging import _SLOTS
 
-    wrong = spark.range(10).selectExpr("id AS v")
-    incoming = spark.range(99).selectExpr("id * 2 AS v")
-    _SLOTS.setdefault(spark, {})["test.collide"] = (
-        incoming.semanticHash(),  # forged: collides with incoming
-        wrong,
-        wrong.localCheckpoint(),
-    )
-    out = stage(incoming, "test.collide")
-    assert out.count() == 99  # the incoming plan's data, not the forgery's
+        wrong = spark.range(10).selectExpr("id AS v")
+        incoming = spark.range(99).selectExpr("id * 2 AS v")
+        _SLOTS.setdefault(spark, {})["test.collide"] = (
+            incoming.semanticHash(),  # forged: collides with incoming
+            wrong,
+            wrong.localCheckpoint(),
+        )
+        out = stage(incoming, "test.collide")
+        assert out.count() == 99  # the incoming plan's data, not the forgery's
+    elif site == "SessionCache":
+        incoming = spark.range(99).selectExpr("id * 2 AS v")
+        _forge_collision(_TEST_CACHE, spark, incoming, "collide")
+        out = _TEST_CACHE.get_or_build(
+            spark, "collide", incoming.localCheckpoint, plan=incoming
+        )
+        assert out.count() == 99
+    else:
+        from hive_gateway_spark.operators import dedup
+        from hive_gateway_spark.session import load_tables
+
+        docs = load_tables(spark, sf_dir)["documents"]
+        _forge_collision(dedup._MINHASH_CACHE, spark, docs)
+        out = dedup._minhash_sig_frame(spark, sf_dir)
+        assert "mh0" in out.columns
+        assert out.count() == docs.count()
     release(out)
+
+
+def test_session_cache_never_serves_released_frame(spark):
+    """release() is the single choke point: a SessionCache entry holding
+    the released checkpoint (alone or inside a composite value) is
+    dropped, so a later identical lookup rebuilds instead of handing
+    back a frame whose blocks are gone."""
+    plan = spark.range(70).selectExpr("id * 7 AS k")
+    a = _TEST_CACHE.get_or_build(spark, "released", plan.localCheckpoint, plan=plan)
+    assert _TEST_CACHE.get_or_build(spark, "released", _never, plan=plan) is a
+    release(a)
+    b = _TEST_CACHE.get_or_build(spark, "released", plan.localCheckpoint, plan=plan)
+    assert b is not a
+    assert b.count() == 70  # fresh, executable checkpoint
+    pair = _TEST_CACHE.get_or_build(spark, "pair", lambda: (b, 1))
+    release(b)
+    assert _TEST_CACHE.get_or_build(spark, "pair", lambda: "rebuilt") == "rebuilt"
+    assert pair[0] is b
+
+
+def test_session_cache_unhashable_plan_is_built_not_cached(spark):
+    """A plan whose semanticHash() raises is built every time and never
+    cached (the old id(df) fallback could serve a dead frame's entry to
+    a new frame that reused its id)."""
+    plan = spark.range(5)
+
+    def boom():
+        raise RuntimeError("no semantic hash")
+
+    plan.semanticHash = boom
+    built = []
+
+    def build():
+        built.append(1)
+        return len(built)
+
+    assert _TEST_CACHE.get_or_build(spark, "unhashable", build, plan=plan) == 1
+    assert _TEST_CACHE.get_or_build(spark, "unhashable", build, plan=plan) == 2
+
+
+def test_session_cache_lru_bound_and_scoped_pop(spark):
+    """Eviction runs before the build, down to ``cap`` entries, so a
+    cache holds at most cap + 1; a hit refreshes an entry's LRU
+    position; pop() drops only the named entry."""
+    cache = SessionCache("tests.staging.bound", cap=2)
+    base = _n_persistent(spark)
+    frames = {
+        i: cache.get_or_build(spark, i, spark.range(i + 1).localCheckpoint)
+        for i in range(3)
+    }
+    assert _n_persistent(spark) == base + 3
+    assert cache.get_or_build(spark, 0, _never) is frames[0]  # 0 is now MRU
+    cache.get_or_build(spark, 3, spark.range(9).localCheckpoint)  # evicts 1
+    assert _n_persistent(spark) == base + 3
+    assert cache.get_or_build(spark, 1, lambda: "rebuilt") == "rebuilt"  # evicts 2
+    cache.pop(spark, 0)
+    assert _n_persistent(spark) == base + 1  # only key 3's frame is left
+    assert cache.get_or_build(spark, 3, _never).count() == 9
+    cache.pop(spark, 3)
+    assert _n_persistent(spark) == base
+
+
+def test_operator_caches_use_session_cache():
+    """Every staging cache under operators/ is a staging.SessionCache —
+    a hand-rolled WeakKeyDictionary cache must not grow back."""
+    import pathlib
+
+    import hive_gateway_spark.operators as ops
+
+    offenders = [
+        p.name
+        for p in pathlib.Path(ops.__file__).parent.rglob("*.py")
+        if "WeakKeyDictionary" in p.read_text()
+    ]
+    assert offenders == []
 
 
 def test_direct_release_clears_plan_memos(spark):
