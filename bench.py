@@ -1,8 +1,12 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints the
+full record as one JSON line, then a compact contract line LAST.
+
+Sweep order (``sweep_order``): the 22 ``HEADLINE`` queries first, in
+their order, then every other ``registry.QUERIES`` name in registration
+order. ``value`` is the sum over ``HEADLINE`` (the r01-comparable
+headline); ``value_all`` is the sum over every query.
 
 Timing = full plan execution materialized via the NOOP SINK (see
 REDUCTION below — count() let the optimizer prune pure projections
@@ -14,6 +18,11 @@ Hygiene (VERDICT r01 "Next round" #8): per query we record one COLD run
 ``value``/``queries`` carry the warm medians (the steady-state number
 that scales and is comparable round-over-round under co-tenant noise),
 ``queries_cold`` carries the cold runs.
+
+Each passing run writes its complete record as ONE JSON document to
+``BENCH_LOCAL_[c<N>_][sf<sf>_]r<NN>.json`` (``_write_local``); the next
+run's regression gate reads those files back with ``json.load``
+(``_bench_history``), and a file that does not parse is an error.
 """
 
 from __future__ import annotations
@@ -59,319 +68,12 @@ HEADLINE = [
     "q_tpch_q3",
 ]
 
-#: Round-2 additions — benched separately so `value_r01_comparable`
-#: (sum over the original 22) stays comparable across rounds.
-HEADLINE_R2 = [
-    "q_promo_revenue",
-    "q_udaf_wmean",
-    "q_contamination",
-    "q_domain_mix",
-    "q_pii_scrub",
-    "q_doc_repetition",
-    "q_minhash_signatures",
-    "q_curation_v2",
-]
 
-#: Round-6 additions — same isolation rationale.
-HEADLINE_R6 = [
-    "q_multimodal_codecs",
-]
-
-#: Round-7 additions: the new SQL-verified LSH banding and the composed
-#: canonical election (the heaviest of the freshly window-rotated ops).
-HEADLINE_R7 = [
-    "q_lsh_candidates",
-    "q_dedup_canonical",
-    # late-r7 additions: the heaviest of the new selection/multimodal
-    # family — tokenize-join (tf-idf), window packing, shingle-join
-    # containment, codec mapInPandas (video), HOF quantization.
-    "q_tf_idf",
-    "q_pack_sequences",
-    "q_dedup_containment",
-    "q_video_framesample",
-    "q_embed_quantize",
-    # corpus-statistics family: gram inverted file (substring dedup),
-    # chunk rebuild (boilerplate), bigram LM scoring, DSIR selection.
-    "q_dedup_substring",
-    "q_boilerplate_chunks",
-    "q_lm_perplexity",
-    "q_dsir_weights",
-    # real BPE: cold includes the greedy merge training loop (~12 s,
-    # vocab-sized jobs); warm = encode via the session-cached merges.
-    "q_bpe_encode",
-    # breadth block: triangle two-hop join over the staged pair set,
-    # incremental-ingest decisions, dense-grid gap-fill, blocked
-    # Levenshtein fuzzy join.
-    "q_graph_triangles",
-    "q_dedup_incremental",
-    "q_ts_gapfill",
-    "q_join_fuzzy",
-    # the composed published-recipe pipeline (cold builds the staged
-    # survivor frame; warm reads the session staging like a cluster
-    # reads its intermediate corpus version)
-    "q_curation_v3",
-    # late-r7: drift monitor, substring rewrite, behavioral analytics,
-    # exact-decimal outliers, transitions, image pHash near-dup.
-    "q_corpus_drift",
-    "q_substring_trim",
-    "q_funnel",
-    "q_cohort_retention",
-    "q_outliers",
-    "q_event_transitions",
-    "q_image_phash",
-    "q_audio_fingerprint",
-]
-
-#: Round-8 additions: readability projection, temperature mixture,
-#: journey-prefix top-k.
-HEADLINE_R8 = [
-    "q_text_readability",
-    "q_sample_temperature",
-    "q_user_paths",
-    "q_k_anonymity",
-    "q_ann_buckets",
-    "q_interval_overlap",
-    "q_event_value_corr",
-    "q_rolling_wau",
-    "q_ngram_novelty",
-    "q_audience_overlap",
-    "q_char_entropy",
-    "q_curation_funnel",
-    "q_lsh_quality",
-    "q_dedup_cluster_stats",
-    "q_volume_anomaly",
-    "q_pii_exposure",
-    "q_curation_shift",
-    "q_session_depth",
-    "q_tpch_q10",
-    "q_late_ship_report",
-    "q_null_profile",
-]
-
-#: Round-9 additions: rule battery, perplexity cut, per-source sample,
-#: two TPC-H classics, basket lift, RFM quintiles.
-HEADLINE_R9 = [
-    "q_gopher_rules",
-    "q_ccnet_buckets",
-    "q_reservoir_per_source",
-    "q_tpch_q5",
-    "q_tpch_q18",
-    "q_brand_affinity",
-    "q_rfm_segments",
-    "q_chunk_windows",
-    "q_first_touch",
-    "q_compress_ratio",
-    "q_tpch_q6",
-    "q_tpch_q13",
-    "q_graph_kcore",
-    "q_vocab_coverage",
-    "q_collocations",
-    "q_mad_outliers",
-    "q_event_gaps",
-    "q_churn_matrix",
-    "q_dedup_normalized",
-]
-
-HEADLINE_R10 = [
-    "q_curation_v4",
-    "q_curation_v4_funnel",
-    "q_ntile_assign",
-    "q_tpch_q1",
-    "q_ann_index_stats",
-]
-
-#: Round-11 additions: conditional-agg fact-fact join, disjunctive
-#: predicate extraction, the exact_rank distribution projection, the
-#: packing-efficiency audit.
-HEADLINE_R11 = [
-    "q_tpch_q12",
-    "q_tpch_q19",
-    "q_rank_distribution",
-    "q_pack_efficiency",
-    "q_exact_quantiles",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_tpch_q15",
-    "q_tpch_q17",
-    "q_tpch_q22",
-    "q_hard_negatives",
-    # benched since its r11 hash-verified rewrite (the MLlib spelling
-    # this replaces was never in a headline block)
-    "q_dedup_fuzzy",
-]
-
-#: Round-12 additions: the TPC-H completion batch (every published
-#: query shape now registered — Q2/Q11/Q16/Q20 over the
-#: lineitem-derived part-supplier catalog, Q4/Q21 with shipdate
-#: lateness, Q9's five-way star).
-HEADLINE_R12 = [
-    "q_tpch_q4",
-    "q_tpch_q9",
-    "q_tpch_q2",
-    "q_tpch_q11",
-    "q_tpch_q16",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_quality_classifier",
-    "q_semantic_dedup",
-    "q_dataset_card",
-    "q_sim_topk_pq",
-    "q_sim_topk_pq_rerank",
-    "q_curation_v5",
-    "q_video_phash_dedup",
-]
-
-HEADLINE_R13 = [
-    "q_sim_topk_ivfpq",
-    "q_curation_v5_funnel",
-    "q_sim_range_search",
-    "q_text_bm25",
-    "q_quantile_sketch",
-    "q_curation_v5_trace",
-    "q_heavy_hitters",
-    "q_sim_topk_filtered",
-    "q_hybrid_search",
-    "q_heavy_hitters_by_lang",
-    # continuation-session additions (same round)
-    "q_embed_coherence",
-    "q_split_leakage",
-    "q_scd2_history",
-    "q_phrase_search",
-    "q_retrieval_mmr",
-    "q_ann_recall",
-    "q_l_diversity",
-    "q_zorder_layout",
-    "q_retrieval_ndcg",
-    "q_embed_outliers",
-    "q_scd2_incremental",
-    "q_wow_growth",
-    "q_volume_trend",
-    "q_benford_values",
-    "q_join_asof_tolerance",
-    "q_attribution_linear",
-    "q_cohort_revenue",
-    "q_conversion_lag",
-]
-
-#: Round-14 additions: the hash-checkable ADC candidate pipeline and
-#: the TPC-DS starter shapes.
-HEADLINE_R14 = [
-    "q_pq_candidates",
-    "q_tpcds_q3",
-    "q_tpcds_q7",
-    "q_tpcds_q19",
-    "q_tpcds_q27",
-    "q_t_closeness",
-    "q_tokenizer_fertility",
-    "q_join_asof_forward",
-    "q_tpcds_q88",
-    "q_sim_topk_lsh",
-    "q_tpcds_q59",
-    "q_time_weighted_avg",
-    "q_ohlc_bars",
-    "q_dim_lookup_scd2",
-    "q_window_funnel",
-]
-
-HEADLINE_R15 = [
-    "q_tpcds_q1",
-    "q_tpcds_q34",
-    "q_tpcds_q42",
-    "q_tpcds_q95",
-    "q_tpcds_q51",
-    "q_tpcds_q36",
-    "q_ivfpq_candidates",
-    "q_sequence_count",
-    "q_join_asof_nearest",
-    "q_downsample_m4",
-    "q_cusum_drift",
-]
-
-#: r16 closes the measurement-lag class for good (VERDICT r15 task #4
-#: asked for the three late-r15 stragglers; the audit behind it found
-#: 69 registered queries that had NEVER carried a bench point — mostly
-#: the cheap relational/window/text primitives benched only through
-#: the parity gate). The rule is now structural: every registry entry
-#: appears in some HEADLINE_* block, and tests/test_bench_gate.py
-#: pins registry ⊆ blocks so a query cannot land without its bench
-#: point. First sub-list: the named stragglers + this round's new
-#: queries; the rest complete the registry sweep.
-HEADLINE_R16 = [
-    "q_tpcds_q67",
-    "q_histogram_equidepth",
-    "q_session_funnel",
-    "q_tpcds_q14",
-    "q_tpcds_q23",
-    "q_tpcds_q74",
-    "q_hll_audit",
-    "q_prf_expansion",
-    "q_token_budget_fill",
-    # -- full-registry completion (never previously benched) --
-    "q_agg_distinct",
-    "q_agg_grouping_sets",
-    "q_agg_having",
-    "q_agg_kmv",
-    "q_agg_listagg",
-    "q_agg_rollup",
-    "q_agg_sketch",
-    "q_agg_stats",
-    "q_argmax",
-    "q_audio_features",
-    "q_bpe_vocab",
-    "q_curation_trace",
-    "q_dedup_cross_lingual",
-    "q_dedup_embedding",
-    "q_dedup_rank",
-    "q_dedup_simhash",
-    "q_doc_length_buckets",
-    "q_expr_array",
-    "q_expr_case",
-    "q_expr_coalesce",
-    "q_expr_datetime",
-    "q_expr_math",
-    "q_expr_regex",
-    "q_expr_string",
-    "q_filter_predicate",
-    "q_gateway_compression",
-    "q_join_anti",
-    "q_join_broadcast",
-    "q_join_full",
-    "q_join_left",
-    "q_join_salted",
-    "q_join_semi",
-    "q_json_extract",
-    "q_latency_stats",
-    "q_multimodal_decode",
-    "q_multimodal_thumbs",
-    "q_pivot",
-    "q_sample_hash",
-    "q_sample_stratified",
-    "q_scan_project",
-    "q_set_except",
-    "q_set_intersect",
-    "q_set_union",
-    "q_sim_topk_ivf",
-    "q_sort_limit_topk",
-    "q_split_assign",
-    "q_template_catalog",
-    "q_text_fingerprint",
-    "q_text_lang_report",
-    "q_text_langid",
-    "q_text_ngrams",
-    "q_text_normalize",
-    "q_text_stats",
-    "q_text_unigram_score",
-    "q_time_bucket",
-    "q_token_count",
-    "q_unpivot",
-    "q_warc_ingest",
-    "q_window_analytic",
-    "q_window_ntile",
-    "q_window_range_frame",
-    "q_window_rank",
-    "q_window_sliding",
-    "q_zipf_fit",
-]
+def sweep_order() -> list[str]:
+    """Every registered query exactly once: ``HEADLINE`` first, in its
+    order, then the rest of ``registry.QUERIES`` in registration order."""
+    registry.load_all()
+    return HEADLINE + [n for n in registry.QUERIES if n not in HEADLINE]
 
 
 #: Regression gate (VERDICT r6 task #6): warm ratio vs the previous
@@ -414,14 +116,7 @@ SENTINEL_MIN_PREV_SEC = 0.2
 #: at the next round open. This is the honest alternative to letting
 #: a KNOWN change trip the reproduce-before-fail protocol (which
 #: exists to catch UNINTENDED slowdowns).
-REBASELINED: dict[str, str] = {
-    "q_quantile_sketch": (
-        "r16 rows-only -> exact-oracle upgrade: the driver-hashable "
-        "surface now verifies the GK samples against exact rank "
-        "counts (one additional broadcast-join fact scan by design); "
-        "the raw sketch path is unchanged as quantile_sketch_raw"
-    ),
-}
+REBASELINED: dict[str, str] = {}
 
 #: Global-slowdown tripwire (ADVICE r7 #5): median-normalizing the
 #: per-query gate makes it blind to a change that slows EVERY query
@@ -442,21 +137,9 @@ def _round_of(path: str) -> int:
 
 
 #: Core count of the full machine the driver records on: the count a
-#: record without a ``cpus`` field (or a ``c<N>`` file-name tag) was
-#: measured at, and the one count whose BENCH_LOCAL stem carries no tag.
+#: record without a ``cpus`` field was measured at, and the one count
+#: whose BENCH_LOCAL stem carries no ``c<N>_`` tag.
 FULL_MACHINE_CPUS = 32
-
-
-def _record_cpus(path: str, doc: dict) -> int:
-    """The core count ``doc`` (read from ``path``) was recorded at: its
-    ``cpus`` field, else the file name's ``c<N>`` tag
-    (BENCH_r17_c8.json, BENCH_LOCAL_c8_r17.json), else the full
-    machine — never the host reading it (a 4-core host used to take a
-    cpus-less c32 record as its own)."""
-    if doc.get("cpus"):
-        return doc["cpus"]
-    m = re.search(r"(?:^|_)c(\d+)(?:_|\.json$)", os.path.basename(path))
-    return int(m.group(1)) if m else FULL_MACHINE_CPUS
 
 
 def _run_cpus() -> int:
@@ -468,88 +151,40 @@ def _run_cpus() -> int:
         return os.cpu_count() or 0
 
 
-def _previous_bench(sf: float) -> tuple[str, dict] | None:
-    """The best per-query baseline on disk FOR THIS SCALE FACTOR
-    (VERDICT r9 task #3; per-sf selection ADVICE r11 #4).
-
-    The driver's BENCH_r07..r09 records stored only a truncated `tail`,
-    which silently pinned the effective baseline at BENCH_r06 and left
-    every query added since UNGUARDED. bench.py therefore writes its own
-    COMPLETE per-query record (BENCH_LOCAL[_sf*]_r{N}.json,
-    `_write_local`) at every close and prefers the newest such file —
-    BENCH_LOCAL beats a driver BENCH of the same round; newest round
-    wins overall. A second run within one round ratchets against the
-    first.
-
-    Records from a DIFFERENT scale factor are SKIPPED, not returned:
-    before this, one baseline landing at another sf permanently
-    disabled the ratchet for the current sf (the foreign record kept
-    winning the newest-round sort while the gate and the baseline
-    write were both conditioned on sf comparability). Each sf now
-    maintains its own ratchet; sf-less legacy records still match any
-    run."""
-    hist = _bench_history(sf, limit=1)
-    return hist[0] if hist else None
-
-
 def _bench_history(
     sf: float, limit: int = 2, any_cpus: bool = False
 ) -> list[tuple[str, dict]]:
-    """Up to ``limit`` newest comparable records, newest first — the
-    second entry backs the BASELINE-ANOMALY check: a confirmed warm
-    flag must be a regression against the last TWO independent
-    records, because one anomalously FAST sample becoming the
-    baseline makes every honest later measurement look regressed
+    """Up to ``limit`` newest comparable BENCH_LOCAL records, newest
+    round first, as ``(file name, record)``. The first is the
+    regression baseline; the second backs the BASELINE-ANOMALY check:
+    a confirmed warm flag must be a regression against the last TWO
+    independent records, because one anomalously FAST sample becoming
+    the baseline makes every honest later measurement look regressed
     (observed r16: q_brand_affinity recorded 0.381 in one run — r15:
     0.727, the runs around it: 0.88/0.65 — and the next run's honest
-    0.65 'reproduced' a phantom 1.7× flag with the machine flat)."""
+    0.65 'reproduced' a phantom 1.7× flag with the machine flat).
+
+    Comparable means same sf (an sf-less record matches any), same
+    core count (unless ``any_cpus``) and the current REDUCTION. Each
+    file is one JSON document; one that does not parse raises
+    ``ValueError`` naming it, because skipping it would silently
+    disable the ratchet."""
     import glob
 
     here = os.path.dirname(os.path.abspath(__file__))
-    candidates = sorted(
-        glob.glob(os.path.join(here, "BENCH_LOCAL_r*.json"))
-        + glob.glob(os.path.join(here, "BENCH_LOCAL_sf*_r*.json"))
-        + glob.glob(os.path.join(here, "BENCH_LOCAL_c*_r*.json"))
-        + glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda p: (_round_of(p), "BENCH_LOCAL" in os.path.basename(p)),
+    paths = sorted(
+        glob.glob(os.path.join(here, "BENCH_LOCAL_*.json")),
+        key=lambda p: (_round_of(p), p),
         reverse=True,
     )
     cpus = _run_cpus()
     out: list[tuple[str, dict]] = []
-    for path in candidates:
-        try:
-            with open(path) as f:
-                text = f.read()
+    for path in paths:
+        with open(path) as f:
             try:
-                doc = json.loads(text)
-            except json.JSONDecodeError:
-                # Tolerate a record file holding extra JSON lines (r16:
-                # BENCH_LOCAL_r15.json carried the compact driver line
-                # after the full record, making the WHOLE r15 history
-                # invisible to the baseline-anomaly check). r17 (ADVICE
-                # r16 #2): try EVERY line and prefer the parse with the
-                # largest non-empty 'queries' map — a compact line
-                # BEFORE the full record must not win either.
-                doc = None
-                for line in text.strip().splitlines():
-                    try:
-                        cand = json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
-                    if not isinstance(cand, dict):
-                        continue
-                    q = cand.get("queries")
-                    best_q = (doc or {}).get("queries") if isinstance(doc, dict) else None
-                    if isinstance(q, dict) and len(q) > len(best_q or {}):
-                        doc = cand
-                if doc is None:
-                    continue
-        except (OSError, json.JSONDecodeError, IndexError):
-            continue
-        if isinstance(doc, dict) and isinstance(doc.get("parsed"), dict):
-            doc = doc["parsed"]  # driver-recorded shape wraps the JSON line
-        if not (isinstance(doc, dict) and isinstance(doc.get("queries"), dict)):
-            continue
+                doc = json.load(f)
+            except json.JSONDecodeError as e:
+                raise ValueError(f"{path}: not one JSON document: {e}") from e
         if doc.get("sf") not in (None, sf):
             continue  # foreign-sf record: this sf's ratchet lives elsewhere
         # foreign-core-count record (VERDICT r16 "what's wrong" #6: the
@@ -557,34 +192,9 @@ def _bench_history(
         # shuffle-heavy queries that legitimately slow at 8 cores).
         # Each core count keeps its own ratchet. A legacy record
         # without the key was recorded on the full machine, so it
-        # matches only full-machine runs — "matches any run" let an
-        # r17 c8 diagnostic ratchet against the c32 r16 record and
-        # exit rc=1 on the mapInPandas family (honestly ~2x slower at
-        # 1/4 the cores).
-        rec_cpus = _record_cpus(path, doc)
-        if not any_cpus and rec_cpus != cpus:
+        # matches only full-machine runs.
+        if not any_cpus and (doc.get("cpus") or FULL_MACHINE_CPUS) != cpus:
             continue
-        # Heal drift-poisoned write-backs in PRE-r17 records (the same
-        # clamp warm_gate now applies at write time, applied
-        # retroactively at load time): a query listed in the record's
-        # regressions_first_pass but NOT confirmed had its timing
-        # overwritten with remeasured/drift, and one burst-contaminated
-        # drift sample (3.408 in the r16 driver record) seeded
-        # baselines far below any honest steady state. The flag entry
-        # carries the query's own prev — the last accepted honest
-        # number — so clamp the loaded baseline to at least that.
-        fp = doc.get("regressions_first_pass")
-        if isinstance(fp, dict):
-            conf = doc.get("regressions") or {}
-            qs = doc["queries"]
-            for n, f in fp.items():
-                if (
-                    n not in conf
-                    and isinstance(f, dict)
-                    and isinstance(f.get("prev"), (int, float))
-                    and isinstance(qs.get(n), (int, float))
-                ):
-                    qs[n] = max(qs[n], f["prev"])
         if doc.get("reduction", "count") != REDUCTION:
             # measured under a different materialization protocol —
             # ratios against it are meaningless (count() undercharged
@@ -782,7 +392,7 @@ def warm_gate(
 #: where the real fold costs ~5 s — discovered when predicate pushdown
 #: moved the same fold somewhere it couldn't be pruned). Baselines
 #: recorded under a DIFFERENT protocol are not comparable and are
-#: skipped by _previous_bench, so the ratchet re-seeds once.
+#: skipped by _bench_history, so the ratchet re-seeds once.
 REDUCTION = "noop-sink"
 
 
@@ -909,7 +519,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
-    registry.load_all()
+    names = sweep_order()
     spark = get_spark("hive-gateway-spark-bench")
 
     # Serve-posture ANN setup (VERDICT r12 task #3): publish the IVF
@@ -934,23 +544,9 @@ def main() -> None:
 
     import gc
 
-    # every HEADLINE_* block, current and future, swept and totaled
-    # DYNAMICALLY: the hardcoded chain this replaces is the exact
-    # failure class that silently dropped the r11 block from
-    # sf1_scale_bench.py the round it was added (code-review r11).
-    blocks = dict(
-        sorted(
-            (
-                ("r" + a[len("HEADLINE_R"):].zfill(2), globals()[a])
-                for a in globals()
-                if a.startswith("HEADLINE_R")
-            ),
-            key=lambda kv: kv[0],  # numeric round order, r02..r11
-        )
-    )
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    for name in (HEADLINE + [q for b in blocks.values() for q in b]):
+    for name in names:
         fn = registry.QUERIES[name]
         # drop the previous query's dead broadcasts/UDF workers before
         # timing this one — without it, late queries in a 30-query
@@ -1045,61 +641,49 @@ def main() -> None:
                     "median_ratio": round(cold_median_ratio, 2),
                 }
     # "value" stays the sum over the SAME 22 queries r01 benched, so the
-    # round-over-round headline compares like-for-like; each round
-    # block's total is reported separately (and inside "queries").
-    # Summed AFTER the gate so a retracted flag's re-measured
-    # steady-state number is what the totals carry.
-    r01_comparable = round(sum(timings[n] for n in HEADLINE), 3)
-    # keys match the historical record shape: HEADLINE_R7 → value_r7_ops
-    block_totals = {
-        f"value_r{int(tag[1:])}_ops": round(sum(timings[n] for n in qs), 3)
-        for tag, qs in blocks.items()
+    # round-over-round headline compares like-for-like; "value_all" sums
+    # every query. Summed AFTER the gate so a retracted flag's
+    # re-measured steady-state number is what the totals carry.
+    record = {
+        "metric": "headline_query_wall_clock_total",
+        "value": round(sum(timings[n] for n in HEADLINE), 3),
+        "unit": "sec",
+        "value_all": round(sum(timings.values()), 3),
+        "queries": timings,
+        "queries_cold": cold,
+        "maintenance": maintenance,
+        "sf": sf,
+        "cpus": _run_cpus(),
+        "reduction": REDUCTION,
+        "regression_baseline": prev[0] if prev else None,
+        "baseline_foreign_cpus": baseline_foreign_cpus,
+        "rebaselined": sorted(REBASELINED),
+        "regression_median_ratio": round(median_ratio, 3),
+        "regressions": regressions,
+        "regressions_first_pass": record_first_pass,
+        "cold_median_ratio": round(cold_median_ratio, 3),
+        "cold_regressions": cold_regressions,
+        "regression_gate": (
+            "fail"
+            if regressions
+            # cold is a WARNING, not a failure: cold times are
+            # single samples (warm is a median of 3), and one
+            # co-tenant CPU spike during a query's only cold
+            # measurement was observed inflating it 5.5× with
+            # the round median at 1.06 — a hard exit would
+            # teach operators to ignore the gate. The flag
+            # stays in the record for the next round to act on.
+            else (
+                "warn_cold"
+                if cold_regressions
+                else (
+                    "warn_global_slowdown"
+                    if median_ratio > GLOBAL_SLOWDOWN_RATIO
+                    else "pass"
+                )
+            )
+        ),
     }
-    record = (
-            {
-                "metric": "headline_query_wall_clock_total",
-                "value": r01_comparable,
-                "unit": "sec",
-                **block_totals,
-                "value_all": round(
-                    r01_comparable + sum(block_totals.values()), 3
-                ),
-                "queries": timings,
-                "queries_cold": cold,
-                "maintenance": maintenance,
-                "sf": sf,
-                "cpus": _run_cpus(),
-                "reduction": REDUCTION,
-                "regression_baseline": prev[0] if prev else None,
-                "baseline_foreign_cpus": baseline_foreign_cpus,
-                "rebaselined": sorted(REBASELINED),
-                "regression_median_ratio": round(median_ratio, 3),
-                "regressions": regressions,
-                "regressions_first_pass": record_first_pass,
-                "cold_median_ratio": round(cold_median_ratio, 3),
-                "cold_regressions": cold_regressions,
-                "regression_gate": (
-                    "fail"
-                    if regressions
-                    # cold is a WARNING, not a failure: cold times are
-                    # single samples (warm is a median of 3), and one
-                    # co-tenant CPU spike during a query's only cold
-                    # measurement was observed inflating it 5.5× with
-                    # the round median at 1.06 — a hard exit would
-                    # teach operators to ignore the gate. The flag
-                    # stays in the record for the next round to act on.
-                    else (
-                        "warn_cold"
-                        if cold_regressions
-                        else (
-                            "warn_global_slowdown"
-                            if median_ratio > GLOBAL_SLOWDOWN_RATIO
-                            else "pass"
-                        )
-                    )
-                ),
-            }
-    )
     # A FAILING run must not become the next baseline: persisting its
     # timings would let one re-run launder any warm regression into the
     # ratchet (the regressed value compares against itself → ratio 1.0

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """sf1 scaling point (VERDICT r8 task #7): generate a 10× sf0.1 dataset
-and measure per-query scaling ratios for the bench headline set.
+and measure per-query scaling ratios for every query bench.py sweeps.
 
 The driver ships sf{0.001,0.01,0.1}; the design argument all along has
 been "linear in corpus size at fixed key skew" — this script measures it
@@ -154,13 +154,7 @@ def run(sf1_dir: str) -> None:
     from hive_gateway_spark import registry
     from hive_gateway_spark.session import get_spark
 
-    registry.load_all()
-    # every HEADLINE_* block, current and future — a hardcoded list
-    # silently dropped the r11 block the round it was added
-    names = list(bench.HEADLINE)
-    for attr in sorted(a for a in dir(bench) if a.startswith("HEADLINE_R")):
-        names += getattr(bench, attr)
-    names = list(dict.fromkeys(names))  # a name in two blocks runs once
+    names = bench.sweep_order()
     only = os.environ.get("SF1_ONLY", "")
     if only:  # delta runs: measure just the named queries
         pick = set(only.split(","))

@@ -10,6 +10,8 @@ re-measurement reproduces it; both samples stay in the artifact.
 
 from __future__ import annotations
 
+import pytest
+
 import bench
 
 
@@ -194,24 +196,24 @@ def test_previous_bench_selects_same_sf_baseline(tmp_path, monkeypatch):
     }
     (tmp_path / "BENCH_LOCAL_r05.json").write_text(json.dumps(old))
     (tmp_path / "BENCH_LOCAL_sf0.01_r06.json").write_text(json.dumps(foreign))
-    name, doc = bench._previous_bench(0.1)
+    ((name, doc),) = bench._bench_history(0.1, limit=1)
     assert name == "BENCH_LOCAL_r05.json" and doc["sf"] == 0.1
-    name, doc = bench._previous_bench(0.01)
+    ((name, doc),) = bench._bench_history(0.01, limit=1)
     assert name == "BENCH_LOCAL_sf0.01_r06.json" and doc["sf"] == 0.01
-    assert bench._previous_bench(1.0) is None
+    assert bench._bench_history(1.0, limit=1) == []
     # records under a FOREIGN measurement protocol (the pre-r14 count()
     # reduction, marker-less) are skipped — ratios across protocols are
     # meaningless, the ratchet re-seeds
     (tmp_path / "BENCH_LOCAL_r07.json").write_text(
         json.dumps({"queries": {"q_a": 2.0}, "sf": 1.0, "cpus": cpus})
     )
-    assert bench._previous_bench(1.0) is None
+    assert bench._bench_history(1.0, limit=1) == []
     (tmp_path / "BENCH_LOCAL_r08.json").write_text(
         json.dumps(
             {"queries": {"q_a": 2.0}, "sf": 1.0, "reduction": red, "cpus": cpus}
         )
     )
-    name, _ = bench._previous_bench(1.0)
+    ((name, _),) = bench._bench_history(1.0, limit=1)
     assert name == "BENCH_LOCAL_r08.json"
 
 
@@ -231,10 +233,10 @@ def test_legacy_cpusless_record_is_full_machine_only(tmp_path, monkeypatch):
     legacy = {"queries": {"q_a": 1.0}, "sf": 0.1, "reduction": red}
     (tmp_path / "BENCH_LOCAL_r05.json").write_text(json.dumps(legacy))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-    name, _ = bench._previous_bench(0.1)
+    ((name, _),) = bench._bench_history(0.1, limit=1)
     assert name == "BENCH_LOCAL_r05.json"  # full-machine run: matches
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
-    assert bench._previous_bench(0.1) is None  # low-core run: re-seeds
+    assert bench._bench_history(0.1, limit=1) == []  # low-core run: re-seeds
     # any_cpus=True (the foreign-cpus marker probe) still sees it
     assert bench._bench_history(0.1, limit=1, any_cpus=True)
     # A c4 run on a 4-core host: the cpus-less record is c32, whatever
@@ -242,42 +244,42 @@ def test_legacy_cpusless_record_is_full_machine_only(tmp_path, monkeypatch):
     # against the c32 record) ...
     monkeypatch.setattr(bench.os, "cpu_count", lambda: 4)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    assert bench._previous_bench(0.1) is None
-    # ... and a cpus-less record whose name carries c4 is a c4 record
-    (tmp_path / "BENCH_r04_c4.json").write_text(json.dumps(legacy))
-    name, _ = bench._previous_bench(0.1)
-    assert name == "BENCH_r04_c4.json"
-    # a c4 record lands on its own stem even when 4 is the host's count
+    assert bench._bench_history(0.1, limit=1) == []
+    # ... and a c4 record lands on its own stem even when 4 is the
+    # host's count, so the next c4 run ratchets on it
     bench._write_local({"queries": {"q_a": 2.0}, "sf": 0.1, "reduction": red, "cpus": 4})
     (written,) = tmp_path.glob("BENCH_LOCAL_c4_r*.json")
-    name, doc = bench._previous_bench(0.1)
+    ((name, doc),) = bench._bench_history(0.1, limit=1)
     assert name == written.name and doc["cpus"] == 4
 
 
-def test_multiline_record_file_is_still_readable(tmp_path, monkeypatch):
-    """r16: BENCH_LOCAL_r15.json carried the compact driver line AFTER
-    the full record; json.load failed and the whole r15 history became
-    invisible to the baseline-anomaly check. The loader must fall back
-    to the FIRST JSON line."""
+@pytest.mark.parametrize("compact_first", [False, True],
+                         ids=["full_then_compact", "compact_then_full"])
+def test_multiline_record_file_raises_naming_it(
+    tmp_path, monkeypatch, compact_first
+):
+    """A record is one ``json.dump`` and is read back with ``json.load``.
+    A file holding anything else (here the full record and a compact
+    line, in either order) is an error that names the file: skipping it
+    would silently disable the ratchet."""
     import json
 
     monkeypatch.setattr(
         bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
     )
-    red = bench.REDUCTION
     full = {
         "queries": {"q_a": 1.0},
         "sf": 0.1,
-        "reduction": red,
+        "reduction": bench.REDUCTION,
         "cpus": bench._run_cpus(),
     }
     compact = {"queries": {}, "sf": 0.1}
-    (tmp_path / "BENCH_LOCAL_r05.json").write_text(
-        json.dumps(full) + "\n" + json.dumps(compact)
-    )
-    name, doc = bench._previous_bench(0.1)
-    assert name == "BENCH_LOCAL_r05.json"
-    assert doc["queries"] == {"q_a": 1.0}
+    lines = [json.dumps(full), json.dumps(compact)]
+    if compact_first:
+        lines.reverse()
+    (tmp_path / "BENCH_LOCAL_r05.json").write_text("\n".join(lines))
+    with pytest.raises(ValueError, match="BENCH_LOCAL_r05.json"):
+        bench._bench_history(0.1, limit=1)
 
 
 def test_burst_contaminated_remeasure_retracts_on_second_record():
@@ -304,21 +306,17 @@ def test_burst_contaminated_remeasure_retracts_on_second_record():
 
 
 def test_every_registered_query_has_a_bench_point():
-    """The r16 structural rule (VERDICT r15 task #4, made permanent):
-    no operator lands without its bench point — every registry entry
-    must appear in HEADLINE or some HEADLINE_R* block, and no block
-    may name a ghost query."""
+    """bench.py sweeps the registry: every registered query exactly
+    once, ``HEADLINE`` first and in its order (so ``value`` sums the
+    same queries, measured first in the session), and no ``HEADLINE``
+    name is a ghost."""
     from hive_gateway_spark import registry
 
-    registry.load_all()
-    benched = set(bench.HEADLINE)
-    for a in dir(bench):
-        if a.startswith("HEADLINE_R"):
-            benched.update(getattr(bench, a))
-    missing = sorted(set(registry.QUERIES) - benched)
-    assert not missing, f"registered queries with no bench point: {missing}"
-    ghosts = sorted(benched - set(registry.QUERIES))
-    assert not ghosts, f"benched names with no registered query: {ghosts}"
+    names = bench.sweep_order()
+    assert sorted(names) == sorted(registry.QUERIES)
+    assert names[: len(bench.HEADLINE)] == bench.HEADLINE
+    ghosts = sorted(set(bench.HEADLINE) - set(registry.QUERIES))
+    assert not ghosts, f"HEADLINE names with no registered query: {ghosts}"
 
 
 def test_rebaselined_entries_resolve_and_skip_the_gate():
@@ -414,17 +412,17 @@ def test_foreign_cpus_record_is_skipped(tmp_path, monkeypatch):
     c32 = {"queries": {"q_a": 1.0}, "sf": 0.1, "reduction": red, "cpus": 32}
     (tmp_path / "BENCH_LOCAL_r05.json").write_text(json.dumps(c32))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
-    assert bench._previous_bench(0.1) is None  # foreign cpus: gate skips
+    assert bench._bench_history(0.1, limit=1) == []  # foreign cpus: gate skips
     # ...but the any_cpus probe sees it, so main() can set the marker
     assert bench._bench_history(0.1, limit=1, any_cpus=True)
     # a c8 record ratchets later c8 runs
     c8 = {"queries": {"q_a": 2.0}, "sf": 0.1, "reduction": red, "cpus": 8}
     (tmp_path / "BENCH_LOCAL_c8_r06.json").write_text(json.dumps(c8))
-    name, doc = bench._previous_bench(0.1)
+    ((name, doc),) = bench._bench_history(0.1, limit=1)
     assert name == "BENCH_LOCAL_c8_r06.json" and doc["cpus"] == 8
     # and the c32 ratchet is untouched by the newer c8 record
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-    name, doc = bench._previous_bench(0.1)
+    ((name, doc),) = bench._bench_history(0.1, limit=1)
     assert name == "BENCH_LOCAL_r05.json" and doc["cpus"] == 32
     # legacy record without cpus is full-machine-only: invisible to a
     # 16-core diagnostic run, exactly like the explicit c32 record
@@ -433,35 +431,7 @@ def test_foreign_cpus_record_is_skipped(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "16")
     legacy = {"queries": {"q_a": 3.0}, "sf": 0.1, "reduction": red}
     (tmp_path / "BENCH_LOCAL_r04.json").write_text(json.dumps(legacy))
-    assert bench._previous_bench(0.1) is None  # 16-core ratchet re-seeds
-
-
-def test_compact_line_before_full_record_still_loads_full(
-    tmp_path, monkeypatch
-):
-    """ADVICE r16 #2: the tolerant loader retried only the FIRST line,
-    so a compact driver line BEFORE the full record silently loaded the
-    empty-queries doc. The loader must prefer the line with the largest
-    non-empty queries map, in either order."""
-    import json
-
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    red = bench.REDUCTION
-    full = {
-        "queries": {"q_a": 1.0, "q_b": 2.0},
-        "sf": 0.1,
-        "reduction": red,
-        "cpus": bench._run_cpus(),
-    }
-    compact = {"queries": {}, "sf": 0.1}
-    (tmp_path / "BENCH_LOCAL_r05.json").write_text(
-        json.dumps(compact) + "\n" + json.dumps(full)
-    )
-    name, doc = bench._previous_bench(0.1)
-    assert name == "BENCH_LOCAL_r05.json"
-    assert doc["queries"] == {"q_a": 1.0, "q_b": 2.0}
+    assert bench._bench_history(0.1, limit=1) == []  # 16-core ratchet re-seeds
 
 
 def test_second_remeasure_uses_fresh_drift():
@@ -510,31 +480,31 @@ def test_retracted_writeback_never_below_prev():
     assert timings["q_c"] == 0.589
 
 
-def test_loader_heals_drift_poisoned_baselines(tmp_path, monkeypatch):
-    """r17: records written BEFORE the write-back clamp carry the
-    poison; the loader applies the same clamp retroactively using the
-    flag entry's own prev. Confirmed flags are NOT healed (their
-    timings are the real measurements)."""
+def test_committed_records_hold_no_drift_poisoned_baselines():
+    """Records are read as written, so each committed record the gate
+    can load must already satisfy the clamp warm_gate applies at write
+    time: a retracted flag (in ``regressions_first_pass`` but not
+    confirmed) keeps its timing at or above its own ``prev``. A
+    sub-prev write-back would be a baseline no honest run can match.
+    The files are checked as they are on disk."""
+    import glob
     import json
+    import os
 
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    rec = {
-        "queries": {"q_pois": 0.159, "q_conf": 2.0, "q_ok": 0.5},
-        "sf": 0.1,
-        "reduction": bench.REDUCTION,
-        "cpus": bench._run_cpus(),
-        "regressions_first_pass": {
-            "q_pois": {"prev": 0.589, "now": 0.968, "remeasured": 0.543,
-                       "remeasure_drift": 3.408},
-            "q_conf": {"prev": 1.0, "now": 2.0, "remeasured": 2.0,
-                       "remeasure_drift": 1.0},
-        },
-        "regressions": {"q_conf": {"prev": 1.0, "now": 2.0}},
-    }
-    (tmp_path / "BENCH_LOCAL_r05.json").write_text(json.dumps(rec))
-    _, doc = bench._previous_bench(0.1)
-    assert doc["queries"]["q_pois"] == 0.589  # healed to its own prev
-    assert doc["queries"]["q_conf"] == 2.0    # confirmed: kept
-    assert doc["queries"]["q_ok"] == 0.5      # unflagged: kept
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+    paths = glob.glob(os.path.join(here, "BENCH_LOCAL_*.json"))
+    sfs = set()
+    for path in paths:
+        with open(path) as f:
+            sfs.add(json.load(f).get("sf"))
+    checked = set()
+    for sf in sfs:
+        for name, _ in bench._bench_history(sf, limit=len(paths), any_cpus=True):
+            checked.add(name)
+            with open(os.path.join(here, name)) as f:
+                doc = json.load(f)
+            confirmed = doc.get("regressions") or {}
+            for q, flag in (doc.get("regressions_first_pass") or {}).items():
+                if q not in confirmed:
+                    assert doc["queries"][q] >= flag["prev"], (name, q)
+    assert "BENCH_LOCAL_r16.json" in checked
