@@ -306,28 +306,6 @@ _LIT_CTX = np.frombuffer(b"\xa3ctx\x81\xa6wxuser", dtype=np.uint8)
 _LIT_TOTAL = len(_LIT_HEAD) + len(_LIT_FUN) + len(_LIT_ARG) + len(_LIT_CTX)
 
 
-def _utf8_view(series: pd.Series):
-    """pandas str Series → (data: uint8[], starts: int64[], lens: int64[])
-    over the Arrow-encoded utf-8 buffer, or None when the column has
-    nulls / non-strings (caller falls back to the per-row codec)."""
-    try:
-        arr = pa.array(series, type=pa.large_string())
-    except (pa.ArrowInvalid, pa.ArrowTypeError):
-        return None
-    if arr.null_count:
-        return None
-    off = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    dbuf = arr.buffers()[2]
-    data = (
-        np.frombuffer(dbuf, dtype=np.uint8)
-        if dbuf is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    return data, off[:-1].copy(), (off[1:] - off[:-1])
-
-
 def _str_header_sizes(lens: np.ndarray) -> np.ndarray:
     """msgpack str header width for each length: fixstr 1 B, str8 2 B,
     str16 3 B, str32 5 B."""

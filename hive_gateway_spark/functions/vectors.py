@@ -64,15 +64,6 @@ def cos_div(dot: Column, norm2_prod: Column) -> Column:
     return dot / F.sqrt(F.greatest(norm2_prod, F.lit(1.0)))
 
 
-def cosine_cond(dot: Column, norm2_a: Column, norm2_b: Column, tau: float) -> Column:
-    """cos(a,b) >= tau without sqrt/division: dot > 0 AND dot² >= τ²·|a|²·|b|².
-
-    Pure double comparisons with a fixed expression shape — bit-identical
-    in Spark and the DuckDB oracle (inputs are exact integers < 2⁵³).
-    """
-    return (dot > 0) & (dot * dot >= F.lit(tau * tau) * norm2_a * norm2_b)
-
-
 def gemm_pair_block(tau: float, with_sim: bool = True):
     """Shared blocked-GEMM kernel for thresholded cosine pairs — used by
     q_sim_cosine_pairs (with_sim=True → vec_a, vec_b, cos_sim) and

@@ -20,20 +20,28 @@ The reference has no export layer (331-line RPC proxy); this implements
 the mandate's pipeline completeness (curate → export → verify).
 
 CONCURRENCY CONTRACT — optimistic multi-writer (r9, VERDICT r8 task
-#3): a commit is an EXCLUSIVE CLAIM of the next version slot
-(`_MANIFEST.v{N+1}.json` created via hardlink — POSIX link(2) fails
-with EEXIST if the slot is taken, the same conditional-put primitive
-Iceberg runs against an object store). Writers land their data files
-FIRST (under unique names, via a private staging dir, so no writer can
-mistake another's files for its own), then loop: read the CURRENT
-committed manifest, compose the new one against it, try the claim —
-and on conflict re-read and re-apply (append/compact re-compose their
-deltas; merge recomputes against the new snapshot). The loser of a
-race therefore never silently vanishes: it retries on top of the
-winner. `_MANIFEST.json` is only a convenience root pointer refreshed
-after each claim; readers resolve the true head as the HIGHEST
-committed version file, so a stale root (crash or refresh race) can
-never roll the table back.
+#3): every write verb commits through ONE path, `_commit` — Delta's
+optimistic loop (Armbrust et al., VLDB 2020): read the head, compose,
+conditional put, on conflict re-read. A commit is an EXCLUSIVE CLAIM
+of the next version slot (`_MANIFEST.v{N+1}.json` put-if-absent
+through the commit log — POSIX link(2) fails with EEXIST if the slot
+is taken, the same conditional-put primitive Iceberg runs against an
+object store); version 1, written by write_dataset and
+export_bucketed, is claimed the same way. Writers land their data
+files FIRST (under unique names, via a private staging dir, so no
+writer can mistake another's files for its own), then compose the new
+manifest against the CURRENT head and try the claim. On conflict the
+files that attempt landed are unlinked, and the verb either re-reads
+and re-applies (append re-composes its deltas on the winner; merge,
+apply_diff and delete recompute against the new snapshot; compaction
+carries appended files through, or restarts when its base files were
+replaced) or raises CommitConflict (rewrite and the constraint and
+Bloom verbs, whose result retried over a concurrent commit would erase
+it). The loser of a race therefore never silently vanishes.
+`_MANIFEST.json` is only a convenience root pointer refreshed after
+each claim; readers resolve the true head as the HIGHEST committed
+version file, so a stale root (crash or refresh race) can never roll
+the table back.
 """
 
 from __future__ import annotations
@@ -74,11 +82,11 @@ def _dump(manifest: dict) -> bytes:
 #: pathological contention worth surfacing, not spinning through.
 MAX_COMMIT_RETRIES = 20
 
-#: Test seam: when set, invoked exactly ONCE inside a commit loop
-#: between stats composition and the claim attempt — deterministic
-#: two-writer interleavings without sleeping threads (the hook runs
-#: the OTHER writer's commit, forcing this writer's claim to conflict
-#: and exercise the retry path).
+#: Test seam: when set, invoked exactly ONCE inside _commit between
+#: composition and the claim attempt — deterministic two-writer
+#: interleavings without sleeping threads (the hook runs the OTHER
+#: writer's commit, forcing this writer's claim to conflict and
+#: exercise its lost-race path).
 _RACE_HOOK = None
 
 
@@ -113,6 +121,38 @@ def _try_commit(path: str, manifest: dict) -> None:
     _refresh_root(path)
 
 
+def _commit(
+    path: str, verb: str, compose, head: dict | None = None, retry: bool = True
+) -> dict:
+    """THE commit path of every write verb — Delta's optimistic loop
+    (Armbrust et al., VLDB 2020): read the head, compose the next
+    manifest against it, claim its version slot. ``compose(head)``
+    returns ``(manifest, landed)``, ``landed`` being the data files
+    that attempt wrote. A lost claim unlinks ``landed``, then either
+    re-reads the winner's head and composes again (``retry``) or
+    re-raises CommitConflict — for the verbs whose result, silently
+    retried over a concurrent commit, would erase it. ``head`` is the
+    manifest the caller already read and validated against (read here
+    when None)."""
+    if head is None:
+        head = _current_manifest(path)
+    for _ in range(MAX_COMMIT_RETRIES):
+        manifest, landed = compose(head)
+        _fire_race_hook()
+        try:
+            _try_commit(path, manifest)
+            return manifest
+        except CommitConflict:
+            _remove_files(path, landed)
+            if not retry:
+                raise
+            head = _current_manifest(path)
+    raise RuntimeError(
+        f"{verb} lost {MAX_COMMIT_RETRIES} commit races at {path} — "
+        "pathological writer contention"
+    )
+
+
 def _refresh_root(path: str) -> None:
     """Point `_MANIFEST.json` at the highest committed version. Racing
     refreshes can land out of order (A reads head 5, B commits 6 and
@@ -124,20 +164,55 @@ def _refresh_root(path: str) -> None:
     _LOG.put(path, MANIFEST, _dump(head))
 
 
+_VERSION_FILE = _re.compile(r"_MANIFEST\.v(\d+)\.json")
+
+
+def _versions(path: str) -> list[int]:
+    """Every version in the log, ascending (one directory listing)."""
+    return sorted(
+        int(m.group(1))
+        for name in _LOG.list_names(path)
+        if (m := _VERSION_FILE.fullmatch(name))
+    )
+
+
+def _read_version(path: str, version: int) -> dict:
+    return json.loads(_LOG.get(path, f"_MANIFEST.v{version}.json"))
+
+
 def _current_manifest(path: str) -> dict:
     """The table head: the HIGHEST `_MANIFEST.v{N}.json` in the version
     log (falling back to the root pointer for pre-CAS datasets). O(one
     directory listing + one read) — only the max-numbered file is
     opened; an object-store deployment lists the commit log with a
     key-order marker the same way."""
-    best_v, best_n = -1, None
-    for name in _LOG.list_names(path):
-        m = _re.fullmatch(r"_MANIFEST\.v(\d+)\.json", name)
-        if m and int(m.group(1)) > best_v:
-            best_v, best_n = int(m.group(1)), name
-    if best_n is None:
+    versions = _versions(path)
+    if not versions:
         return json.loads(_LOG.get(path, MANIFEST))
-    return json.loads(_LOG.get(path, best_n))
+    return _read_version(path, versions[-1])
+
+
+def _require_files(manifest: dict) -> dict:
+    """`manifest`, refused when it has no file list: it predates the
+    snapshot layer (or was hand-edited), and every operation here
+    would otherwise half-work or KeyError — refuse loudly and say how
+    to recover."""
+    if not manifest.get("files"):
+        raise ValueError(
+            "manifest has no files list (pre-snapshot or corrupt) — "
+            "re-export with write_dataset"
+        )
+    return manifest
+
+
+def _head(path: str, verb: str | None = None) -> dict:
+    """The committed head a verb builds on, its file list checked; a
+    verb that rewrites data files (``verb`` named) also refuses a
+    bucketed export (_refuse_bucketed)."""
+    head = _current_manifest(path)
+    if verb:
+        _refuse_bucketed(head, verb)
+    return _require_files(head)
 
 
 def _land_files(
@@ -212,6 +287,84 @@ def _partition_counts(back: DataFrame, pby: list[str]) -> dict:
     return {"": back.count()}
 
 
+def _stats(pby: list[str], cols: list[str], counts: dict, checksum: str) -> dict:
+    """The manifest keys verify_dataset re-derives from the files — ONE
+    layout for every writer and the verifier, so they can never
+    disagree on the manifest format."""
+    return {
+        "format": "parquet",
+        "partition_by": pby,
+        "columns": cols,
+        "n_rows": sum(counts.values()),
+        "partitions": dict(sorted(counts.items())),
+        "content_xxh64_sum": checksum,
+    }
+
+
+def _derive(back: DataFrame, cols: list[str], pby: list[str]) -> dict:
+    """_stats computed from the files `back` reads."""
+    counts = _partition_counts(back, pby)
+    return _stats(pby, cols, counts, _content_checksum(back.select(*cols), cols))
+
+
+#: Keys the engine writes into a manifest; apply_diff refuses a
+#: ``record`` that would overwrite one.
+_ENGINE_KEYS = {
+    "format", "partition_by", "columns", "n_rows", "partitions",
+    "content_xxh64_sum", "version", "files", "schema_json",
+    "constraints", "committed_at_us", "bloom_index", "file_stats",
+    "cluster_by", "bucket_by",
+}
+
+
+def _compose(prev: dict, stats: dict, files: list[str], *parts: dict) -> dict:
+    """The manifest after `prev` ({} for a new table) of a verb that
+    re-derives the stats: the stats block, the next version, the file
+    list and prev's CHECK constraints (every verb keeps them), then
+    each of ``parts`` in order, a later key overriding an earlier."""
+    manifest = {
+        **stats,
+        "version": int(prev.get("version", 1)) + 1 if prev else 1,
+        "files": files,
+        **({"constraints": prev["constraints"]} if prev.get("constraints") else {}),
+    }
+    for part in parts:
+        manifest.update(part)
+    return manifest
+
+
+def _successor(prev: dict, **changes) -> dict:
+    """`prev` advanced one version with ``changes`` applied — the
+    commits that keep the head's content (constraints, Bloom index,
+    compaction). The head's commit stamp is dropped; _try_commit
+    stamps every attempt fresh."""
+    manifest = {**prev, "version": int(prev.get("version", 1)) + 1, **changes}
+    manifest.pop("committed_at_us", None)
+    return manifest
+
+
+def _carry(prev: dict, files: list[str]) -> dict:
+    """The per-file facts of `prev` that survive into a version keeping
+    some of its files (append, delete, compact): footer stats and Bloom
+    entries of the files still referenced, under their table-level
+    spec. Entries are facts about immutable bytes, which is what makes
+    the carry sound; a file without one is never pruned."""
+    keep = set(files)
+    out = {}
+    if prev.get("cluster_by"):
+        out["cluster_by"] = prev["cluster_by"]
+        out["file_stats"] = {
+            rel: s for rel, s in prev.get("file_stats", {}).items() if rel in keep
+        }
+    if prev.get("bloom_index"):
+        bi = prev["bloom_index"]
+        out["bloom_index"] = {
+            **bi,
+            "blooms": {rel: e for rel, e in bi["blooms"].items() if rel in keep},
+        }
+    return out
+
+
 def write_dataset(
     df: DataFrame,
     path: str,
@@ -219,32 +372,27 @@ def write_dataset(
     extra: dict | None = None,
 ) -> dict:
     """Write `df` as parquet partitioned by `partition_by`, then read
-    the files back and write _MANIFEST.json with per-partition row
-    counts and the content checksum. Returns the manifest dict."""
+    the files back and claim version 1 with per-partition row counts
+    and the content checksum. Returns the manifest dict. The overwrite
+    has just emptied the directory, so the claim can only conflict
+    with a concurrent creator, which raises CommitConflict instead of
+    silently overwriting it."""
     partition_by = partition_by or []
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
-    spark = df.sparkSession
-    back = spark.read.parquet(path)
+    back = df.sparkSession.read.parquet(path)
     cols = df.columns
-    counts = _partition_counts(back, partition_by)
-    manifest = {
-        "format": "parquet",
-        "partition_by": partition_by,
-        "columns": cols,
-        "n_rows": sum(counts.values()),
-        "partitions": dict(sorted(counts.items())),
-        "content_xxh64_sum": _content_checksum(back.select(*cols), cols),
-        "version": 1,
-        "files": _relative_files(path),
-        "schema_json": _file_schema_json(df, cols, partition_by),
-        **(extra or {}),
-    }
-    _write_manifest(path, manifest)
-    return manifest
+    manifest = _compose(
+        {},
+        _derive(back, cols, partition_by),
+        _relative_files(path),
+        {"schema_json": _file_schema_json(df, cols, partition_by)},
+        extra or {},
+    )
+    return _commit(path, "write_dataset", lambda _: (manifest, []), {}, retry=False)
 
 
 def _refuse_bucketed(prev: dict, verb: str) -> None:
@@ -299,21 +447,16 @@ def export_bucketed(
         spark.sql(f"DROP TABLE IF EXISTS `{tmp}`")
     back = spark.read.parquet(path)
     cols = df.columns
-    counts = _partition_counts(back, [])
-    manifest = {
-        "format": "parquet",
-        "partition_by": [],
-        "bucket_by": {"key": key, "n_buckets": int(n_buckets), "sorted": True},
-        "columns": cols,
-        "n_rows": sum(counts.values()),
-        "partitions": dict(sorted(counts.items())),
-        "content_xxh64_sum": _content_checksum(back.select(*cols), cols),
-        "version": 1,
-        "files": _relative_files(path),
-        "schema_json": _file_schema_json(df, cols, []),
-    }
-    _write_manifest(path, manifest)
-    return manifest
+    manifest = _compose(
+        {},
+        _derive(back, cols, []),
+        _relative_files(path),
+        {
+            "bucket_by": {"key": key, "n_buckets": int(n_buckets), "sorted": True},
+            "schema_json": _file_schema_json(df, cols, []),
+        },
+    )
+    return _commit(path, "export_bucketed", lambda _: (manifest, []), {}, retry=False)
 
 
 def read_bucketed(spark: SparkSession, path: str, name: str | None = None) -> DataFrame:
@@ -356,17 +499,10 @@ def verify_dataset(spark: SparkSession, path: str) -> dict:
     # LOST are reported (missing_files) and the surviving subset is
     # still counted, so the caller sees both what is gone and how many
     # rows went with it
-    if not expected.get("files"):
-        # a manifest without a file list predates the snapshot layer
-        # (or was hand-edited) — every operation here would otherwise
-        # half-work or KeyError; refuse loudly and say how to recover
-        return {
-            "ok": False,
-            "expected": expected,
-            "actual": {},
-            "error": "manifest has no files list (pre-snapshot or "
-            "corrupt) — re-export with write_dataset",
-        }
+    try:
+        _require_files(expected)
+    except ValueError as e:
+        return {"ok": False, "expected": expected, "actual": {}, "error": str(e)}
     present = [
         rel
         for rel in expected["files"]
@@ -380,17 +516,7 @@ def verify_dataset(spark: SparkSession, path: str) -> dict:
             "actual": {"missing_files": missing},
         }
     back = _read_manifest_files(spark, path, present, expected.get("schema_json"))
-    cols = expected["columns"]
-    pby = expected["partition_by"]
-    counts = _partition_counts(back, pby)
-    actual = {
-        "format": "parquet",
-        "partition_by": pby,
-        "columns": cols,
-        "n_rows": sum(counts.values()),
-        "partitions": dict(sorted(counts.items())),
-        "content_xxh64_sum": _content_checksum(back.select(*cols), cols),
-    }
+    actual = _derive(back, expected["columns"], expected["partition_by"])
     # the manifest additionally carries snapshot bookkeeping (version,
     # files); verification compares the DERIVED keys only
     ok = not missing and all(actual[k] == expected.get(k) for k in actual)
@@ -417,27 +543,51 @@ def _relative_files(path: str) -> list[str]:
     return [os.path.relpath(f, root) for f in dataset_files(path)]
 
 
-def _write_manifest(path: str, manifest: dict) -> None:
-    """Write _MANIFEST.json plus the immutable per-version snapshot
-    copy (_MANIFEST.v{N}.json) — the plain-parquet analog of a table
-    format's snapshot log.
+def _remove_files(path: str, rels) -> int:
+    """Unlink data files (relative to `path`) and their Hadoop `.crc`
+    sidecars, tolerating ones already gone; returns how many data
+    files this call removed."""
+    removed = 0
+    for rel in rels:
+        fp = os.path.join(path, rel)
+        crc = os.path.join(os.path.dirname(fp), "." + os.path.basename(fp) + ".crc")
+        for victim in (fp, crc):
+            try:
+                os.unlink(victim)
+                removed += victim == fp
+            except FileNotFoundError:
+                pass
+    return removed
 
-    ATOMIC: each file lands through the commit log's atomic put (POSIX:
-    temp + rename; object store: whole-object PutObject) — a plain
-    open(w) would truncate the table's root pointer before json.dump
-    finishes, so a crash mid-write bricked every later read; with the
-    atomic put, a crash leaves the previous manifest intact and this
-    commit simply never happened (the crash-safety story the module
-    docstring promises, applied to the manifest itself)."""
 
-    manifest.setdefault("committed_at_us", int(_time.time() * 1_000_000))
-
-    # version copy FIRST, root pointer last: if the crash lands between
-    # the two, the root still describes the previous committed state.
-    # Both are atomic puts through the commit log (POSIX rename here;
-    # whole-object PutObject on a store).
-    _LOG.put(path, f"_MANIFEST.v{manifest['version']}.json", _dump(manifest))
-    _LOG.put(path, MANIFEST, _dump(manifest))
+def _expire(
+    path: str, drop, versions: list[int], keep: set, grace_s: float
+) -> int:
+    """Retention shared by compact_dataset and expire_snapshots, in
+    crash-safe order: the data files `drop` first, then the manifests
+    of `versions` (a crash between the two leaves expired manifests
+    pointing at missing files, which no retained read consults — the
+    reverse order would orphan the files invisibly), then the orphan
+    sweep (Iceberg remove_orphan_files): data files outside `keep`,
+    i.e. crashed appends and lost races, once older than `grace_s`.
+    The GRACE PERIOD is what makes the sweep concurrent-safe: a younger
+    file may be a concurrent writer's landed-but-not-yet-committed
+    output (Iceberg's default is 3 days for the same reason). Returns
+    the number of data files deleted."""
+    deleted = _remove_files(path, sorted(drop))
+    for v in versions:
+        _LOG.delete(path, f"_MANIFEST.v{v}.json")
+    now = _time.time()
+    aged = []
+    for rel in _relative_files(path):
+        if rel in keep:
+            continue
+        try:
+            if now - os.path.getmtime(os.path.join(path, rel)) >= grace_s:
+                aged.append(rel)
+        except FileNotFoundError:
+            pass
+    return deleted + _remove_files(path, aged)
 
 
 def _file_schema_json(df: DataFrame, cols: list[str], pby: list[str]) -> str:
@@ -498,14 +648,8 @@ def append_dataset(
     — the row hash covers every column, so widening the schema
     changes every historical row's hash; the rebase is explicit,
     rare, and administrative (plain appends stay O(batch))."""
-    prev = _current_manifest(path)
-    _refuse_bucketed(prev, "append_dataset")
+    prev = _head(path, "append_dataset")
     _check_constraints(df, prev, "append_dataset")
-    if not prev.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
     pby = prev["partition_by"]
     cols = prev["columns"]
     missing = [c for c in cols if c not in df.columns]
@@ -547,7 +691,11 @@ def append_dataset(
         delta_sum = int(_content_checksum(back.select(*cols), cols))
     else:  # empty append: stats unchanged, version still advances
         delta, delta_sum = {}, 0
-    for _ in range(MAX_COMMIT_RETRIES):
+
+    def compose(prev: dict):
+        # the landed files serve every attempt: a lost race re-composes
+        # the same deltas on the winner's manifest — appends commute
+        nonlocal cols, schema_json, delta_sum
         if evolved:
             # recompose against the (possibly new) winner: keep every
             # column the winner's manifest knows PLUS df's new ones —
@@ -601,55 +749,17 @@ def append_dataset(
             csum = _content_checksum(full.select(*cols), cols)
         else:
             csum = str((int(prev["content_xxh64_sum"]) + delta_sum) % (1 << 64))
-        manifest = {
-            "format": "parquet",
-            "partition_by": pby,
-            "columns": cols,
-            "n_rows": sum(counts.values()),
-            "partitions": dict(sorted(counts.items())),
-            "content_xxh64_sum": csum,
-            "version": int(prev.get("version", 1)) + 1,
-            "files": all_files,
-            **({"schema_json": schema_json} if schema_json else {}),
-            **(extra or {}),
-        }
-        if prev.get("cluster_by"):
-            # carry the clustered files' stats forward: pruning keeps
-            # any file WITHOUT stats (the fresh appends), so old
-            # skipping value survives and nothing is wrongly skipped
-            manifest["cluster_by"] = prev["cluster_by"]
-            manifest["file_stats"] = {
-                rel: s
-                for rel, s in prev.get("file_stats", {}).items()
-                if rel in set(manifest["files"])
-            }
-        if prev.get("constraints"):
-            manifest["constraints"] = prev["constraints"]
-        if prev.get("bloom_index"):
-            bi = prev["bloom_index"]
-            manifest["bloom_index"] = {
-                **bi,
-                # per-file facts: entries survive for files still
-                # referenced; fresh appends have no entry and are
-                # always kept by the point-read pruner
-                "blooms": {
-                    rel: e
-                    for rel, e in bi["blooms"].items()
-                    if rel in set(manifest["files"])
-                },
-            }
-        _fire_race_hook()
-        try:
-            _try_commit(path, manifest)
-            return manifest
-        except CommitConflict:
-            # another writer won the slot: re-read ITS manifest and
-            # re-compose the same deltas on top — appends commute
-            prev = _current_manifest(path)
-    raise RuntimeError(
-        f"append lost {MAX_COMMIT_RETRIES} commit races at {path} — "
-        "pathological writer contention"
-    )
+        manifest = _compose(
+            prev,
+            _stats(pby, cols, counts, csum),
+            all_files,
+            {"schema_json": schema_json} if schema_json else {},
+            extra or {},
+            _carry(prev, all_files),
+        )
+        return manifest, []
+
+    return _commit(path, "append", compose, prev)
 
 
 def merge_dataset(df: DataFrame, path: str, key: str) -> dict:
@@ -675,15 +785,8 @@ def merge_dataset(df: DataFrame, path: str, key: str) -> dict:
     against the winner's snapshot (the Iceberg serializable-rewrite
     loop; conflicts are rare, re-apply cost is one merge)."""
     spark = df.sparkSession
-    prev = _current_manifest(path)
-    _refuse_bucketed(prev, "merge_dataset")
+    prev = _head(path, "merge_dataset")
     _check_constraints(df, prev, "merge_dataset")
-    if not prev.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
-    pby = prev["partition_by"]
     cols = prev["columns"]
     missing = [c for c in cols if c not in df.columns]
     if missing:
@@ -694,14 +797,15 @@ def merge_dataset(df: DataFrame, path: str, key: str) -> dict:
             f"merge has columns the manifest lacks: {unexpected} "
             "(schema evolution is an explicit rewrite, not a merge)"
         )
-    for _ in range(MAX_COMMIT_RETRIES):
+
+    def compose(prev: dict):
         # cols re-derives from the CURRENT head each attempt: a merge
         # that loses its race to a schema-evolving append must rewrite
         # with the WINNER's widened column list (upsert rows NULL-fill
         # the columns they don't carry, exactly as evolution NULL-fills
         # pre-evolution files) — composing with the stale column list
         # would silently drop the evolved column from the whole table
-        cols = prev["columns"]
+        pby, cols = prev["partition_by"], prev["columns"]
         current = _read_manifest_files(
             spark, path, prev["files"], prev.get("schema_json")
         ).select(*cols)
@@ -713,40 +817,15 @@ def merge_dataset(df: DataFrame, path: str, key: str) -> dict:
         ).select(*cols)
         files = _land_files(merged, path, pby)
         back = _read_manifest_files(spark, path, files)
-        counts = _partition_counts(back, pby)
-        manifest = {
-            "format": "parquet",
-            "partition_by": pby,
-            "columns": cols,
-            "n_rows": sum(counts.values()),
-            "partitions": dict(sorted(counts.items())),
-            "content_xxh64_sum": _content_checksum(back.select(*cols), cols),
-            "version": int(prev.get("version", 1)) + 1,
-            "files": files,
-            "schema_json": _file_schema_json(merged, cols, pby),
-            **(
-                {"constraints": prev["constraints"]}
-                if prev.get("constraints")
-                else {}
-            ),
-        }
-        _fire_race_hook()
-        try:
-            _try_commit(path, manifest)
-            return manifest
-        except CommitConflict:
-            # the snapshot we merged against is no longer the head:
-            # drop our stale output files and re-apply on the winner's
-            for rel in files:
-                try:
-                    os.unlink(os.path.join(path, rel))
-                except FileNotFoundError:
-                    pass
-            prev = _current_manifest(path)
-    raise RuntimeError(
-        f"merge lost {MAX_COMMIT_RETRIES} commit races at {path} — "
-        "pathological writer contention"
-    )
+        manifest = _compose(
+            prev,
+            _derive(back, cols, pby),
+            files,
+            {"schema_json": _file_schema_json(merged, cols, pby)},
+        )
+        return manifest, files
+
+    return _commit(path, "merge", compose, prev)
 
 
 def apply_diff(
@@ -778,35 +857,22 @@ def apply_diff(
     writes — recomputing against the winner's snapshot is the correct
     merge, exactly as merge_dataset)."""
     spark = diff.sparkSession
-    prev = _current_manifest(path)
-    _refuse_bucketed(prev, "apply_diff")
-    if not prev.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
+    prev = _head(path, "apply_diff")
     ups = diff.filter(F.col("op").isin("insert", "update_post")).drop("op")
     dels = diff.filter(F.col("op") == "delete").select(key).distinct()
     # shape check FIRST (ADVICE r15 #5): a diff missing manifest columns
     # referenced by a constraint would otherwise surface as an opaque
     # unresolved-column AnalysisException from inside the constraint
     # expression instead of this intended error
-    cols0 = prev["columns"]
-    missing = [c for c in cols0 if c not in ups.columns]
+    missing = [c for c in prev["columns"] if c not in ups.columns]
     if missing:
         raise ValueError(f"diff missing manifest columns: {missing}")
-    reserved = {
-        "format", "partition_by", "columns", "n_rows", "partitions",
-        "content_xxh64_sum", "version", "files", "schema_json",
-        "constraints", "committed_at_us", "bloom_index", "file_stats",
-        "cluster_by", "bucket_spec",
-    }
-    if record and (bad := sorted(set(record) & reserved)):
+    if record and (bad := sorted(set(record) & _ENGINE_KEYS)):
         raise ValueError(f"record keys collide with manifest fields: {bad}")
     _check_constraints(ups, prev, "apply_diff")
-    for _ in range(MAX_COMMIT_RETRIES):
-        pby = prev["partition_by"]
-        cols = prev["columns"]
+
+    def compose(prev: dict):
+        pby, cols = prev["partition_by"], prev["columns"]
         current = _read_manifest_files(
             spark, path, prev["files"], prev.get("schema_json")
         ).select(*cols)
@@ -816,39 +882,16 @@ def apply_diff(
         )
         files = _land_files(merged, path, pby)
         back = _read_manifest_files(spark, path, files)
-        counts = _partition_counts(back, pby)
-        manifest = {
-            "format": "parquet",
-            "partition_by": pby,
-            "columns": cols,
-            "n_rows": sum(counts.values()),
-            "partitions": dict(sorted(counts.items())),
-            "content_xxh64_sum": _content_checksum(back.select(*cols), cols),
-            "version": int(prev.get("version", 1)) + 1,
-            "files": files,
-            "schema_json": _file_schema_json(merged, cols, pby),
-            **(
-                {"constraints": prev["constraints"]}
-                if prev.get("constraints")
-                else {}
-            ),
-            **(record or {}),
-        }
-        _fire_race_hook()
-        try:
-            _try_commit(path, manifest)
-            return manifest
-        except CommitConflict:
-            for rel in files:
-                try:
-                    os.unlink(os.path.join(path, rel))
-                except FileNotFoundError:
-                    pass
-            prev = _current_manifest(path)
-    raise RuntimeError(
-        f"apply_diff lost {MAX_COMMIT_RETRIES} commit races at {path} — "
-        "pathological writer contention"
-    )
+        manifest = _compose(
+            prev,
+            _derive(back, cols, pby),
+            files,
+            {"schema_json": _file_schema_json(merged, cols, pby)},
+            record or {},
+        )
+        return manifest, files
+
+    return _commit(path, "apply_diff", compose, prev)
 
 
 def rewrite_dataset(df: DataFrame, path: str, extra: dict | None = None) -> dict:
@@ -870,50 +913,27 @@ def rewrite_dataset(df: DataFrame, path: str, extra: dict | None = None) -> dict
     silently retried over a concurrent writer's commit would erase it).
     """
     spark = df.sparkSession
-    prev = _current_manifest(path)
-    _refuse_bucketed(prev, "rewrite_dataset")
+    prev = _head(path, "rewrite_dataset")
     _check_constraints(df, prev, "rewrite_dataset")
-    if not prev.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
     pby = prev["partition_by"]
     missing_pby = [c for c in pby if c not in df.columns]
     if missing_pby:
         raise ValueError(f"rewrite missing partition columns: {missing_pby}")
     cols = df.columns
-    files = _land_files(df, path, pby)
-    back = _read_manifest_files(spark, path, files)
-    counts = _partition_counts(back, pby)
-    manifest = {
-        "format": "parquet",
-        "partition_by": pby,
-        "columns": cols,
-        "n_rows": sum(counts.values()),
-        "partitions": dict(sorted(counts.items())),
-        "content_xxh64_sum": _content_checksum(back.select(*cols), cols),
-        "version": int(prev.get("version", 1)) + 1,
-        "files": files,
-        "schema_json": _file_schema_json(df, cols, pby),
-        **(
-            {"constraints": prev["constraints"]}
-            if prev.get("constraints")
-            else {}
-        ),
-        **(extra or {}),
-    }
-    _fire_race_hook()
-    try:
-        _try_commit(path, manifest)
-        return manifest
-    except CommitConflict:
-        for rel in files:
-            try:
-                os.unlink(os.path.join(path, rel))
-            except FileNotFoundError:
-                pass
-        raise
+
+    def compose(prev: dict):
+        files = _land_files(df, path, pby)
+        back = _read_manifest_files(spark, path, files)
+        manifest = _compose(
+            prev,
+            _derive(back, cols, pby),
+            files,
+            {"schema_json": _file_schema_json(df, cols, pby)},
+            extra or {},
+        )
+        return manifest, files
+
+    return _commit(path, "rewrite", compose, prev, retry=False)
 
 
 def delete_dataset(
@@ -939,38 +959,25 @@ def delete_dataset(
     working: prior versions still reference the prior files, which
     this never unlinks. Concurrent-safe like merge: a lost commit race
     unlinks the stale output and re-applies against the winner."""
-    prev = _current_manifest(path)
-    _refuse_bucketed(prev, "delete_dataset")
-    if not prev.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
-    for _ in range(MAX_COMMIT_RETRIES):
-        pby = prev["partition_by"]
-        cols = prev["columns"]
+    prev = _head(path, "delete_dataset")
+    tz = spark.conf.get("spark.sql.session.timeZone", None)
+
+    def compose(prev: dict):
+        pby, cols = prev["partition_by"], prev["columns"]
         stats = _file_stats(path, prev["files"], column)
         kind = _field_kind(prev.get("schema_json"), column)
-        tz = spark.conf.get("spark.sql.session.timeZone", None)
         kept, touched = [], []
         for rel in prev["files"]:
             st = stats.get(rel)
-            overlap = True  # no/partial stats → must rewrite
-            # Type-aware pruning via _lift_bounds (r15, VERDICT r14
-            # task #9): numeric compares numerically, temporal columns
-            # parse BOTH sides to datetimes (the r14 'T'-vs-space ISO
-            # trap cannot recur), plain strings compare in UTF-8 order
-            # under a truncation-defensive length cap, and binary /
-            # unknown columns never prune. No safe lift → the file is
-            # rewritten; the residual filter stays exact either way.
-            if st is not None:
-                lifted = _lift_bounds(kind, st[0], st[1], lo, hi, tz)
-                if lifted is not None:
-                    mn, mx, blo, bhi = lifted
-                    try:
-                        overlap = not (mx < blo or mn > bhi)
-                    except TypeError:  # defensive: incomparable lift
-                        overlap = True
+            # no/partial stats → must rewrite. Type-aware pruning via
+            # _lift_bounds (r15, VERDICT r14 task #9): numeric compares
+            # numerically, temporal columns parse BOTH sides to
+            # datetimes (the r14 'T'-vs-space ISO trap cannot recur),
+            # plain strings compare in UTF-8 order under a truncation-
+            # defensive length cap, and binary / unknown columns never
+            # prune. No safe lift → the file is rewritten; the residual
+            # filter stays exact either way.
+            overlap = st is None or _may_overlap(kind, st[0], st[1], lo, hi, tz)
             (touched if overlap else kept).append(rel)
         rows_deleted = 0
         new_files: list[str] = []
@@ -993,61 +1000,29 @@ def delete_dataset(
                 "instead (an empty manifest is unreadable)"
             )
         back = _read_manifest_files(spark, path, files, prev.get("schema_json"))
-        counts = _partition_counts(back, pby)
-        manifest = {
-            "format": "parquet",
-            "partition_by": pby,
-            "columns": cols,
-            "n_rows": sum(counts.values()),
-            "partitions": dict(sorted(counts.items())),
-            "content_xxh64_sum": _content_checksum(back.select(*cols), cols),
-            "version": int(prev.get("version", 1)) + 1,
-            "files": files,
-            "schema_json": prev.get("schema_json")
-            or _file_schema_json(back, cols, pby),
-            **(
-                {"constraints": prev["constraints"]}
-                if prev.get("constraints")
-                else {}
-            ),
-            **(
-                {
-                    "bloom_index": {
-                        **prev["bloom_index"],
-                        "blooms": {
-                            rel: e
-                            for rel, e in prev["bloom_index"][
-                                "blooms"
-                            ].items()
-                            if rel in set(files)
-                        },
-                    }
-                }
-                if prev.get("bloom_index")
-                else {}
-            ),
-            "delete_report": {
-                "column": column,
-                "files_kept": len(kept),
-                "files_rewritten": len(touched),
-                "rows_deleted": rows_deleted,
+        manifest = _compose(
+            prev,
+            _derive(back, cols, pby),
+            files,
+            {
+                "schema_json": prev.get("schema_json")
+                or _file_schema_json(back, cols, pby)
             },
-        }
-        _fire_race_hook()
-        try:
-            _try_commit(path, manifest)
-            return manifest
-        except CommitConflict:
-            for rel in new_files:
-                try:
-                    os.unlink(os.path.join(path, rel))
-                except FileNotFoundError:
-                    pass
-            prev = _current_manifest(path)
-    raise RuntimeError(
-        f"delete lost {MAX_COMMIT_RETRIES} commit races at {path} — "
-        "pathological writer contention"
-    )
+            # the kept files are byte-identical: their clustering stats
+            # and Bloom entries stay valid; rewritten files have neither
+            _carry(prev, files),
+            {
+                "delete_report": {
+                    "column": column,
+                    "files_kept": len(kept),
+                    "files_rewritten": len(touched),
+                    "rows_deleted": rows_deleted,
+                }
+            },
+        )
+        return manifest, new_files
+
+    return _commit(path, "delete", compose, prev)
 
 
 def version_at(path: str, as_of_us: int) -> int | None:
@@ -1058,12 +1033,8 @@ def version_at(path: str, as_of_us: int) -> int | None:
     root-pointer-only legacy table returns None, meaning "serve the
     root manifest" (read_snapshot's current-head path)."""
     best = None
-    vnames = sorted(
-        n
-        for n in _LOG.list_names(path)
-        if _re.fullmatch(r"_MANIFEST\.v(\d+)\.json", n)
-    )
-    if not vnames:  # pre-CAS legacy table: only the root pointer exists
+    versions = _versions(path)
+    if not versions:  # pre-CAS legacy table: only the root pointer exists
         m = _current_manifest(path)
         ts = m.get("committed_at_us")
         if ts is None or int(ts) <= as_of_us:
@@ -1071,8 +1042,8 @@ def version_at(path: str, as_of_us: int) -> int | None:
         raise ValueError(
             f"no version committed at or before {as_of_us} at {path}"
         )
-    for vname in vnames:
-        m = json.loads(_LOG.get(path, vname))
+    for v in versions:
+        m = _read_version(path, v)
         ts = m.get("committed_at_us")
         if ts is None or int(ts) <= as_of_us:
             v = int(m["version"])
@@ -1123,15 +1094,9 @@ def read_snapshot(
         )
     if version is None and as_of_us is not None:
         version = version_at(path, as_of_us)  # TIMESTAMP AS OF
-    if version is None:
-        manifest = _current_manifest(path)
-    else:
-        manifest = json.loads(_LOG.get(path, f"_MANIFEST.v{version}.json"))
-    if not manifest.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
+    manifest = _require_files(
+        _current_manifest(path) if version is None else _read_version(path, version)
+    )
     rels = manifest["files"]
     if between is not None:
         col, lo, hi = between
@@ -1160,14 +1125,7 @@ def read_snapshot(
                 # vs Spark-style bounds order lexicographically without
                 # raising ('T' > ' '), silently pruning an overlapping
                 # file. No safe lift → keep the file.
-                lifted = _lift_bounds(kind, s_lo, s_hi, lo, hi, tz)
-                if lifted is None:
-                    return True
-                mn, mx, blo, bhi = lifted
-                try:
-                    return not (mx < blo or mn > bhi)
-                except TypeError:  # defensive: incomparable lift
-                    return True
+                return _may_overlap(kind, s_lo, s_hi, lo, hi, tz)
             rels = [rel for rel in rels if overlaps(rel)]
     if point is not None:
         pcol, pval = point
@@ -1320,24 +1278,19 @@ def add_constraint(
     relaxed here deliberately: schema-on-read corpora make 'unknown'
     an ingest bug, not a pass). The constraint map rides in the
     manifest, so readers and writers in any session see it."""
-    prev = _current_manifest(path)
-    if not prev.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
+    prev = _head(path)
     cur = _read_manifest_files(spark, path, prev["files"], prev.get("schema_json"))
     _check_constraints(
         cur, {"constraints": {name: predicate}}, f"add_constraint({name})"
     )
-    manifest = {
-        **prev,
-        "version": int(prev.get("version", 1)) + 1,
-        "constraints": {**(prev.get("constraints") or {}), name: predicate},
-    }
-    manifest.pop("committed_at_us", None)
-    _try_commit(path, manifest)
-    return manifest
+    cons = {**(prev.get("constraints") or {}), name: predicate}
+    return _commit(
+        path,
+        "add_constraint",
+        lambda head: (_successor(head, constraints=cons), []),
+        prev,
+        retry=False,
+    )
 
 
 def drop_constraint(path: str, name: str) -> dict:
@@ -1348,14 +1301,13 @@ def drop_constraint(path: str, name: str) -> dict:
     if name not in cons:
         raise KeyError(f"no CHECK constraint named {name!r} at {path}")
     del cons[name]
-    manifest = {
-        **prev,
-        "version": int(prev.get("version", 1)) + 1,
-        "constraints": cons,
-    }
-    manifest.pop("committed_at_us", None)
-    _try_commit(path, manifest)
-    return manifest
+    return _commit(
+        path,
+        "drop_constraint",
+        lambda head: (_successor(head, constraints=cons), []),
+        prev,
+        retry=False,
+    )
 
 
 #: Bloom canonicalization protocol version. v2 (r16) replaced the v1
@@ -1509,16 +1461,26 @@ def _bloom_sizing(n_distinct: int, fpp: float) -> tuple[int, int]:
     return m, k
 
 
+def _bloom_entry(canons: set, fpp: float) -> dict:
+    """One file's Bloom over its canonical values, sized for ``fpp``."""
+    import base64
+
+    m, k = _bloom_sizing(len(canons), fpp)
+    bits = bytearray(m // 8)
+    for c in canons:
+        for p in _bloom_hashes(c, m, k):
+            bits[p // 8] |= 1 << (p % 8)
+    return {"m": m, "k": k, "b64": base64.b64encode(bytes(bits)).decode()}
+
+
 def _build_blooms_local(
     path: str, files: list[str], column: str, ftype: str, fpp: float
 ) -> dict:
     """Driver-side build (one pyarrow column read per file) — the
-    small-table / test path; the distributed build must emit byte-equal
-    entries (pinned in tests). A value with no canonical form drops the
-    whole FILE's entry (file never pruned) rather than risk a false
-    absence proof from a partial bloom."""
-    import base64
-
+    reference the Spark build must match byte for byte (pinned in
+    tests). A value with no canonical form drops the whole FILE's
+    entry (file never pruned) rather than risk a false absence proof
+    from a partial bloom."""
     import pyarrow.parquet as pq
 
     blooms: dict[str, dict] = {}
@@ -1534,18 +1496,8 @@ def _build_blooms_local(
                 complete = False
                 break
             canons.add(c)
-        if not complete:
-            continue
-        m, k = _bloom_sizing(len(canons), fpp)
-        bits = bytearray(m // 8)
-        for c in canons:
-            for p in _bloom_hashes(c, m, k):
-                bits[p // 8] |= 1 << (p % 8)
-        blooms[rel] = {
-            "m": m,
-            "k": k,
-            "b64": base64.b64encode(bytes(bits)).decode(),
-        }
+        if complete:
+            blooms[rel] = _bloom_entry(canons, fpp)
     return blooms
 
 
@@ -1562,7 +1514,6 @@ def _build_blooms_spark(
     row is driver-materialized. ltz timestamps are converted to epoch-
     micros JVM-side (unix_micros) BEFORE crossing into Python, so the
     canonical form never depends on Arrow's session-tz rendering."""
-    import base64
     import urllib.parse
 
     import pandas as pd
@@ -1598,19 +1549,8 @@ def _build_blooms_spark(
                     {"f": [fname], "m": [-1], "k": [0], "b64": [""]}
                 )
             canons.add(c)
-        m, k = _bloom_sizing(len(canons), fpp)
-        bits = bytearray(m // 8)
-        for c in canons:
-            for p in _bloom_hashes(c, m, k):
-                bits[p // 8] |= 1 << (p % 8)
-        return pd.DataFrame(
-            {
-                "f": [fname],
-                "m": [m],
-                "k": [k],
-                "b64": [base64.b64encode(bytes(bits)).decode()],
-            }
-        )
+        entry = _bloom_entry(canons, fpp)
+        return pd.DataFrame({"f": [fname], **{k: [v] for k, v in entry.items()}})
 
     rows = (
         pairs.groupBy("_f")
@@ -1635,7 +1575,6 @@ def build_bloom_index(
     path: str,
     column: str,
     fpp: float = 0.01,
-    distributed: bool = True,
 ) -> dict:
     """Per-FILE Bloom index for POINT lookups — Delta's bloom filter
     index on the manifest layer: footer min/max stats (cluster_by)
@@ -1648,24 +1587,17 @@ def build_bloom_index(
     canonical form (_bloom_canonical, protocol ``canon``=2), never by
     Python repr.
 
-    Built as a Spark job by default (per-file distinct → per-file
-    bitmap reduce; only the finished index reaches the driver — at
-    100 TB the build itself runs on the cluster, VERDICT r15 task #6);
-    ``distributed=False`` keeps the driver-side pyarrow path, which
-    emits byte-equal blooms (test-pinned) for small tables. Sizing per
-    file from its own distinct count at the requested ``fpp``.
-    Carried-forward files keep their entries through append and delete
-    (immutable bytes); merge/rewrite replace the file set, so the
+    Built as a Spark job (per-file distinct → per-file bitmap reduce;
+    only the finished index reaches the driver — at 100 TB the build
+    itself runs on the cluster, VERDICT r15 task #6). Sizing per file
+    from its own distinct count at the requested ``fpp``.
+    Carried-forward files keep their entries through append, delete
+    and compaction (immutable bytes); merge/rewrite replace the file set, so the
     index drops and is rebuilt after major rewrites — entries are
     per-file facts, never table-level claims, which is what makes the
     carry sound. Columns without a defined canonicalization (binary,
     boolean, nested, or unrecorded schema) are refused loudly."""
-    prev = _current_manifest(path)
-    if not prev.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
+    prev = _head(path)
     ftype = _field_type(prev.get("schema_json"), column)
     probe = _bloom_canonical(ftype, "x") is not None or ftype in (
         "byte", "short", "integer", "long", "float", "double",
@@ -1676,31 +1608,25 @@ def build_bloom_index(
             f"no Bloom canonicalization for column {column!r} of type "
             f"{ftype!r} — point-pruning would risk false absence proofs"
         )
-    blooms = (
-        _build_blooms_spark(spark, path, prev, column, ftype, fpp)
-        if distributed
-        else _build_blooms_local(path, prev["files"], column, ftype, fpp)
-    )
-    manifest = {
-        **prev,
-        "version": int(prev.get("version", 1)) + 1,
-        "bloom_index": {
-            "column": column,
-            "fpp": fpp,
-            "canon": _BLOOM_CANON,
-            "blooms": blooms,
-        },
+    index = {
+        "column": column,
+        "fpp": fpp,
+        "canon": _BLOOM_CANON,
+        "blooms": _build_blooms_spark(spark, path, prev, column, ftype, fpp),
     }
-    manifest.pop("committed_at_us", None)
-    _try_commit(path, manifest)
-    return manifest
+    return _commit(
+        path,
+        "build_bloom_index",
+        lambda head: (_successor(head, bloom_index=index), []),
+        prev,
+        retry=False,
+    )
 
 
 def update_bloom_index(
     spark: SparkSession,
     path: str,
     fpp: float | None = None,
-    distributed: bool = True,
 ) -> dict:
     """INCREMENTAL Bloom maintenance: index only the files the current
     bloom_index lacks (post-index appends arrive un-indexed and are
@@ -1739,19 +1665,15 @@ def update_bloom_index(
     else:
         ftype = _field_type(prev.get("schema_json"), column)
         sub = {**prev, "files": missing}
-        new = (
-            _build_blooms_spark(spark, path, sub, column, ftype, fpp)
-            if distributed
-            else _build_blooms_local(path, missing, column, ftype, fpp)
-        )
-    manifest = {
-        **prev,
-        "version": int(prev.get("version", 1)) + 1,
-        "bloom_index": {**bi, "blooms": {**kept, **new}},
-    }
-    manifest.pop("committed_at_us", None)
-    _try_commit(path, manifest)
-    return manifest
+        new = _build_blooms_spark(spark, path, sub, column, ftype, fpp)
+    index = {**bi, "blooms": {**kept, **new}}
+    return _commit(
+        path,
+        "update_bloom_index",
+        lambda head: (_successor(head, bloom_index=index), []),
+        prev,
+        retry=False,
+    )
 
 
 def _field_kind(schema_json: str | None, column: str) -> str:
@@ -1760,28 +1682,32 @@ def _field_kind(schema_json: str | None, column: str) -> str:
     Binary and everything exotic map to 'unknown' — hex-coerced binary
     stats do NOT order like the residual filter's comparison, so they
     must never prune."""
-    if not schema_json:
-        return "unknown"
-    try:
-        fields = json.loads(schema_json).get("fields", [])
-    except (ValueError, AttributeError):
-        return "unknown"
-    for f in fields:
-        if f.get("name") != column:
-            continue
-        t = f.get("type")
-        if not isinstance(t, str):
-            return "unknown"  # nested/array — never stat-pruned
-        if t in ("byte", "short", "integer", "long", "float", "double") or (
-            t.startswith("decimal")
-        ):
-            return "numeric"
-        if t == "string":
-            return "string"
-        if t in ("date", "timestamp", "timestamp_ntz"):
-            return "temporal"
-        return "unknown"
+    t = _field_type(schema_json, column)
+    if t is None:
+        return "unknown"  # unrecorded, or nested/array — never stat-pruned
+    if t in ("byte", "short", "integer", "long", "float", "double") or (
+        t.startswith("decimal")
+    ):
+        return "numeric"
+    if t == "string":
+        return "string"
+    if t in ("date", "timestamp", "timestamp_ntz"):
+        return "temporal"
     return "unknown"
+
+
+def _may_overlap(kind: str, stat_lo, stat_hi, lo, hi, tz: str | None) -> bool:
+    """Whether a file whose footer range is [stat_lo, stat_hi] can hold
+    a row in [lo, hi]: False only when _lift_bounds lifts both pairs
+    into one domain and they are disjoint there."""
+    lifted = _lift_bounds(kind, stat_lo, stat_hi, lo, hi, tz)
+    if lifted is None:
+        return True
+    mn, mx, blo, bhi = lifted
+    try:
+        return not (mx < blo or mn > bhi)
+    except TypeError:  # defensive: incomparable lift
+        return True
 
 
 def _lift_bounds(kind: str, stat_lo, stat_hi, lo, hi, tz: str | None = None):
@@ -1901,6 +1827,10 @@ def _morton_key(df: DataFrame, ca: str, cb: str):
     return z
 
 
+class _BaseReplaced(Exception):
+    """A full rewrite replaced the files a compaction was built from."""
+
+
 def compact_dataset(
     spark: SparkSession,
     path: str,
@@ -1958,13 +1888,7 @@ def compact_dataset(
     the commit lands — a crash mid-compaction leaves invisible orphans
     plus a fully consistent table (the old dir-swap instead DELETED any
     concurrent append wholesale)."""
-    base = _current_manifest(path)
-    _refuse_bucketed(base, "compact_dataset")
-    if not base.get("files"):
-        raise ValueError(
-            "manifest has no files list (pre-snapshot or corrupt) — "
-            "re-export with write_dataset"
-        )
+    base = _head(path, "compact_dataset")
     pby = base["partition_by"]
     cols = base["columns"]
     df = _read_manifest_files(
@@ -1997,18 +1921,23 @@ def compact_dataset(
         checksum != base["content_xxh64_sum"]
         or dict(sorted(counts.items())) != base["partitions"]
     ):  # pragma: no cover
-        for rel in landed:
-            try:
-                os.unlink(os.path.join(path, rel))
-            except FileNotFoundError:
-                pass
+        _remove_files(path, landed)
         raise RuntimeError(
             "compaction changed dataset content; original left in place"
         )
-    n_before = len(base["files"])
     base_files = set(base["files"])
-    for _ in range(MAX_COMMIT_RETRIES):
-        cur = _current_manifest(path)
+    if isinstance(cluster_by, (list, tuple)):
+        per_col = {c: _file_stats(path, landed, c) for c in cluster_by}
+        landed_stats = {
+            rel: {c: per_col[c][rel] for c in cluster_by if rel in per_col[c]}
+            for rel in landed
+            if any(rel in per_col[c] for c in cluster_by)
+        }
+        cluster_by = list(cluster_by)
+    elif cluster_by is not None:
+        landed_stats = _file_stats(path, landed, cluster_by)
+
+    def compose(cur: dict):
         # carry-through is only sound for APPEND winners (base files
         # still present, new files beside them). A racing MERGE or
         # COMPACTION REPLACES the file list — "carrying" its files
@@ -2016,111 +1945,56 @@ def compact_dataset(
         # contains them). Detect the replacement and restart the whole
         # compaction against the new head instead (code-review r9 #3).
         if not base_files.issubset(set(cur["files"])):
-            for rel in landed:
-                try:
-                    os.unlink(os.path.join(path, rel))
-                except FileNotFoundError:
-                    pass
-            if _rebase_attempts <= 0:
-                raise RuntimeError(
-                    f"compaction repeatedly raced full rewrites at {path}"
-                )
-            return compact_dataset(
-                spark,
-                path,
-                files_per_partition,
-                cluster_by,
-                orphan_grace_s,
-                _rebase_attempts - 1,
-            )
+            raise _BaseReplaced
         # files committed since our base snapshot ride through untouched
-        carried = [f for f in cur["files"] if f not in base_files]
-        manifest = {
-            **cur,
-            "version": int(cur.get("version", 1)) + 1,
-            "files": sorted(set(landed) | set(carried)),
-        }
-        # the spread would inherit cur's commit stamp and defeat the
-        # setdefault in _try_commit — every compaction would report its
-        # predecessor's time in DESCRIBE HISTORY (code-review r9 #8)
-        manifest.pop("committed_at_us", None)
-        if cluster_by is not None:
-            if isinstance(cluster_by, (list, tuple)):
-                manifest["cluster_by"] = list(cluster_by)
-                per_col = {c: _file_stats(path, landed, c) for c in cluster_by}
-                stats = {
-                    rel: {c: per_col[c][rel] for c in cluster_by if rel in per_col[c]}
-                    for rel in landed
-                    if any(rel in per_col[c] for c in cluster_by)
-                }
-            else:
-                manifest["cluster_by"] = cluster_by
-                stats = _file_stats(path, landed, cluster_by)
-            if cur.get("cluster_by") == manifest["cluster_by"]:
-                # carried appends keep any stats the head already had
-                stats.update(
-                    {
-                        rel: s
-                        for rel, s in cur.get("file_stats", {}).items()
-                        if rel in set(carried)
-                    }
-                )
-            manifest["file_stats"] = stats
-        else:
+        files = sorted(set(landed) | (set(cur["files"]) - base_files))
+        manifest = _successor(cur, files=files, **_carry(cur, files))
+        if cluster_by is None:
             manifest.pop("cluster_by", None)
             manifest.pop("file_stats", None)
-        _fire_race_hook()
-        try:
-            _try_commit(path, manifest)
-            break
-        except CommitConflict:
-            continue
-    else:
-        for rel in landed:
-            try:
-                os.unlink(os.path.join(path, rel))
-            except FileNotFoundError:
-                pass
-        raise RuntimeError(
-            f"compaction lost {MAX_COMMIT_RETRIES} commit races at {path}"
+        else:
+            # carried appends keep any stats the head already had
+            same = manifest.get("cluster_by") == cluster_by
+            manifest["cluster_by"] = cluster_by
+            manifest["file_stats"] = {
+                **(manifest["file_stats"] if same else {}),
+                **landed_stats,
+            }
+        return manifest, []
+
+    try:
+        manifest = _commit(path, "compaction", compose)
+    except _BaseReplaced:
+        _remove_files(path, landed)
+        if _rebase_attempts <= 0:
+            raise RuntimeError(
+                f"compaction repeatedly raced full rewrites at {path}"
+            ) from None
+        return compact_dataset(
+            spark,
+            path,
+            files_per_partition,
+            cluster_by,
+            orphan_grace_s,
+            _rebase_attempts - 1,
         )
-    # expire_snapshots AFTER the commit: delete the replaced data files
-    # and every older snapshot manifest (a time-travel read needs the
-    # old files, and compaction's whole point is deleting them)
-    for rel in sorted(base_files - set(manifest["files"])):
-        fp = os.path.join(path, rel)
-        for victim in (
-            fp,
-            os.path.join(os.path.dirname(fp), "." + os.path.basename(fp) + ".crc"),
-        ):
-            try:
-                os.unlink(victim)
-            except FileNotFoundError:
-                pass
-    for name in _LOG.list_names(path):
-        m = _re.fullmatch(r"_MANIFEST\.v(\d+)\.json", name)
-        if m and int(m.group(1)) < int(manifest["version"]):
-            _LOG.delete(path, name)
-    # orphan sweep (Iceberg remove_orphan_files): data files no manifest
-    # references — crashed appends, lost merge races. The GRACE PERIOD
-    # is what makes this concurrent-safe: a file younger than the grace
-    # may be a concurrent writer's landed-but-not-yet-committed output,
-    # so only files older than `orphan_grace_s` are deleted (Iceberg's
-    # default is 3 days for the same reason). Pass 0 only when no other
-    # writer can be in flight.
-    now = _time.time()
-    keep = set(manifest["files"])
-    for rel in _relative_files(path):
-        if rel in keep:
-            continue
-        fp = os.path.join(path, rel)
-        try:
-            if now - os.path.getmtime(fp) >= orphan_grace_s:
-                os.unlink(fp)
-        except FileNotFoundError:
-            pass
+    except RuntimeError:
+        _remove_files(path, landed)
+        raise
+    # expire AFTER the commit: delete the replaced data files and every
+    # older snapshot manifest (a time-travel read needs the old files,
+    # and compaction's whole point is deleting them), then sweep
+    # orphans older than `orphan_grace_s` — pass 0 only when no other
+    # writer can be in flight
+    _expire(
+        path,
+        base_files - set(manifest["files"]),
+        [v for v in _versions(path) if v < manifest["version"]],
+        set(manifest["files"]),
+        orphan_grace_s,
+    )
     return {
-        "files_before": n_before,
+        "files_before": len(base_files),
         "files_after": len(manifest["files"]),
         "n_rows": manifest["n_rows"],
     }
@@ -2159,47 +2033,16 @@ def expire_snapshots(
     _refuse_bucketed(prev, "expire_snapshots")
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the head must survive)")
-    versions = sorted(
-        int(m.group(1))
-        for name in _LOG.list_names(path)
-        if (m := _re.fullmatch(r"_MANIFEST\.v(\d+)\.json", name))
-    )
+    versions = _versions(path)
     retained = set(versions[-keep_last:])
     expired = [v for v in versions if v not in retained]
     keep_files: set[str] = set()
     for v in retained:
-        doc = json.loads(_LOG.get(path, f"_MANIFEST.v{v}.json"))
-        keep_files.update(doc.get("files") or [])
-    deleted = 0
+        keep_files.update(_read_version(path, v).get("files") or [])
+    drop: set[str] = set()
     for v in expired:
-        doc = json.loads(_LOG.get(path, f"_MANIFEST.v{v}.json"))
-        for rel in sorted(set(doc.get("files") or []) - keep_files):
-            fp = os.path.join(path, rel)
-            for victim in (
-                fp,
-                os.path.join(
-                    os.path.dirname(fp), "." + os.path.basename(fp) + ".crc"
-                ),
-            ):
-                try:
-                    os.unlink(victim)
-                    deleted += victim == fp
-                except FileNotFoundError:
-                    pass
-        _LOG.delete(path, f"_MANIFEST.v{v}.json")
-    # orphan sweep (same rule as compaction): files NO retained
-    # manifest references, older than the grace period
-    now = _time.time()
-    for rel in _relative_files(path):
-        if rel in keep_files:
-            continue
-        fp = os.path.join(path, rel)
-        try:
-            if now - os.path.getmtime(fp) >= orphan_grace_s:
-                os.unlink(fp)
-                deleted += 1
-        except FileNotFoundError:
-            pass
+        drop.update(_read_version(path, v).get("files") or [])
+    deleted = _expire(path, drop - keep_files, expired, keep_files, orphan_grace_s)
     return {
         "expired_versions": expired,
         "retained_versions": sorted(retained),
@@ -2248,13 +2091,8 @@ def dataset_history(spark: SparkSession, path: str) -> DataFrame:
     all present — compaction expires older versions' files). The
     operational view an on-call engineer reads before a rollback."""
     rows = []
-    vnames = sorted(
-        n
-        for n in _LOG.list_names(path)
-        if _re.fullmatch(r"_MANIFEST\.v(\d+)\.json", n)
-    )
-    for vname in vnames:
-        m = json.loads(_LOG.get(path, vname))
+    for v in _versions(path):
+        m = _read_version(path, v)
         files = m.get("files", [])
         cb = m.get("cluster_by")
         rows.append(
