@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from hive_gateway_spark.operators.text import QC_B, _qc_weight_sql
 from hive_gateway_spark.registry import query
 from hive_gateway_spark.session import load_tables
-from hive_gateway_spark.staging import SessionCache, release, stage
+from hive_gateway_spark.staging import SessionCache, stage
 
 #: Duplicated-span width in tokens. Lee et al. use 50-token character
 #: spans on web corpora; the fixture docs run 10-99 tokens, so k=8
@@ -668,6 +668,15 @@ V3_GATE_MIN = 5
 V3_GATE_MAX = 512
 V3_TOP = 200
 
+#: q_curation_v3's recipe: (CurationPipeline stage, keyword arguments).
+V3_RECIPE = (
+    ("remove_boilerplate", {}),
+    ("gate_tokens", {"lo": V3_GATE_MIN, "hi": V3_GATE_MAX}),
+    ("dedup_exact", {}),
+    ("drop_span_duplicates", {"max_ratio": 0.6}),
+    ("select_dsir", {"top": V3_TOP}),
+)
+
 
 @query(
     "q_curation_v3",
@@ -783,7 +792,7 @@ def q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed published-recipe curation pipeline, v3 — every
     stage one of this module's verified operators, chained the way a
     production corpus build chains them, the WHOLE composition under
-    one driver hash:
+    one oracle hash (V3_RECIPE):
 
       boilerplate rewrite (boilerplate_report — recurring chunks cut,
         docs rebuilt)
@@ -801,50 +810,7 @@ def q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     shapes — each intermediate is a narrow (doc_id, lang, text) frame;
     the only corpus-sized shuffles remain the stage-internal ones
     (chunk DF, gram DF, per-doc folds)."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    surv = _v3_survivors(docs)
-    sel = dsir_report(surv, top=V3_TOP)
-    return sel.join(surv.select("doc_id", "lang"), "doc_id").select(
-        "doc_id", "lang", "n_tokens", "logw"
-    )
-
-
-#: documents plan → checkpointed v3 survivor frame. The rebuild →
-#: gate → exact-dedup → substring-drop subtree has SIX downstream
-#: consumers (substring_report's three reads of the word arrays, the
-#: anti-join, the DSIR stages, the lang join) — unstaged, the chunk
-#: explode re-ran per consumer (warm sf0.1 8.0 → 4.1 s with per-call
-#: checkpoints, → 1.0 s session-cached). On a cluster this is the
-#: intermediate corpus version a multi-stage build materializes.
-_V3_CACHE = SessionCache("corpus.v3_survivors")
-
-
-def _v3_survivors(docs: DataFrame) -> DataFrame:
-    return _V3_CACHE.get_or_build(
-        docs.sparkSession, None, lambda: _v3_survivors_build(docs), plan=docs
-    )
-
-
-def _v3_survivors_build(docs: DataFrame) -> DataFrame:
-    rebuilt = boilerplate_report(docs).select("doc_id", "clean_text")
-    ntok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
-    gated = (
-        rebuilt.join(docs.select("doc_id", "lang"), "doc_id")
-        .select("doc_id", "lang", F.col("clean_text").alias("text"))
-        .withColumn("n_tokens", ntok.cast("bigint"))
-        .filter(F.col("n_tokens").between(V3_GATE_MIN, V3_GATE_MAX))
-    )
-    winners = gated.join(
-        gated.groupBy("text").agg(F.min("doc_id").alias("doc_id")),
-        ["text", "doc_id"],
-    ).localCheckpoint()
-    sub = substring_report(winners.select("doc_id", "text"))
-    dropped = sub.filter(
-        10 * F.col("dup_tokens") >= 6 * F.col("n_tokens")
-    ).select("doc_id")
-    out = winners.join(dropped, "doc_id", "left_anti").localCheckpoint()
-    release(winners)  # out is materialized; the intermediate is dead weight
-    return out
+    return _recipe(spark, sf_dir, "v3").run().select("doc_id", "lang", "n_tokens", "logw")
 
 
 @query(
@@ -1233,73 +1199,13 @@ def q_curation_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence: the surviving doc_id for exact_dup, the covered-token
     count for span_dup, NULL otherwise.
 
-    The decisions are exactly v3's — the same stage predicates over
-    the same frames (consistency with q_curation_v3's selection is
-    pinned by test_curation_trace_consistent_with_v3); only the
-    bookkeeping differs. Scale shape: v3's stages plus three
-    broadcast-sized left joins of per-doc verdict frames. The small
-    (doc_id, decision, detail) result is SESSION-CACHED like every
-    staging artifact: q_curation_funnel aggregates it (measured 5.9 s
-    per warm call re-running the whole stage chain before the cache,
-    ~0.2 s after), and on a cluster this is the persisted audit table
-    the summary reads."""
-    return _TRACE_CACHE.get_or_build(
-        spark, sf_dir, lambda: _curation_trace_build(spark, sf_dir)
-    )
-
-
-def _curation_trace_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_tables(spark, sf_dir)["documents"]
-    rebuilt = boilerplate_report(docs).select("doc_id", "clean_text")
-    ntok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
-    sized = (
-        rebuilt.join(docs.select("doc_id", "lang"), "doc_id")
-        .select("doc_id", "lang", F.col("clean_text").alias("text"))
-        .withColumn("n_tokens", ntok.cast("bigint"))
-        .localCheckpoint()
-    )
-    band = sized.filter(F.col("n_tokens").between(V3_GATE_MIN, V3_GATE_MAX))
-    keymin = band.groupBy("text").agg(F.min("doc_id").alias("m"))
-    winners = band.join(keymin, "text").filter(F.col("doc_id") == F.col("m")).drop("m")
-    sub = substring_report(winners.select("doc_id", "text"))
-    dropped = sub.filter(10 * F.col("dup_tokens") >= 6 * F.col("n_tokens")).select(
-        "doc_id", F.col("dup_tokens").alias("dr_tokens")
-    )
-    surv = winners.join(dropped.select("doc_id"), "doc_id", "left_anti")
-    sel = dsir_report(surv, top=V3_TOP).select(
-        "doc_id", F.lit(True).alias("is_sel")
-    )
-    out = (
-        sized.join(keymin.select(F.col("m"), F.col("text").alias("ktext")),
-                   F.col("text") == F.col("ktext"), "left")
-        .join(dropped, "doc_id", "left")
-        .join(F.broadcast(sel), "doc_id", "left")
-    )
-    too_short = F.col("n_tokens") < V3_GATE_MIN
-    too_long = F.col("n_tokens") > V3_GATE_MAX
-    exact_dup = F.col("m").isNotNull() & (F.col("doc_id") != F.col("m"))
-    span_dup = F.col("dr_tokens").isNotNull()
-    out_frame = out.select(
-        "doc_id",
-        F.when(too_short, "too_short")
-        .when(too_long, "too_long")
-        .when(exact_dup, "exact_dup")
-        .when(span_dup, "span_dup")
-        .when(F.col("is_sel").isNotNull(), "selected")
-        .otherwise("not_selected")
-        .alias("decision"),
-        F.when(too_short | too_long, F.lit(None).cast("bigint"))
-        .when(exact_dup, F.col("m"))
-        .when(span_dup, F.col("dr_tokens"))
-        .otherwise(F.lit(None).cast("bigint"))
-        .alias("detail"),
-    ).localCheckpoint()
-    release(sized)  # out_frame is materialized; the intermediate is dead
-    return out_frame
-
-
-#: sf_dir → checkpointed trace frame (see q_curation_trace).
-_TRACE_CACHE = SessionCache("corpus.trace")
+    The decisions are the v3 recipe's own: CurationPipeline.trace() of
+    the pipeline q_curation_v3 runs (consistency with its selection is
+    pinned by test_curation_trace_consistent_with_v3). Scale shape: v3's
+    stages plus one anti-join per dropping stage between checkpointed
+    boundaries; q_curation_funnel aggregates the same materialized
+    trace."""
+    return _recipe(spark, sf_dir, "v3").trace().select("doc_id", "decision", "detail")
 
 
 @query(
@@ -1561,7 +1467,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the trace's own plan plus one token projection, a
     doc-keyed join, and a six-row aggregate."""
-    trace = q_curation_trace(spark, sf_dir)
+    trace = _recipe(spark, sf_dir, "v3").trace()
     docs = load_tables(spark, sf_dir)["documents"]
     tok = docs.select(
         "doc_id",
@@ -1808,6 +1714,27 @@ _V4_PLANTED = [
 ]
 _V4_VALUES = ", ".join(f"({i}, '{g}', '{s}')" for i, g, s in _V4_PLANTED)
 
+#: q_curation_v4's recipe, run over v4_corpus(); decontaminate builds
+#: its benchmark set from that whole input.
+V4_RECIPE = (
+    ("gate_gopher", {"stops": V4_STOPS}),
+    ("decontaminate", {}),
+    ("cut_perplexity_tail", {}),
+    ("dedup_normalized", {}),
+    ("drop_span_duplicates", {"max_ratio": 0.6}),
+    ("select_dsir", {"top": V4_TOP}),
+    ("split_pack", {}),
+)
+
+
+def v4_corpus(docs: DataFrame) -> DataFrame:
+    """q_curation_v4's input: the documents' (doc_id, lang, text) plus
+    the _V4_PLANTED rows."""
+    planted = docs.sparkSession.createDataFrame(
+        _V4_PLANTED, "doc_id bigint, lang string, text string"
+    )
+    return docs.select("doc_id", "lang", "text").unionByName(planted)
+
 
 def _v4_oracle_ctes() -> str:
     """The shared DuckDB CTE chain computing every q_curation_v4 stage —
@@ -2031,255 +1958,35 @@ _V4_FUNNEL_ORACLE = f"""
     GROUP BY decision
 """
 
-#: (sf_dir, shingle_n) → {"decisions": frame, "manifest": frame} — the
-#: v4 stage chain has two registered consumers (manifest + funnel) and
-#: a pipeline-facade pin test; staged once per (session, sf_dir) like
-#: the v3 survivor frame and the curation trace.
-_V4_CACHE = SessionCache("corpus.v4_state")
+
+#: sf_dir → {recipe name: the CurationPipeline running it}. One pipeline
+#: serves its recipe's manifest, trace and funnel queries; v5 extends
+#: v4's, so a sf_dir's recipes share one entry and are released together.
+_RECIPES = SessionCache("corpus.recipe")
+
+_MANIFEST = ("doc_id", "lang", "n_tokens", "logw", "split", "shard", "bin")
 
 
-def _v4_state(
-    spark: SparkSession, sf_dir: str, shingle_n: int | None = None
-) -> dict:
-    """Run every q_curation_v4 stage once; return checkpointed
-    {"decisions", "manifest"} frames (see q_curation_v4 docstring for
-    the stage chain and its scale shape).
+def _recipe(spark: SparkSession, sf_dir: str, name: str):
+    """The session's pipeline for recipe ``name``: "v3" (V3_RECIPE over
+    the documents), "v4" (V4_RECIPE over v4_corpus) or "v5" (the v4
+    pipeline extended by gate_quality(0.0): the classifier scores only
+    the manifest rows, and the split_pack checkpoint keeps the optimizer
+    from pushing its filter into the corpus scan). CurationPipeline is
+    imported here because pipeline.py imports this module."""
+    from hive_gateway_spark.pipeline import CurationPipeline
 
-    ``shingle_n`` parameterizes the DECONTAMINATION shingle width only
-    (default: dedup.SHINGLE_N — the fixture/oracle width the registered
-    queries pin). 3-gram shingles of a small vocabulary are common
-    (the 100k smoke measured 25% of a synthetic zipf corpus flagged at
-    n=3, an over-trigger, not leakage); SCALE.md names 8–13 grams as
-    the production setting, and corpus_scale_smoke.py asserts the
-    flagged share collapses at n=8 while the PLANTED contamination pair
-    (50 shared words ≫ any n here) is still caught."""
-    from hive_gateway_spark.operators.dedup import SHINGLE_N as _DEFAULT_N
-
-    # normalize: an explicit shingle_n == the default must hit the same
-    # cache entry as shingle_n=None (else the whole v4 chain re-runs
-    # and double-checkpoints for a semantically identical request)
-    n_sh = _DEFAULT_N if shingle_n is None else shingle_n
-    return _V4_CACHE.get_or_build(
-        spark, (sf_dir, n_sh), lambda: _v4_state_build(spark, sf_dir, n_sh)
-    )
-
-
-def _v4_state_build(spark: SparkSession, sf_dir: str, n_sh: int) -> dict:
-    from pyspark.sql import Window
-
-    from hive_gateway_spark.operators.dedup import (
-        CONTAM_BENCH_MOD,
-        CONTAM_MIN_SHARED,
-        _shingles_checkpointed,
-    )
-    from hive_gateway_spark.operators.ranking import exact_ntile
-    from hive_gateway_spark.operators.sampling import (
-        _PACK_BUDGET,
-        _PACK_SHARDS,
-        _TRAIN_LT,
-        _VAL_LT,
-        _h,
-    )
-    from hive_gateway_spark.operators.text import _BPE_RE, gopher_report
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"].select("doc_id", "lang", "text")
-    planted = spark.createDataFrame(
-        _V4_PLANTED, "doc_id bigint, lang string, text string"
-    )
-    corpus = docs.unionByName(planted)
-    # Per-stage doc_id verdict frames are checkpointed ONCE: both
-    # consumers (the manifest chain and the decisions/funnel frame)
-    # read them, and unmaterialized they would re-execute the gopher
-    # scan, the contamination shuffle join, the ranking passes, the
-    # gram meet, and the DSIR scoring a second time each (code-review
-    # r10: the decisions frame roughly doubled the chain's cold cost).
-    # 1. Gopher rule battery (stateless in-row projection, zero shuffle)
-    gok = (
-        gopher_report(corpus, stops=V4_STOPS)
-        .filter("keep")
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    g = corpus.join(gok, "doc_id")
-    # 2. Decontamination: the fixture side reuses the session-wide
-    # checkpointed shingle staging; the 2-row planted side shingles
-    # through the same kernel expression (tiny local plan). Benchmark
-    # shingle table vs training shingles is a shuffle-hash join on the
-    # 8 B hash — never a corpus broadcast (q_contamination's plan).
-    from hive_gateway_spark.operators.dedup import SHINGLE_N, shingle_expr
-
-    if n_sh == SHINGLE_N:
-        # fixture width: reuse the session-wide checkpointed staging
-        sh_fix = _shingles_checkpointed(t).select("doc_id", "h")
-    else:
-        sh_fix = (
-            docs.withColumn("words", F.split("text", " "))
-            .filter(F.size("words") >= n_sh)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        f"array_distinct(transform({shingle_expr(n_sh)},"
-                        " s -> xxhash64(s)))"
-                    )
-                ).alias("h"),
-            )
-        )
-    hs = f"array_distinct(transform({shingle_expr(n_sh)}, s -> xxhash64(s)))"
-    sh_pl = (
-        planted.withColumn("words", F.split("text", " "))
-        .select("doc_id", F.explode(F.expr(hs)).alias("h"))
-    )
-    sh = sh_fix.unionByName(sh_pl)
-    bench = sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0).select(
-        F.col("doc_id").alias("bench_id"), "h"
-    )
-    train = sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0).select(
-        F.col("doc_id").alias("train_id"), "h"
-    )
-    contam_ids = (
-        train.hint("shuffle_hash")
-        .join(bench, "h")
-        .groupBy("bench_id", "train_id")
-        .agg(F.count("*").alias("sn"))
-        .filter(F.col("sn") >= CONTAM_MIN_SHARED)
-        .select(F.col("train_id").alias("doc_id"))
-        .distinct()
-        .localCheckpoint()
-    )
-    d = (
-        g.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .join(contam_ids, "doc_id", "left_anti")
-        .localCheckpoint()
-    )
-    # 3. CCNet perplexity cut: LM retrained on the decontaminated set
-    # (shuffle-hash LM joins), per-lang exact NTILE(3) via the
-    # range-bucket rank projection (no corpus-in-5-partitions window),
-    # tail third dropped.
-    ppl = perplexity_report(d)
-    # staged: exact_ntile's multi-pass ranking must not re-run the LM
-    # scoring joins per pass (same fix as q_ccnet_buckets)
-    ranked = exact_ntile(
-        stage(
-            ppl.join(d.select("doc_id", "lang"), "doc_id").select(
-                "lang", "doc_id", "mean_nll"
-            ),
-            "v4.ntile_input",
-        ),
-        3,
-        "mean_nll",
-        "doc_id",
-        partition_cols=["lang"],
-        out_col="t",
-        tie_subsplit=False,
-    )
-    tail_ids = (
-        ranked.filter(F.col("t") == 3).select("doc_id").localCheckpoint()
-    )
-    c3 = d.join(tail_ids, "doc_id", "left_anti")
-    # 4. Normalized-text dedup (one shuffle on the normalized key)
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.upper(F.col("text")), "[^A-Z0-9 ]", ""),
-            " +",
-            " ",
-        )
-    )
-    nn = c3.select("doc_id", "lang", "text", norm.alias("norm"))
-    keymin = nn.groupBy("norm").agg(F.min("doc_id").alias("m"))
-    nwin = (
-        nn.join(keymin, "norm")
-        .filter(F.col("doc_id") == F.col("m"))
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
-    )
-    # 5. Duplicated-span drop (>=60% coverage) on the canonical set
-    sub = substring_report(nwin.select("doc_id", "text"))
-    sdrop = (
-        sub.filter(10 * F.col("dup_tokens") >= 6 * F.col("n_tokens"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    surv = nwin.join(sdrop, "doc_id", "left_anti").localCheckpoint()
-    # 6. DSIR selection (retrained on survivors, deterministic top-N)
-    sel = dsir_report(surv, top=V4_TOP).localCheckpoint()
-    # 7. Split + pack: hash split, hash shard, contiguous cumsum bins
-    # per (split, lang, shard) — every window partition bounded.
-    bucket = _h(F.col("doc_id")) % 1000
-    split = (
-        F.when(bucket < _TRAIN_LT, "train")
-        .when(bucket < _VAL_LT, "val")
-        .otherwise("test")
-    )
-    sized = (
-        sel.join(surv.select("doc_id", "lang", "text"), "doc_id")
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            "logw",
-            split.alias("split"),
-            (_h(F.col("doc_id")) % _PACK_SHARDS).alias("shard"),
-            F.regexp_count("text", F.lit(_BPE_RE)).cast("bigint").alias("n_tok"),
-        )
-    )
-    w = (
-        Window.partitionBy("split", "lang", "shard")
-        .orderBy(F.col("doc_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    manifest = sized.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        "logw",
-        "split",
-        "shard",
-        F.floor(
-            ((F.sum("n_tok").over(w) - F.col("n_tok")).cast("double"))
-            / F.lit(_PACK_BUDGET)
-        )
-        .cast("bigint")
-        .alias("bin"),
-    ).localCheckpoint()
-    # Per-doc first-drop attribution (the funnel/audit frame): the
-    # when-chain precedence IS the stage order, so each later branch is
-    # only reached by docs that survived every earlier stage.
-    decisions = (
-        corpus.select("doc_id", "lang")
-        .join(gok.withColumn("gk", F.lit(True)), "doc_id", "left")
-        .join(contam_ids.withColumn("ct", F.lit(True)), "doc_id", "left")
-        .join(tail_ids.withColumn("tl", F.lit(True)), "doc_id", "left")
-        .join(
-            nwin.select("doc_id").withColumn("nw", F.lit(True)),
-            "doc_id",
-            "left",
-        )
-        .join(sdrop.withColumn("sd", F.lit(True)), "doc_id", "left")
-        .join(
-            sel.select("doc_id").withColumn("sl", F.lit(True)),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.when(F.col("gk").isNull(), "gopher_fail")
-            .when(F.col("doc_id") % CONTAM_BENCH_MOD == 0, "benchmark")
-            .when(F.col("ct").isNotNull(), "contaminated")
-            .when(F.col("tl").isNotNull(), "ppl_tail")
-            .when(F.col("nw").isNull(), "norm_dup")
-            .when(F.col("sd").isNotNull(), "span_dup")
-            .when(F.col("sl").isNull(), "not_selected")
-            .otherwise("selected")
-            .alias("decision"),
-        )
-        .localCheckpoint()
-    )
-    for frame in (d, nwin, surv, gok, contam_ids, tail_ids, sdrop, sel):
-        release(frame)  # decisions+manifest are materialized; free the stages
-    return {"decisions": decisions, "manifest": manifest}
+    recipes = _RECIPES.get_or_build(spark, sf_dir, dict)
+    if name not in recipes:
+        docs = load_tables(spark, sf_dir)["documents"]
+        if name == "v3":
+            pipe = CurationPipeline(spark).from_frame(docs).apply(V3_RECIPE)
+        elif name == "v4":
+            pipe = CurationPipeline(spark).from_frame(v4_corpus(docs)).apply(V4_RECIPE)
+        else:
+            pipe = _recipe(spark, sf_dir, "v4").extend().gate_quality(0.0)
+        recipes.setdefault(name, pipe)  # a concurrent build loses to the first
+    return recipes[name]
 
 
 @query("q_curation_v4", oracle=_V4_ORACLE)
@@ -2319,9 +2026,9 @@ def q_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     giant-partition window), one normalized-key shuffle, the capped
     gram meets, the 64-bucket DSIR broadcast, and bounded (split, lang,
     shard) pack windows. Intermediates are narrow (doc_id, lang, text)
-    frames, staged once per (session, sf_dir) and shared with the
-    funnel."""
-    return _v4_state(spark, sf_dir)["manifest"]
+    frames, checkpointed once per (session, sf_dir) by the V4_RECIPE
+    pipeline, whose trace() the funnel aggregates."""
+    return _recipe(spark, sf_dir, "v4").run().select(*_MANIFEST)
 
 
 @query("q_curation_v4_funnel", oracle=_V4_FUNNEL_ORACLE)
@@ -2330,14 +2037,12 @@ def q_curation_v4_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributed to the FIRST stage that eliminated it (gopher_fail /
     benchmark / contaminated / ppl_tail / norm_dup / span_dup) or its
     final fate (not_selected / selected) — the one-look audit of where
-    a corpus build loses its data, aggregated from the same staged
-    decision frame q_curation_v4 derives from (equality with the
-    manifest is pinned in tests/test_corpus.py). The planted pair
-    guarantees the benchmark and contaminated rows are non-vacuous."""
-    dec = _v4_state(spark, sf_dir)["decisions"]
-    return dec.groupBy("decision").agg(
-        F.count("*").cast("bigint").alias("n_docs")
-    )
+    a corpus build loses its data: the GROUP BY of the trace() of the
+    pipeline q_curation_v4 runs (equality with the manifest is pinned
+    in tests/test_corpus.py). The planted pair guarantees the benchmark
+    and contaminated rows are non-vacuous."""
+    trace = _recipe(spark, sf_dir, "v4").trace()
+    return trace.groupBy("decision").agg(F.count("*").cast("bigint").alias("n_docs"))
 
 
 @query(
@@ -2435,8 +2140,8 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_V5_ORACLE = f"""
-    WITH {{ctes}},
+#: q_quality_classifier's score over v4corpus, shared by the v5 oracles.
+_V5_QCS = f"""
     qcw AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS word
         FROM v4corpus
@@ -2452,29 +2157,28 @@ _V5_ORACLE = f"""
     qcs AS (
         SELECT doc_id, SUM({_qc_weight_sql('b')}) AS num
         FROM qch GROUP BY doc_id
-    )
+    )"""
+
+_V5_ORACLE = f"""
+    WITH {_v4_oracle_ctes()},{_V5_QCS}
     SELECT p.doc_id, p.lang, p.n_tokens, p.logw, p.split, p.shard, p.bin
     FROM placed p JOIN qcs ON qcs.doc_id = p.doc_id
     WHERE qcs.num > 0
 """
 
 
-@query(
-    "q_curation_v5",
-    oracle=_V5_ORACLE.format(ctes=_v4_oracle_ctes()),
-)
+@query("q_curation_v5", oracle=_V5_ORACLE)
 def q_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The v4 published-recipe manifest with the hashed-linear quality
     classifier as a FINAL gate — the r12 composition: Gopher →
     decontamination → perplexity cut → normalized dedup → span drop →
-    DSIR → split/pack (all of q_curation_v4, reused from the session's
-    staged v4 state), then only selections the classifier scores
-    positive survive. Running the classifier LAST scores the few
-    hundred selected docs instead of the corpus — the cheap-gate-last
-    ordering a real pipeline uses when the classifier is the
-    expensive model (here it is free either way; the composition
-    point is that the stage slots in WITHOUT touching v4's verified
-    chain or its hash).
+    DSIR → split/pack (the session's v4 pipeline, extended), then only
+    selections the classifier scores positive survive. Running the
+    classifier LAST scores the few hundred selected docs instead of the
+    corpus — the cheap-gate-last ordering a real pipeline uses when the
+    classifier is the expensive model (here it is free either way; the
+    composition point is that the stage slots in WITHOUT touching v4's
+    verified chain or its hash).
 
     Determinism: v4's manifest is hash-verified; the gate is the
     exact-integer classifier sum (q_quality_classifier's arithmetic
@@ -2482,118 +2186,20 @@ def q_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's qcs CTE).
 
     Scale shape: v4's audited stages unchanged; the gate adds one
-    in-row integer fold over the SELECTED manifest rows and a
-    manifest-sized semi join — no new corpus pass (the oracle scores
-    all docs only because SQL has no lazy evaluation; values agree
-    wherever both score)."""
-    manifest = _v4_state(spark, sf_dir)["manifest"]
-    passing = _v5_passing(spark, sf_dir, manifest.select("doc_id"))
-    return manifest.join(F.broadcast(passing), "doc_id", "left_semi")
+    in-row integer fold over the checkpointed manifest rows — no new
+    corpus pass (the oracle scores all docs only because SQL has no
+    lazy evaluation; values agree wherever both score)."""
+    return _recipe(spark, sf_dir, "v5").run().select(*_MANIFEST)
 
 
-def _v5_passing(
-    spark: SparkSession, sf_dir: str, sel_ids: DataFrame
-) -> DataFrame:
-    """doc_ids among ``sel_ids`` the quality classifier scores positive
-    — q_curation_v5's gate, shared with the v5 funnel so the two
-    registered consumers cannot drift. Scores ONLY the given ids: the
-    id set (DSIR top — a bounded dimension) broadcasts into the corpus
-    scan, the classifier folds in-row over the survivors, and the
-    selection-sized passing set is what returns. Never a corpus-sized
-    build side."""
-    from hive_gateway_spark.operators.text import quality_exprs
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"].select("doc_id", "lang", "text")
-    planted = spark.createDataFrame(
-        _V4_PLANTED, "doc_id bigint, lang string, text string"
-    )
-    corpus = docs.unionByName(planted)
-    # Materialize the semi-joined SLICE before scoring: the classifier
-    # fold lands in a Filter that references only corpus columns, so
-    # Catalyst's predicate pushdown moves it BELOW the semi join and
-    # scores the whole corpus to keep 120 docs — measured as 5.3 s per
-    # v5-family call at sf1 where the intended selection-only fold is
-    # milliseconds (r14; the sf1 record showed all three v5 queries
-    # paying it). The staged checkpoint is an optimizer barrier the
-    # pushdown cannot cross, and the slot supersedes itself across the
-    # family's two sel_ids spellings (tiny frames either way).
-    survivors = stage(
-        corpus.join(F.broadcast(sel_ids), "doc_id", "left_semi"),
-        "v5.survivors",
-    )
-    n_tok, num = quality_exprs()
-    return (
-        survivors.select("doc_id", num.alias("__num"), n_tok.alias("__nt"))
-        .filter((F.col("__nt") > 0) & (F.col("__num") > 0))
-        .select("doc_id")
-    )
-
-
-_V5_FUNNEL_ORACLE = f"""
-    WITH {{ctes}},
-    qcw AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM v4corpus
-    ),
-    qch AS (
-        SELECT doc_id,
-               (CAST(list_sum(list_transform(range(1, length(word) + 1),
-                    i -> (ord(substr(word, i, 1)) * (i * 131 + 7))
-                         % {(1 << 31) - 1})) AS BIGINT)
-                % {(1 << 31) - 1}) % {QC_B} AS b
-        FROM qcw WHERE word <> ''
-    ),
-    qcs AS (
-        SELECT doc_id, SUM({_qc_weight_sql('b')}) AS num
-        FROM qch GROUP BY doc_id
-    )
-    SELECT decision, CAST(COUNT(*) AS BIGINT) AS n_docs
-    FROM (
-        SELECT v.doc_id,
-               CASE WHEN gok.doc_id IS NULL THEN 'gopher_fail'
-                    WHEN v.doc_id % {_V4_BENCH_MOD} = 0 THEN 'benchmark'
-                    WHEN ct.doc_id IS NOT NULL THEN 'contaminated'
-                    WHEN tl.doc_id IS NOT NULL THEN 'ppl_tail'
-                    WHEN nw.doc_id IS NULL THEN 'norm_dup'
-                    WHEN sd.doc_id IS NOT NULL THEN 'span_dup'
-                    WHEN sl.doc_id IS NULL THEN 'not_selected'
-                    WHEN COALESCE(q.num, 0) <= 0 THEN 'quality_fail'
-                    ELSE 'selected' END AS decision
-        FROM v4corpus v
-        LEFT JOIN gok ON gok.doc_id = v.doc_id
-        LEFT JOIN contam ct ON ct.doc_id = v.doc_id
-        LEFT JOIN tailt tl ON tl.doc_id = v.doc_id
-        LEFT JOIN (SELECT doc_id FROM nwin) nw ON nw.doc_id = v.doc_id
-        LEFT JOIN sdrop sd ON sd.doc_id = v.doc_id
-        LEFT JOIN (SELECT doc_id FROM sel) sl ON sl.doc_id = v.doc_id
-        LEFT JOIN qcs q ON q.doc_id = v.doc_id
-    )
-    GROUP BY decision
-"""
-
-
-def _v5_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, decision) with the classifier gate's exit split
-    out of 'selected' — the per-doc frame both v5 audit queries
-    (trace + funnel) aggregate from; composed from the staged v4
-    decision frame and the shared _v5_passing gate."""
-    dec = _v4_state(spark, sf_dir)["decisions"]
-    sel_ids = dec.filter(F.col("decision") == "selected").select("doc_id")
-    passing = _v5_passing(spark, sf_dir, sel_ids)
-    return dec.join(
-        F.broadcast(passing.withColumn("qp", F.lit(True))), "doc_id", "left"
-    ).select(
-        "doc_id",
-        "lang",
-        F.when(
-            (F.col("decision") == "selected") & F.col("qp").isNull(),
-            "quality_fail",
-        )
-        .otherwise(F.col("decision"))
-        .alias("decision"),
-    )
-
+#: v4's funnel with the classifier gate's exit split out of 'selected'.
+_V5_FUNNEL_ORACLE = (
+    _V4_FUNNEL_ORACLE.replace("\n    SELECT decision,", f",{_V5_QCS}\n    SELECT decision,")
+    .replace("  ELSE 'selected'", "  WHEN COALESCE(q.num, 0) <= 0 THEN 'quality_fail'\n"
+             "                    ELSE 'selected'")
+    .replace("sl.doc_id = v.doc_id\n", "sl.doc_id = v.doc_id\n"
+             "        LEFT JOIN qcs q ON q.doc_id = v.doc_id\n")
+)
 
 _V5_TRACE_ORACLE = _V5_FUNNEL_ORACLE.replace(
     """    SELECT decision, CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -2608,10 +2214,7 @@ _V5_TRACE_ORACLE = _V5_FUNNEL_ORACLE.replace(
 """)
 
 
-@query(
-    "q_curation_v5_trace",
-    oracle=_V5_TRACE_ORACLE.format(ctes=_v4_oracle_ctes()),
-)
+@query("q_curation_v5_trace", oracle=_V5_TRACE_ORACLE)
 def q_curation_v5_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document v5 decision trace (VERDICT r12 task #5's per-doc
     attribution): every input doc with the FIRST stage that eliminated
@@ -2619,28 +2222,21 @@ def q_curation_v5_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs the classifier gate rejects. The funnel is exactly this
     frame's GROUP BY (same oracle text modulo the aggregate — string
     surgery, so the two cannot drift)."""
-    return _v5_decisions(spark, sf_dir)
+    return _recipe(spark, sf_dir, "v5").trace().select("doc_id", "lang", "decision")
 
 
-@query(
-    "q_curation_v5_funnel",
-    oracle=_V5_FUNNEL_ORACLE.format(ctes=_v4_oracle_ctes()),
-)
+@query("q_curation_v5_funnel", oracle=_V5_FUNNEL_ORACLE)
 def q_curation_v5_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The v5 pipeline's survivorship funnel (VERDICT r12 task #5):
     q_curation_v4_funnel's per-doc first-drop attribution with the
     classifier gate's exit attributed too — a v4-selected doc the
     quality classifier scores non-positive lands in 'quality_fail';
     everything upstream keeps its v4 attribution verbatim (the gate
-    runs LAST, so it can only split the 'selected' bucket). Composed
-    from the same staged v4 decision frame and the same shared
-    _v5_passing gate q_curation_v5 filters with, so manifest and
+    runs LAST, so it can only split the 'selected' bucket). The GROUP BY
+    of the trace() of the pipeline q_curation_v5 runs, so manifest and
     funnel cannot disagree (equality pinned in tests/test_corpus.py).
 
-    Scale shape: the v4 funnel's aggregate plus one broadcast of the
-    selection-sized passing set — no new corpus pass."""
-    return (
-        _v5_decisions(spark, sf_dir)
-        .groupBy("decision")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-    )
+    Scale shape: the v4 trace plus one anti-join of the manifest-sized
+    gate boundary — no new corpus pass."""
+    trace = _recipe(spark, sf_dir, "v5").trace()
+    return trace.groupBy("decision").agg(F.count("*").cast("bigint").alias("n_docs"))

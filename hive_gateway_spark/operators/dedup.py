@@ -33,8 +33,7 @@ def shingle_expr(n: int) -> str:
     are COMMON — the 100k-doc smoke measured 25% of a synthetic corpus
     "contaminated" at n=3. SCALE.md names 8–13-gram shingles as the
     production decontamination setting; callers that screen real corpora
-    pass the width through (pipeline.decontaminate(shingle_n=...),
-    corpus._v4_state(shingle_n=...))."""
+    pass the width through pipeline.decontaminate(shingle_n=...)."""
     return (
         "transform(sequence(0, size(words) - {n}), "
         "i -> concat_ws(' ', slice(words, i + 1, {n})))"

@@ -1,10 +1,9 @@
-"""User-facing curation pipeline builder — the fluent API a team
-migrating from the reference (or from a hand-rolled script stack)
-composes instead of wiring operators by hand:
+"""The curation engine: a fluent chain of document stages, and the
+recipes the registered curation queries run.
 
     from hive_gateway_spark.pipeline import CurationPipeline
 
-    selected = (
+    pipe = (
         CurationPipeline(spark)
         .read_parquet("/data/corpus")       # or .from_frame(docs_df)
         .remove_boilerplate()
@@ -12,23 +11,35 @@ composes instead of wiring operators by hand:
         .dedup_exact()
         .drop_span_duplicates(0.6)
         .select_dsir(top=200)
-        .run()                              # → DataFrame
     )
-    pipeline.export("/data/corpus_v3", partition_by=["lang"])
+    selected = pipe.run()                   # → the surviving docs
+    why = pipe.trace()                      # → (doc_id, lang, decision, detail)
+    pipe.export("/data/corpus_v3", partition_by=["lang"])
 
-Every stage delegates to the SAME verified core the corresponding
-registered query uses (operators/corpus.py), so the facade adds zero
-new semantics — the default chain reproduces q_curation_v3's
-selection exactly (tests/test_pipeline.py pins it). Stages are
-composable in any order; each is a docs-frame → docs-frame transform
-over the (doc_id, lang, text) shape.
+Each stage is a docs-frame → docs-frame transform over the (doc_id,
+lang, text) shape, built on the verified operators under operators/.
+The registered curation queries ARE pipelines: q_curation_v3 and
+q_curation_v4 run corpus.V3_RECIPE and corpus.V4_RECIPE, q_curation_v5
+extends the v4 pipeline with gate_quality(0.0), and their trace and
+funnel queries project or GROUP BY trace(). So the DuckDB oracles of
+those queries pin the stages themselves (corpus._recipe).
+
+run() folds the stages once, checkpointing each boundary; trace() reads
+that same fold, so a chain executes once whichever is called first. A
+stage that drops documents names its decision: a doc's decision is the
+label of the first stage that dropped it (the stage's input anti-joined
+with its output), or 'selected'. Rewrite stages (remove_boilerplate,
+split_pack) keep every doc and name none.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
+from fractions import Fraction
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from hive_gateway_spark.operators.corpus import (
     boilerplate_report,
@@ -36,15 +47,41 @@ from hive_gateway_spark.operators.corpus import (
     substring_report,
 )
 
-Stage = Callable[[DataFrame], DataFrame]
+#: docs → survivors, or (survivors, evidence about the dropped docs).
+Stage = Callable[[DataFrame], DataFrame | tuple[DataFrame, DataFrame]]
+#: (dropped input rows, stage output, evidence) → (doc_id, decision, detail).
+Why = Callable[[DataFrame, DataFrame, DataFrame | None], DataFrame]
+
+
+def _no_detail() -> Column:
+    return F.lit(None).cast("bigint").alias("detail")
+
+
+def _dropped_as(decision: str | Callable[[], Column]) -> Why:
+    """The Why of a stage whose drops carry no evidence: a fixed label,
+    or a label column over the dropped input rows."""
+
+    def why(dropped: DataFrame, out: DataFrame, evidence) -> DataFrame:
+        label = F.lit(decision) if isinstance(decision, str) else decision()
+        return dropped.select("doc_id", label.alias("decision"), _no_detail())
+
+    return why
 
 
 class CurationPipeline:
     def __init__(self, spark: SparkSession):
         self._spark = spark
         self._source: DataFrame | None = None
-        self._stages: list[tuple[str, Stage]] = []
+        self._parent: CurationPipeline | None = None
+        self._stages: list[tuple[str, Stage, Why | None]] = []
+        #: run()'s fold, (input, output, evidence, why) per stage; kept
+        #: until trace() has read it.
+        self._fold: list[tuple] = []
         self._result: DataFrame | None = None
+        self._trace: DataFrame | None = None
+        #: a registered recipe's pipeline is shared by concurrent server
+        #: requests: one fold, and no trace() releasing what another reads
+        self._lock = threading.RLock()
 
     # ------------------------------------------------------------ sources
 
@@ -60,10 +97,25 @@ class CurationPipeline:
         self._source = docs
         return self
 
+    def extend(self) -> "CurationPipeline":
+        """A pipeline over this one's result whose trace() continues
+        this one's: a doc its own stages drop takes their decision, every
+        other doc keeps the one this pipeline gave it."""
+        child = CurationPipeline(self._spark)
+        child._parent = self
+        return child
+
     # ------------------------------------------------------------- stages
 
-    def _add(self, name: str, fn: Stage) -> "CurationPipeline":
-        self._stages.append((name, fn))
+    def _add(self, name: str, fn: Stage, why: Why | None = None) -> "CurationPipeline":
+        self.release()  # the previous run lacks this stage
+        self._stages.append((name, fn, why))
+        return self
+
+    def apply(self, recipe) -> "CurationPipeline":
+        """Append a recipe: (stage method name, keyword arguments) pairs."""
+        for name, kwargs in recipe:
+            getattr(self, name)(**kwargs)
         return self
 
     def remove_boilerplate(self) -> "CurationPipeline":
@@ -79,55 +131,78 @@ class CurationPipeline:
         return self._add("remove_boilerplate", stage)
 
     def gate_tokens(self, lo: int, hi: int) -> "CurationPipeline":
-        """Keep docs whose token count is within [lo, hi]."""
+        """Keep docs whose token count is within [lo, hi]; the rest are
+        too_short / too_long."""
+
+        def ntok() -> Column:
+            return F.size(F.filter(F.split("text", " "), lambda x: x != "")).cast("bigint")
 
         def stage(docs: DataFrame) -> DataFrame:
-            ntok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
-            return docs.withColumn("n_tokens", ntok.cast("bigint")).filter(
+            return docs.withColumn("n_tokens", ntok()).filter(
                 F.col("n_tokens").between(lo, hi)
             )
 
-        return self._add("gate_tokens", stage)
+        why = _dropped_as(lambda: F.when(ntok() < lo, "too_short").otherwise("too_long"))
+        return self._add("gate_tokens", stage, why)
 
     def dedup_exact(self) -> "CurationPipeline":
-        """Keep the lowest doc_id per exact text."""
+        """Keep the lowest doc_id per exact text; the rest are exact_dup,
+        citing that doc_id."""
 
         def stage(docs: DataFrame) -> DataFrame:
             keep = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
             return docs.join(keep, ["text", "doc_id"])
 
-        return self._add("dedup_exact", stage)
+        def why(dropped: DataFrame, out: DataFrame, evidence) -> DataFrame:
+            kept = out.select("text", F.col("doc_id").alias("detail"))
+            return dropped.join(kept, "text").select(
+                "doc_id", F.lit("exact_dup").alias("decision"), "detail"
+            )
+
+        return self._add("dedup_exact", stage, why)
 
     def drop_span_duplicates(self, max_ratio: float = 0.6) -> "CurationPipeline":
         """Drop docs whose cross-doc duplicated-span coverage reaches
-        max_ratio (integer predicate — q_dedup_substring's core)."""
-        num, den = round(max_ratio * 10), 10
+        max_ratio (q_dedup_substring's core) as span_dup, citing their
+        covered-token count. The predicate is the exact integer form of
+        the decimal ratio: den·dup_tokens ≥ num·n_tokens."""
+        ratio = Fraction(str(max_ratio))
+        num, den = ratio.numerator, ratio.denominator
 
-        def stage(docs: DataFrame) -> DataFrame:
+        def stage(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
             sub = substring_report(docs.select("doc_id", "text"))
-            dropped = sub.filter(
-                den * F.col("dup_tokens") >= num * F.col("n_tokens")
-            ).select("doc_id")
-            return docs.join(dropped, "doc_id", "left_anti")
+            dropped = (
+                sub.filter(den * F.col("dup_tokens") >= num * F.col("n_tokens"))
+                .select("doc_id", "dup_tokens")
+                .localCheckpoint()
+            )
+            return docs.join(dropped.select("doc_id"), "doc_id", "left_anti"), dropped
 
-        return self._add("drop_span_duplicates", stage)
+        def why(dropped: DataFrame, out: DataFrame, cover: DataFrame) -> DataFrame:
+            return dropped.join(cover, "doc_id").select(
+                "doc_id", F.lit("span_dup").alias("decision"), F.col("dup_tokens").alias("detail")
+            )
+
+        return self._add("drop_span_duplicates", stage, why)
 
     def select_dsir(self, top: int) -> "CurationPipeline":
         """Deterministic DSIR top-N selection (q_dsir_weights' core),
-        retrained on whatever reaches this stage."""
+        retrained on whatever reaches this stage; the rest are
+        not_selected. Adds DSIR's logw and its n_tokens (non-empty
+        tokens scored), which replaces any earlier n_tokens."""
 
         def stage(docs: DataFrame) -> DataFrame:
-            sel = dsir_report(docs, top=top).select("doc_id", "logw")
-            return docs.join(sel, "doc_id")
+            sel = dsir_report(docs, top=top).select("doc_id", "n_tokens", "logw")
+            return docs.drop("n_tokens").join(sel, "doc_id")
 
-        return self._add("select_dsir", stage)
+        return self._add("select_dsir", stage, _dropped_as("not_selected"))
 
     # ------------------------------------------------- v4 recipe stages
 
     def gate_gopher(self, stops: tuple[str, ...] | None = None) -> "CurationPipeline":
         """Keep docs passing the full Gopher rule battery
         (q_gopher_rules' core; ``stops`` swaps the function-word
-        lexicon per corpus/language)."""
+        lexicon per corpus/language); the rest are gopher_fail."""
 
         def stage(docs: DataFrame) -> DataFrame:
             from hive_gateway_spark.operators.text import (
@@ -140,7 +215,7 @@ class CurationPipeline:
             ).select("doc_id")
             return docs.join(keep, "doc_id")
 
-        return self._add("gate_gopher", stage)
+        return self._add("gate_gopher", stage, _dropped_as("gopher_fail"))
 
     def gate_quality(self, min_score: float = 0.0) -> "CurationPipeline":
         """Keep docs whose hashed-linear classifier score clears
@@ -152,7 +227,7 @@ class CurationPipeline:
         spelling scored into a keep-set and joined back). Documents
         with zero tokens are outside the classifier's domain and are
         dropped regardless of ``min_score`` — same contract as
-        q_quality_classifier's output."""
+        q_quality_classifier's output. Drops are quality_fail."""
 
         def stage(docs: DataFrame) -> DataFrame:
             from hive_gateway_spark.operators.text import quality_exprs
@@ -161,7 +236,7 @@ class CurationPipeline:
             score = num.cast("double") / (500.0 * n_tok)
             return docs.filter((n_tok > 0) & (score > min_score))
 
-        return self._add("gate_quality", stage)
+        return self._add("gate_quality", stage, _dropped_as("quality_fail"))
 
     def decontaminate(
         self,
@@ -170,9 +245,10 @@ class CurationPipeline:
         bench_corpus: DataFrame | None = None,
         shingle_n: int | None = None,
     ) -> "CurationPipeline":
-        """Drop the benchmark slice (doc_id % bench_mod == 0) AND every
-        training doc sharing >= min_shared word-shingles with it
-        (q_contamination's machinery). Defaults come from dedup's
+        """Drop the benchmark slice (doc_id % bench_mod == 0) as
+        benchmark AND every training doc sharing >= min_shared
+        word-shingles with it as contaminated (q_contamination's
+        machinery). Defaults come from dedup's
         CONTAM_BENCH_MOD / CONTAM_MIN_SHARED — hardcoded copies here
         would silently desync the facade from the registered pipeline
         if the constants moved. The shingle meet is a shuffle-hash
@@ -180,12 +256,9 @@ class CurationPipeline:
 
         ``bench_corpus``: the frame the BENCHMARK shingle set is built
         from. Benchmark suites exist independently of quality gates, so
-        when decontaminate() runs after a filtering stage, pass the
-        UNFILTERED corpus here — otherwise a benchmark doc the earlier
-        gate dropped would no longer protect against its near-dups
-        (q_curation_v4 builds its benchmark set from the full input
-        corpus for exactly this reason). Defaults to the current
-        frame.
+        it defaults to the pipeline's source, not the current frame —
+        a benchmark doc an earlier gate dropped still protects against
+        its near-dups (q_curation_v4 relies on this).
 
         ``shingle_n``: word-shingle width; defaults to dedup.SHINGLE_N
         (the fixture/oracle width, 3). 3-grams of a small vocabulary
@@ -214,8 +287,9 @@ class CurationPipeline:
                     .select("doc_id", F.explode(F.expr(hs)).alias("h"))
                 )
 
+            src = self._input() if bench_corpus is None else bench_corpus
             sh = shingles(docs)
-            bench_src = shingles(bench_corpus) if bench_corpus is not None else sh
+            bench_src = sh if src is docs else shingles(src)
             bench = bench_src.filter(F.col("doc_id") % mod == 0).select(
                 F.col("doc_id").alias("bench_id"), "h"
             )
@@ -235,12 +309,18 @@ class CurationPipeline:
                 contaminated, "doc_id", "left_anti"
             )
 
-        return self._add("decontaminate", stage)
+        def benchmark() -> Column:
+            from hive_gateway_spark.operators.dedup import CONTAM_BENCH_MOD
+
+            mod = CONTAM_BENCH_MOD if bench_mod is None else bench_mod
+            return F.when(F.col("doc_id") % mod == 0, "benchmark").otherwise("contaminated")
+
+        return self._add("decontaminate", stage, _dropped_as(benchmark))
 
     def cut_perplexity_tail(self, tiles: int = 3) -> "CurationPipeline":
         """CCNet cut: retrain the bigram LM on the current frame, rank
         per lang by mean_nll via the scalable exact NTILE, drop the
-        last (least fluent) of ``tiles`` tiles."""
+        last (least fluent) of ``tiles`` tiles as ppl_tail."""
 
         def stage(docs: DataFrame) -> DataFrame:
             from hive_gateway_spark.operators.corpus import perplexity_report
@@ -266,12 +346,12 @@ class CurationPipeline:
             tail = ranked.filter(F.col("t") == tiles).select("doc_id")
             return docs.join(tail, "doc_id", "left_anti")
 
-        return self._add("cut_perplexity_tail", stage)
+        return self._add("cut_perplexity_tail", stage, _dropped_as("ppl_tail"))
 
     def dedup_normalized(self) -> "CurationPipeline":
         """Keep the lowest doc_id per NORMALIZED text (casefold +
         punctuation-strip + whitespace-collapse — q_dedup_normalized's
-        canonical election)."""
+        canonical election); the rest are norm_dup."""
 
         def stage(docs: DataFrame) -> DataFrame:
             norm = F.trim(
@@ -285,7 +365,7 @@ class CurationPipeline:
             keymin = nn.groupBy("__norm").agg(F.min("doc_id").alias("doc_id"))
             return nn.join(keymin, ["__norm", "doc_id"]).drop("__norm")
 
-        return self._add("dedup_normalized", stage)
+        return self._add("dedup_normalized", stage, _dropped_as("norm_dup"))
 
     def split_pack(self) -> "CurationPipeline":
         """Terminal manifest stage: deterministic 80/10/10 hash split,
@@ -340,8 +420,8 @@ class CurationPipeline:
     # ---------------------------------------------------------- execution
 
     def run(self, materialize: bool = True) -> DataFrame:
-        """Fold the stages over the source; the result is cached on the
-        builder for export().
+        """Fold the stages over the source once. Later calls, export(),
+        append_to() and trace() reuse that fold until a stage is added.
 
         ``materialize`` (default) localCheckpoints each stage boundary —
         the staging-table pattern every multi-stage corpus build uses:
@@ -349,39 +429,88 @@ class CurationPipeline:
         input (LM aggregate + ranking), so an unmaterialized chain
         re-executes the whole upstream per pass (measured 5× wall on
         the v4 chain). Pass False for one lazy end-to-end plan when the
-        chain is single-pass.
+        chain is single-pass; a trace() of it re-executes the stages.
 
-        Block hygiene: each boundary's checkpoint is RELEASED as soon
-        as its successor materializes (only the final result stays
-        pinned), and a re-run releases the previous result first —
-        otherwise every stage of every run would leak corpus-scale
-        block-manager blocks for the session's lifetime (the ADVICE r8
-        #4 class staging.release exists for)."""
+        Block hygiene: the boundaries stay pinned until trace() has
+        materialized (it compares each with the next), then only the
+        result stays; release() frees the rest."""
+        with self._lock:
+            if self._result is None:
+                cur, fold = self._input(), []
+                for _, fn, why in self._stages:
+                    got = fn(cur)
+                    out, evidence = got if isinstance(got, tuple) else (got, None)
+                    if materialize:
+                        out = out.localCheckpoint()
+                    fold.append((cur, out, evidence, why))
+                    cur = out
+                self._fold, self._result = fold, cur
+            return self._result
+
+    def trace(self) -> DataFrame:
+        """(doc_id, lang, decision, detail), one row per source document.
+        ``decision`` is the label of the first stage that dropped the doc
+        or 'selected'; ``detail`` is that stage's evidence (the surviving
+        doc_id of an exact dup, the covered-token count of a span drop)
+        or NULL. Built from run()'s fold and materialized once; the stage
+        boundaries are released only after it is."""
         from hive_gateway_spark.staging import release
 
+        with self._lock:
+            if self._trace is None:
+                self.run()
+                if self._parent is not None:
+                    base = self._parent.trace()
+                else:
+                    base = self._input().select(
+                        "doc_id", "lang", F.lit("selected").alias("decision"), _no_detail()
+                    )
+                drops = [
+                    why(cur.join(out.select("doc_id"), "doc_id", "left_anti"), out, evidence)
+                    for cur, out, evidence, why in self._fold
+                    if why is not None
+                ]
+                if drops:
+                    dropped = reduce(DataFrame.unionByName, drops).select(
+                        "doc_id", F.col("decision").alias("d"), F.col("detail").alias("e")
+                    )
+                    base = base.join(dropped, "doc_id", "left").select(
+                        "doc_id",
+                        "lang",
+                        F.coalesce("d", "decision").alias("decision"),
+                        F.coalesce("e", "detail").alias("detail"),
+                    )
+                self._trace = base.localCheckpoint()
+                release([out for _, out, _, _ in self._fold[:-1]])
+                release([evidence for _, _, evidence, _ in self._fold])
+                self._fold = []
+            return self._trace
+
+    def release(self) -> None:
+        """Free every checkpoint this pipeline pinned; the next run() or
+        trace() folds again. A source or parent result is not its to free."""
+        from hive_gateway_spark.staging import release
+
+        with self._lock:
+            release([(out, evidence) for _, out, evidence, _ in self._fold])
+            if self._stages:
+                release(self._result)
+            release(self._trace)
+            self._fold, self._result, self._trace = [], None, None
+
+    def _input(self) -> DataFrame:
+        if self._parent is not None:
+            return self._parent.run()
         if self._source is None:
             raise ValueError("no source: call read_parquet() or from_frame()")
-        release(self._result)  # re-run: the old result is superseded
-        self._result = None
-        out = self._source
-        prev_ckpt = None
-        for _, fn in self._stages:
-            out = fn(out)
-            if materialize:
-                out = out.localCheckpoint()
-                release(prev_ckpt)  # successor materialized; free it
-                prev_ckpt = out
-        self._result = out
-        return out
+        return self._source
 
     def export(self, path: str, partition_by: list[str] | None = None) -> dict:
         """write_dataset the result (running the pipeline if needed) and
         return the self-certifying manifest."""
         from hive_gateway_spark.sources.dataset_export import write_dataset
 
-        if self._result is None:
-            self.run()
-        return write_dataset(self._result, path, partition_by=partition_by)
+        return write_dataset(self.run(), path, partition_by=partition_by)
 
     def append_to(self, path: str) -> dict:
         """Commit the result onto an EXISTING export as manifest version
@@ -390,10 +519,8 @@ class CurationPipeline:
         """
         from hive_gateway_spark.sources.dataset_export import append_dataset
 
-        if self._result is None:
-            self.run()
-        return append_dataset(self._result, path)
+        return append_dataset(self.run(), path)
 
     @property
     def stages(self) -> list[str]:
-        return [n for n, _ in self._stages]
+        return [n for n, _, _ in self._stages]

@@ -168,10 +168,14 @@ def main() -> None:
         # n=8 flags < 1%; production removes boilerplate before
         # decontaminating for exactly this reason (the v4 recipe's
         # remove_boilerplate stage precedes it in the facade).
-        from hive_gateway_spark.operators.corpus import _v4_state
+        from hive_gateway_spark.operators.corpus import V4_RECIPE, v4_corpus
+        from hive_gateway_spark.pipeline import CurationPipeline
+        from hive_gateway_spark.session import load_tables
 
         t0 = time.time()
-        dec8 = _v4_state(spark, sf, shingle_n=8)["decisions"]
+        width8 = [(s, {**kw, "shingle_n": 8} if s == "decontaminate" else kw) for s, kw in V4_RECIPE]
+        corpus = v4_corpus(load_tables(spark, sf)["documents"])
+        dec8 = CurationPipeline(spark).from_frame(corpus).apply(width8).trace()
         f8 = {
             r["decision"]: r["n_docs"]
             for r in dec8.groupBy("decision")

@@ -393,12 +393,12 @@ def test_curation_v4_funnel_trace_equality(spark, sf_dir):
     stage-chain — their counts and id sets must agree exactly, every
     input doc must hold exactly one decision, and the planted evidence
     must exit at the stage it was built to prove non-vacuous."""
-    from hive_gateway_spark.operators.corpus import _V4_PLANTED, _v4_state
+    from hive_gateway_spark.operators.corpus import _V4_PLANTED, _recipe
     from hive_gateway_spark.session import load_tables
 
-    st = _v4_state(spark, sf_dir)
-    dec = {r["doc_id"]: r["decision"] for r in st["decisions"].collect()}
-    manifest = st["manifest"].collect()
+    pipe = _recipe(spark, sf_dir, "v4")
+    dec = {r["doc_id"]: r["decision"] for r in pipe.trace().collect()}
+    manifest = pipe.run().collect()
     funnel = {
         r["decision"]: r["n_docs"]
         for r in __import__("hive_gateway_spark.registry", fromlist=["QUERIES"])
@@ -448,21 +448,25 @@ def test_curation_v4_shingle_width_knob(spark, sf_dir):
     funnel as the driver-verified oracle)."""
     from collections import Counter
 
-    from hive_gateway_spark.operators.corpus import _v4_state
+    from hive_gateway_spark.operators.corpus import V4_RECIPE, _recipe, v4_corpus
+    from hive_gateway_spark.pipeline import CurationPipeline
+    from hive_gateway_spark.session import load_tables
 
-    d3 = {r["doc_id"]: r["decision"] for r in _v4_state(spark, sf_dir)["decisions"].collect()}
-    d8 = {
-        r["doc_id"]: r["decision"]
-        for r in _v4_state(spark, sf_dir, shingle_n=8)["decisions"].collect()
-    }
+    def decisions(pipe):
+        return {r["doc_id"]: r["decision"] for r in pipe.trace().collect()}
+
+    d3 = decisions(_recipe(spark, sf_dir, "v4"))
+    width8 = [(s, {**kw, "shingle_n": 8} if s == "decontaminate" else kw) for s, kw in V4_RECIPE]
+    corpus = v4_corpus(load_tables(spark, sf_dir)["documents"])
+    d8 = decisions(CurationPipeline(spark).from_frame(corpus).apply(width8))
     c3 = Counter(d3.values())["contaminated"]
     c8 = Counter(d8.values())["contaminated"]
     assert c8 <= c3
     # planted evidence is width-independent at these widths
     assert d8[9_800_007] == "benchmark"
     assert d8[9_800_008] == "contaminated"
-    # the two widths are cached independently (no cross-key bleed)
-    assert {r["doc_id"]: r["decision"] for r in _v4_state(spark, sf_dir)["decisions"].collect()} == d3
+    # the two widths are run independently (no cross-pipeline bleed)
+    assert decisions(_recipe(spark, sf_dir, "v4")) == d3
 
 
 def test_pipeline_decontaminate_shingle_width(spark, sf_dir):

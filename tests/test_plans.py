@@ -462,6 +462,15 @@ def test_v4_decontaminate_shingle_meet_is_shuffle_hash(spark, sf_dir):
     assert not re.search(r"BroadcastHashJoin \[h#\d+", plan), plan
 
 
+def test_curation_v5_scores_manifest_rows_only(spark, sf_dir):
+    """q_curation_v5's quality gate runs over the checkpointed v4
+    manifest: no documents scan in its executed plan, so the optimizer
+    cannot push the classifier fold below the selection into the
+    corpus (the r14 defect: 5.3 s per v5 call at sf1)."""
+    plan = plan_of(spark, sf_dir, "q_curation_v5")
+    assert not re.search(r"Scan parquet .*documents|documents\.parquet", plan), plan
+
+
 def test_tpch_q19_common_conjuncts_pushed(spark, sf_dir):
     """The disjunction's COMMON constraints must be extracted for scan
     pushdown (p_size ≤ 15 / l_quantity ≤ 30 hold in every branch) while
