@@ -59,9 +59,23 @@ def cos_div(dot: Column, norm2_prod: Column) -> Column:
     ≥ 1 and greatest(·, 1.0) is bit-identity there — oracle hashes are
     unaffected. A zero-norm vector (failed-encoder row: every component
     quantizes to 0, hence dot = 0 too) scores 0 everywhere instead of
-    raising DIVIDE_BY_ZERO (Spark 4 ANSI) — the same contract as the
-    numpy paths' nrm[nrm==0]=1 guard (ADVICE r12 #1)."""
+    raising DIVIDE_BY_ZERO (Spark 4 ANSI). cos_div_np and cos_div_sql
+    are the numpy and DuckDB spellings of the same rule."""
     return dot / F.sqrt(F.greatest(norm2_prod, F.lit(1.0)))
+
+
+def cos_div_np(dot, norm2_prod):
+    """cos_div over numpy arrays: dot / sqrt(max(norm2_prod, 1)). The
+    one cosine of every Python kernel — a zero-norm vector scores 0,
+    never NaN."""
+    import numpy as np
+
+    return dot / np.sqrt(np.maximum(norm2_prod, 1.0))
+
+
+def cos_div_sql(dot: str, norm2_prod: str) -> str:
+    """cos_div as a DuckDB expression — the oracle side of the rule."""
+    return f"{dot} / sqrt(GREATEST({norm2_prod}, 1.0))"
 
 
 def gemm_pair_block(tau: float, with_sim: bool = True):
@@ -115,9 +129,7 @@ def gemm_pair_block(tau: float, with_sim: bool = True):
                 if with_sim:
                     parts_s.append(
                         np.round(
-                            dot[keep]
-                            / np.sqrt(n2[gi[keep]] * n2[gj[keep]]),
-                            4,
+                            cos_div_np(dot[keep], n2[gi[keep]] * n2[gj[keep]]), 4
                         )
                     )
         out = {

@@ -1,25 +1,39 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-Baseline: brute-force cosine — blocked pairwise and query-fan-out top-k,
-both as codegen'd higher-order-function plans over int64-quantized
-vectors (functions/vectors.py — exact, order-independent, SIMD-friendly;
-no UDF, no collect). Scale path: an IVF-style probed variant
-(q_sim_topk_ivf) that prunes candidates with broadcast coarse centroids
-before the exact kernel — at 100 TB the brute cross join is O(N·Q); IVF
-cuts the scanned fraction to the probed cells.
+Every top-k query here has one shape — a local top-k per Arrow batch,
+then a small global merge (the REPOSE / incremental top-k pattern,
+PAPERS.md: EDBT 2020 / ICDE 2021, re-derived, not copied) — and each
+step of it is written once:
 
-Patterns follow public top-k similarity-join literature (PAPERS.md:
-EDBT 2020 / ICDE 2021) — re-derived, not copied.
+  _query_block  the bounded query set (every QUERY_STRIDE-th id under
+                QUERY_ID_CAP), collected once and broadcast;
+  _local_topk   the exact per-batch top-k: one lexsort over the
+                queries × rows block, (score desc, neighbor_id asc);
+  _cos_topk     exact int64 GEMM + the shared cosine (cos_div_np) +
+                _local_topk — the kernel of the exact, IVF, LSH and
+                MMR paths;
+  _rank_merge   the global row_number ≤ k merge over query_id;
+  _probe_cells  IVF probe routing (query · centroid, desc, cell asc);
+  _rerank       the exact re-rank tail of the ADC shortlist paths.
+
+Cosine is dot / √max(|a|²·|b|², 1) in every engine (cos_div,
+cos_div_np, cos_div_sql in functions/vectors.py): a zero-norm vector
+scores 0 and is ranked like any other. The ADC shortlist paths keep
+their own tie-oblivious kernel (_adc_local_topk).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from hive_gateway_spark.functions.vectors import (
     DUCK_FLAT_CTE,
     SCALE,
     cos_div,
+    cos_div_np,
+    cos_div_sql,
     dot_q,
     gemm_pair_block,
     norm2_q,
@@ -105,7 +119,7 @@ def _quantized(t) -> DataFrame:
         GROUP BY a.vec_id, b.vec_id
     )
     SELECT d.vec_a, d.vec_b,
-           ROUND(d.dot / sqrt(na.norm2 * nb.norm2), 4) AS cos_sim
+           ROUND({cos_div_sql('d.dot', 'na.norm2 * nb.norm2')}, 4) AS cos_sim
     FROM dots d
     JOIN norms na ON na.vec_id = d.vec_a
     JOIN norms nb ON nb.vec_id = d.vec_b
@@ -149,7 +163,7 @@ def q_sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
         SELECT d.query_id, d.neighbor_id,
-               d.dot / sqrt(nq.norm2 * nb.norm2) AS sim
+               {cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')} AS sim
         FROM dots d
         JOIN norms nq ON nq.vec_id = d.query_id
         JOIN norms nb ON nb.vec_id = d.neighbor_id
@@ -178,12 +192,103 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge (row_number ≤ K over ~K·Q·n_batches candidate rows) yields the
     global answer — same oracle, no cartesian.
 
-    Determinism: dot products are exact int64 (GEMM); sim = dot/sqrt(nq·nb)
-    in IEEE float64 from exact integers — bit-identical to the oracle's
-    expression, so ranks (with neighbor_id tie-break) agree."""
+    Determinism: dot products are exact int64 (GEMM); sim is the
+    shared cosine in IEEE float64 from exact integers — bit-identical
+    to the oracle's expression, so ranks (with neighbor_id tie-break)
+    agree."""
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
-    return _gemm_topk(spark, e, cross_label=False)
+    return _topk_rows(_gemm_topk(spark, e, cross_label=False))
+
+
+#: mapInPandas schema of every cosine kernel's local top-k rows.
+_CAND = "query_id bigint, neighbor_id bigint, sim double"
+
+
+def _is_query(id_col: str = "vec_id") -> Column:
+    """The bounded query block: every QUERY_STRIDE-th id under
+    QUERY_ID_CAP — ≤ MAX_QUERIES rows at any corpus size."""
+    c = F.col(id_col)
+    return (c % QUERY_STRIDE == 0) & (c < QUERY_ID_CAP)
+
+
+def _arrays(rows, *cols: str) -> tuple:
+    """Collected rows → one numpy array per column: float64 for norms
+    and raw embeddings, exact int64 for ids, labels and quantized
+    vectors."""
+    return tuple(
+        np.asarray(
+            [r[c] for r in rows],
+            dtype=np.float64 if c in ("n2", "nq", "embedding") else np.int64,
+        )
+        for c in cols
+    )
+
+
+def _query_block(frame: DataFrame, *cols: str) -> tuple:
+    """The query block's ``cols`` of ``frame`` as numpy arrays — the
+    family's one bounded driver-side collect."""
+    return _arrays(frame.filter(_is_query()).select(*cols).collect(), *cols)
+
+
+def _vecs(pdf: pd.DataFrame, ids="vec_id", v="v", n2="n2") -> tuple:
+    """(ids, X, n2) of one Arrow batch of quantized vectors."""
+    return (
+        pdf[ids].to_numpy(np.int64),
+        np.asarray(pdf[v].tolist(), dtype=np.int64),
+        pdf[n2].to_numpy(np.float64),
+    )
+
+
+def _local_topk(qids, ids, score, keep, k: int, col: str = "sim") -> pd.DataFrame:
+    """The exact per-batch local top-k: for every query row of
+    ``score`` (queries × rows, float64 or exact int64), the first ``k``
+    columns that ``keep`` admits, in (score desc, neighbor_id asc)
+    order — the global merge's order, so the global top-k is a subset
+    of the local ones. ONE lexsort over the whole block (masked
+    columns sort last), no per-query loop. Rows are query-major."""
+    take = min(k, score.shape[1])
+    order = np.lexsort(
+        (np.broadcast_to(ids, score.shape), -score, ~keep), axis=1
+    )[:, :take]
+    kept = np.take_along_axis(keep, order, axis=1)
+    return pd.DataFrame(
+        {
+            "query_id": np.broadcast_to(qids[:, None], order.shape)[kept],
+            "neighbor_id": ids[order][kept],
+            col: np.take_along_axis(score, order, axis=1)[kept],
+        }
+    )
+
+
+def _cos_topk(qids, Q, qn, ids, X, n2, k: int, keep=None) -> pd.DataFrame:
+    """Exact cosine local top-k of queries (qids, Q, qn) against rows
+    (ids, X, n2): exact int64 GEMM, the shared cosine, _local_topk.
+    ``keep`` defaults to every non-self pair."""
+    sim = cos_div_np((Q @ X.T).astype(np.float64), qn[:, None] * n2[None, :])
+    if keep is None:
+        keep = qids[:, None] != ids[None, :]
+    return _local_topk(qids, ids, sim, keep, k)
+
+
+def _rank_merge(cand: DataFrame, score: str, k: int) -> DataFrame:
+    """The global merge of local top-ks: per query_id, rank_k =
+    row_number over (``score`` desc, neighbor_id asc), kept ≤ ``k``.
+    Its input is ~k·Q rows per batch, never Q·N."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return cand.withColumn("rank_k", F.row_number().over(w)).filter(
+        F.col("rank_k") <= k
+    )
+
+
+def _topk_rows(cand: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, rank_k, cos_sim) — the global top-TOP_K
+    of cosine candidates, sim rounded to 4 dp only after ranking."""
+    return _rank_merge(cand, "sim", TOP_K).select(
+        "query_id", "neighbor_id", "rank_k", F.round("sim", 4).alias("cos_sim")
+    )
 
 
 def _gemm_topk(
@@ -192,79 +297,33 @@ def _gemm_topk(
     *,
     cross_label: bool,
     base: DataFrame | None = None,
+    k: int = TOP_K,
 ) -> DataFrame:
-    """The bounded-query GEMM top-k kernel shared by q_sim_topk,
-    q_hard_negatives and q_sim_topk_filtered — every
-    determinism-critical detail (exact int64 GEMM, -inf masking,
-    lexsort (sim desc, neighbor_id asc) tie-break, per-batch local
-    top-k, tiny window merge) lives ONCE here.
+    """Exact cosine candidate stream: the query block of ``e`` is
+    collected and broadcast, and each Arrow batch of ``base`` (default
+    ``e``; a pre-filtered subset for constrained search) emits its
+    local top-``k`` (_cos_topk) as (query_id, neighbor_id, sim) — the
+    caller's _rank_merge of these ~k·Q rows per batch is the exact
+    global top-``k``.
     ``cross_label=False`` masks self-pairs (nearest neighbors);
-    ``cross_label=True`` masks every same-label column including self
-    (hard negatives). ``base`` (default: ``e``) is the candidate
-    frame the batches stream from — a pre-filtered subset for
-    constrained search; queries always come from ``e``."""
-    import numpy as np
-    import pandas as pd
-
+    ``cross_label=True`` masks every same-label column, self included
+    (hard negatives)."""
     cols = ["vec_id", "label", "v", "n2"] if cross_label else ["vec_id", "v", "n2"]
-    q_rows = (
-        e.filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
-        .select(*cols)
-        .collect()  # bounded: ≤ MAX_QUERIES rows by construction
-    )
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    qlab = (
-        np.asarray([r["label"] for r in q_rows], dtype=np.int64)
-        if cross_label
-        else None
-    )
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.int64)
-    qn = np.asarray([r["n2"] for r in q_rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, qlab, Q, qn))
-    k = TOP_K
+    bc = spark.sparkContext.broadcast(_query_block(e, *cols))
 
     def score_batches(batches):
-        qids, qlab, Q, qn = bc.value
+        qids, *qlab, Q, qn = bc.value
         for pdf in batches:
             if len(pdf) == 0 or len(qids) == 0:  # degenerate Arrow batch
                 continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            X = np.asarray(pdf["v"].tolist(), dtype=np.int64)
-            n2 = pdf["n2"].to_numpy(np.float64)
-            sim = (Q @ X.T).astype(np.float64) / np.sqrt(qn[:, None] * n2[None, :])
-            if qlab is None:
-                sim[qids[:, None] == ids[None, :]] = -np.inf  # self-pairs out
-            else:
-                lab = pdf["label"].to_numpy(np.int64)
-                sim[qlab[:, None] == lab[None, :]] = -np.inf  # positives out
-            take = min(k, sim.shape[1])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                # sim desc, neighbor_id asc (lexsort: last key is primary)
-                order = np.lexsort((ids, -sim[qi]))[:take]
-                keep = sim[qi][order] > -np.inf
-                out_q.append(np.full(keep.sum(), qids[qi]))
-                out_n.append(ids[order][keep])
-                out_s.append(sim[qi][order][keep])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
+            ids, X, n2 = _vecs(pdf)
+            keep = None
+            if cross_label:
+                keep = qlab[0][:, None] != pdf["label"].to_numpy(np.int64)[None, :]
+            yield _cos_topk(qids, Q, qn, ids, X, n2, k, keep)
 
-    cand = (base if base is not None else e).select(*cols).mapInPandas(
-        score_batches, "query_id bigint, neighbor_id bigint, sim double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank_k", F.row_number().over(w))
-        .filter(F.col("rank_k") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank_k", F.round("sim", 4).alias("cos_sim"))
+    return (base if base is not None else e).select(*cols).mapInPandas(
+        score_batches, _CAND
     )
 
 
@@ -282,7 +341,7 @@ def _gemm_topk(
     ),
     scored AS (
         SELECT d.query_id, d.neighbor_id,
-               d.dot / sqrt(nq.norm2 * nb.norm2) AS sim
+               {cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')} AS sim
         FROM dots d
         JOIN norms nq ON nq.vec_id = d.query_id
         JOIN norms nb ON nb.vec_id = d.neighbor_id
@@ -304,20 +363,11 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similar enough to be confused, labeled as something else). Same
     machinery as q_sim_topk with the mask inverted: same-label columns
     (which include the self-pair) are excluded inside the kernel, so
-    nothing same-labeled ever leaves an executor.
-
-    Determinism: exact int64 GEMM dots, IEEE float64 sim from exact
-    integers, neighbor_id tie-break — the q_sim_topk discipline.
-
-    Scale shape: identical to q_sim_topk — bounded query block
-    broadcast, base table streams through the mapInPandas GEMM kernel
-    emitting K·Q rows per batch, one tiny window merge. No cartesian,
-    no label shuffle. One shared kernel (_gemm_topk, mask
-    parameterized) serves both queries, so the determinism-critical
-    details can never diverge."""
+    nothing same-labeled ever leaves an executor. No cartesian, no
+    label shuffle."""
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
-    return _gemm_topk(spark, e, cross_label=True)
+    return _topk_rows(_gemm_topk(spark, e, cross_label=True))
 
 
 #: IVF geometry: number of coarse cells, cells probed per query, and the
@@ -407,7 +457,9 @@ def _ivf_build(spark: SparkSession, t, e) -> tuple:
         train_src = train_src.sample(fraction=min(1.0, train_cap / n_vecs), seed=42)
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # L2-normalize in double for the quantizer only (the exact kernel
-    # below stays on the int64-quantized raw vectors).
+    # below stays on the int64-quantized raw vectors). An exactly-zero
+    # norm divides by 1 — the pq_encode guard — instead of raising
+    # DIVIDE_BY_ZERO under ANSI; every other vector is untouched.
     train = (
         train_src.repartition(width)
         .select(
@@ -415,8 +467,9 @@ def _ivf_build(spark: SparkSession, t, e) -> tuple:
             array_to_vector(
                 F.expr(
                     "transform(embedding, x -> CAST(x AS DOUBLE) / "
-                    "sqrt(aggregate(transform(embedding, y -> CAST(y AS DOUBLE) * y), "
-                    "CAST(0 AS DOUBLE), (acc, z) -> acc + z)))"
+                    "coalesce(nullif(sqrt(aggregate(transform(embedding, "
+                    "y -> CAST(y AS DOUBLE) * y), CAST(0 AS DOUBLE), "
+                    "(acc, z) -> acc + z)), 0D), 1D))"
                 )
             ).alias("features"),
         )
@@ -441,7 +494,7 @@ def _assign_cells(e, centers) -> DataFrame:
     maintenance assigns against the existing centroids, it never
     retrains."""
     return (
-        _cell_ranked(e, centers)
+        _cell_ranked(e, centers, "vec_id", "v", "v", "n2")
         .filter(F.col("arank") <= IVF_ASSIGN)
         .select(
             F.col("vec_id").alias("neighbor_id"),
@@ -452,24 +505,39 @@ def _assign_cells(e, centers) -> DataFrame:
     )
 
 
-def _cell_ranked(e, centers) -> DataFrame:
-    """(vec_id, v, n2, cell, cdot, arank) — every vector ranked against
-    every centroid by dot product (broadcast-centroid join + per-vector
-    row_number). The SINGLE implementation of cell assignment:
-    _assign_cells takes arank ≤ IVF_ASSIGN for the inverted file,
-    semantic_dedup takes arank == 1 for its primary cells — one
-    ranking expression, so the two consumers cannot diverge
-    (code-review r12)."""
-    cdot_b = F.expr(
-        "aggregate(zip_with(v, center, (x, y) -> CAST(x AS DOUBLE) * y), "
+def _cell_ranked(frame, centers, key: str, vec: str, *cols: str) -> DataFrame:
+    """(key, *cols, cell, cdot, arank) — every row of ``frame`` ranked
+    against every centroid by the double dot of its quantized ``vec``
+    (broadcast-centroid join + per-key row_number, cdot desc, cell asc).
+    The SINGLE cell-ranking expression: _assign_cells takes arank ≤
+    IVF_ASSIGN for the inverted file, semantic_dedup takes arank == 1,
+    and _probe_cells takes arank ≤ IVF_PROBES for the query probes."""
+    cdot = F.expr(
+        f"aggregate(zip_with({vec}, center, (x, y) -> CAST(x AS DOUBLE) * y), "
         "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
     )
-    wb = W.partitionBy("vec_id").orderBy(F.col("cdot").desc(), F.col("cell").asc())
+    w = W.partitionBy(key).orderBy(F.col("cdot").desc(), F.col("cell").asc())
     return (
-        e.join(F.broadcast(centers))
-        .select("vec_id", "v", "n2", "cell", cdot_b.alias("cdot"))
-        .withColumn("arank", F.row_number().over(wb))
+        frame.join(F.broadcast(centers))
+        .select(key, *cols, "cell", cdot.alias("cdot"))
+        .withColumn("arank", F.row_number().over(w))
     )
+
+
+def _probe_cells(queries: DataFrame, centers: DataFrame, *cols: str) -> dict:
+    """cell → [Row(query_id, *cols)]: each query (quantized ``vq``)
+    routed to its IVF_PROBES nearest cells — a bounded collect of
+    ≤ MAX_QUERIES · IVF_PROBES rows. Probe scores are only a ranking
+    heuristic, so the double centroid dot is fine here."""
+    by_cell: dict[int, list] = {}
+    for r in (
+        _cell_ranked(queries, centers, "query_id", "vq", *cols)
+        .filter(F.col("arank") <= IVF_PROBES)
+        .select("query_id", *cols, "cell")
+        .collect()
+    ):
+        by_cell.setdefault(int(r["cell"]), []).append(r)
+    return by_cell
 
 
 def persist_ivf_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
@@ -697,102 +765,43 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
     centers, inv_file = _ivf_index(spark, t, e)
-    queries = e.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < QUERY_ID_CAP)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("vq"), F.col("n2").alias("nq")
+    probed = _probe_cells(
+        e.filter(_is_query()).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("v").alias("vq"),
+            F.col("n2").alias("nq"),
+        ),
+        centers,
+        "vq",
+        "nq",
     )
-    # Probe scores: query (int64-quantized) · centroid (double) — only
-    # a ranking heuristic, so double math is fine here.
-    cdot = F.expr(
-        "aggregate(zip_with(vq, center, (x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
+    # Per-cell query blocks are broadcast; each Arrow batch of the
+    # inverted file runs the exact kernel per cell against that cell's
+    # probing queries only. IVF's job is pruning which rows the kernel
+    # sees, not re-deriving the arithmetic.
+    bc = spark.sparkContext.broadcast(
+        {c: _arrays(rows, "query_id", "vq", "nq") for c, rows in probed.items()}
     )
-    wq = W.partitionBy("query_id").orderBy(F.col("cdot").desc(), F.col("cell").asc())
-    probed = (
-        queries.join(F.broadcast(centers))
-        .select("query_id", "vq", "nq", "cell", cdot.alias("cdot"))
-        .withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= IVF_PROBES)
-        .select("query_id", "vq", "nq", "cell")
-        .collect()  # bounded: ≤ MAX_QUERIES · IVF_PROBES rows
-    )
-    # Score with the SAME vectorized int64-GEMM kernel the exact path
-    # uses, restricted to probed cells: IVF's job is pruning which rows
-    # the kernel sees, not re-deriving the arithmetic — the earlier
-    # per-row interpreted dot made the "fast path" 4× slower than brute
-    # force at the 100k smoke (SCALE.md). Per-cell query blocks are
-    # broadcast; each Arrow batch of the inverted file group-by's on
-    # cell and GEMMs against that cell's probing queries only, emitting
-    # local top-k per (query, batch).
-    import numpy as np
-    import pandas as pd
-
-    by_cell: dict[int, list] = {}
-    for r in probed:
-        by_cell.setdefault(r["cell"], []).append(r)
-    cell_q = {
-        c: (
-            np.asarray([r["query_id"] for r in rows], dtype=np.int64),
-            np.asarray([r["vq"] for r in rows], dtype=np.int64),
-            np.asarray([r["nq"] for r in rows], dtype=np.float64),
-        )
-        for c, rows in by_cell.items()
-    }
-    bc = spark.sparkContext.broadcast(cell_q)
-    k = TOP_K
 
     def score_cells(batches):
         cq = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             for c, grp in pdf.groupby("cell"):
-                block = cq.get(c)
-                if block is None:
-                    continue
-                qids, Q, qn = block
-                ids = grp["neighbor_id"].to_numpy(np.int64)
-                X = np.asarray(grp["vb"].tolist(), dtype=np.int64)
-                nb = grp["nb"].to_numpy(np.float64)
-                sim = (Q @ X.T).astype(np.float64) / np.sqrt(qn[:, None] * nb[None, :])
-                sim[qids[:, None] == ids[None, :]] = -np.inf
-                take = min(k, sim.shape[1])
-                out_q, out_n, out_s = [], [], []
-                for qi in range(len(qids)):
-                    order = np.lexsort((ids, -sim[qi]))[:take]
-                    keep = sim[qi][order] > -np.inf
-                    out_q.append(np.full(int(keep.sum()), qids[qi]))
-                    out_n.append(ids[order][keep])
-                    out_s.append(sim[qi][order][keep])
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
+                if c in cq:
+                    yield _cos_topk(*cq[c], *_vecs(grp, "neighbor_id", "vb", "nb"), TOP_K)
 
     # Restrict the inverted-file scan to the probed cells BEFORE the
     # kernel: on a persisted index (partition_by=["cell"]) this is hive
     # partition pruning — ≈ assign·probes/cells of the files opened —
     # and on the session-checkpointed build it is a cheap row filter.
-    probed_cells = sorted({r["cell"] for r in probed})
     cand = (
-        inv_file.where(F.col("cell").isin(probed_cells))
+        inv_file.where(F.col("cell").isin(sorted(probed)))
         .select("neighbor_id", "cell", "vb", "nb")
-        .mapInPandas(score_cells, "query_id bigint, neighbor_id bigint, sim double")
+        .mapInPandas(score_cells, _CAND)
     )
     # multi-assignment: the same (query, neighbor) can meet in up to
-    # min(assign, probes) cells with identical sim — dedup the K·Q·batch
-    # candidate stream before the final rank merge
-    scored = cand.dropDuplicates(["query_id", "neighbor_id"])
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank_k", F.row_number().over(w))
-        .filter(F.col("rank_k") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank_k", F.round("sim", 4).alias("cos_sim"))
-    )
+    # min(assign, probes) cells with identical sim
+    return _topk_rows(cand.dropDuplicates(["query_id", "neighbor_id"]))
 
 
 @query(
@@ -843,6 +852,21 @@ def _lsh_planes(dim: int = 64):
             signs.append(1 if (s >> 32) & 1 else -1)
         out.append((p // LSH_BITS, p % LSH_BITS, signs))
     return out
+
+
+def _lsh_signs():
+    """The plane sign matrix (LSH_TABLES·LSH_BITS, dim) in (tbl, bit)
+    row order."""
+    return np.asarray([signs for _tbl, _bit, signs in _lsh_planes()], dtype=np.int64)
+
+
+def _lsh_pack(X, S):
+    """(n, LSH_TABLES) bucket ids of quantized vectors X: the sign bits
+    of the exact int64 projections X @ S.T (≥ 0 → 1), bit j of a table
+    weighing 2^j — bit-identical to the oracle's proj/buckets CTEs."""
+    bits = (X @ S.T) >= 0
+    weights = 1 << np.arange(LSH_BITS, dtype=np.int64)
+    return (bits.reshape(len(X), LSH_TABLES, LSH_BITS) * weights).sum(axis=2)
 
 
 #: DuckDB VALUES literal of the LSH sign matrix — generated at import
@@ -913,16 +937,8 @@ def _lsh_topk_oracle() -> str:
         GROUP BY c.query_id, c.neighbor_id
     ),
     scored AS (
-        -- plain sqrt, NO zero-norm clamp: the mapInPandas kernel
-        -- divides unclamped (a zero-norm candidate NaNs and is
-        -- dropped), and q_sim_topk's proven oracle is also unclamped —
-        -- adding GREATEST here would create a latent divergence where
-        -- the oracle scores a zero vector 0 while the engine drops it
-        -- (code-review r14; fixture min norm2 ≈ 1e12, so the case is
-        -- unreachable today and the shapes must simply MATCH)
         SELECT d.query_id, d.neighbor_id,
-               CAST(d.dot AS DOUBLE)
-                 / sqrt(na.norm2 * nb.norm2) AS sim
+               {cos_div_sql('CAST(d.dot AS DOUBLE)', 'na.norm2 * nb.norm2')} AS sim
         FROM dots d
         JOIN norms na ON na.vec_id = d.query_id
         JOIN norms nb ON nb.vec_id = d.neighbor_id
@@ -951,129 +967,54 @@ def q_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≈ L·N/2^B / N = L/2^B per table geometry.
 
     Scale shape: ONE fused mapInPandas pass over the corpus — each
-    Arrow batch is sign-packed (X @ S.T int64 GEMM) and scored per
-    (table, bucket) group against the broadcast query index (built
-    driver-side from the bounded ≤ MAX_QUERIES block, same contract as
-    q_sim_topk), emitting local top-k. The only shuffles are the tiny
-    candidate dedup + rank merge over K·Q·batch rows. No KMeans fit —
-    bucketing is stateless, so this variant also works streaming (hash
-    on ingest).
+    Arrow batch is sign-packed (_lsh_pack, one int64 GEMM) and run
+    through _cos_topk per (table, bucket) group against the broadcast
+    query index. The only shuffles are the tiny candidate dedup + rank
+    merge. No KMeans fit — bucketing is stateless, so this variant
+    also works streaming (hash on ingest).
 
     Exact-oracled since r14 (ex rows-only): the candidate set is the
-    shared _lsh_buckets_cte chain and the scoring is q_sim_topk's
-    hash-proven exact-dot shape, so the full ANN result — not just the
-    recall property — is driver-hash-verified."""
-    import numpy as np
-    import pandas as pd
-
+    shared _lsh_buckets_cte chain, so the full ANN result — not just
+    the recall property — is driver-hash-verified."""
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
-    # All 128 plane projections per vector in ONE numpy int64 GEMM
-    # (X @ S.T, exact — quantized ints × ±1 signs), then pack sign bits
-    # into per-table buckets; the earlier per-(vector, plane) interpreted
-    # zip_with was 12.8M higher-order evaluations at the 100k smoke and
-    # made the "scale path" slower than brute force. Bucket values are
-    # bit-identical to the expression version (same signs, same bits).
-    # The plane matrix is 128×64 int8-sized — broadcast. mapInPandas
-    # keeps this ingest-compatible (stateless, streaming-safe).
-    S = np.asarray(
-        [signs for _tbl, _bit, signs in _lsh_planes()], dtype=np.int64
-    )  # (TABLES·BITS, dim) in (tbl, bit) row order
-    n_tables, n_bits = LSH_TABLES, LSH_BITS
-    weights = 1 << np.arange(n_bits, dtype=np.int64)  # bit j → 2^j
-
-    def pack_buckets(X: "np.ndarray") -> "np.ndarray":
-        bits = (X @ S.T) >= 0  # exact int64 Rademacher signs
-        return (bits.reshape(len(X), n_tables, n_bits) * weights[None, None, :]).sum(
-            axis=2
-        )
-
-    # Query side: bounded block (≤ MAX_QUERIES), bucketed driver-side
-    # with the same pack — a 256×128 GEMM, trivially cheap.
-    q_rows = (
-        e.filter((F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < QUERY_ID_CAP))
-        .select("vec_id", "v", "n2")
-        .collect()
-    )
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Qm = np.asarray([r["v"] for r in q_rows], dtype=np.int64)
-    qn = np.asarray([r["n2"] for r in q_rows], dtype=np.float64)
-    qb = pack_buckets(Qm) if len(q_rows) else np.empty((0, n_tables), np.int64)
-    cells: dict[tuple[int, int], list[int]] = {}
-    for qi in range(len(qids)):
-        for tbl in range(n_tables):
-            cells.setdefault((tbl, int(qb[qi, tbl])), []).append(qi)
-    cell_q = {
-        key: (qids[idx], Qm[idx], qn[idx]) for key, idx in ((k, np.asarray(v)) for k, v in cells.items())
-    }
+    S = _lsh_signs()
+    # Query side: the bounded block, bucketed driver-side with the same
+    # pack, indexed by (table, bucket).
+    qids, Q, qn = _query_block(e, "vec_id", "v", "n2")
+    qb = _lsh_pack(Q, S) if len(qids) else np.empty((0, LSH_TABLES), np.int64)
+    cell_q = {}
+    for tbl in range(LSH_TABLES):
+        for b in np.unique(qb[:, tbl]):
+            ix = np.flatnonzero(qb[:, tbl] == b)
+            cell_q[(tbl, int(b))] = (qids[ix], Q[ix], qn[ix])
     bc = spark.sparkContext.broadcast((S, cell_q))
-    k = TOP_K
 
-    # One fused kernel pass over the corpus: bucket each Arrow batch
-    # (X @ S.T sign-pack), then per (table, bucket) group present in the
-    # query index run the exact int64 GEMM against just that bucket's
-    # probing queries and emit local top-k. No exploded 16×N bucket
-    # stream, no join — the only shuffles left are the tiny candidate
-    # dedup + rank merge. (The earlier broadcast-join form evaluated
-    # ~6M interpreted dots at the 100k smoke and ran slower than brute
-    # force; the kernel scores the same candidates vectorized.)
+    # One fused kernel pass over the corpus: bucket each Arrow batch,
+    # then run the exact kernel per (table, bucket) group present in the
+    # query index against just that bucket's probing queries. No
+    # exploded 16×N bucket stream, no join.
     def score_kernel(batches):
         S_, cq = bc.value
         for pdf in batches:
             if len(pdf) == 0 or not cq:
                 continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            X = np.asarray(pdf["v"].tolist(), dtype=np.int64)
-            n2 = pdf["n2"].to_numpy(np.float64)
-            bits = (X @ S_.T) >= 0
-            buckets = (
-                bits.reshape(len(X), n_tables, n_bits) * weights[None, None, :]
-            ).sum(axis=2)
-            out_q, out_n, out_s = [], [], []
-            for tbl in range(n_tables):
-                b = buckets[:, tbl]
-                order = np.argsort(b, kind="stable")
-                bs = b[order]
-                starts = np.flatnonzero(np.r_[True, bs[1:] != bs[:-1]])
-                ends = np.r_[starts[1:], len(bs)]
-                for si, ei in zip(starts, ends):
-                    blk = cq.get((tbl, int(bs[si])))
-                    if blk is None:
-                        continue
-                    rows = order[si:ei]
-                    bqids, bQ, bqn = blk
-                    rid = ids[rows]
-                    sim = (bQ @ X[rows].T).astype(np.float64) / np.sqrt(
-                        bqn[:, None] * n2[rows][None, :]
-                    )
-                    sim[bqids[:, None] == rid[None, :]] = -np.inf
-                    take = min(k, sim.shape[1])
-                    for qi in range(len(bqids)):
-                        o = np.lexsort((rid, -sim[qi]))[:take]
-                        keep = sim[qi][o] > -np.inf
-                        out_q.append(np.full(int(keep.sum()), bqids[qi]))
-                        out_n.append(rid[o][keep])
-                        out_s.append(sim[qi][o][keep])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
+            ids, X, n2 = _vecs(pdf)
+            buckets = _lsh_pack(X, S_)
+            out = []
+            for tbl in range(LSH_TABLES):
+                order = np.argsort(buckets[:, tbl], kind="stable")
+                bs = buckets[order, tbl]
+                for rows in np.split(order, np.flatnonzero(bs[1:] != bs[:-1]) + 1):
+                    blk = cq.get((tbl, int(buckets[rows[0], tbl])))
+                    if blk is not None:
+                        out.append(_cos_topk(*blk, ids[rows], X[rows], n2[rows], TOP_K))
+            if out:
+                yield pd.concat(out, ignore_index=True)
 
-    cand = e.select("vec_id", "v", "n2").mapInPandas(
-        score_kernel, "query_id bigint, neighbor_id bigint, sim double"
-    )
+    cand = e.select("vec_id", "v", "n2").mapInPandas(score_kernel, _CAND)
     # the same pair meets in up to LSH_TABLES tables with identical sim
-    scored = cand.dropDuplicates(["query_id", "neighbor_id"])
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank_k", F.row_number().over(w))
-        .filter(F.col("rank_k") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank_k", F.round("sim", 4).alias("cos_sim"))
-    )
+    return _topk_rows(cand.dropDuplicates(["query_id", "neighbor_id"]))
 
 
 @query(
@@ -1101,32 +1042,22 @@ def q_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer dots, threshold at 0); candidates come from an equi-join
     on (table, bucket), never all-pairs; the query block is the
     bounded ≤ {MAX_QUERIES} contract."""
-    import numpy as np
-    import pandas as pd
-
     t = load_tables(spark, sf_dir)
     e = _quantized(t)
-    S = np.asarray(
-        [signs for _tbl, _bit, signs in _lsh_planes()], dtype=np.int64
-    )
-    n_tables, n_bits = LSH_TABLES, LSH_BITS
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
+    S = _lsh_signs()
 
     def bucketize(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.asarray([np.asarray(x) for x in pdf["v"]], dtype=np.int64)
-            bits = (X @ S.T) >= 0
-            bk = (
-                bits.reshape(len(X), n_tables, n_bits) * weights[None, None, :]
-            ).sum(axis=2)
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(ids, n_tables),
-                    "tbl": np.tile(np.arange(n_tables, dtype=np.int64), len(X)),
-                    "bucket": bk.reshape(-1),
+                    "vec_id": np.repeat(ids, LSH_TABLES),
+                    "tbl": np.tile(np.arange(LSH_TABLES, dtype=np.int64), len(ids)),
+                    "bucket": _lsh_pack(
+                        np.asarray(pdf["v"].tolist(), dtype=np.int64), S
+                    ).reshape(-1),
                 }
             )
 
@@ -1139,9 +1070,7 @@ def q_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "ann.buckets",
     )
-    q = buckets.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < QUERY_ID_CAP)
-    ).select(
+    q = buckets.filter(_is_query()).select(
         F.col("vec_id").alias("query_id"), "tbl", "bucket"
     )
     return (
@@ -1249,7 +1178,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     pairs AS (
         SELECT d.vec_a, d.vec_b,
-               ROUND(d.dot / sqrt(na.norm2 * nb.norm2), 4) AS cos_sim
+               ROUND({cos_div_sql('d.dot', 'na.norm2 * nb.norm2')}, 4) AS cos_sim
         FROM dots d
         JOIN norms na ON na.vec_id = d.vec_a
         JOIN norms nb ON nb.vec_id = d.vec_b
@@ -1387,7 +1316,7 @@ def semantic_dedup(
     e = _quantized(t).withColumn("n2", norm2_q("v"))
     centers, _ = _ivf_index(spark, t, e)
     assigned = stage(
-        _cell_ranked(e, centers)
+        _cell_ranked(e, centers, "vec_id", "v", "v", "n2")
         .filter(F.col("arank") == 1)
         # centroid cosine UP TO the per-cell constant |center|: the
         # keep rule only ORDERS within one cell's duplicate sets, so
@@ -1475,8 +1404,6 @@ def _pq_codebooks(spark: SparkSession, t):
 
 
 def _pq_train(emb: DataFrame):
-    import numpy as np
-
     n_vecs = emb.count()
     cap = 10_000
     src = emb
@@ -1535,9 +1462,6 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_encode_build(spark: SparkSession, t) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     emb = t["embeddings"]
     books = _pq_codebooks(spark, t)
     bc = spark.sparkContext.broadcast(books)
@@ -1580,36 +1504,10 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     the rerank path (k = PQ_RERANK_R): per Arrow batch of codes, each
     query keeps its local top-k by ADC score; the caller applies the
     tiny global window merge."""
-    import numpy as np
-    import pandas as pd
-
     t = load_tables(spark, sf_dir)
     books = _pq_codebooks(spark, t)
-    q_rows = (
-        t["embeddings"]
-        .filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded: ≤ MAX_QUERIES rows by construction
-    )
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r["embedding"] for r in q_rows], dtype=np.float64)
-    nrm = np.linalg.norm(Q, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0  # zero-norm guard, same as _pq_codebooks/pq_encode:
-    # a zero embedding must score 0 everywhere, not NaN the whole query out
-    Q /= nrm
-    dsub = books.shape[2]
-    # per-query ADC tables: dot(query_sub, centroid) per (m, k) —
-    # approximate cosine = sum_m table[m, code_m] on unit vectors.
-    # float32: table entries are O(1) and ADC sums 8 of them — a
-    # ranking heuristic, not the served similarity — and halving the
-    # gather traffic matters (see _adc_accumulate).
-    tables = np.einsum(
-        "qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, dsub), books
-    ).astype(np.float32)
-    bc = spark.sparkContext.broadcast((qids, tables))
+    qids, Q = _query_block(t["embeddings"], "vec_id", "embedding")
+    bc = spark.sparkContext.broadcast((qids, _adc_tables(Q, books)))
 
     def score(batches):
         qids, tables = bc.value
@@ -1618,26 +1516,40 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy(np.int64)
             codes = np.asarray(pdf["codes"].tolist(), dtype=np.int64)
-            sim = _adc_accumulate(tables, codes)
-            sim[qids[:, None] == ids[None, :]] = -np.inf  # self-pairs out
-            yield _adc_local_topk(qids, ids, sim, k)
+            yield _adc_local_topk(qids, ids, _adc_accumulate(tables, codes), k)
 
     return pq_encode(spark, sf_dir).mapInPandas(
         score, "query_id bigint, neighbor_id bigint, adc_sim double"
     )
 
 
-def _adc_accumulate(tables, codes):
-    """sim (nq, rows) = Σ_m tables[:, m, codes[:, m]] — the ADC inner
-    loop, swept in ROW CHUNKS so each per-m gather output is a few MB
-    (cache-resident) instead of an (nq × rows) float64 re-traversed
-    PQ_M times from DRAM (the r13 1M profile charged ~10 GB of memory
-    traffic per batch to the unchunked form)."""
-    import numpy as np
+def _adc_tables(Q, books):
+    """Per-query ADC lookup tables (q, m, k) from raw float query
+    embeddings: L2-normalize (zero-norm guard, as in pq_encode — a
+    zero embedding scores 0 everywhere, not NaN), then dot each
+    subvector with every centroid of its subspace; approximate cosine
+    = sum_m table[m, code_m]. float32: table entries are O(1) and ADC
+    sums 8 of them — a ranking heuristic, not the served similarity —
+    and halving the gather traffic matters (see _adc_accumulate)."""
+    nrm = np.linalg.norm(Q, axis=1, keepdims=True)
+    nrm[nrm == 0] = 1.0
+    Q = Q / nrm
+    return np.einsum(
+        "qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, books.shape[2]), books
+    ).astype(np.float32)
 
+
+def _adc_accumulate(tables, codes):
+    """sim (nq, rows) = Σ_m tables[:, m, codes[:, m]] in the tables'
+    dtype (float32 for learned codebooks, exact int64 for the seeded
+    oracle codebook) — the ADC inner loop, swept in ROW CHUNKS so each
+    per-m gather output is a few MB (cache-resident) instead of an
+    (nq × rows) matrix re-traversed PQ_M times from DRAM (the r13 1M
+    profile charged ~10 GB of memory traffic per batch to the
+    unchunked form)."""
     nq, rows = tables.shape[0], codes.shape[0]
-    sim = np.empty((nq, rows), dtype=np.float32)
-    step = max(1, (4 << 20) // max(nq * 4, 1))  # ~4 MB per gather slab
+    sim = np.empty((nq, rows), dtype=tables.dtype)
+    step = max(1, (4 << 20) // max(nq * tables.itemsize, 1))  # ~4 MB slabs
     for lo in range(0, rows, step):
         hi = min(lo + step, rows)
         acc = tables[:, 0, :][:, codes[lo:hi, 0]]
@@ -1648,16 +1560,14 @@ def _adc_accumulate(tables, codes):
 
 
 def _adc_local_topk(qids, ids, sim, k):
-    """Per-batch local top-k over the ADC scores, vectorized: ONE
-    argpartition across all queries selects the candidate columns,
-    then a tiny in-candidate lexsort (sim desc, id asc) orders them.
-    Boundary ties (exactly equal ADC sums at the k-th place) may admit
-    either member — acceptable for a shortlist the exact kernel
-    re-ranks (and the plain ADC query's row count stays k per query
-    regardless)."""
-    import numpy as np
-    import pandas as pd
-
+    """Per-batch local top-k over the ADC scores, self-pairs out,
+    vectorized: ONE argpartition across all queries selects the
+    candidate columns, then a tiny in-candidate lexsort (sim desc, id
+    asc) orders them. Boundary ties (exactly equal ADC sums at the
+    k-th place) may admit either member — acceptable for a shortlist
+    the exact kernel re-ranks (and the plain ADC query's row count
+    stays k per query regardless)."""
+    sim[qids[:, None] == ids[None, :]] = -np.inf
     nq, rows = sim.shape
     take = min(k, rows)
     if take < rows:
@@ -1691,10 +1601,7 @@ def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per query: one (PQ_M × PQ_K) table of subspace dot products
     against the query, then each code row scores as PQ_M table
-    lookups summed — no full-dim arithmetic against the corpus. The
-    query block is the standard bounded dimension (QUERY_STRIDE /
-    QUERY_ID_CAP); scoring runs in Arrow batches with a per-batch
-    local top-k and the same tiny window merge as q_sim_topk.
+    lookups summed — no full-dim arithmetic against the corpus.
 
     Rows-only by declared design (learned codebooks); recall vs the
     exact cosine top-k is pinned in tests/test_similarity.py, with
@@ -1705,14 +1612,8 @@ def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     them at any practical m; route with IVF cells + the exact int64
     kernel by default and compose PQ inside cells only when RAM
     forces it."""
-    scored = _pq_adc_scored(spark, sf_dir, TOP_K)
-    wk = W.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("adc_sim", 6).alias("adc_sim"))
+    return _rank_merge(_pq_adc_scored(spark, sf_dir, TOP_K), "adc_sim", TOP_K).select(
+        "query_id", "neighbor_id", F.round("adc_sim", 6).alias("adc_sim")
     )
 
 
@@ -1732,51 +1633,43 @@ def q_sim_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     while still never running full-dim arithmetic against the corpus
     — the exact pass touches Q·R rows, not N.
 
-    Exact rescoring arithmetic is IDENTICAL to q_sim_topk's (vec_q
-    int64 dot, float64 sqrt division), so where the shortlist
-    contains the true neighbors the output rows match the exact
-    kernel bit for bit. Recall vs q_sim_topk pinned in
-    tests/test_similarity.py at ≥ the plain-ADC floor."""
+    Where the shortlist contains the true neighbors, the re-ranked
+    rows (_rerank) match the exact kernel bit for bit. Recall vs
+    q_sim_topk pinned in tests/test_similarity.py at ≥ the plain-ADC
+    floor."""
     t = load_tables(spark, sf_dir)
     shortlist = _pq_adc_scored(spark, sf_dir, PQ_RERANK_R)
-    wr = W.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        shortlist.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= PQ_RERANK_R)
-        .select("query_id", "neighbor_id")
-    )
     e = _quantized(t).withColumn("n2", norm2_q("v"))
+    return _rerank(e, shortlist, PQ_RERANK_R)
+
+
+def _rerank(e: DataFrame, cand: DataFrame, r: int) -> DataFrame:
+    """The exact re-rank tail of the ADC shortlist paths: cut each
+    query's ADC candidates to its top-``r`` (adc_sim), re-score only
+    those rows with the exact int64 cosine (dot_q, cos_div — the
+    q_sim_topk arithmetic) and keep the top-TOP_K as (query_id,
+    neighbor_id, sim). The probe (shortlist ⋈ query vectors,
+    ≤ MAX_QUERIES·r rows) BROADCASTS; the corpus-sized side streams
+    map-side with no exchange — the small side is always the build
+    side (code-review r12)."""
+    shortlist = _rank_merge(cand, "adc_sim", r).select("query_id", "neighbor_id")
     qv = e.select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
         F.col("n2").alias("qn2"),
-    ).filter(
-        (F.col("q_id") % QUERY_STRIDE == 0) & (F.col("q_id") < QUERY_ID_CAP)
-    )
+    ).filter(_is_query("q_id"))
     nv = e.select(
         F.col("vec_id").alias("n_id"),
         F.col("v").alias("nv"),
         F.col("n2").alias("nn2"),
     )
     sim = cos_div(dot_q("qv", "nv"), F.col("qn2") * F.col("nn2"))
-    # The probe (shortlist ⋈ query vectors, ≤ MAX_QUERIES·R rows ≈ a few
-    # MB) BROADCASTS; the corpus-sized nv streams map-side with no
-    # exchange — the small side must always be the build side
-    # (code-review r12: the first spelling hinted shuffle_hash on nv,
-    # hashing the whole corpus to answer a 13k-row probe).
-    probe = cand.join(F.broadcast(qv), F.col("q_id") == F.col("query_id"))
+    probe = shortlist.join(F.broadcast(qv), F.col("q_id") == F.col("query_id"))
     rescored = nv.join(
         F.broadcast(probe), F.col("n_id") == F.col("neighbor_id")
     ).select("query_id", "neighbor_id", sim.alias("sim"))
-    wk = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("sim"))
+    return _rank_merge(rescored, "sim", TOP_K).select(
+        "query_id", "neighbor_id", F.round("sim", 6).alias("sim")
     )
 
 
@@ -1901,34 +1794,11 @@ def q_pq_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     is scanned as PQ_M-byte codes with per-batch local top-k, and the
     only exchange is the tiny K·Q window merge. The query block is the
     bounded ≤ {MAX_QUERIES} contract."""
-    import numpy as np
-    import pandas as pd
-
     t = load_tables(spark, sf_dir)
     e = _quantized(t)
-    dsub = 64 // PQ_M
-    C = np.asarray(
-        [vals for _m, _c, vals in _pq_oracle_books()], dtype=np.int64
-    ).reshape(PQ_M, PQO_K, dsub)
-    c2 = np.einsum("mkd,mkd->mk", C, C)  # (m, k) |c|², exact int64
-
-    q_rows = (
-        e.filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
-        .select("vec_id", "v")
-        .collect()  # bounded: ≤ MAX_QUERIES rows by construction
-    )
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.int64)
-    # per-query integer ADC tables: T[q, m, c] = q_sub · centroid
-    tables = (
-        np.einsum("qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, dsub), C)
-        if len(Q)
-        else np.zeros((0, PQ_M, PQO_K), dtype=np.int64)
-    )
-    bc = spark.sparkContext.broadcast((qids, tables))
+    C, c2 = _pqo_books()
+    qids, Q = _query_block(e, "vec_id", "v")
+    bc = spark.sparkContext.broadcast((qids, _pqo_tables(Q, C)))
 
     def score(batches):
         qids, tables = bc.value
@@ -1936,54 +1806,47 @@ def q_pq_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0 or len(qids) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy(np.int64)
-            X = np.asarray(pdf["v"].tolist(), dtype=np.int64).reshape(
-                len(pdf), PQ_M, dsub
-            )
-            # encode: argmin_c (−2·s·c + |c|²) per subspace, exact int64;
-            # np.argmin ties to the lowest index = the oracle's (d, c) order
-            codes = np.empty((len(pdf), PQ_M), dtype=np.int64)
-            for m in range(PQ_M):
-                d = -2 * (X[:, m, :] @ C[m].T) + c2[m][None, :]
-                codes[:, m] = d.argmin(1)
-            # ADC: integer table sums — same gather loop as _adc_accumulate
-            acc = tables[:, 0, :][:, codes[:, 0]]
-            for m in range(1, PQ_M):
-                acc = acc + tables[:, m, :][:, codes[:, m]]
-            # exact integer scores (≪ 2⁵³) — unlike the float ADC path,
-            # boundary ties are REAL here, so the local top-k must break
-            # them exactly as the oracle does (score desc, id asc):
-            # a full per-query lexsort, not _adc_local_topk's
-            # tie-oblivious argpartition. Bounded: nq ≤ MAX_QUERIES
-            # lexsorts over one Arrow batch each.
-            self_mask = qids[:, None] == ids[None, :]
-            take = min(TOP_K, acc.shape[1])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                row = acc[qi]
-                o = np.lexsort((ids, -row))
-                o = o[~self_mask[qi][o]][:take]
-                out_q.append(np.full(len(o), qids[qi], dtype=np.int64))
-                out_n.append(ids[o])
-                out_s.append(row[o])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc_score": np.concatenate(out_s),
-                }
-            )
+            codes = _pqo_codes(np.asarray(pdf["v"].tolist(), dtype=np.int64), C, c2)
+            # exact integer scores (≪ 2⁵³): boundary ties are REAL here,
+            # so the local top-k breaks them exactly as the oracle does
+            # (_local_topk), not with _adc_local_topk's argpartition
+            acc = _adc_accumulate(tables, codes)
+            keep = qids[:, None] != ids[None, :]
+            yield _local_topk(qids, ids, acc, keep, TOP_K, "adc_score")
 
     scored = e.select("vec_id", "v").mapInPandas(
         score, "query_id bigint, neighbor_id bigint, adc_score bigint"
     )
-    wk = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
+    return _rank_merge(scored, "adc_score", TOP_K).select(
+        "query_id", "neighbor_id", "adc_score"
     )
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_score")
-    )
+
+
+def _pqo_books() -> tuple:
+    """(C, c2): the seeded oracle codebook as a (PQ_M, PQO_K, dsub)
+    int64 array and its exact squared centroid norms (PQ_M, PQO_K)."""
+    C = np.asarray(
+        [vals for _m, _c, vals in _pq_oracle_books()], dtype=np.int64
+    ).reshape(PQ_M, PQO_K, -1)
+    return C, np.einsum("mkd,mkd->mk", C, C)
+
+
+def _pqo_tables(Q, C):
+    """Per-query integer ADC tables T[q, m, c] = q_sub · centroid."""
+    if len(Q) == 0:
+        return np.zeros((0, PQ_M, PQO_K), dtype=np.int64)
+    return np.einsum("qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, C.shape[2]), C)
+
+
+def _pqo_codes(X, C, c2):
+    """(n, PQ_M) codes of quantized vectors X against the seeded
+    codebook: argmin_c (−2·s·c + |c|²) per subspace, exact int64;
+    np.argmin ties to the lowest index = the oracles' (d, c) order."""
+    Xs = X.reshape(len(X), PQ_M, C.shape[2])
+    codes = np.empty((len(X), PQ_M), dtype=np.int64)
+    for m in range(PQ_M):
+        codes[:, m] = (-2 * (Xs[:, m, :] @ C[m].T) + c2[m][None, :]).argmin(1)
+    return codes
 
 
 # ---------------------------------------------------------------------------
@@ -2134,47 +1997,22 @@ def q_ivfpq_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, lookups after), only probed-cell rows are scored (on the
     persisted index this is hive partition pruning), local per-batch
     top-k, and the only exchange is the tiny K·Q window merge."""
-    import numpy as np
-    import pandas as pd
-
     t = load_tables(spark, sf_dir)
     e = _quantized(t)
-    dsub = 64 // PQ_M
-    C = np.asarray(
-        [vals for _m, _c, vals in _pq_oracle_books()], dtype=np.int64
-    ).reshape(PQ_M, PQO_K, dsub)
-    c2 = np.einsum("mkd,mkd->mk", C, C)
+    C, c2 = _pqo_books()
     CI = np.asarray(
         [vals for _cell, vals in _ivf_oracle_centers()], dtype=np.int64
     )  # (cells, 64)
-
-    q_rows = (
-        e.filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
-        .select("vec_id", "v")
-        .collect()  # bounded: ≤ MAX_QUERIES rows by construction
-    )
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.int64)
+    qids, Q = _query_block(e, "vec_id", "v")
     if len(Q) == 0:
         Q = np.zeros((0, 64), dtype=np.int64)
     # probe selection: top-P cells by exact coarse dot (desc, cell asc)
     qdots = Q @ CI.T  # (q, cells) int64, ≤ 6.4e13
-    cell_q: dict[int, list] = {}
-    for qi in range(len(qids)):
-        order = np.lexsort((np.arange(IVFO_CELLS), -qdots[qi]))
-        for cell in order[:IVFO_PROBES]:
-            cell_q.setdefault(int(cell), []).append(qi)
-    tables = (
-        np.einsum("qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, dsub), C)
-        if len(Q)
-        else np.zeros((0, PQ_M, PQO_K), dtype=np.int64)
-    )
-    bc = spark.sparkContext.broadcast(
-        (qids, tables, {c: np.asarray(ix) for c, ix in cell_q.items()})
-    )
+    probes = np.lexsort(
+        (np.broadcast_to(np.arange(IVFO_CELLS), qdots.shape), -qdots), axis=1
+    )[:, :IVFO_PROBES]
+    cell_q = {int(c): np.flatnonzero((probes == c).any(1)) for c in np.unique(probes)}
+    bc = spark.sparkContext.broadcast((qids, _pqo_tables(Q, C), cell_q))
 
     def score(batches):
         qids, tables, cellmap = bc.value
@@ -2186,51 +2024,22 @@ def q_ivfpq_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             # coarse assignment: argmax int64 dot, np.argmax ties to
             # the lowest index = the oracle's (dot DESC, cell ASC)
             cells = (X @ CI.T).argmax(1)
-            Xs = X.reshape(len(pdf), PQ_M, dsub)
-            codes = np.empty((len(pdf), PQ_M), dtype=np.int64)
-            for m in range(PQ_M):
-                d = -2 * (Xs[:, m, :] @ C[m].T) + c2[m][None, :]
-                codes[:, m] = d.argmin(1)
+            codes = _pqo_codes(X, C, c2)
             for cell in np.unique(cells):
                 qix = cellmap.get(int(cell))
                 if qix is None:
                     continue
                 mask = cells == cell
-                cids = ids[mask]
-                ccodes = codes[mask]
-                sub_q = qids[qix]
-                acc = tables[qix, 0, :][:, ccodes[:, 0]]
-                for m in range(1, PQ_M):
-                    acc = acc + tables[qix, m, :][:, ccodes[:, m]]
-                self_mask = sub_q[:, None] == cids[None, :]
-                take = min(TOP_K, acc.shape[1])
-                out_q, out_n, out_s = [], [], []
-                for qi in range(len(sub_q)):
-                    row = acc[qi]
-                    o = np.lexsort((cids, -row))
-                    o = o[~self_mask[qi][o]][:take]
-                    out_q.append(np.full(len(o), sub_q[qi], dtype=np.int64))
-                    out_n.append(cids[o])
-                    out_s.append(row[o])
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.concatenate(out_q),
-                            "neighbor_id": np.concatenate(out_n),
-                            "adc_score": np.concatenate(out_s),
-                        }
-                    )
+                cids, sub_q = ids[mask], qids[qix]
+                acc = _adc_accumulate(tables[qix], codes[mask])
+                keep = sub_q[:, None] != cids[None, :]
+                yield _local_topk(sub_q, cids, acc, keep, TOP_K, "adc_score")
 
     scored = e.select("vec_id", "v").mapInPandas(
         score, "query_id bigint, neighbor_id bigint, adc_score bigint"
     )
-    wk = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_score")
+    return _rank_merge(scored, "adc_score", TOP_K).select(
+        "query_id", "neighbor_id", "adc_score"
     )
 
 
@@ -2305,106 +2114,63 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — at a billion vectors that is the only shape whose scan fits
     both RAM and latency budgets.
 
-    Plan: cell probing reuses q_sim_topk_ivf's exact arithmetic and
-    tie-break (quantized query · centroid, desc, cell asc — bounded
-    collect); the probed cells' code blocks stream through ONE
-    mapInPandas with per-cell query ADC tables broadcast (table
-    lookups + sums, no full-dim math); multi-assignment duplicates
-    drop exactly as the IVF path does; the ≤ Q·R shortlist broadcasts
-    against the corpus for the exact re-rank (map-side, no exchange on
-    the big side — the q_sim_topk_pq_rerank tail). On the persisted
+    Plan: cell probing is _probe_cells; the probed cells' code blocks
+    stream through ONE mapInPandas with per-cell query ADC tables
+    broadcast (table lookups + sums, no full-dim math);
+    multi-assignment duplicates drop as in the IVF path; the ≤ Q·R
+    shortlist goes through _rerank. On the persisted
     lakehouse index the cell filter is hive partition pruning: a probe
     opens ≈ probes/cells of the code files and nothing else.
 
     Rows-only by declared design (learned KMeans cells + seeded-Lloyd
     codebooks); recall vs the exact top-k and bit-identity of
     overlapping sims are pinned in tests/test_similarity.py."""
-    import numpy as np
-    import pandas as pd
-
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
     centers, _ = _ivf_index(spark, t, e)
     books = _pq_codebooks(spark, t)
-
-    # -- probe assignment: identical arithmetic/tie-break to q_sim_topk_ivf.
     # One bounded collect serves BOTH probe routing and the ADC tables:
-    # the query block is read from the raw parquet with vq recomputed via
-    # vec_q (deterministic round → identical int64s to e's checkpointed v,
-    # so the cdot fold is bit-identical), and the raw embedding rides
-    # along so the old second collect job (full embeddings re-scan) is
-    # gone — ≤ MAX_QUERIES · IVF_PROBES rows either way (guide §1.2/§2.3).
-    queries = (
+    # vq is recomputed from the raw parquet via vec_q (deterministic
+    # round → identical int64s to e's checkpointed v, so the probe is
+    # bit-identical), and the raw embedding rides along for the tables.
+    probed = _probe_cells(
         t["embeddings"]
-        .filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
+        .filter(_is_query())
         .select(
             F.col("vec_id").alias("query_id"),
             "embedding",
             vec_q("embedding").alias("vq"),
-        )
+        ),
+        centers,
+        "embedding",
     )
-    cdot = F.expr(
-        "aggregate(zip_with(vq, center, (x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("cdot").desc(), F.col("cell").asc())
-    probed = (
-        queries.join(F.broadcast(centers))
-        .select("query_id", "embedding", "cell", cdot.alias("cdot"))
-        .withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= IVF_PROBES)
-        .select("query_id", "embedding", "cell")
-        .collect()  # bounded: ≤ MAX_QUERIES · IVF_PROBES rows
-    )
-
-    # -- per-query ADC tables from the raw float embeddings (the same
-    # normalize → subspace-dot construction as _pq_adc_scored, same
-    # zero-norm guard), sliced into per-cell blocks for the broadcast
-    emb_of: dict[int, list] = {}
-    for r in probed:
-        emb_of.setdefault(int(r["query_id"]), r["embedding"])
+    emb_of = {int(r["query_id"]): r["embedding"] for rows in probed.values() for r in rows}
     qids_all = np.asarray(sorted(emb_of), dtype=np.int64)
-    Q = np.asarray([emb_of[int(q)] for q in qids_all], dtype=np.float64)
-    nrm = np.linalg.norm(Q, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0
-    Q /= nrm
-    dsub = books.shape[2]
-    tables = np.einsum(
-        "qmd,mkd->qmk", Q.reshape(len(Q), PQ_M, dsub), books
-    ).astype(np.float32)
+    tables = _adc_tables(
+        np.asarray([emb_of[int(q)] for q in qids_all], dtype=np.float64), books
+    )
     row_of = {int(q): i for i, q in enumerate(qids_all)}
-    by_cell: dict[int, list] = {}
-    for r in probed:
-        by_cell.setdefault(int(r["cell"]), []).append(row_of[int(r["query_id"])])
-    cell_q = {
-        c: (qids_all[ix], tables[ix]) for c, ix in by_cell.items()
-    }
+    cell_q = {}
+    for c, rows in probed.items():
+        ix = [row_of[int(r["query_id"])] for r in rows]
+        cell_q[c] = (qids_all[ix], tables[ix])
     bc = spark.sparkContext.broadcast(cell_q)
     r_short = IVFPQ_RERANK_R
 
     def score_cells(batches):
         cq = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             for c, grp in pdf.groupby("cell"):
-                block = cq.get(int(c))
-                if block is None:
+                if int(c) not in cq:
                     continue
-                qids, tabs = block
+                qids, tabs = cq[int(c)]
                 ids = grp["neighbor_id"].to_numpy(np.int64)
                 codes = np.asarray(grp["codes"].tolist(), dtype=np.int64)
-                sim = _adc_accumulate(tabs, codes)
-                sim[qids[:, None] == ids[None, :]] = -np.inf
-                yield _adc_local_topk(qids, ids, sim, r_short)
+                yield _adc_local_topk(qids, ids, _adc_accumulate(tabs, codes), r_short)
 
-    probed_cells = sorted(by_cell)
     cand = (
         _ivfpq_cell_codes(spark, sf_dir)
-        .where(F.col("cell").isin(probed_cells))
+        .where(F.col("cell").isin(sorted(probed)))
         .mapInPandas(
             score_cells, "query_id bigint, neighbor_id bigint, adc_sim double"
         )
@@ -2418,41 +2184,7 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         # to min(assign, probes) cells with identical ADC sim
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    wr = W.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        cand.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= r_short)
-        .select("query_id", "neighbor_id")
-    )
-    # -- exact re-rank: the q_sim_topk_pq_rerank tail verbatim (probe
-    # broadcasts, corpus streams map-side, int64 kernel, ANSI-safe div)
-    qv = e.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("qn2"),
-    ).filter(
-        (F.col("q_id") % QUERY_STRIDE == 0) & (F.col("q_id") < QUERY_ID_CAP)
-    )
-    nv = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("v").alias("nv"),
-        F.col("n2").alias("nn2"),
-    )
-    sim = cos_div(dot_q("qv", "nv"), F.col("qn2") * F.col("nn2"))
-    probe = shortlist.join(F.broadcast(qv), F.col("q_id") == F.col("query_id"))
-    rescored = nv.join(
-        F.broadcast(probe), F.col("n_id") == F.col("neighbor_id")
-    ).select("query_id", "neighbor_id", sim.alias("sim"))
-    wk = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("sim"))
-    )
+    return _rerank(e, cand, r_short)
 
 
 @query(
@@ -2468,7 +2200,7 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY q.vec_id, b.vec_id
     )
     SELECT d.query_id, d.neighbor_id,
-           ROUND(d.dot / sqrt(nq.norm2 * nb.norm2), 4) AS cos_sim
+           ROUND({cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')}, 4) AS cos_sim
     FROM dots d
     JOIN norms nq ON nq.vec_id = d.query_id
     JOIN norms nb ON nb.vec_id = d.neighbor_id
@@ -2495,25 +2227,11 @@ def q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same kernel runs per probed IVF cell (compose with _ivf_index
     exactly as q_sim_topk_ivf does for top-k).
 
-    Determinism: exact integer dots; sim = dot/sqrt(nq·nb) in IEEE
+    Determinism: exact integer dots; sim is the shared cosine in IEEE
     float64 from exact integers — bit-identical to the oracle."""
-    import numpy as np
-    import pandas as pd
-
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
-    q_rows = (
-        e.filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
-        .select("vec_id", "v", "n2")
-        .collect()  # bounded: ≤ MAX_QUERIES rows by construction
-    )
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.int64)
-    qn = np.asarray([r["n2"] for r in q_rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, Q, qn))
+    bc = spark.sparkContext.broadcast(_query_block(e, "vec_id", "v", "n2"))
     tau2 = PAIR_TAU * PAIR_TAU
 
     def score(batches):
@@ -2521,9 +2239,7 @@ def q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0 or len(qids) == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            X = np.asarray(pdf["v"].tolist(), dtype=np.int64)
-            n2 = pdf["n2"].to_numpy(np.float64)
+            ids, X, n2 = _vecs(pdf)
             dot = (Q @ X.T).astype(np.float64)
             hit = (
                 (dot > 0)
@@ -2533,12 +2249,11 @@ def q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             qi, ni = np.nonzero(hit)
             if len(qi) == 0:
                 continue
-            sims = dot[qi, ni] / np.sqrt(qn[qi] * n2[ni])
             yield pd.DataFrame(
                 {
                     "query_id": qids[qi],
                     "neighbor_id": ids[ni],
-                    "cos_sim": np.round(sims, 4),
+                    "cos_sim": np.round(cos_div_np(dot[qi, ni], qn[qi] * n2[ni]), 4),
                 }
             )
 
@@ -2571,7 +2286,7 @@ FILTER_LANG = "en"
     ),
     scored AS (
         SELECT d.query_id, d.neighbor_id,
-               d.dot / sqrt(nq.norm2 * nb.norm2) AS sim
+               {cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')} AS sim
         FROM dots d
         JOIN norms nq ON nq.vec_id = d.query_id
         JOIN norms nb ON nb.vec_id = d.neighbor_id
@@ -2601,10 +2316,7 @@ def q_sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id = doc_id equi-join; both sides are corpus-scale, so it is a
     shuffle-hash join (hinted, never a broadcast of a corpus-derived
     set). Queries still come from the UNfiltered stride block — a
-    query's own language never constrains what it may retrieve.
-
-    Scale: identical to q_sim_topk after the filter (bounded query
-    broadcast, per-batch local top-k, tiny window merge); the
+    query's own language never constrains what it may retrieve. The
     IVF-composed spelling (probe cells of the filtered subset) is the
     documented next rung when selectivity is low."""
     t = load_tables(spark, sf_dir)
@@ -2615,7 +2327,7 @@ def q_sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"))
     )
     base = e.join(keep.hint("shuffle_hash"), "vec_id", "semi")
-    return _gemm_topk(spark, e, cross_label=False, base=base)
+    return _topk_rows(_gemm_topk(spark, e, cross_label=False, base=base))
 
 
 #: Reciprocal-rank-fusion geometry (Cormack et al. 2009's k=60): each
@@ -2660,7 +2372,7 @@ def _hybrid_oracle() -> str:
         GROUP BY b.vec_id
     ),
     sems AS (
-        SELECT d.doc_id, d.dot / sqrt(qn.norm2 * nb.norm2) AS sim
+        SELECT d.doc_id, {cos_div_sql('d.dot', 'qn.norm2 * nb.norm2')} AS sim
         FROM sdots d JOIN norms nb ON nb.vec_id = d.doc_id CROSS JOIN qn
     ),
     semn AS (
@@ -2955,9 +2667,9 @@ def _mmr_oracle() -> str:
         SELECT query_id, neighbor_id, sim
         FROM (
             SELECT d.query_id, d.neighbor_id,
-                   d.dot / sqrt(nq.norm2 * nb.norm2) AS sim,
+                   {cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')} AS sim,
                    ROW_NUMBER() OVER (PARTITION BY d.query_id
-                                      ORDER BY d.dot / sqrt(nq.norm2 * nb.norm2) DESC,
+                                      ORDER BY {cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')} DESC,
                                                d.neighbor_id ASC) AS rk
             FROM dots d
             JOIN norms nq ON nq.vec_id = d.query_id
@@ -2977,7 +2689,7 @@ def _mmr_oracle() -> str:
     ),
     psim AS (
         SELECT p.query_id, p.a, p.b,
-               p.dot / sqrt(na.norm2 * nb.norm2) AS sim
+               {cos_div_sql('p.dot', 'na.norm2 * nb.norm2')} AS sim
         FROM pdots p
         JOIN norms na ON na.vec_id = p.a
         JOIN norms nb ON nb.vec_id = p.b
@@ -3010,77 +2722,25 @@ def q_retrieval_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness story (this is the repo's first ITERATIVE query with an
     exact oracle): greedy selection over K = {k} steps is unrolled into
     K−1 SQL CTEs (see _mmr_oracle); every similarity is the standard
-    exact-int64-dot / sqrt(norm-product) double, the score uses
+    exact-int64-dot / √(norm-product) double, the score uses
     INTEGER weights ({w_rel}·rel − {w_div}·maxsim — no decimal literal
     enters the float pipeline), and ties break on neighbor_id — so the
     Spark kernel and the oracle pick identical sets, not just similar
     ones.
 
-    Scale shape: stage 1 is the bounded-query GEMM shortlist (the
-    q_sim_topk access pattern — per-batch local top-M, tiny window
-    merge of M·Q·batches rows). Stage 2 joins the M·Q shortlist rows
-    (≤ {shortlist}·MAX_QUERIES — bounded by construction, NOT corpus-
-    proportional) back to their vectors and runs greedy MMR per query
+    Scale shape: stage 1 is the exact shortlist (_gemm_topk with
+    k = {shortlist}, then _rank_merge). Stage 2 joins the M·Q shortlist
+    rows (≤ {shortlist}·MAX_QUERIES — bounded by construction, NOT
+    corpus-proportional) back to their vectors and runs greedy MMR per query
     inside ONE applyInPandas group of M rows: an M×M int64 GEMM plus K
     argmax sweeps — microseconds per query, embarrassingly parallel
     across queries, zero corpus-sized state.
     """
-    import numpy as np
-    import pandas as pd
-
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
-    q_rows = (
-        e.filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
-        .select("vec_id", "v", "n2")
-        .collect()  # bounded: ≤ MAX_QUERIES rows by construction
-    )
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.int64)
-    qn = np.asarray([r["n2"] for r in q_rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, Q, qn))
-    m = MMR_SHORTLIST
-
-    def shortlist_batches(batches):
-        qids, Q, qn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:  # degenerate Arrow batch
-                continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            X = np.asarray(pdf["v"].tolist(), dtype=np.int64)
-            n2 = pdf["n2"].to_numpy(np.float64)
-            sim = (Q @ X.T).astype(np.float64) / np.sqrt(qn[:, None] * n2[None, :])
-            sim[qids[:, None] == ids[None, :]] = -np.inf  # self-pairs out
-            take = min(m, sim.shape[1])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                order = np.lexsort((ids, -sim[qi]))[:take]
-                keep = sim[qi][order] > -np.inf
-                out_q.append(np.full(keep.sum(), qids[qi]))
-                out_n.append(ids[order][keep])
-                out_s.append(sim[qi][order][keep])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
-
-    cand = e.select("vec_id", "v", "n2").mapInPandas(
-        shortlist_batches, "query_id bigint, neighbor_id bigint, sim double"
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= m)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    short = _rank_merge(
+        _gemm_topk(spark, e, cross_label=False, k=MMR_SHORTLIST), "sim", MMR_SHORTLIST
+    ).select("query_id", "neighbor_id", "sim")
     withv = short.join(
         e.select(F.col("vec_id").alias("neighbor_id"), "v", "n2"), "neighbor_id"
     )
@@ -3092,7 +2752,7 @@ def q_retrieval_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         X = np.asarray(pdf["v"].tolist(), dtype=np.int64)[order]
         n2 = pdf["n2"].to_numpy(np.float64)[order]
         qid = int(pdf["query_id"].iloc[0])
-        S = (X @ X.T).astype(np.float64) / np.sqrt(n2[:, None] * n2[None, :])
+        S = cos_div_np((X @ X.T).astype(np.float64), n2[:, None] * n2[None, :])
         n = len(ids)
         picked: list[int] = []
         ranks, scores = [], []
@@ -3158,7 +2818,7 @@ q_retrieval_mmr.__doc__ = q_retrieval_mmr.__doc__.format(
             SELECT d.query_id, d.neighbor_id,
                    ROW_NUMBER() OVER (
                        PARTITION BY d.query_id
-                       ORDER BY d.dot / sqrt(nq.norm2 * nb.norm2) DESC,
+                       ORDER BY {cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')} DESC,
                                 d.neighbor_id ASC) AS rk
             FROM dots d
             JOIN norms nq ON nq.vec_id = d.query_id
@@ -3284,7 +2944,7 @@ def _ndcg_w_case(rank_col: str) -> str:
     ),
     scored AS (
         SELECT d.query_id, d.neighbor_id,
-               d.dot / sqrt(nq.norm2 * nb.norm2) AS sim
+               {cos_div_sql('d.dot', 'nq.norm2 * nb.norm2')} AS sim
         FROM dots d
         JOIN norms nq ON nq.vec_id = d.query_id
         JOIN norms nb ON nb.vec_id = d.neighbor_id
@@ -3351,9 +3011,7 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — no new corpus-sized state.
     """
     e = _quantized(load_tables(spark, sf_dir)).withColumn("n2", norm2_q("v"))
-    qids = e.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < QUERY_ID_CAP)
-    ).select(F.col("vec_id").alias("query_id"))
+    qids = e.filter(_is_query()).select(F.col("vec_id").alias("query_id"))
     exact = q_sim_topk(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1).alias("rel")
     )
@@ -3364,23 +3022,10 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-row int64 einsum (queries broadcast, one gather per
     # batch) is seconds — the same HOF→BLAS move every hot path in
     # this module has made. Sims stay bit-identical (exact int64 dots,
-    # identical float expression shape, cos_div's max(·,1.0) guard).
-    import numpy as np
-    import pandas as pd
-
-    q_rows = (
-        e.filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
-        )
-        .select("vec_id", "v", "n2")
-        .collect()  # bounded: ≤ MAX_QUERIES rows by construction
-    )
-    order = np.argsort(np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64))
-    s_qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)[order]
-    s_Q = np.asarray([r["v"] for r in q_rows], dtype=np.int64)[order]
-    s_qn = np.asarray([r["n2"] for r in q_rows], dtype=np.float64)[order]
-    bcq = spark.sparkContext.broadcast((s_qids, s_Q, s_qn))
+    # identical float expression shape, the shared max(·, 1.0) guard).
+    q_ids, Q, qn = _query_block(e, "vec_id", "v", "n2")
+    order = np.argsort(q_ids)
+    bcq = spark.sparkContext.broadcast((q_ids[order], Q[order], qn[order]))
 
     def sim_batches(batches):
         qids_s, Q_s, qn_s = bcq.value
@@ -3392,7 +3037,7 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             nn = pdf["n2"].to_numpy(np.float64)
             idx = np.searchsorted(qids_s, qid)
             dot = np.einsum("ij,ij->i", Q_s[idx], X).astype(np.float64)
-            sim = dot / np.sqrt(np.maximum(qn_s[idx] * nn, 1.0))
+            sim = cos_div_np(dot, qn_s[idx] * nn)
             out = pd.DataFrame(
                 {
                     "query_id": qid,
@@ -3400,7 +3045,7 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "sim": sim,
                 }
             )
-            # per-batch local top-k (the _gemm_topk move): the global
+            # per-batch local top-k: the global
             # window's input shrinks from the full candidate stream
             # (~16M rows at the 1M smoke) to k·Q·n_batches — the
             # global top-k is a subset of the per-batch top-ks, so the
@@ -3421,18 +3066,13 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id", "nv", "n2")
         .mapInPandas(sim_batches, "query_id bigint, neighbor_id bigint, sim double")
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    ranked = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rk")
+    ranked = _rank_merge(scored, "sim", TOP_K).select(
+        "query_id", "neighbor_id", "rank_k"
     )
     gains = ranked.join(exact, ["query_id", "neighbor_id"], "left").select(
         "query_id",
         F.coalesce("rel", F.lit(0)).alias("rel"),
-        F.expr(_ndcg_w_case("rk")).alias("w"),
+        F.expr(_ndcg_w_case("rank_k")).alias("w"),
     )
     agg = gains.groupBy("query_id").agg(
         F.sum("rel").alias("n_hits"),

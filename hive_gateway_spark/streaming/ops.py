@@ -1146,7 +1146,7 @@ def embed_screen_batch(spark, index_path: str, tau: float = 0.9):
     import numpy as np
     import pandas as pd
 
-    from hive_gateway_spark.functions.vectors import vec_q
+    from hive_gateway_spark.functions.vectors import cos_div_np, vec_q
     from hive_gateway_spark.operators.similarity import IVF_PROBES
     from hive_gateway_spark.sources.dataset_export import read_snapshot
 
@@ -1199,10 +1199,9 @@ def embed_screen_batch(spark, index_path: str, tau: float = 0.9):
                     ids = grp["neighbor_id"].to_numpy(np.int64)
                     X = np.asarray(grp["vb"].tolist(), dtype=np.int64)
                     nb = grp["nb"].to_numpy(np.float64)
-                    dot = (Qb @ X.T).astype(np.float64)
-                    den = np.sqrt(qnb[:, None] * nb[None, :])
-                    den[den == 0] = 1.0  # zero-norm rows score 0
-                    sim = dot / den
+                    sim = cos_div_np(
+                        (Qb @ X.T).astype(np.float64), qnb[:, None] * nb[None, :]
+                    )
                     hit = (sim >= t) & (ids_q[:, None] != ids[None, :])
                     qi, ni = np.nonzero(hit)
                     if len(qi) == 0:

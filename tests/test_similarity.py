@@ -901,7 +901,8 @@ def test_pq_zero_norm_query_survives(spark, tmp_path):
     """A zero embedding at a query-stride id must not NaN out of the
     ADC path (ADVICE r12 #1): the guard pins its sims to 0 everywhere,
     so the query still emits TOP_K rows with finite scores instead of
-    silently vanishing from q_sim_topk_pq while q_sim_topk emits it."""
+    silently vanishing from q_sim_topk_pq. The exact and ANN kernels
+    score it 0 by the same rule (test_zero_norm_vectors_match_oracles)."""
     import math
     import os
 
@@ -1172,3 +1173,149 @@ def test_embed_outliers_match_numpy_centroid_distances(spark, sf_dir):
         for r, i in zip(rows, order):
             dist = float(np.sqrt(float(ssq[i])) / n / SCALE)
             assert abs(r["centroid_dist"] - round(dist, 6)) < 1e-6
+
+
+def test_local_topk_matches_bruteforce():
+    """The one exact local top-k (_local_topk) against a brute-force
+    sorted() on random blocks: float and int64 scores with many ties,
+    self and label masks, k larger than the block, and empty query or
+    row sets. Order is (score desc, neighbor_id asc), rows query-major,
+    and the score column keeps its dtype."""
+    import numpy as np
+
+    from hive_gateway_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(11)
+    for trial in range(300):
+        nq, rows, k = (int(x) for x in rng.integers((0, 0, 1), (6, 30, 12)))
+        ids = rng.permutation(1000)[:rows].astype(np.int64)
+        qids = (
+            ids[rng.integers(0, rows, nq)] if rows else rng.integers(0, 1000, nq)
+        ).astype(np.int64)
+        raw = rng.integers(-3, 4, (nq, rows))
+        score = raw.astype(np.int64) if trial % 2 else raw / 4.0
+        mask = trial % 3
+        if mask == 0:
+            keep = np.ones((nq, rows), dtype=bool)
+        elif mask == 1:
+            keep = qids[:, None] != ids[None, :]
+        else:
+            keep = rng.integers(0, 3, nq)[:, None] != rng.integers(0, 3, rows)[None, :]
+        got = sim._local_topk(qids, ids, score, keep, k, "s")
+        want = []
+        for i in range(nq):
+            best = sorted((-score[i, j], ids[j]) for j in range(rows) if keep[i, j])
+            want += [(qids[i], nid, -neg) for neg, nid in best[:k]]
+        assert list(zip(got["query_id"], got["neighbor_id"], got["s"])) == want
+        assert got["s"].dtype == score.dtype
+
+
+def test_cos_topk_scores_zero_norm_vectors_zero():
+    """The shared cosine (cos_div_np) gives a zero-norm vector sim 0
+    against everything, so a zero query still fills k rows, ranked by
+    neighbor_id, instead of turning into NaN and vanishing."""
+    import numpy as np
+
+    from hive_gateway_spark.operators import similarity as sim
+
+    X = np.asarray([[0, 0], [3, 4], [-3, 4], [0, 0], [6, 8]], dtype=np.int64)
+    ids = np.asarray([10, 11, 12, 13, 14], dtype=np.int64)
+    n2 = (X * X).sum(1).astype(np.float64)
+    out = sim._cos_topk(ids[:2], X[:2], n2[:2], ids, X, n2, 3)
+    zero = out[out["query_id"] == 10]
+    assert list(zero["neighbor_id"]) == [11, 12, 13]
+    assert list(zero["sim"]) == [0.0, 0.0, 0.0]
+    five = out[out["query_id"] == 11]
+    assert list(five["neighbor_id"]) == [14, 12, 10]
+    assert list(five["sim"]) == [1.0, 7 / 25, 0.0]
+
+
+def test_one_topk_path():
+    """Regrowth guard: similarity.py writes the query-block filter and
+    the query_id rank window once each, has no per-query top-k loop,
+    and no kernel or oracle spells its own cosine denominator — the
+    numpy cosine lives only in functions/vectors.py (cos_div_np)."""
+    import pathlib
+
+    from hive_gateway_spark.functions import vectors
+    from hive_gateway_spark.operators import similarity as sim
+    from hive_gateway_spark.streaming import ops
+
+    src = pathlib.Path(sim.__file__).read_text()
+    assert src.count("% QUERY_STRIDE == 0") == 1
+    assert src.count('W.partitionBy("query_id")') == 1
+    assert "for qi in range(" not in src
+    assert "/ sqrt(" not in src  # oracles go through cos_div_sql
+    for mod in (sim, ops):
+        assert "np.sqrt(" not in pathlib.Path(mod.__file__).read_text(), mod
+    assert pathlib.Path(vectors.__file__).read_text().count("np.sqrt(") == 1
+
+
+def _zero_norm_corpus(root, donor: str) -> str:
+    """64-dim synthetic corpus (5 labels) whose vec 0 — a query id —
+    and vec 7 are zero vectors; the other tables link to ``donor``."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    n = 600
+    vecs = rng.normal(0, 1, (n, 64)).astype(np.float32)
+    vecs[[0, 7]] = 0.0
+    sfd = os.path.join(str(root), "sf_zero64")
+    os.makedirs(sfd)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(np.arange(n), pa.int64()),
+                "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+                "label": pa.array(rng.integers(0, 5, n).astype(np.int32), pa.int32()),
+            }
+        ),
+        os.path.join(sfd, "embeddings.parquet"),
+    )
+    for name in (
+        "region nation customer supplier part orders lineitem events documents"
+    ).split():
+        os.symlink(
+            os.path.join(donor, f"{name}.parquet"),
+            os.path.join(sfd, f"{name}.parquet"),
+        )
+    return sfd
+
+
+def test_zero_norm_vectors_match_oracles(spark, sf_dir, tmp_path):
+    """Zero-norm vectors follow one cosine rule, dot / sqrt(max(n2·n2,
+    1)), in the engine and in every oracle: the zero query 0 keeps its
+    TOP_K rows (sim 0) and every query hash-matches DuckDB. Before the
+    rule, numpy's 0/0 = NaN dropped query 0 from the engine while
+    DuckDB emitted it with a NULL cos_sim."""
+    from tests.parity import assert_parity
+
+    sfd = _zero_norm_corpus(tmp_path, sf_dir)
+    s = spark.newSession()
+    for name in ("q_sim_topk", "q_hard_negatives", "q_sim_topk_lsh", "q_retrieval_mmr"):
+        df = registry.QUERIES[name](s, sfd)
+        assert_parity(df, registry.ORACLES[name], sfd, name=name)
+    zero = [r for r in registry.QUERIES["q_sim_topk"](s, sfd).collect() if r["query_id"] == 0]
+    assert [r["neighbor_id"] for r in zero] == [1, 2, 3, 4, 5]
+    assert all(r["cos_sim"] == 0.0 for r in zero)
+
+
+def test_ivf_builds_over_zero_norm_vectors(spark, sf_dir, tmp_path):
+    """A zero embedding must not crash the IVF build ([DIVIDE_BY_ZERO]
+    under ANSI in the quantizer's normalization): the exactly-zero
+    norm divides by 1, and the zero query still gets TOP_K finite
+    rows from q_sim_topk_ivf."""
+    import math
+
+    from hive_gateway_spark.operators import similarity as sim
+
+    sfd = _zero_norm_corpus(tmp_path, sf_dir)
+    rows = registry.QUERIES["q_sim_topk_ivf"](spark.newSession(), sfd).collect()
+    zero = [r for r in rows if r["query_id"] == 0]
+    assert len(zero) == sim.TOP_K
+    assert all(math.isfinite(r["cos_sim"]) for r in zero)
+
