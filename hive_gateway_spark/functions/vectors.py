@@ -47,6 +47,17 @@ def dot_q(a: str, b: str) -> Column:
     )
 
 
+def cdot_sql(vec: str, center: str) -> str:
+    """Double dot of a quantized array with an array<double> centroid,
+    as SQL text — the IVF cell-ranking score. One spelling for the
+    batch window (_cell_ranked) and the stream's in-row probe, so both
+    rank cells by the same sums."""
+    return (
+        f"aggregate(zip_with({vec}, {center}, (x, y) -> CAST(x AS DOUBLE) * y), "
+        "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
+    )
+
+
 def norm2_q(a: str) -> Column:
     """Exact integer squared L2 norm of a quantized array → double."""
     return dot_q(a, a)

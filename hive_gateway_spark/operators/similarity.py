@@ -9,11 +9,19 @@ step of it is written once:
                 QUERY_ID_CAP), collected once and broadcast;
   _local_topk   the exact per-batch top-k: one lexsort over the
                 queries × rows block, (score desc, neighbor_id asc);
+                _pad_pairs turns a ragged (query, neighbor) pair
+                stream into such a block;
   _cos_topk     exact int64 GEMM + the shared cosine (cos_div_np) +
                 _local_topk — the kernel of the exact, IVF, LSH and
                 MMR paths;
   _rank_merge   the global row_number ≤ k merge over query_id;
-  _probe_cells  IVF probe routing (query · centroid, desc, cell asc);
+  _probe_cells  IVF probe routing (cdot_sql centroid dot, desc, cell
+                asc) — the one probe rule of the index; the stream's
+                in-row probe ranks the same cdot_sql sums in the same
+                order;
+  _probe_scan   a kernel over only the probed cells' inverted-file
+                rows — q_sim_topk_ivf's top-k and the ingest screen's
+                threshold (streaming/ops.embed_screen_batch);
   _rerank       the exact re-rank tail of the ADC shortlist paths.
 
 Cosine is dot / √max(|a|²·|b|², 1) in every engine (cos_div,
@@ -31,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 from hive_gateway_spark.functions.vectors import (
     DUCK_FLAT_CTE,
     SCALE,
+    cdot_sql,
     cos_div,
     cos_div_np,
     cos_div_sql,
@@ -246,19 +255,39 @@ def _local_topk(qids, ids, score, keep, k: int, col: str = "sim") -> pd.DataFram
     columns that ``keep`` admits, in (score desc, neighbor_id asc)
     order — the global merge's order, so the global top-k is a subset
     of the local ones. ONE lexsort over the whole block (masked
-    columns sort last), no per-query loop. Rows are query-major."""
+    columns sort last), no per-query loop. Rows are query-major.
+    ``ids`` is one row of neighbor ids shared by every query, or a
+    (queries × rows) block of its own (_pad_pairs)."""
     take = min(k, score.shape[1])
-    order = np.lexsort(
-        (np.broadcast_to(ids, score.shape), -score, ~keep), axis=1
-    )[:, :take]
+    ids = np.broadcast_to(ids, score.shape)
+    order = np.lexsort((ids, -score, ~keep), axis=1)[:, :take]
     kept = np.take_along_axis(keep, order, axis=1)
     return pd.DataFrame(
         {
             "query_id": np.broadcast_to(qids[:, None], order.shape)[kept],
-            "neighbor_id": ids[order][kept],
+            "neighbor_id": np.take_along_axis(ids, order, axis=1)[kept],
             col: np.take_along_axis(score, order, axis=1)[kept],
         }
     )
+
+
+def _pad_pairs(qid, nid, score) -> tuple:
+    """A ragged (query_id, neighbor_id, score) pair stream as
+    _local_topk's block input: (queries, ids, score, keep), one row per
+    distinct query (ascending), padded to its longest candidate list;
+    ``keep`` masks the pads out."""
+    uq, row = np.unique(qid, return_inverse=True)
+    counts = np.bincount(row, minlength=len(uq))
+    col = np.empty(len(row), dtype=np.int64)
+    col[np.argsort(row, kind="stable")] = np.arange(len(row)) - np.repeat(
+        np.cumsum(counts) - counts, counts
+    )
+    shape = (len(uq), int(counts.max(initial=0)))
+    ids = np.zeros(shape, dtype=np.int64)
+    block = np.zeros(shape, dtype=score.dtype)
+    keep = np.zeros(shape, dtype=bool)
+    ids[row, col], block[row, col], keep[row, col] = nid, score, True
+    return uq, ids, block, keep
 
 
 def _cos_topk(qids, Q, qn, ids, X, n2, k: int, keep=None) -> pd.DataFrame:
@@ -512,10 +541,7 @@ def _cell_ranked(frame, centers, key: str, vec: str, *cols: str) -> DataFrame:
     The SINGLE cell-ranking expression: _assign_cells takes arank ≤
     IVF_ASSIGN for the inverted file, semantic_dedup takes arank == 1,
     and _probe_cells takes arank ≤ IVF_PROBES for the query probes."""
-    cdot = F.expr(
-        f"aggregate(zip_with({vec}, center, (x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"
-    )
+    cdot = F.expr(cdot_sql(vec, "center"))
     w = W.partitionBy(key).orderBy(F.col("cdot").desc(), F.col("cell").asc())
     return (
         frame.join(F.broadcast(centers))
@@ -538,6 +564,34 @@ def _probe_cells(queries: DataFrame, centers: DataFrame, *cols: str) -> dict:
     ):
         by_cell.setdefault(int(r["cell"]), []).append(r)
     return by_cell
+
+
+def _probe_scan(queries, centers, inv, kernel, schema: str) -> DataFrame:
+    """The IVF probe scan shared by the batch serve path and the ingest
+    screen: each query (query_id, vq, nq) probes its cells
+    (_probe_cells), each cell's query block is broadcast, and
+    ``kernel((qids, Q, qn), (ids, X, n2))`` runs per cell over only the
+    probed cells' inverted-file rows (neighbor_id, cell, vb, nb). On a
+    persisted index (partition_by=["cell"]) the cell filter is hive
+    partition pruning — ≈ assign·probes/cells of the files opened — and
+    on the session-checkpointed build it is a cheap row filter."""
+    probed = _probe_cells(queries, centers, "vq", "nq")
+    bc = queries.sparkSession.sparkContext.broadcast(
+        {c: _arrays(rows, "query_id", "vq", "nq") for c, rows in probed.items()}
+    )
+
+    def scan(batches):
+        cq = bc.value
+        for pdf in batches:
+            for c, grp in pdf.groupby("cell"):
+                if c in cq:
+                    yield kernel(cq[c], _vecs(grp, "neighbor_id", "vb", "nb"))
+
+    return (
+        inv.where(F.col("cell").isin(sorted(probed)))
+        .select("neighbor_id", "cell", "vb", "nb")
+        .mapInPandas(scan, schema)
+    )
 
 
 def persist_ivf_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
@@ -765,39 +819,18 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     e = _quantized(t).withColumn("n2", norm2_q("v"))
     centers, inv_file = _ivf_index(spark, t, e)
-    probed = _probe_cells(
+    # IVF's job is pruning which rows the exact kernel sees, not
+    # re-deriving the arithmetic
+    cand = _probe_scan(
         e.filter(_is_query()).select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("vq"),
             F.col("n2").alias("nq"),
         ),
         centers,
-        "vq",
-        "nq",
-    )
-    # Per-cell query blocks are broadcast; each Arrow batch of the
-    # inverted file runs the exact kernel per cell against that cell's
-    # probing queries only. IVF's job is pruning which rows the kernel
-    # sees, not re-deriving the arithmetic.
-    bc = spark.sparkContext.broadcast(
-        {c: _arrays(rows, "query_id", "vq", "nq") for c, rows in probed.items()}
-    )
-
-    def score_cells(batches):
-        cq = bc.value
-        for pdf in batches:
-            for c, grp in pdf.groupby("cell"):
-                if c in cq:
-                    yield _cos_topk(*cq[c], *_vecs(grp, "neighbor_id", "vb", "nb"), TOP_K)
-
-    # Restrict the inverted-file scan to the probed cells BEFORE the
-    # kernel: on a persisted index (partition_by=["cell"]) this is hive
-    # partition pruning — ≈ assign·probes/cells of the files opened —
-    # and on the session-checkpointed build it is a cheap row filter.
-    cand = (
-        inv_file.where(F.col("cell").isin(sorted(probed)))
-        .select("neighbor_id", "cell", "vb", "nb")
-        .mapInPandas(score_cells, _CAND)
+        inv_file,
+        lambda q, rows: _cos_topk(*q, *rows, TOP_K),
+        _CAND,
     )
     # multi-assignment: the same (query, neighbor) can meet in up to
     # min(assign, probes) cells with identical sim
@@ -2006,12 +2039,16 @@ def q_ivfpq_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     qids, Q = _query_block(e, "vec_id", "v")
     if len(Q) == 0:
         Q = np.zeros((0, 64), dtype=np.int64)
-    # probe selection: top-P cells by exact coarse dot (desc, cell asc)
-    qdots = Q @ CI.T  # (q, cells) int64, ≤ 6.4e13
-    probes = np.lexsort(
-        (np.broadcast_to(np.arange(IVFO_CELLS), qdots.shape), -qdots), axis=1
-    )[:, :IVFO_PROBES]
-    cell_q = {int(c): np.flatnonzero((probes == c).any(1)) for c in np.unique(probes)}
+    # probe selection: top-P cells by exact int64 coarse dot (≤ 6.4e13),
+    # desc, cell asc; query ids here are positions in the block
+    qdots = Q @ CI.T
+    probes = _local_topk(
+        np.arange(len(Q)), np.arange(IVFO_CELLS), qdots,
+        np.ones(qdots.shape, dtype=bool), IVFO_PROBES,
+    )
+    cell_q = {
+        int(c): g.to_numpy() for c, g in probes.groupby("neighbor_id")["query_id"]
+    }
     bc = spark.sparkContext.broadcast((qids, _pqo_tables(Q, C), cell_q))
 
     def score(batches):
@@ -2452,16 +2489,11 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if qrow:
-        qvec = [int(x) for x in qrow[0]["v"]]
+        qvec = "array(" + ",".join(f"{int(x)}L" for x in qrow[0]["v"]) + ")"
         qn2 = float(qrow[0]["n2"])
-        dot = F.expr(
-            "aggregate(zip_with(v, array("
-            + ",".join(f"{x}L" for x in qvec)
-            + "), (x, y) -> x * y), 0L, (a, x) -> a + x)"
-        )
         sems = e.select(
             F.col("vec_id").alias("doc_id"),
-            cos_div(dot.cast("double"), F.lit(qn2) * F.col("n2")).alias("sim"),
+            cos_div(dot_q("v", qvec), F.lit(qn2) * F.col("n2")).alias("sim"),
         )
         # TakeOrdered (orderBy+limit), then ranks over the tiny result —
         # never a global row_number window over the corpus
@@ -3032,29 +3064,15 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qid = pdf["query_id"].to_numpy(np.int64)
-            X = np.asarray(pdf["nv"].tolist(), dtype=np.int64)
-            nn = pdf["n2"].to_numpy(np.float64)
+            qid, X, nn = _vecs(pdf, "query_id", "nv")
             idx = np.searchsorted(qids_s, qid)
             dot = np.einsum("ij,ij->i", Q_s[idx], X).astype(np.float64)
             sim = cos_div_np(dot, qn_s[idx] * nn)
-            out = pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
-                    "sim": sim,
-                }
-            )
-            # per-batch local top-k: the global
-            # window's input shrinks from the full candidate stream
-            # (~16M rows at the 1M smoke) to k·Q·n_batches — the
-            # global top-k is a subset of the per-batch top-ks, so the
-            # final ranking is unchanged
-            out = out.sort_values(
-                ["query_id", "sim", "neighbor_id"],
-                ascending=[True, False, True],
-            )
-            yield out.groupby("query_id", sort=False).head(TOP_K)
+            # per-batch local top-k over the padded pair block: the
+            # global window's input shrinks from the full candidate
+            # stream (~16M rows at the 1M smoke) to k·Q·n_batches
+            nid = pdf["neighbor_id"].to_numpy(np.int64)
+            yield _local_topk(*_pad_pairs(qid, nid, sim), TOP_K)
 
     nv = e.select(
         F.col("vec_id").alias("neighbor_id"),

@@ -981,115 +981,56 @@ def stream_quality_screen(docs: DataFrame) -> DataFrame:
     return quality_score_frame(docs)
 
 
-#: Arrival-rate gate for the semantic screen's two spellings (VERDICT
-#: r13 task #7): at-or-above this many arrivals per micro-batch,
-#: embed_screen_foreach_batch routes to the GEMM scorer (collect +
-#: broadcast + BLAS over the probed cells); below it, the per-row
-#: expression plan skips the driver collect round-trip. Measured at
-#: the 100k-vector index (scripts/stream_screen_scale_smoke.py
-#: --crossover; SCALE.md "Semantic screen crossover"): GEMM wins at
-#: EVERY measured size — 0.69 s vs 1.46 s at 8 arrivals, 1.6 s vs
-#: 105 s at 4096 (the expression plan pays an interpreted HOF dot per
-#: candidate row, ~probes·N/cells of the index per arrival, so its
-#: cost is linear in arrivals×index) — hence the default sits BELOW
-#: the smallest measured batch: GEMM is the default everywhere the
-#: foreachBatch route applies, and the expression spelling remains
-#: for the pure streaming transform (no foreachBatch available) and
-#: for tiny-index sessions that raise the conf
-#: `hive_gateway.embed_screen.gemm_min_arrivals`.
-EMBED_SCREEN_GEMM_MIN_ARRIVALS = 8
-
-
-def embed_screen_foreach_batch(
-    spark: SparkSession, index_path: str, tau: float = 0.9
-):
-    """The ONE config-gated semantic-screen path (VERDICT r13 task #7):
-    returns ``screen(batch_df) -> DataFrame`` for a foreachBatch sink
-    that routes each micro-batch by its arrival count — small batches
-    run the stateless expression plan (stream_embed_dedup_screen's
-    exact plan applied to the static frame; no driver round-trip),
-    large batches run the vectorized GEMM scorer (embed_screen_batch,
-    measured 14× at the 1M index) — so an ingest shard gets the right
-    spelling at every arrival rate without choosing. Both spellings
-    are equivalence-tested (same quantization, same probe ordering,
-    same emit contract), so routing never changes WHAT is emitted,
-    only how fast.
-
-    The threshold reads `hive_gateway.embed_screen.gemm_min_arrivals`
-    (default EMBED_SCREEN_GEMM_MIN_ARRIVALS, the measured crossover).
-    The batch count the routing needs is one cheap job over the
-    bounded arrival block an ingest trigger admits."""
-    gemm_score = embed_screen_batch(spark, index_path, tau=tau)
-    thresh = int(
-        spark.conf.get(
-            "hive_gateway.embed_screen.gemm_min_arrivals",
-            str(EMBED_SCREEN_GEMM_MIN_ARRIVALS),
-        )
-    )
-
-    def screen(batch_df: DataFrame) -> DataFrame:
-        if batch_df.count() >= thresh:
-            return gemm_score(batch_df)
-        return stream_embed_dedup_screen(batch_df, index_path, tau=tau)
-
-    return screen
-
-
 def stream_embed_dedup_screen(
     vec_stream: DataFrame, index_path: str, tau: float = 0.9
 ) -> DataFrame:
-    """Ingest-time SEMANTIC dedup against the persisted IVF index — the
-    frozen-model pattern (stream_dsir_score's shape) composing three
-    subsystems: the lakehouse ANN artifact (persist_ivf_index), the
-    exact int64 cosine kernel, and the streaming ingest path. Per
-    arriving (vec_id, embedding): rank the index cells by centroid dot
-    ENTIRELY IN-ROW (the centroid table is tiny and rides as a literal
-    array — streams cannot run ranking windows) and explode the top
-    IVF_PROBES of them, then a stream-static join against ONLY those
-    cells' inverted-file rows scores exact cosine, and matches at
-    ≥ tau emit (vec_id, match_id, cos_sim). A vector with no emitted
-    row is novel — ingest it; a crawler shard drops or routes the
-    matches. Probing matches the batch serve path's IVF_PROBES scope
-    (ADVICE r12 #4 — primary-cell-only missed near-cell-boundary
-    duplicates the batch path catches); one divergence remains: a
-    match assigned to ≥2 probed cells emits up to min(assign, probes)
-    IDENTICAL rows (the batch path dropDuplicates — a stateless
-    append-mode stream cannot), so consumers needing distinct pairs
-    dedup in their sink; screen semantics (any row ⇒ duplicate) are
+    """Ingest-time SEMANTIC dedup against the persisted IVF index, as a
+    pure streaming transform — the frozen-model pattern
+    (stream_dsir_score's shape) composing the lakehouse ANN artifact
+    (persist_ivf_index), the exact int64 cosine kernel and the
+    streaming ingest path. Per arriving (vec_id, embedding): rank the
+    index cells IN-ROW and explode the top IVF_PROBES of them, then a
+    stream-static join against ONLY those cells' inverted-file rows
+    scores exact cosine, and matches at ≥ tau emit (vec_id, match_id,
+    cos_sim). A vector with no emitted row is novel — ingest it; a
+    crawler shard drops or routes the matches.
+
+    One probe rule: the cells are ranked by the batch serve path's
+    centroid dot (cdot_sql) in its order — dot desc, lowest cell id on
+    ties — so this transform, embed_screen_batch and q_sim_topk_ivf
+    probe the same cells. A stream cannot run the batch path's ranking
+    window, so the rank is spelled in-row: the centroid table is tiny
+    and rides as a literal array, ordered by array_sort and cut by
+    slice. A match assigned to ≥2 probed cells emits up to
+    min(assign, probes) IDENTICAL rows (a stateless append-mode stream
+    cannot dropDuplicates), so consumers needing distinct pairs dedup
+    in their sink; screen semantics (any row ⇒ duplicate) are
     unaffected.
 
     Stateless per micro-batch against the FROZEN index (no watermarks,
     any ingest rate); index maintenance stays the batch jobs
-    (append_ivf_index / maybe_rebuild_ivf). The cell scoping bounds
-    each probe to ~probes/cells of the index exactly as the batch
-    serve path does — at 100 TB the static side is the cell-partitioned
-    lakehouse table, loaded once per micro-batch epoch."""
+    (append_ivf_index / maybe_rebuild_ivf). A foreachBatch sink runs
+    embed_screen_batch instead: same rows, one BLAS kernel per cell in
+    place of a per-row higher-order dot."""
     from hive_gateway_spark.functions.vectors import (
+        cdot_sql,
         cos_div,
         dot_q,
         norm2_q,
         vec_q,
     )
+    from hive_gateway_spark.operators.similarity import IVF_PROBES
     from hive_gateway_spark.sources.dataset_export import read_snapshot
 
     spark = vec_stream.sparkSession
     centers = read_snapshot(spark, f"{index_path}/centroids").collect()
-    # literal (cells × dim) centroid matrix for the in-row argmax
     rows = ", ".join(
         f"struct({int(r['cell'])} AS cell, array({', '.join(f'CAST({x} AS DOUBLE)' for x in r['center'])}) AS c)"
         for r in sorted(centers, key=lambda r: r["cell"])
     )
-    # probe cells = top-IVF_PROBES centroid dots, ties to the LOWEST
-    # cell id — the exact ordering the batch serve path's window uses
-    # (orderBy cdot desc, cell asc); array_sort comparator + slice is
-    # the stream-safe spelling of that rank
-    from hive_gateway_spark.operators.similarity import IVF_PROBES
-
     probe = (
         f"transform(slice(array_sort(transform(array({rows}), "
-        "s -> struct(s.cell AS cell, "
-        "aggregate(zip_with(v, s.c, (x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (a2, z) -> a2 + z) AS d)), "
+        f"s -> struct(s.cell AS cell, {cdot_sql('v', 's.c')} AS d)), "
         "(l, r) -> CASE WHEN l.d > r.d THEN -1 WHEN l.d < r.d THEN 1 "
         "WHEN l.cell < r.cell THEN -1 WHEN l.cell > r.cell THEN 1 "
         f"ELSE 0 END), 1, {IVF_PROBES}), s -> s.cell)"
@@ -1117,14 +1058,15 @@ def stream_embed_dedup_screen(
 
 
 def embed_screen_batch(spark, index_path: str, tau: float = 0.9):
-    """The GEMM spelling of the semantic ingest screen — a
-    foreachBatch-shaped scorer for HIGH arrival rates (the guidance
-    stream_embed_dedup_screen's SCALE.md row records): returns
+    """The semantic ingest screen for a foreachBatch sink: returns
     ``score(batch_df) -> DataFrame`` that screens ONE micro-batch of
-    (vec_id, embedding) arrivals against the persisted IVF index with
-    the batch serve path's vectorized int64-GEMM kernel instead of the
-    per-row higher-order dot (measured 14× on a 1M index — HOF array
-    folds are interpreted per element; the GEMM is BLAS).
+    (vec_id, embedding) arrivals against the persisted IVF index and
+    emits stream_embed_dedup_screen's rows — (vec_id, match_id,
+    cos_sim) at cos ≥ tau — with the batch serve path's int64-GEMM
+    kernel instead of the per-row higher-order dot. GEMM won at every
+    measured arrival count (SCALE.md "Semantic screen crossover"), so
+    every micro-batch takes it; an empty one emits the typed empty
+    frame.
 
     Usage::
 
@@ -1133,90 +1075,48 @@ def embed_screen_batch(spark, index_path: str, tau: float = 0.9):
             .foreachBatch(lambda df, _id: sink(score(df)))
             .start())
 
-    Contract: each micro-batch's arrival block is BOUNDED (an ingest
-    screen admits thousands of vectors per trigger, not a corpus) —
-    it is collected and broadcast exactly like the batch path's query
-    block. Arrivals are quantized THROUGH the engine expression
-    (vec_q), so emitted sims are bit-identical to the expression
-    screen's; probe-cell assignment uses the same float64 centroid
-    dots and (dot desc, cell asc) tie-break — numpy's summation order
-    can differ from codegen's only on exact dot ties. The same
+    The scan is q_sim_topk_ivf's (_probe_scan): _probe_cells ranks the
+    arrivals against the centroids with the batch serve path's
+    expression and window, so batch, stream and serve probe the same
+    cells, ties included, and only the probed cells' inverted-file
+    rows are read. Each micro-batch's arrival block is BOUNDED (an
+    ingest screen admits thousands of vectors per trigger, not a
+    corpus), so its probes are collected and broadcast like the batch
+    path's query block. Arrivals are quantized through vec_q and
+    scored by exact int64 dots and the shared cosine, so emitted sims
+    are bit-identical to the streaming transform's, and the same
     (vec_id, match_id) pair can emit up to min(assign, probes)
-    identical rows, as in the expression screen."""
+    identical rows, as there."""
     import numpy as np
     import pandas as pd
 
-    from hive_gateway_spark.functions.vectors import cos_div_np, vec_q
-    from hive_gateway_spark.operators.similarity import IVF_PROBES
+    from hive_gateway_spark.functions.vectors import cos_div_np, norm2_q, vec_q
+    from hive_gateway_spark.operators.similarity import _probe_scan
     from hive_gateway_spark.sources.dataset_export import read_snapshot
 
-    c_rows = sorted(
-        read_snapshot(spark, f"{index_path}/centroids").collect(),
-        key=lambda r: r["cell"],
+    # the tiny centroid table is read once, as a local relation: its
+    # broadcast per micro-batch then runs no job
+    centers = spark.createDataFrame(
+        read_snapshot(spark, f"{index_path}/centroids").select("cell", "center").toPandas(),
+        "cell int, center array<double>",
     )
-    cell_ids = np.asarray([int(r["cell"]) for r in c_rows], dtype=np.int64)
-    C = np.asarray([r["center"] for r in c_rows], dtype=np.float64)
-    inv = read_snapshot(spark, f"{index_path}/invfile").select(
-        "neighbor_id", "cell", "vb", "nb"
-    )
+    inv = read_snapshot(spark, f"{index_path}/invfile")
+    t = float(tau)
+
+    def hits(q, rows):
+        (qids, Q, qn), (ids, X, n2) = q, rows
+        sim = cos_div_np((Q @ X.T).astype(np.float64), qn[:, None] * n2[None, :])
+        qi, ni = np.nonzero((sim >= t) & (qids[:, None] != ids[None, :]))
+        return pd.DataFrame(
+            {"vec_id": qids[qi], "match_id": ids[ni], "cos_sim": sim[qi, ni]}
+        )
 
     def score(batch_df):
-        q_rows = (
-            batch_df.select("vec_id", vec_q("embedding").alias("v"))
-            .collect()  # bounded: one ingest micro-batch
-        )
-        if not q_rows:
-            return spark.createDataFrame(
-                [], "vec_id bigint, match_id bigint, cos_sim double"
-            )
-        qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-        Q = np.asarray([r["v"] for r in q_rows], dtype=np.int64)
-        qn = (Q.astype(np.float64) ** 2).sum(1)
-        # probe cells: float64 centroid dots, (dot desc, cell asc)
-        d = Q.astype(np.float64) @ C.T
-        order = np.lexsort((np.broadcast_to(cell_ids, d.shape), -d), axis=1)
-        probes = cell_ids[order[:, :IVF_PROBES]]
-        by_cell: dict[int, list] = {}
-        for qi in range(len(qids)):
-            for c in probes[qi]:
-                by_cell.setdefault(int(c), []).append(qi)
-        cell_q = {
-            c: (qids[ix], Q[ix], qn[ix]) for c, ix in by_cell.items()
-        }
-        bc = spark.sparkContext.broadcast(cell_q)
-        t = float(tau)
-
-        def gemm_threshold(batches):
-            cq = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for c, grp in pdf.groupby("cell"):
-                    block = cq.get(int(c))
-                    if block is None:
-                        continue
-                    ids_q, Qb, qnb = block
-                    ids = grp["neighbor_id"].to_numpy(np.int64)
-                    X = np.asarray(grp["vb"].tolist(), dtype=np.int64)
-                    nb = grp["nb"].to_numpy(np.float64)
-                    sim = cos_div_np(
-                        (Qb @ X.T).astype(np.float64), qnb[:, None] * nb[None, :]
-                    )
-                    hit = (sim >= t) & (ids_q[:, None] != ids[None, :])
-                    qi, ni = np.nonzero(hit)
-                    if len(qi) == 0:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": ids_q[qi],
-                            "match_id": ids[ni],
-                            "cos_sim": sim[qi, ni],
-                        }
-                    )
-
-        probed_cells = sorted(by_cell)
-        return inv.where(F.col("cell").isin(probed_cells)).mapInPandas(
-            gemm_threshold, "vec_id bigint, match_id bigint, cos_sim double"
+        arrivals = batch_df.select(
+            F.col("vec_id").alias("query_id"), vec_q("embedding").alias("vq")
+        ).withColumn("nq", norm2_q("vq"))
+        return _probe_scan(
+            arrivals, centers, inv, hits, "vec_id bigint, match_id bigint, cos_sim double"
         )
 
     return score

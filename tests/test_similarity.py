@@ -1230,13 +1230,127 @@ def test_cos_topk_scores_zero_norm_vectors_zero():
     assert list(five["sim"]) == [1.0, 7 / 25, 0.0]
 
 
+def test_pad_pairs_topk_matches_bruteforce():
+    """The ragged-pair adapter (_pad_pairs) feeding _local_topk equals
+    a brute-force sorted() per query on random (query, neighbor, sim)
+    pair batches with float ties, repeated neighbors, k larger than a
+    query's list, and empty batches. Rows come query-major, queries
+    ascending, each in (sim desc, neighbor_id asc) order."""
+    import numpy as np
+
+    from hive_gateway_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(17)
+    for _ in range(300):
+        n, k = int(rng.integers(0, 80)), int(rng.integers(1, 9))
+        qid = (rng.integers(0, 7, n) * 100).astype(np.int64)
+        nid = rng.integers(0, 30, n).astype(np.int64)
+        s = rng.integers(-4, 5, n) / 4.0
+        got = sim._local_topk(*sim._pad_pairs(qid, nid, s), k)
+        want = []
+        for q in sorted(set(qid.tolist())):
+            best = sorted((-s[i], nid[i]) for i in range(n) if qid[i] == q)
+            want += [(q, b, -neg) for neg, b in best[:k]]
+        assert list(zip(got["query_id"], got["neighbor_id"], got["sim"])) == want
+
+
+def test_probe_ties_pick_lowest_cell_everywhere(spark, tmp_path):
+    """One probe rule for batch, stream and serve: on a hand-written
+    index whose centroids repeat under several cell ids (exact
+    centroid-dot ties, some straddling the IVF_PROBES cut), the batch
+    probe (_probe_cells), the foreachBatch screen (embed_screen_batch)
+    and the stream's in-row probe (stream_embed_dedup_screen) all pick
+    the top IVF_PROBES cells by (dot desc, cell asc) — the lowest cell
+    id wins every tie. Each cell's inverted file holds one copy of
+    every arrival (neighbor_id = 100·arrival + cell), so a screen's
+    matches name exactly the cells it probed."""
+    from pyspark.sql import functions as F
+
+    from hive_gateway_spark.functions.vectors import vec_q
+    from hive_gateway_spark.operators import similarity as sim
+    from hive_gateway_spark.sources.dataset_export import read_snapshot, write_dataset
+    from hive_gateway_spark.streaming.ops import (
+        embed_screen_batch,
+        stream_embed_dedup_screen,
+    )
+
+    e = [[1.0 if i == j else 0.0 for i in range(4)] for j in range(4)]
+    # cells 3 = cell 1 and 5 = 6 = cell 2: exact dot ties; written in
+    # descending cell order so file order cannot break them
+    centers = {0: e[0], 1: e[1], 2: e[2], 3: e[1], 4: e[3], 5: e[2], 6: e[2]}
+    arrivals = {
+        1: [0.8, 0.4, 0.2, 0.1],  # cells 1 = 3 inside the cut
+        2: [0.4, 0.8, 0.2, 0.1],
+        3: [0.8, 0.1, 0.4, 0.2],  # 2 = 5 = 6 for the last two probes
+        4: [0.1, 0.8, 0.4, 0.2],  # 2 = 5 = 6 for the last probe
+    }
+    q = {a: [round(x * 1_000_000) for x in v] for a, v in arrivals.items()}
+    want = {
+        a: sorted(
+            sorted(centers, key=lambda c: (-sum(x * y for x, y in zip(v, centers[c])), c))[
+                : sim.IVF_PROBES
+            ]
+        )
+        for a, v in q.items()
+    }
+    assert want[3] == [0, 2, 5] and want[4] == [1, 2, 3]
+
+    idx = str(tmp_path / "tie_index")
+    s = spark.newSession()
+    write_dataset(
+        s.createDataFrame(
+            sorted(centers.items(), reverse=True), "cell int, center array<double>"
+        ),
+        f"{idx}/centroids",
+    )
+    write_dataset(
+        s.createDataFrame(
+            [
+                (100 * a + c, c, v, float(sum(x * x for x in v)))
+                for a, v in q.items()
+                for c in centers
+            ],
+            "neighbor_id bigint, cell int, vb array<bigint>, nb double",
+        ),
+        f"{idx}/invfile",
+        partition_by=["cell"],
+    )
+    batch = s.createDataFrame(list(arrivals.items()), "vec_id bigint, embedding array<double>")
+
+    def cells_of(pairs):
+        got: dict[int, list] = {}
+        for a, m in pairs:
+            if m // 100 == a:
+                got.setdefault(a, []).append(m % 100)
+        return {a: sorted(set(c)) for a, c in got.items()}
+
+    probed = sim._probe_cells(
+        batch.select(F.col("vec_id").alias("query_id"), vec_q("embedding").alias("vq")),
+        read_snapshot(s, f"{idx}/centroids"),
+    )
+    assert cells_of(
+        (r["query_id"], 100 * r["query_id"] + c) for c, rows in probed.items() for r in rows
+    ) == want
+    for screen in (
+        embed_screen_batch(s, idx, tau=0.9999)(batch),
+        stream_embed_dedup_screen(batch, idx, tau=0.9999),
+    ):
+        assert cells_of((r["vec_id"], r["match_id"]) for r in screen.collect()) == want
+
+
 def test_one_topk_path():
     """Regrowth guard: similarity.py writes the query-block filter and
     the query_id rank window once each, has no per-query top-k loop,
     and no kernel or oracle spells its own cosine denominator — the
-    numpy cosine lives only in functions/vectors.py (cos_div_np)."""
+    numpy cosine lives only in functions/vectors.py (cos_div_np). One
+    local top-k and one probe rule across similarity.py and
+    streaming/ops.py: np.lexsort only inside _local_topk and
+    _adc_local_topk, no pandas sort_values/head top-k, the centroid dot
+    spelled once (cdot_sql), and no arrival-count screen router."""
+    import ast
     import pathlib
 
+    import hive_gateway_spark
     from hive_gateway_spark.functions import vectors
     from hive_gateway_spark.operators import similarity as sim
     from hive_gateway_spark.streaming import ops
@@ -1249,6 +1363,29 @@ def test_one_topk_path():
     for mod in (sim, ops):
         assert "np.sqrt(" not in pathlib.Path(mod.__file__).read_text(), mod
     assert pathlib.Path(vectors.__file__).read_text().count("np.sqrt(") == 1
+
+    lexsorts = set()
+    for mod in (sim, ops):
+        text = pathlib.Path(mod.__file__).read_text()
+        fns = [n for n in ast.parse(text).body if isinstance(n, ast.FunctionDef)]
+        in_fns = 0
+        for fn in fns:
+            hits = ast.get_source_segment(text, fn).count("np.lexsort(")
+            in_fns += hits
+            if hits:
+                lexsorts.add(fn.name)
+        assert in_fns == text.count("np.lexsort("), mod
+    assert lexsorts == {"_local_topk", "_adc_local_topk"}
+    assert "sort_values(" not in src and ".head(" not in src
+
+    pkg = pathlib.Path(hive_gateway_spark.__file__).parent
+    cdot = {}
+    for f in pkg.rglob("*.py"):
+        text = f.read_text()
+        assert "gemm_min_arrivals" not in text, f
+        if "CAST(x AS DOUBLE) * y" in text:
+            cdot[f.name] = text.count("CAST(x AS DOUBLE) * y")
+    assert cdot == {"vectors.py": 1}
 
 
 def _zero_norm_corpus(root, donor: str) -> str:

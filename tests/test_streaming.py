@@ -1256,13 +1256,12 @@ def test_scd2_dimension_sink_migrates_pre_run_seq_table(spark, tmp_path):
     assert "run_seq" in v2.columns and v2.count() == legacy.count()
 
 
-def test_embed_screen_foreach_batch_routes_by_arrival_count(spark, tmp_path):
-    """The config-gated unified screen (VERDICT r13 task #7): one
-    callable serves every arrival rate — batches at/above the
-    configured threshold take the GEMM scorer, smaller ones the
-    expression plan — and BOTH routes emit the same screened pairs
-    (the spellings are equivalence-tested above; this pins the
-    routing itself plus its session-conf override)."""
+def test_embed_screen_batch_empty_and_single_arrival(spark, tmp_path):
+    """embed_screen_batch is the foreachBatch screen at every arrival
+    count, down to the smallest micro-batches: a 0-arrival batch emits
+    the typed empty frame, and a 1-arrival batch emits exactly the rows
+    (duplicates included) of stream_embed_dedup_screen applied to the
+    same static frame."""
     import os
 
     import numpy as np
@@ -1270,7 +1269,10 @@ def test_embed_screen_foreach_batch_routes_by_arrival_count(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from hive_gateway_spark.operators import similarity as sim
-    from hive_gateway_spark.streaming.ops import embed_screen_foreach_batch
+    from hive_gateway_spark.streaming.ops import (
+        embed_screen_batch,
+        stream_embed_dedup_screen,
+    )
 
     rng = np.random.default_rng(31)
     dim, n_clusters, n = 16, 8, 600
@@ -1278,25 +1280,20 @@ def test_embed_screen_foreach_batch_routes_by_arrival_count(spark, tmp_path):
     label = rng.integers(0, n_clusters, n)
     vecs = centers[label] + rng.normal(0, 0.35, (n, dim))
 
-    def write_emb(dirpath, ids, vs, labels):
-        os.makedirs(dirpath)
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array(ids, pa.int64()),
-                    "embedding": pa.array(
-                        list(vs.astype(np.float32)), pa.list_(pa.float32())
-                    ),
-                    "label": pa.array(
-                        np.asarray(labels, dtype=np.int32), pa.int32()
-                    ),
-                }
-            ),
-            os.path.join(dirpath, "part-00.parquet"),
-        )
-
-    sfd = str(tmp_path / "sf_route")
-    write_emb(os.path.join(sfd, "embeddings.parquet"), np.arange(n), vecs, label)
+    sfd = str(tmp_path / "sf_small")
+    os.makedirs(os.path.join(sfd, "embeddings.parquet"))
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(np.arange(n), pa.int64()),
+                "embedding": pa.array(
+                    list(vecs.astype(np.float32)), pa.list_(pa.float32())
+                ),
+                "label": pa.array(label.astype(np.int32), pa.int32()),
+            }
+        ),
+        os.path.join(sfd, "embeddings.parquet", "part-00.parquet"),
+    )
     for name in (
         "region nation customer supplier part orders lineitem events documents"
     ).split():
@@ -1304,48 +1301,28 @@ def test_embed_screen_foreach_batch_routes_by_arrival_count(spark, tmp_path):
             os.path.join("/root/testdata/sf0.001", f"{name}.parquet"),
             os.path.join(sfd, f"{name}.parquet"),
         )
-    idx = str(tmp_path / "route_index")
+    idx = str(tmp_path / "small_index")
     sim.persist_ivf_index(spark.newSession(), sfd, idx)
 
-    copies_src = [3, 77, 421]
-    arrive_ids = np.asarray(
-        list(range(70_000, 70_003)) + list(range(80_000, 80_005))
+    s = spark.newSession()
+    score = embed_screen_batch(s, idx, tau=0.95)
+    schema = "vec_id bigint, embedding array<float>"
+    empty = score(s.createDataFrame([], schema))
+    assert empty.schema.simpleString() == (
+        "struct<vec_id:bigint,match_id:bigint,cos_sim:double>"
     )
-    arrive_vecs = np.vstack(
-        [vecs[copies_src] * (1 + 1e-3), rng.normal(0, 1, (5, dim)) * 3]
-    )
-    adir = str(tmp_path / "route_arrivals")
-    write_emb(
-        os.path.join(adir, "embeddings.parquet"),
-        arrive_ids,
-        arrive_vecs,
-        np.zeros(len(arrive_ids)),
-    )
+    assert empty.collect() == []
 
-    def pairs(df):
-        return {
-            (int(r["vec_id"]), int(r["match_id"]), float(r["cos_sim"]))
-            for r in df.collect()
-        }
-
-    # threshold above the batch size → expression route
-    s1 = spark.newSession()
-    s1.conf.set("hive_gateway.embed_screen.gemm_min_arrivals", "1000")
-    expr_out = pairs(
-        embed_screen_foreach_batch(s1, idx, tau=0.95)(
-            s1.read.parquet(os.path.join(adir, "embeddings.parquet"))
-        )
+    one = s.createDataFrame(
+        [(70_000, [float(x) for x in (vecs[77] * (1 + 1e-3)).astype(np.float32)])],
+        schema,
     )
-    # threshold below the batch size → GEMM route
-    s2 = spark.newSession()
-    s2.conf.set("hive_gateway.embed_screen.gemm_min_arrivals", "2")
-    gemm_out = pairs(
-        embed_screen_foreach_batch(s2, idx, tau=0.95)(
-            s2.read.parquet(os.path.join(adir, "embeddings.parquet"))
-        )
+    got = sorted(tuple(r) for r in score(one).collect())
+    want = sorted(
+        tuple(r) for r in stream_embed_dedup_screen(one, idx, tau=0.95).collect()
     )
-    assert len(expr_out) > 0
-    assert expr_out == gemm_out
+    assert got == want
+    assert (70_000, 77) in {(v, m) for v, m, _ in got}
 
 
 def test_stream_token_fertility_equals_batch(spark, sf_dir):
