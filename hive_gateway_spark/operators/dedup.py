@@ -11,7 +11,7 @@ both are here with deterministic seeds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from hive_gateway_spark.registry import query
@@ -26,7 +26,12 @@ SHINGLE_N = 3
 JACCARD_TAU = 0.5  # compare as 2*shared >= union — integer, exact
 
 def shingle_expr(n: int) -> str:
-    """The width-``n`` word-shingle transform over a ``words`` column.
+    """The width-``n`` word-shingle transform over a ``words`` column —
+    the in-row higher-order-function spelling. Only streaming frames use
+    it (shingle_hashes' stream branch and stream_minhash_dedup's in-row
+    signature): a window function does not run on a stream, while a
+    per-row array transform does. Batch frames take the window spelling
+    of _shingle_rows instead, which whole-stage-codegens.
 
     The fixture/oracle width is {SHINGLE_N} (3-grams keep the tiny test
     corpora non-vacuous), but 3-gram shingles of a small zipf vocabulary
@@ -43,50 +48,62 @@ def shingle_expr(n: int) -> str:
 _SHINGLE_EXPR = shingle_expr(SHINGLE_N)
 
 
-def _shingle_hashes(t) -> DataFrame:
-    """doc_id → (n distinct shingles, exploded xxhash64 shingle hash) —
-    the shared input of every Jaccard-ish operator.
+def _shingle_rows(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """(doc_id, shingle): one row per width-``n`` word window of a batch
+    frame's ``text`` — the start of the xxhash64 shingle set
+    (shingle_hashes) and of the portable MinHash fingerprint
+    (_minhash_sig_build). Rows are not distinct; each caller dedups on
+    its own key.
 
-    Spelled as posexplode + window LEADs, NOT the
+    Spelled as posexplode + window LEADs, NOT shingle_expr's
     `transform(sequence(...), i -> concat_ws(' ', slice(...)))`
     higher-order array expression: HOF lambdas evaluate INTERPRETED
     per element, and on the 2.6M-shingle sf1 staging the array
     spelling measured 14.6-33.6 s where this whole-stage-codegen'd
     window spelling measured 1.05-5.4 s same-process interleaved (the
-    spread is host co-tenancy; the ratio is the signal). Exchange
-    count is unchanged: _shingles_checkpointed pre-partitions the raw
-    docs by doc_id, which the lead window, the per-(doc_id, h)
-    distinct (subset-compatible clustering → local aggregation, no
-    re-shuffle) and the per-doc size window ALL reuse.
-
-    The distinct and the set size run on the HASH domain (a collision
-    can only merge two shared-counts downstream — the ~n²/2⁶⁵ caveat
-    q_dedup_ngram documents); the window guard (`lead(w, N−1) IS NOT
-    NULL`) reproduces the size(words) ≥ N filter row-for-row."""
-    docs = t["documents"]
+    spread is host co-tenancy; the ratio is the signal). The window
+    guard (`lead(w, n−1) IS NOT NULL`) reproduces the size(words) ≥ n
+    filter row-for-row."""
     w = Window.partitionBy("doc_id").orderBy("pos")
     words = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w0")
     )
-    parts = [F.col("w0")] + [
-        F.lead("w0", i).over(w) for i in range(1, SHINGLE_N)
-    ]
-    sh = (
+    parts = [F.col("w0")] + [F.lead("w0", i).over(w) for i in range(1, n)]
+    return (
         words.select(
             "doc_id",
-            F.concat_ws(" ", *parts).alias("s"),
+            F.concat_ws(" ", *parts).alias("shingle"),
             parts[-1].alias("tail"),
         )
         .filter(F.col("tail").isNotNull())
-        .select("doc_id", F.xxhash64("s").alias("h"))
-        .distinct()
-    )
-    return sh.select(
-        "doc_id",
-        F.count("*").over(Window.partitionBy("doc_id")).alias("n"),
-        "h",
+        .select("doc_id", "shingle")
     )
 
+
+def shingle_hashes(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """(doc_id, h): the distinct xxhash64 width-``n`` word-shingle
+    hashes of each doc — the input of every Jaccard-ish operator and of
+    the contamination meet, batch and stream.
+
+    The spelling follows the frame. A batch frame shingles through
+    _shingle_rows' codegen'd window, then dedups (doc_id, h) — the
+    distinct runs on the HASH domain (a collision can only merge two
+    shared-counts downstream, the ~n²/2⁶⁵ caveat q_dedup_ngram
+    documents). A streaming frame cannot run a window, so it takes
+    shingle_expr's in-row transform and array_distinct, which needs no
+    cross-row state. Both yield the same set per doc_id (tested)."""
+    if docs.isStreaming:
+        hs = f"array_distinct(transform({shingle_expr(n)}, s -> xxhash64(s)))"
+        return (
+            docs.withColumn("words", F.split("text", " "))
+            .filter(F.size("words") >= n)
+            .select("doc_id", F.explode(F.expr(hs)).alias("h"))
+        )
+    return (
+        _shingle_rows(docs, n)
+        .select("doc_id", F.xxhash64("shingle").alias("h"))
+        .distinct()
+    )
 
 
 #: Hot-shingle document-frequency cap (VERDICT r01 "What's wrong" #5):
@@ -146,7 +163,7 @@ def _shingles_build(t) -> DataFrame:
     #
     # (2) AFTER, keyed on h — the staging table's bucketing: the
     # hot-path shuffles that follow (pair join, DF histogram,
-    # contamination broadcast) read evenly-spread input, and the
+    # contamination meet) read evenly-spread input, and the
     # checkpoint preserves the clustering for downstream plans.
     # ~300 docs (≈15k shingles) per partition, capped by the
     # session's shuffle width: sf0.01 stays 1-2 partitions (task
@@ -157,13 +174,18 @@ def _shingles_build(t) -> DataFrame:
         t["documents"].sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     npart = max(1, min(cap, t["documents"].count() // 300))
-    src = dict(t)
-    src["documents"] = (
-        t["documents"].select("doc_id", "text").repartition(npart, "doc_id")
-    )
+    # The set size n is a window over the same doc_id clustering: the
+    # lead window, the per-(doc_id, h) distinct (subset-compatible
+    # clustering → local aggregation, no re-shuffle) and this count all
+    # reuse the raw-docs repartition, so no exchange is added.
+    raw = t["documents"].select("doc_id", "text").repartition(npart, "doc_id")
     return (
-        _shingle_hashes(src)
-        .select("doc_id", "n", "h")
+        shingle_hashes(raw)
+        .select(
+            "doc_id",
+            F.count("*").over(Window.partitionBy("doc_id")).alias("n"),
+            "h",
+        )
         .repartition(npart, "h")
         .localCheckpoint()
     )
@@ -214,9 +236,9 @@ def _jaccard_pairs_build(t, df_cap: int, stats: dict | None) -> DataFrame:
     # checkpoint the shingle transform re-executes per consumer (~6×).
     # At cluster scale this is the standard stage-once-reuse pattern
     # (a staging table on a real cluster; executor-local blocks here).
-    # No distinct(): _shingle_hashes array_distincts inside the row, so
-    # (doc_id, h) is already unique — a distinct here is a wasted full
-    # shuffle (verified equal counts at sf0.1).
+    # No distinct(): shingle_hashes already dedups (doc_id, h) — a
+    # distinct here is a wasted full shuffle (verified equal counts at
+    # sf0.1).
     #
     # Design note: the DF histogram + broadcast anti-join costs one
     # extra (tiny: map-side combine → distinct shingles) shuffle vs
@@ -264,7 +286,7 @@ def _jaccard_pairs_build(t, df_cap: int, stats: dict | None) -> DataFrame:
 
 
 def _duck_shingles(src: str = "documents") -> str:
-    """DuckDB twin of _shingle_hashes' shingling (LEAD window 3-grams)
+    """DuckDB twin of _shingle_rows' shingling (LEAD window 3-grams)
     over ``src`` — parametrized so oracles that plant extra rows (e.g.
     q_contamination's cross-benchmark near-dups) shingle an augmented
     corpus CTE with the exact same logic."""
@@ -890,6 +912,44 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAM_BENCH_MOD = 97
 CONTAM_MIN_SHARED = 5
 
+
+def is_benchmark() -> Column:
+    """The benchmark slice of the contamination rule, over ``doc_id``."""
+    return F.col("doc_id") % CONTAM_BENCH_MOD == 0
+
+
+def contamination_pairs(train_sh: DataFrame, bench_sh: DataFrame) -> DataFrame:
+    """(bench_id, train_id, shared_ngrams): every (benchmark doc,
+    training doc) pair sharing ≥ CONTAM_MIN_SHARED shingle hashes — the
+    one contamination meet of q_contamination, q_curation_v2, the
+    pipeline's decontaminate stage and both streaming twins.
+
+    Both inputs are (doc_id, h) shingle sets (shingle_hashes or the
+    checkpointed staging). The training side keeps its non-benchmark
+    docs and the benchmark side its benchmark slice, so one corpus
+    frame may feed both; a bench side that is already the slice keeps
+    no redundant filter, because the optimizer prunes a predicate its
+    child's constraints already imply.
+
+    The join strategy is Spark's, from the inputs' size statistics: at
+    the fixture scales q_curation_v2 and both streaming twins plan a
+    broadcast of the benchmark slice, and a slice over
+    spark.sql.autoBroadcastJoinThreshold does not broadcast. A caller
+    that must not broadcast hints its training side ``shuffle_hash``,
+    as q_contamination and CurationPipeline.decontaminate do; the hint
+    reaches the join through the slice filter."""
+    train = train_sh.filter(~is_benchmark()).alias("tr")
+    bench = bench_sh.filter(is_benchmark()).alias("b")
+    return (
+        train.join(bench, "h")
+        .groupBy(
+            F.col("b.doc_id").alias("bench_id"), F.col("tr.doc_id").alias("train_id")
+        )
+        .agg(F.count("*").alias("shared_ngrams"))
+        .filter(F.col("shared_ngrams") >= CONTAM_MIN_SHARED)
+    )
+
+
 #: Planted contamination evidence (VERDICT r03 "What's wrong" #2): the
 #: fixture corpus happens to contain no cross-%97 near-dup pair at
 #: sf0.01, so the green driver row was vacuous (0 rows vs 0 rows — a
@@ -909,7 +969,7 @@ _CONTAM_VALUES = ", ".join(f"({i}, '{s}')" for i, s in _CONTAM_ROWS)
 
 #: Precomputed xxhash64 shingle hashes of _CONTAM_ROWS (VERDICT r04
 #: "What's wrong" #2): shingling the 4-row planted relation through
-#: _shingle_hashes per run inserted a createDataFrame+higher-order-
+#: shingle_hashes per run inserted a createDataFrame+higher-order-
 #: transform plan into both sides of the broadcast join and cost 4.4×
 #: wall-time. The planted side is tiny and FIXED, so its hashes are
 #: baked as literals — a 32-row LocalRelation with no transform plan.
@@ -960,27 +1020,26 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination check — the train/eval leakage audit every
     LLM training pipeline needs: flag training documents sharing ≥K
     word-n-gram hashes with any benchmark document (here the benchmark
-    set is the deterministic doc_id % CONTAM_BENCH_MOD == 0 slice plus
+    set is the deterministic is_benchmark (doc_id % 97 == 0) slice plus
     planted known-contaminated pairs; in production it's the eval
     suites).
 
-    Scale shape: the benchmark side is a small fraction (1/97) of the
-    corpus, so its shingle set broadcasts and the training corpus never
-    shuffles — a broadcast hash join per shingle hash + one count
-    aggregation. The planted evidence rides in as a 32-row LocalRelation
-    of PRECOMPUTED (doc_id, xxhash64) literals (_CONTAM_HASHES) unioned
-    AFTER the shared checkpointed staging — no per-run shingle transform
-    plan (VERDICT r04 #2), and the session-wide shingle cache stays
-    pristine for the other Jaccard-family queries."""
+    Scale shape: contamination_pairs' meet on the 8-byte shingle hash
+    + one count aggregation; the remaining warm cost is ~5 stages ×
+    local-mode stage overhead, not data volume. The planted evidence is
+    PRECOMPUTED (doc_id, xxhash64) literals (_CONTAM_HASHES), passed to
+    createDataFrame as a Python list — planned as a Scan ExistingRDD —
+    and unioned AFTER the shared checkpointed staging: no per-run
+    shingle transform plan (VERDICT r04 #2), and the session-wide
+    shingle cache stays pristine for the other Jaccard-family
+    queries."""
     t = load_tables(spark, sf_dir)
     sh_planted = spark.createDataFrame(_CONTAM_HASHES, "doc_id bigint, h bigint")
-    sh = _shingles_checkpointed(t).select("doc_id", "h")
-    # Union the 32-row planted LocalRelation into each FILTERED side
-    # instead of the staging scan: a UnionExec over the 260k-row
-    # checkpoint forfeits the fast cached-scan path (measured ~3.7×
-    # slower at sf0.1); the filtered unions touch only the small
-    # branches. Semantics identical — filter distributes over union.
-    #
+    # The slice filters push below the Union into each branch, so the
+    # union touches only the filtered rows: a UnionExec over the
+    # 260k-row checkpoint itself forfeits the fast cached-scan path
+    # (measured ~3.7× slower at sf0.1).
+    sh = _shingles_checkpointed(t).select("doc_id", "h").unionByName(sh_planted)
     # The benchmark side is itself checkpoint-cached per session (the
     # eval-suite shingle table of a production pipeline — built once,
     # screened against forever): drops one filter+union job from every
@@ -988,33 +1047,14 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = _PAIRS_CACHE.get_or_build(
         spark,
         "contam_bench",
-        lambda: (
-            sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0)
-            .unionByName(sh_planted.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0))
-            .select(F.col("doc_id").alias("bench_id"), "h")
-            .localCheckpoint()
-        ),
+        lambda: sh.filter(is_benchmark()).localCheckpoint(),
         plan=t["documents"],
     )
-    train = (
-        sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .unionByName(sh_planted.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0))
-        .select(F.col("doc_id").alias("train_id"), "h")
-    )
     # shuffle_hash, not broadcast: at local[32]/sf0.1 the broadcast
-    # collect+rebuild costs more than shuffling the staged rows
-    # (measured 1.03 s vs 0.85 s warm), and at 100 TB the "benchmark"
-    # side is whatever the eval suites are — if they outgrow the
-    # broadcast threshold the shuffle-hash plan is the one that still
-    # works. The remaining warm cost is ~5 stages × local-mode stage
-    # overhead, not data volume.
-    return (
-        train.hint("shuffle_hash")
-        .join(bench, "h")
-        .groupBy("bench_id", "train_id")
-        .agg(F.count("*").alias("shared_ngrams"))
-        .filter(F.col("shared_ngrams") >= CONTAM_MIN_SHARED)
-    )
+    # collect+rebuild cost more than shuffling the staged rows (measured
+    # 1.03 s vs 0.85 s warm), and at 100 TB the benchmark side is
+    # whatever the eval suites are.
+    return contamination_pairs(sh.hint("shuffle_hash"), bench)
 
 
 #: MinHash signature geometry for the SQL-verifiable signature operator:
@@ -1095,34 +1135,17 @@ def _minhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sig_build(t) -> DataFrame:
-    # window-lead shingling, same spelling (and same reasons) as
-    # _shingle_hashes: the HOF array construction ran interpreted and
-    # measured 6.9 s at sf1 where this codegen form measures 2.2 s
-    # (signatures verified identical); the raw-docs repartition
-    # parallelizes the transform and the distinct + per-doc aggregate
-    # reuse its clustering
+    # _shingle_rows' window spelling: the HOF array construction ran
+    # interpreted and measured 6.9 s at sf1 where the codegen form
+    # measures 2.2 s (signatures verified identical); the raw-docs
+    # repartition parallelizes the transform and the distinct + per-doc
+    # aggregate reuse its clustering
     cap = int(
         t["documents"].sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     npart = max(1, min(cap, t["documents"].count() // 300))
     raw = t["documents"].select("doc_id", "text").repartition(npart, "doc_id")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    words = raw.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w0")
-    )
-    parts = [F.col("w0")] + [
-        F.lead("w0", i).over(w) for i in range(1, SHINGLE_N)
-    ]
-    shingles = (
-        words.select(
-            "doc_id",
-            F.concat_ws(" ", *parts).alias("shingle"),
-            parts[-1].alias("tail"),
-        )
-        .filter(F.col("tail").isNotNull())
-        .select("doc_id", "shingle")
-        .distinct()
-    )
+    shingles = _shingle_rows(raw).distinct()
     # portable polynomial fingerprint: (Σ (ord(char_i)·(i·131+7)) % p) % p
     # — modding each addition step equals modding the final sum
     hv = F.expr(
@@ -1343,9 +1366,9 @@ def q_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the gates are narrow scan-side filters; dedup is one
     shuffle; near-dup and contamination reuse the SAME cached shingle
-    staging (one materialization feeds both); the benchmark side of the
-    contamination join broadcasts. Nothing new shuffles beyond
-    q_training_pipeline."""
+    staging (one materialization feeds both); at the fixture scales
+    Spark's size statistics make contamination_pairs' meet broadcast
+    the benchmark side."""
     t = load_tables(spark, sf_dir)
     gated = curation_gates(t["documents"])
     keepers = gated.groupBy("norm_text").agg(F.min("doc_id").alias("doc_id"))
@@ -1353,17 +1376,8 @@ def q_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     near_victims = _jaccard_pairs(t).select(F.col("doc_b").alias("doc_id")).distinct()
     near_kept = exact_kept.join(near_victims, "doc_id", "left_anti")
     sh = _shingles_checkpointed(t).select("doc_id", "h")
-    bench = sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0).select(
-        F.col("doc_id").alias("bench_id"), "h"
-    )
     contam = (
-        sh.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .join(F.broadcast(bench), "h")
-        .groupBy("doc_id", "bench_id")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= CONTAM_MIN_SHARED)
-        .select("doc_id")
-        .distinct()
+        contamination_pairs(sh, sh).select(F.col("train_id").alias("doc_id")).distinct()
     )
     clean = near_kept.join(contam, "doc_id", "left_anti")
     subset = F.when(

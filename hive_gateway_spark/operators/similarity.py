@@ -454,8 +454,20 @@ def _ivf_index(spark: SparkSession, t, e) -> tuple:
     centers_rows, inv_file = _IVF_CACHE.get_or_build(
         spark, None, lambda: _ivf_build(spark, t, e), plan=emb
     )
-    centers = spark.createDataFrame(centers_rows, "cell int, center array<double>")
-    return centers, inv_file
+    return _centers_frame(spark, centers_rows), inv_file
+
+
+def _centers_frame(spark: SparkSession, rows) -> DataFrame:
+    """The IVF centroid table (cell, center) from driver-side (cell,
+    center) rows, built from pandas: with Arrow enabled it plans as a
+    LocalTableScan whose rows live in the plan. A Python list plans
+    Scan ExistingRDD over a parallelized, pickled Python collection,
+    which each broadcast into a probe re-reads and unpickles (a
+    broadcast cross-join collect measured 0.40 s that way vs 0.18 s,
+    local[2]; both submit the same jobs)."""
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["cell", "center"]), "cell int, center array<double>"
+    )
 
 
 def _ivf_build(spark: SparkSession, t, e) -> tuple:
@@ -509,8 +521,7 @@ def _ivf_build(spark: SparkSession, t, e) -> tuple:
     centers_rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())
     ]
-    centers = spark.createDataFrame(centers_rows, "cell int, center array<double>")
-    return centers_rows, _assign_cells(e, centers).localCheckpoint()
+    return centers_rows, _assign_cells(e, _centers_frame(spark, centers_rows)).localCheckpoint()
 
 
 def _assign_cells(e, centers) -> DataFrame:

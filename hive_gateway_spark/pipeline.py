@@ -240,19 +240,16 @@ class CurationPipeline:
 
     def decontaminate(
         self,
-        bench_mod: int | None = None,
-        min_shared: int | None = None,
         bench_corpus: DataFrame | None = None,
         shingle_n: int | None = None,
     ) -> "CurationPipeline":
-        """Drop the benchmark slice (doc_id % bench_mod == 0) as
-        benchmark AND every training doc sharing >= min_shared
-        word-shingles with it as contaminated (q_contamination's
-        machinery). Defaults come from dedup's
-        CONTAM_BENCH_MOD / CONTAM_MIN_SHARED — hardcoded copies here
-        would silently desync the facade from the registered pipeline
-        if the constants moved. The shingle meet is a shuffle-hash
-        join on the 8-byte hash — never a corpus broadcast.
+        """Drop the benchmark slice (dedup.is_benchmark) as benchmark
+        AND every training doc sharing >= CONTAM_MIN_SHARED
+        word-shingles with it as contaminated — dedup.contamination_pairs,
+        the meet q_contamination runs, so the facade cannot desync from
+        the registered queries. The training side is hinted
+        ``shuffle_hash``, so the meet on the 8-byte hash never
+        broadcasts the benchmark side, whose size the eval suites set.
 
         ``bench_corpus``: the frame the BENCHMARK shingle set is built
         from. Benchmark suites exist independently of quality gates, so
@@ -266,54 +263,28 @@ class CurationPipeline:
         corpus flagged at n=3 — so production screens should pass the
         8–13 range SCALE.md documents (the width published
         decontamination setups use)."""
+        from hive_gateway_spark.operators.dedup import (
+            SHINGLE_N,
+            contamination_pairs,
+            is_benchmark,
+            shingle_hashes,
+        )
+
+        n = SHINGLE_N if shingle_n is None else shingle_n
 
         def stage(docs: DataFrame) -> DataFrame:
-            from hive_gateway_spark.operators.dedup import (
-                CONTAM_BENCH_MOD,
-                CONTAM_MIN_SHARED,
-                SHINGLE_N,
-                shingle_expr,
-            )
-
-            mod = CONTAM_BENCH_MOD if bench_mod is None else bench_mod
-            shared = CONTAM_MIN_SHARED if min_shared is None else min_shared
-            n = SHINGLE_N if shingle_n is None else shingle_n
-            hs = f"array_distinct(transform({shingle_expr(n)}, s -> xxhash64(s)))"
-
-            def shingles(frame: DataFrame) -> DataFrame:
-                return (
-                    frame.withColumn("words", F.split("text", " "))
-                    .filter(F.size("words") >= n)
-                    .select("doc_id", F.explode(F.expr(hs)).alias("h"))
-                )
-
             src = self._input() if bench_corpus is None else bench_corpus
-            sh = shingles(docs)
-            bench_src = sh if src is docs else shingles(src)
-            bench = bench_src.filter(F.col("doc_id") % mod == 0).select(
-                F.col("doc_id").alias("bench_id"), "h"
-            )
-            train = sh.filter(F.col("doc_id") % mod != 0).select(
-                F.col("doc_id").alias("train_id"), "h"
-            )
+            sh = shingle_hashes(docs, n)
+            bench = sh if src is docs else shingle_hashes(src, n)
             contaminated = (
-                train.hint("shuffle_hash")
-                .join(bench, "h")
-                .groupBy("bench_id", "train_id")
-                .agg(F.count("*").alias("sn"))
-                .filter(F.col("sn") >= shared)
+                contamination_pairs(sh.hint("shuffle_hash"), bench)
                 .select(F.col("train_id").alias("doc_id"))
                 .distinct()
             )
-            return docs.filter(F.col("doc_id") % mod != 0).join(
-                contaminated, "doc_id", "left_anti"
-            )
+            return docs.filter(~is_benchmark()).join(contaminated, "doc_id", "left_anti")
 
         def benchmark() -> Column:
-            from hive_gateway_spark.operators.dedup import CONTAM_BENCH_MOD
-
-            mod = CONTAM_BENCH_MOD if bench_mod is None else bench_mod
-            return F.when(F.col("doc_id") % mod == 0, "benchmark").otherwise("contaminated")
+            return F.when(is_benchmark(), "benchmark").otherwise("contaminated")
 
         return self._add("decontaminate", stage, _dropped_as(benchmark))
 

@@ -309,14 +309,9 @@ def stream_near_dup_candidates(
     shard is screened against the accepted corpus before admission.
     At 100 TB the static side is the bucketed staging table; the join
     is shuffle-on-h with the stream side tiny per micro-batch."""
-    from hive_gateway_spark.operators.dedup import SHINGLE_N, _SHINGLE_EXPR
+    from hive_gateway_spark.operators.dedup import shingle_hashes
 
-    hs = f"array_distinct(transform({_SHINGLE_EXPR}, s -> xxhash64(s)))"
-    sh_new = (
-        docs_stream.withColumn("words", F.split("text", " "))
-        .filter(F.size("words") >= SHINGLE_N)
-        .select(F.col("doc_id").alias("new_doc"), F.explode(F.expr(hs)).alias("h"))
-    )
+    sh_new = shingle_hashes(docs_stream).select(F.col("doc_id").alias("new_doc"), "h")
     corpus = corpus_shingles.select(F.col("doc_id").alias("corpus_doc"), "h")
     return (
         sh_new.join(corpus, "h")
@@ -350,38 +345,27 @@ def stream_decontaminate(
 ) -> DataFrame:
     """Streaming twin of the benchmark-decontamination gate (VERDICT
     r04 #4 / r05 #6): shingle each arriving doc and screen it against
-    the STATIC benchmark shingle slice (doc_id % CONTAM_BENCH_MOD == 0
-    of the corpus staging — in production, the eval-suite shingle
+    the STATIC benchmark shingle slice (dedup.is_benchmark of the
+    corpus staging — in production, the eval-suite shingle
     table). A training doc sharing ≥ CONTAM_MIN_SHARED shingles with
     any benchmark doc is flagged contaminated at ingest, before it can
     enter the corpus.
 
-    Plan shape at 100 TB: the benchmark side is small and broadcast;
-    the stream side is one micro-batch; the per-(doc, bench) count is a
-    stream-side aggregation over the broadcast join — no stream-stream
-    state."""
+    Plan shape: the batch meet, dedup.contamination_pairs — a
+    stream-static join on the shingle hash, stateless on the stream
+    side, which broadcasts the benchmark slice while Spark's size
+    statistics let it; the per-(doc, bench) count is the only
+    stream-side aggregation, no stream-stream state. Emits (doc_id,
+    bench_id, shared)."""
     from hive_gateway_spark.operators.dedup import (
-        CONTAM_BENCH_MOD,
-        CONTAM_MIN_SHARED,
-        SHINGLE_N,
-        _SHINGLE_EXPR,
+        contamination_pairs,
+        shingle_hashes,
     )
 
-    hs = f"array_distinct(transform({_SHINGLE_EXPR}, s -> xxhash64(s)))"
-    sh_new = (
-        docs_stream.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .withColumn("words", F.split("text", " "))
-        .filter(F.size("words") >= SHINGLE_N)
-        .select("doc_id", F.explode(F.expr(hs)).alias("h"))
-    )
-    bench = corpus_shingles.filter(
-        F.col("doc_id") % CONTAM_BENCH_MOD == 0
-    ).select(F.col("doc_id").alias("bench_id"), "h")
-    return (
-        sh_new.join(F.broadcast(bench), "h")
-        .groupBy("doc_id", "bench_id")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= CONTAM_MIN_SHARED)
+    return contamination_pairs(shingle_hashes(docs_stream), corpus_shingles).select(
+        F.col("train_id").alias("doc_id"),
+        "bench_id",
+        F.col("shared_ngrams").alias("shared"),
     )
 
 
@@ -395,8 +379,8 @@ def stream_curation_pipeline(
       quality/repetition gates (stream_quality_gates, stateless)
       → exact first-arrival dedup on normalized text (state = sha2
         hashes only, the stream_exact_dedup contract)
-      → decontamination drop (left_anti against the flagged doc set of
-        stream_decontaminate's static benchmark join)
+      → decontamination drop (left_anti against the static flagged doc
+        set of dedup.contamination_pairs over the corpus staging)
 
     Emits admitted documents with their derived columns. Near-dup
     clustering is deliberately NOT in the stream: it needs cross-doc
@@ -404,27 +388,17 @@ def stream_curation_pipeline(
     ingest-time near-dup SCREENING against the accepted corpus is
     `stream_near_dup_candidates`.
     """
-    from hive_gateway_spark.operators.dedup import (
-        CONTAM_BENCH_MOD,
-        CONTAM_MIN_SHARED,
-    )
+    from hive_gateway_spark.operators.dedup import contamination_pairs
 
     gated = stream_quality_gates(docs_stream)
     deduped = gated.withColumn(
         "content_key", F.sha2(F.col("norm_text"), 256)
     ).dropDuplicates(["content_key"])
-    bench = corpus_shingles.filter(
-        F.col("doc_id") % CONTAM_BENCH_MOD == 0
-    ).select(F.col("doc_id").alias("bench_id"), "h")
-    # static contaminated-id set, precomputed once per (corpus, session):
-    # a stream-static LEFT ANTI join is stateless on the stream side.
+    # static contaminated-id set: a stream-static LEFT ANTI join is
+    # stateless on the stream side.
     contaminated = (
-        corpus_shingles.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .join(F.broadcast(bench), "h")
-        .groupBy("doc_id", "bench_id")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= CONTAM_MIN_SHARED)
-        .select("doc_id")
+        contamination_pairs(corpus_shingles, corpus_shingles)
+        .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )
     return deduped.join(contaminated, "doc_id", "left_anti").drop("content_key")
@@ -1091,14 +1065,13 @@ def embed_screen_batch(spark, index_path: str, tau: float = 0.9):
     import pandas as pd
 
     from hive_gateway_spark.functions.vectors import cos_div_np, norm2_q, vec_q
-    from hive_gateway_spark.operators.similarity import _probe_scan
+    from hive_gateway_spark.operators.similarity import _centers_frame, _probe_scan
     from hive_gateway_spark.sources.dataset_export import read_snapshot
 
-    # the tiny centroid table is read once, as a local relation: its
-    # broadcast per micro-batch then runs no job
-    centers = spark.createDataFrame(
-        read_snapshot(spark, f"{index_path}/centroids").select("cell", "center").toPandas(),
-        "cell int, center array<double>",
+    # the tiny centroid table is read once, into a local relation that
+    # each micro-batch's probe broadcasts
+    centers = _centers_frame(
+        spark, read_snapshot(spark, f"{index_path}/centroids").select("cell", "center").toPandas()
     )
     inv = read_snapshot(spark, f"{index_path}/invfile")
     t = float(tau)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from hive_gateway_spark import registry
 
 registry.load_all()
@@ -249,15 +251,53 @@ def test_contam_planted_hashes_match_kernel(spark):
     from hive_gateway_spark.operators.dedup import (
         _CONTAM_HASHES,
         _CONTAM_ROWS,
-        _shingle_hashes,
+        shingle_hashes,
     )
 
     planted = spark.createDataFrame(_CONTAM_ROWS, "doc_id bigint, text string")
-    live = {
-        (r["doc_id"], r["h"])
-        for r in _shingle_hashes({"documents": planted}).select("doc_id", "h").collect()
-    }
+    live = {(r["doc_id"], r["h"]) for r in shingle_hashes(planted).collect()}
     assert live == set(_CONTAM_HASHES)
+
+
+@pytest.mark.parametrize("n", [3, 8])
+def test_shingle_spellings_agree(spark, tmp_path, n):
+    """shingle_hashes picks its spelling by isStreaming — the window-LEAD
+    spelling on a batch frame, the in-row transform on a stream. Both
+    must yield the same (doc_id, h) set on the same rows: empty tokens
+    from doubled spaces, a NULL text, docs one word short of a shingle
+    and exactly one shingle long, and shingles repeated within a doc."""
+    from hive_gateway_spark.operators.dedup import shingle_hashes
+
+    words = " ".join(f"w{i}" for i in range(n))
+    rows = [
+        (1, "alpha  beta gamma  delta epsilon zeta eta theta iota kappa"),
+        (2, None),
+        (3, words.rsplit(" ", 1)[0]),
+        (4, words),
+        (5, " ".join(["la", "di", "da"] * (n + 2))),
+        (6, "  lead and trail  " + words + "  "),
+    ]
+    path = str(tmp_path / "docs")
+    schema = "doc_id bigint, text string"
+    spark.createDataFrame(rows, schema).write.parquet(path)
+    batch = {tuple(r) for r in shingle_hashes(spark.read.parquet(path), n).collect()}
+    name = f"shingle_spellings_{n}"
+    q = (
+        shingle_hashes(spark.readStream.schema(schema).parquet(path), n)
+        .writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        streamed = [tuple(r) for r in spark.table(name).collect()]
+    finally:
+        q.stop()
+    assert sorted(streamed) == sorted(batch)
+    per_doc = {d: sum(1 for doc, _ in batch if doc == d) for d in range(1, 7)}
+    assert per_doc[2] == per_doc[3] == 0 and per_doc[4] == 1 and per_doc[5] == 3
+    assert per_doc[1] > 0 and per_doc[6] > 0
 
 
 def test_pagerank_hub_outranks_satellites(spark):

@@ -330,6 +330,44 @@ def test_one_curation_engine():
         assert not calls & _STAGE_CALLS, (name, calls & _STAGE_CALLS)
 
 
+def test_one_decontamination_join_and_shingle_hash():
+    """Regrowth guard: under hive_gateway_spark/ the curation decisions
+    are each written once — the benchmark slice only in
+    dedup.is_benchmark (which contamination_pairs and the decontaminate
+    stage's label call), the in-row shingle hash only in
+    dedup.shingle_hashes' stream branch, the window-LEAD shingle text
+    only in dedup._shingle_rows — and decontaminate takes no option
+    that could fork the rule from the registered queries."""
+    import ast
+    import inspect
+    import pathlib
+
+    import hive_gateway_spark
+
+    root = pathlib.Path(hive_gateway_spark.__file__).parent
+
+    def owners(needle: str) -> list[tuple[str, str]]:
+        """(module, innermost enclosing function) of each line holding needle."""
+        found = []
+        for path in sorted(root.rglob("*.py")):
+            src = path.read_text()
+            if needle not in src:
+                continue
+            fns = [n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)]
+            for i, line in enumerate(src.splitlines(), 1):
+                if needle in line:
+                    inner = [f for f in fns if f.lineno <= i <= f.end_lineno]
+                    fn = min(inner, key=lambda f: f.end_lineno - f.lineno, default=None)
+                    found.append((path.relative_to(root).as_posix(), fn.name if fn else ""))
+        return found
+
+    assert owners("s -> xxhash64(s)") == [("operators/dedup.py", "shingle_hashes")]
+    assert set(owners('F.lead("w0"')) == {("operators/dedup.py", "_shingle_rows")}
+    assert owners("% CONTAM_BENCH_MOD") == [("operators/dedup.py", "is_benchmark")]
+    params = inspect.signature(CurationPipeline.decontaminate).parameters
+    assert not {"bench_mod", "min_shared"} & set(params), list(params)
+
+
 def test_concurrent_callers_share_one_fold(spark):
     """A registered recipe's pipeline is shared by server threads: more
     callers than cores racing run() and trace() on one pipeline all get
