@@ -11,6 +11,7 @@ both are here with deterministic seeds.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -35,8 +36,9 @@ def shingle_expr(n: int) -> str:
 
     The fixture/oracle width is {SHINGLE_N} (3-grams keep the tiny test
     corpora non-vacuous), but 3-gram shingles of a small zipf vocabulary
-    are COMMON — the 100k-doc smoke measured 25% of a synthetic corpus
-    "contaminated" at n=3. SCALE.md names 8–13-gram shingles as the
+    are COMMON — the corpus scale family (SCALE_corpus_c4.json) flags a
+    large share of its zipf corpus "contaminated" at n=3 and almost
+    none off the footer docs at n=8. SCALE.md names 8–13-gram shingles as the
     production decontamination setting; callers that screen real corpora
     pass the width through pipeline.decontaminate(shingle_n=...)."""
     return (
@@ -148,27 +150,25 @@ def _shingles_build(t) -> DataFrame:
     # keep the in-row set size n too: q_dedup_simhash's verification
     # joins need it, and it rides along for free (8 B/row)
     #
-    # TWO repartitions bracket the transform, each load-bearing:
+    # ONE repartition, BEFORE the transform: it parallelizes the
+    # transform itself. The fixture is one small parquet file, so the
+    # scan is ONE input split, and the shingle projection (transform()/
+    # array_distinct higher-order exprs run INTERPRETED, not codegen'd)
+    # would otherwise execute single-threaded in the scan task:
+    # measured 19 s vs 3 s at sf1 — the whole of q_dedup_ngram's former
+    # super-linear sf1 point (11.4×). Exchanging the raw (doc_id, text)
+    # rows first is cheap (~6 MB at sf1) and lets every core shingle. At
+    # 100 TB real file splits make this a no-op-sized safety net, never
+    # a pessimization.
     #
-    # (1) BEFORE — parallelize the transform itself. The fixture is
-    # one small parquet file, so the scan is ONE input split, and
-    # the shingle projection (transform()/array_distinct higher-
-    # order exprs run INTERPRETED, not codegen'd) would otherwise
-    # execute single-threaded in the scan task: measured 19 s vs
-    # 3 s at sf1 — the whole of q_dedup_ngram's former super-linear
-    # sf1 point (11.4×, VERDICT r14 task #2). Exchanging the raw
-    # (doc_id, text) rows first is cheap (~6 MB at sf1) and lets
-    # every core shingle. At 100 TB real file splits make this a
-    # no-op-sized safety net, never a pessimization.
-    #
-    # (2) AFTER, keyed on h — the staging table's bucketing: the
-    # hot-path shuffles that follow (pair join, DF histogram,
-    # contamination meet) read evenly-spread input, and the
-    # checkpoint preserves the clustering for downstream plans.
-    # ~300 docs (≈15k shingles) per partition, capped by the
-    # session's shuffle width: sf0.01 stays 1-2 partitions (task
-    # overhead dominates tiny inputs), sf0.1 gets ~16, and any
-    # production corpus saturates the cap. The count is parquet
+    # The staging table carries no clustering on h: the checkpoint
+    # reports UnknownPartitioning, so every reader's h-keyed shuffle
+    # (pair join, DF histogram, contamination meet) plans its own
+    # Exchange either way, and a second repartition on h here would be
+    # paid and never reused. ~300 docs (≈15k shingles) per partition,
+    # capped by the session's shuffle width: sf0.01 stays 1-2
+    # partitions (task overhead dominates tiny inputs), sf0.1 gets ~16,
+    # and any production corpus saturates the cap. The count is parquet
     # metadata — one cheap job per (session, sf_dir).
     cap = int(
         t["documents"].sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -186,7 +186,6 @@ def _shingles_build(t) -> DataFrame:
             F.count("*").over(Window.partitionBy("doc_id")).alias("n"),
             "h",
         )
-        .repartition(npart, "h")
         .localCheckpoint()
     )
 
@@ -1028,13 +1027,15 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one count aggregation; the remaining warm cost is ~5 stages ×
     local-mode stage overhead, not data volume. The planted evidence is
     PRECOMPUTED (doc_id, xxhash64) literals (_CONTAM_HASHES), passed to
-    createDataFrame as a Python list — planned as a Scan ExistingRDD —
-    and unioned AFTER the shared checkpointed staging: no per-run
-    shingle transform plan (VERDICT r04 #2), and the session-wide
-    shingle cache stays pristine for the other Jaccard-family
-    queries."""
+    createDataFrame as a pandas frame — with Arrow on, a LocalTableScan
+    whose rows live in the plan, like similarity._centers_frame — and
+    unioned AFTER the shared checkpointed staging: no per-run shingle
+    transform plan, and the session-wide shingle cache stays pristine
+    for the other Jaccard-family queries."""
     t = load_tables(spark, sf_dir)
-    sh_planted = spark.createDataFrame(_CONTAM_HASHES, "doc_id bigint, h bigint")
+    sh_planted = spark.createDataFrame(
+        pd.DataFrame(_CONTAM_HASHES, columns=["doc_id", "h"]), "doc_id bigint, h bigint"
+    )
     # The slice filters push below the Union into each branch, so the
     # union touches only the filtered rows: a UnionExec over the
     # 260k-row checkpoint itself forfeits the fast cached-scan path

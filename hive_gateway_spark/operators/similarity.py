@@ -56,7 +56,8 @@ from hive_gateway_spark.staging import SessionCache, release, stage
 #: IVF coarse index is a BUILD artifact (fit + assignment cost
 #: O(N·cells·dim)), amortized across every query against the same
 #: corpus exactly like the dedup pair staging; rebuilding it per call
-#: made cold IVF lose to brute force at the 1M smoke (SCALE.md r9).
+#: made cold IVF lose to brute force at 1M vectors (SCALE.md, "IVF
+#: index").
 _IVF_CACHE = SessionCache("similarity.ivf")
 
 #: Pair threshold tuned to the fixture's cosine distribution (within-label
@@ -416,8 +417,8 @@ IVF_ASSIGN = 2
 #: ingest concentrates new vectors into ever-fewer cells; the scheduled
 #: full rebuild (persist_ivf_index) is due when q_ann_index_stats' max
 #: per-cell imbalance (n_cell / mean) crosses this bound. Measured on a
-#: corpus grown 10x by progressively-drifting appends
-#: (scripts/ann_append_drift_smoke.py, curve in SCALE.md): recall vs
+#: corpus grown by progressively-drifting appends (scripts/scale.py
+#: drift, record SCALE_drift_c4.json): recall vs
 #: the exact baseline holds its floor while max imbalance stays at or
 #: under the bound, and the monitor crosses the bound BEFORE recall
 #: decays — the alarm leads the damage: a 10x growth of same-mixture
@@ -697,7 +698,7 @@ def maybe_rebuild_ivf(spark: SparkSession, sf_dir: str, path: str) -> dict:
     {"max_imbalance", "rebuilt", "manifests"?} — the dict a nightly
     maintenance job logs. Idempotent under healthy indexes (no-op but
     the read), exactly the check-then-act loop the drift study pins
-    (SCALE.md round 11): drifting same-mixture appends never trigger
+    (scripts/scale.py drift): drifting same-mixture appends never trigger
     it; a regime-change ingest does, while recall is still intact.
 
     Caveats the operator must know: the monitor measures cell skew

@@ -259,8 +259,9 @@ class CurationPipeline:
 
         ``shingle_n``: word-shingle width; defaults to dedup.SHINGLE_N
         (the fixture/oracle width, 3). 3-grams of a small vocabulary
-        are COMMON — the 100k smoke measured 25% of a synthetic zipf
-        corpus flagged at n=3 — so production screens should pass the
+        are COMMON — the corpus scale family (SCALE_corpus_c4.json)
+        flags a large share of its zipf corpus at n=3 — so production
+        screens should pass the
         8–13 range SCALE.md documents (the width published
         decontamination setups use)."""
         from hive_gateway_spark.operators.dedup import (

@@ -557,88 +557,6 @@ def stream_dsir_score(docs_stream: DataFrame, coef: DataFrame) -> DataFrame:
     )
 
 
-def stream_admission_tws(events: DataFrame, limit: int = 3) -> DataFrame:
-    """stream_admission on Spark 4's NEW arbitrary-state API
-    (`transformWithStateInPandas` + StatefulProcessor): identical
-    per-(user, day) admission semantics — the reference's per-token
-    Redis counters (gateway.ts:139-171) — with the per-day admit book
-    in a typed ValueState carrying a 24 h TTL (the Redis EXPIRE analog
-    the old API modeled with a processing-time timeout).
-
-    Why both exist: applyInPandasWithState (stream_admission) is the
-    GA API this engine standardizes on; this twin pins the migration
-    path to the transformWithState runtime (RocksDB state backend,
-    per-state TTLs, composite state types) and is equivalence-tested
-    against the old operator over the fixture stream
-    (tests/test_streaming.py::test_tws_admission_equals_old_api).
-
-    Environment boundary (import-gated like the image/audio codec
-    swap points): the transformWithState Python runtime speaks a
-    protobuf state protocol, so `google.protobuf` must be installed —
-    this container lacks it and the equivalence test skips; on a
-    cluster with protobuf the operator runs as written (requires the
-    RocksDB state store provider)."""
-    try:
-        import google.protobuf  # noqa: F401 — TWS state-server protocol
-    except ImportError as e:  # pragma: no cover - present on real clusters
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pip install protobuf); falling back to stream_admission "
-            "(applyInPandasWithState) which has identical semantics"
-        ) from e
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Admission(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # struct-of-arrays book, same layout as stream_admission's
-            # GroupState; 24 h TTL evicts idle users like the timeout.
-            self._book = handle.getValueState(
-                "book",
-                "days array<int>, counts array<int>",
-                ttlDurationMs=24 * 3600 * 1000,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._book.get()
-            book = dict(zip(got[0], got[1])) if got else {}
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                    ["ts", "event_id"]
-                )
-                day = (
-                    pdf["ts"].astype("datetime64[us]").astype("int64")
-                    // 86_400_000_000
-                ).astype(int)
-                admitted = []
-                for d in day:
-                    n = book.get(d, 0) + 1
-                    book[d] = n
-                    admitted.append(n <= limit)
-                yield pd.DataFrame(
-                    {
-                        "event_id": pdf["event_id"].values,
-                        "user_id": key[0],
-                        "admitted": admitted,
-                    }
-                )
-            self._book.update((list(book.keys()), list(book.values())))
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Admission(),
-        outputStructType="event_id bigint, user_id bigint, admitted boolean",
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def stream_image_phash_screen(
     docs_stream: DataFrame, corpus_phash: DataFrame
 ) -> DataFrame:

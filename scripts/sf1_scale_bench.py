@@ -33,7 +33,8 @@ directly. Construction (10 shifted copies of sf0.1, copy 0 verbatim):
 
 Run:  python scripts/sf1_scale_bench.py gen [out_dir]
       python scripts/sf1_scale_bench.py run [out_dir]   # prints JSON
-Output recorded in SCALE.md; queries with warm ratio > SUPERLINEAR_FLAG
+Output committed as SF1_BENCH_r<N>.json (SF1_DELTA_r<N>.json for an
+SF1_ONLY subset); queries with warm ratio > SUPERLINEAR_FLAG
 × 10 are flagged for investigation.
 """
 

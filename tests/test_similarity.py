@@ -341,7 +341,7 @@ def test_ivf_append_drift_monitor_fires_before_recall_decays(spark, tmp_path):
     (a cluster the quantizer never saw — every vector lands in its few
     nearest frozen cells) pushes it OVER the bound while recall vs the
     exact baseline is still intact: the rebuild alarm leads the damage.
-    Mirrors scripts/ann_append_drift_smoke.py at fixture scale."""
+    Mirrors the drift family of scripts/scale.py at fixture scale."""
     import os
 
     import numpy as np
@@ -352,7 +352,7 @@ def test_ivf_append_drift_monitor_fires_before_recall_decays(spark, tmp_path):
     from hive_gateway_spark.sources.dataset_export import read_snapshot
 
     rng = np.random.default_rng(7)
-    # 20 clusters over IVF_CELLS=10 like the 100k smoke: a coarser
+    # 20 clusters over IVF_CELLS=10 like the drift family: a coarser
     # mixture (e.g. 8 clusters) leaves the BASE quantizer itself near
     # imbalance 2 at this tiny scale, drowning the signal under test
     dim, n_clusters, n = 16, 20, 2000

@@ -4,7 +4,6 @@ stream is drained with an availableNow trigger (SURVEY §5.2)."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from hive_gateway_spark import registry
@@ -600,55 +599,6 @@ def test_stream_dsir_score_matches_batch(spark, sf_dir):
         assert ntoks[r["doc_id"]] == r["n_tokens"]
     # and the stream scored every non-empty doc, not just the selection
     assert len(got) == t["documents"].filter("text <> ''").count()
-
-
-def test_tws_admission_equals_old_api(spark, sf_dir):
-    """The transformWithStateInPandas twin admits EXACTLY the same
-    events as the applyInPandasWithState operator over the fixture
-    stream — the migration to Spark 4's new arbitrary-state runtime
-    changes the API surface, not one decision.
-
-    Environment boundary, ASSERTED not skipped (VERDICT r7 task #5):
-    transformWithState's Python runtime speaks a protobuf state
-    protocol, and this container has no `google.protobuf`. Where it's
-    absent the operator must fail FAST with the documented
-    NotImplementedError naming the fallback — the same import-gated
-    contract the image/audio codec swap points test — instead of dying
-    deep inside the state server mid-stream. With protobuf present
-    (real clusters) the full equivalence body runs."""
-    from hive_gateway_spark.operators.windows import RATE_LIMIT_N
-    from hive_gateway_spark.streaming.ops import (
-        stream_admission,
-        stream_admission_tws,
-        stream_events,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stream_admission_tws(
-                stream_events(spark, sf_dir), limit=RATE_LIMIT_N
-            )
-        # the error must point at the equivalent operator, which the
-        # rest of this module proves out — the boundary is honest
-        return
-
-    new = drain(
-        stream_admission_tws(stream_events(spark, sf_dir), limit=RATE_LIMIT_N),
-        "s_adm_tws",
-    )
-    old = drain(
-        stream_admission(stream_events(spark, sf_dir), limit=RATE_LIMIT_N),
-        "s_adm_old",
-    )
-    assert len(new) == len(old) > 0
-    n = new.sort_values("event_id").reset_index(drop=True)
-    o = old.sort_values("event_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        n[["event_id", "user_id", "admitted"]],
-        o[["event_id", "user_id", "admitted"]],
-    )
 
 
 def test_stream_image_phash_screen_equals_batch(spark, sf_dir):
