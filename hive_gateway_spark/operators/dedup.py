@@ -152,11 +152,10 @@ def _shingles_build(t) -> DataFrame:
     #
     # ONE repartition, BEFORE the transform: it parallelizes the
     # transform itself. The fixture is one small parquet file, so the
-    # scan is ONE input split, and the shingle projection (transform()/
-    # array_distinct higher-order exprs run INTERPRETED, not codegen'd)
-    # would otherwise execute single-threaded in the scan task:
-    # measured 19 s vs 3 s at sf1 — the whole of q_dedup_ngram's former
-    # super-linear sf1 point (11.4×). Exchanging the raw (doc_id, text)
+    # scan is ONE input split, and the shingle projection would
+    # otherwise execute single-threaded in the scan task: measured 19 s
+    # vs 3 s at sf1 — the whole of q_dedup_ngram's former super-linear
+    # sf1 point (11.4×). Exchanging the raw (doc_id, text)
     # rows first is cheap (~6 MB at sf1) and lets every core shingle. At
     # 100 TB real file splits make this a no-op-sized safety net, never
     # a pessimization.
