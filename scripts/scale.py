@@ -466,10 +466,13 @@ def lakehouse(run: Run, n: int) -> None:
     run.check("content_equals_model", len(rows) == n and {(r["doc_id"], r["text"], r["lang"]) for r in rows} == model)
     run.check("verify_ok", verify_dataset(run.spark, paths[-1])["ok"])
     lo, hi = n // 2, n // 2 + n // 100
-    pruned = read_snapshot(run.spark, paths[-1], between=("doc_id", lo, hi))
+
+    def pruned_read(spark, _):
+        return read_snapshot(spark, paths[-1], between=("doc_id", lo, hi))
+
     run.facts["files"] = len(dataset_files(paths[-1]))
-    run.facts["pruned_files_opened"] = len(pruned.inputFiles())
-    rows = run.time("pruned_read", lambda s, _: read_snapshot(s, paths[-1], between=("doc_id", lo, hi)))
+    run.facts["pruned_files_opened"] = len(pruned_read(run.spark, None).inputFiles())
+    rows = run.time("pruned_read", pruned_read)
     run.check("pruned_read_rows", len(rows) == hi - lo + 1)
     run.check("pruned_read_skips_files", run.facts["pruned_files_opened"] < run.facts["files"])
 
