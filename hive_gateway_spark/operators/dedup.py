@@ -448,7 +448,7 @@ def _register_dedup_fuzzy() -> None:
         portable k={MINHASH_K} universal-hash MinHash signatures
         (q_minhash_signatures' exact-integer arithmetic) → capped
         4-band × 2-row bucket join (q_lsh_candidates' machinery,
-        {_LSH_BUCKET_CAP}-member bucket cap modeled in the oracle) →
+        {BAND_BUCKET_CAP}-member bucket cap modeled in the oracle) →
         EXACT shingle-Jaccard verification of the candidates at
         τ = {JACCARD_TAU} (integer predicate, xxhash64 shingle
         equality — the q_dedup_ngram discipline). Emits
@@ -497,6 +497,106 @@ def _register_dedup_fuzzy() -> None:
         )
 
 
+# ------------------------------------------------------ banded pair join
+# One LSH banding join (Leskovec, Rajaraman & Ullman, Mining of Massive
+# Datasets, ch. 3) for every near-dup family: MinHash (q_lsh_candidates
+# → q_dedup_fuzzy), SimHash, the perceptual-hash legs and the ingest
+# image screen split a signature into bands, drop hot buckets, and
+# join the members of each bucket.
+
+#: Band-bucket membership cap of every capped band join, same policy
+#: and default as JACCARD_DF_CAP: a degenerate bucket with k members
+#: emits k² candidate pairs, so a corpus with thousands of IDENTICAL
+#: signatures (one logo stamped on every page — the realistic hot key)
+#: would otherwise explode the self-join quadratically. Buckets above
+#: the cap are dropped from pair generation; modeled in the
+#: q_lsh_candidates oracle so parity is corpus-independent.
+BAND_BUCKET_CAP = 512
+
+
+def band_key(h: Column, band: int, n_bands: int) -> Column:
+    """Key of band ``band`` when the 64-bit hash ``h`` splits into
+    ``n_bands`` bands of 64 // n_bands bits — the one band split."""
+    w = 64 // n_bands
+    return F.shiftrightunsigned(h, w * band).bitwiseAND(F.lit((1 << w) - 1))
+
+
+def hash_bands(frame: DataFrame, hash_col: str, n_bands: int) -> DataFrame:
+    """``frame`` with (band, key) added: one row per band of its 64-bit
+    ``hash_col``."""
+    keys = F.array(*[band_key(F.col(hash_col), j, n_bands) for j in range(n_bands)])
+    return frame.select("*", F.posexplode(keys).alias("band", "key"))
+
+
+def cap_buckets(bands: DataFrame, cap: int) -> DataFrame:
+    """``bands`` without the members of (band, key) buckets holding more
+    than ``cap`` rows. A window count beats a groupBy + join: one
+    shuffle on the (band, key) the band join needs anyway."""
+    sz = F.count("*").over(Window.partitionBy("band", "key"))
+    return bands.withColumn("_sz", sz).filter(F.col("_sz") <= cap).drop("_sz")
+
+
+def band_pairs(
+    bands: DataFrame, cap: int | None, verify: Column | None = None
+) -> DataFrame:
+    """The band self-join of a (doc_id, band, key, *carried) frame:
+    every pair doc_a < doc_b sharing a (band, key) bucket, once, as
+    (doc_a, doc_b, n_shared_bands, <col>_a and <col>_b per carried
+    column). ``cap`` drops buckets above that many members first (None:
+    no cap); ``verify``, a predicate over the pair's columns, drops a
+    pair at the join, before the collapse shuffles it.
+
+    The collapse shuffles on the pair alone (a carried column is a
+    function of its doc, so max() is its value): a caller that groups
+    by the pair plus columns of its own reuses that one shuffle.
+
+    Scale shape (100 TB): never all-pairs — an equi-join on (band, key),
+    the cap bounding the worst bucket's fan-out at cap² however many
+    identical signatures the corpus holds."""
+    if cap is not None:
+        bands = cap_buckets(bands, cap)
+    carried = [c for c in bands.columns if c not in ("doc_id", "band", "key")]
+
+    def side(s: str) -> DataFrame:
+        return bands.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            "band",
+            "key",
+            *[F.col(c).alias(f"{c}_{s}") for c in carried],
+        )
+
+    joined = side("a").join(side("b"), ["band", "key"])
+    joined = joined.filter(F.col("doc_a") < F.col("doc_b"))
+    if verify is not None:
+        joined = joined.filter(verify)
+    return joined.groupBy("doc_a", "doc_b").agg(
+        F.count("*").alias("n_shared_bands"),
+        *[F.max(f"{c}_{s}").alias(f"{c}_{s}") for s in "ab" for c in carried],
+    )
+
+
+def banded_hash_pairs(
+    frame: DataFrame,
+    hash_col: str,
+    ham_t: int,
+    n_bands: int = 4,
+    cap: int | None = BAND_BUCKET_CAP,
+) -> DataFrame:
+    """(doc_a, doc_b, hamming), doc_a < doc_b: pairs of ``frame``'s
+    64-bit ``hash_col`` within Hamming ≤ ``ham_t``, by band join plus an
+    exact JVM bit_count(xor) verify. A pair at distance d < n_bands
+    shares a band (pigeonhole), so the result is complete up to there;
+    beyond, a pair is found iff some band matches and survives the cap.
+    The verify runs at the join, so the collapse shuffles surviving
+    near-dups, not every band collision."""
+    ham = F.bit_count(
+        F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))
+    ).cast("bigint")
+    bands = hash_bands(frame.select("doc_id", hash_col), hash_col, n_bands)
+    pairs = band_pairs(bands, cap, verify=ham <= ham_t)
+    return pairs.select("doc_a", "doc_b", ham.alias("hamming"))
+
+
 @query("q_dedup_simhash")  # rows-only: engine-native hash (xxhash64) — no SQL oracle
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pipeline: 64-bit sign-aggregated **shingle**
@@ -542,43 +642,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees in plans/r16/q_dedup_simhash_before.txt; guide §2.4
     # remove shuffles outright).
     fp = stage(bit_sums.select("doc_id", simhash.alias("simhash")), "dedup.simhash.fp")
-    # 8 bands × 8 bits: d < 8 ⇒ guaranteed band collision (pigeonhole).
-    bands = fp.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), 8 * i)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("key"),
-                    )
-                    for i in range(8)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "key"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "key"
-    )
-    # r17 (guide §2.3): the Hamming predicate is pair-local and every
-    # band-duplicate of a pair passes or fails it together, so it
-    # filters BELOW the dedup exchange — the distinct then shuffles
-    # only surviving near-dup candidates (3 narrow columns) instead of
-    # every band collision with both 8 B fingerprints attached.
-    cands = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= 6)
-        .select("doc_a", "doc_b", "hamming")
-        .distinct()
-    )
+    # 8 bands × 8 bits: d < 8 ⇒ guaranteed band collision (pigeonhole),
+    # so the Hamming ≤ 6 candidates are complete. Uncapped.
+    cands = banded_hash_pairs(fp, "simhash", 6, n_bands=8, cap=None)
     # Exact verification of the (small) candidate set: shared-shingle
     # counts via two hash joins, integer Jaccard predicate (τ = 0.5).
     pa = cands.join(
@@ -925,9 +991,7 @@ def contamination_pairs(train_sh: DataFrame, bench_sh: DataFrame) -> DataFrame:
     Both inputs are (doc_id, h) shingle sets (shingle_hashes or the
     checkpointed staging). The training side keeps its non-benchmark
     docs and the benchmark side its benchmark slice, so one corpus
-    frame may feed both; a bench side that is already the slice keeps
-    no redundant filter, because the optimizer prunes a predicate its
-    child's constraints already imply.
+    frame may feed both.
 
     The join strategy is Spark's, from the inputs' size statistics: at
     the fixture scales q_curation_v2 and both streaming twins plan a
@@ -1167,12 +1231,6 @@ def _minhash_sig_build(t) -> DataFrame:
 #: 1−(1−s²)⁴ S-curve crosses 0.5 near s≈0.4 — matched to JACCARD_TAU.
 _LSH_BANDS: tuple[tuple[int, int], ...] = ((0, 1), (2, 3), (4, 5), (6, 7))
 
-#: Band-bucket membership cap, same role (and default) as JACCARD_DF_CAP:
-#: a degenerate bucket with k members emits k² candidate pairs, so
-#: buckets above the cap are dropped from candidate generation. Modeled
-#: in the DuckDB oracle so parity is corpus-independent.
-_LSH_BUCKET_CAP = 512
-
 _LSH_SIG_CTE = f"""
     sig AS (
         SELECT doc_id,
@@ -1185,7 +1243,7 @@ _LSH_SIG_CTE = f"""
     ),
     small_buckets AS (
         SELECT band, bkey FROM bands
-        GROUP BY band, bkey HAVING COUNT(*) <= {_LSH_BUCKET_CAP}
+        GROUP BY band, bkey HAVING COUNT(*) <= {BAND_BUCKET_CAP}
     ),
     bounded AS (
         SELECT bands.* FROM bands JOIN small_buckets USING (band, bkey)
@@ -1218,7 +1276,7 @@ def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): one shuffle to build signatures, one
     equi-join on (band, bkey) — never all-pairs. Degenerate buckets are
-    capped at {_LSH_BUCKET_CAP} members (same policy as JACCARD_DF_CAP;
+    capped at {BAND_BUCKET_CAP} members (same policy as JACCARD_DF_CAP;
     the cap is modeled in the oracle). Recall vs the exact Jaccard
     pair set is pinned in tests/test_dedup.py."""
     return _lsh_candidate_pairs(spark, sf_dir)
@@ -1229,44 +1287,11 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the portable signature frame, shared by q_lsh_candidates and
     q_dedup_fuzzy (whose verification stage consumes the candidates)."""
     sig = _minhash_sig_frame(spark, sf_dir)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        (F.col(f"mh{i1}") * F.lit(_MH_P) + F.col(f"mh{i2}")).alias(
-                            "bkey"
-                        ),
-                    )
-                    for j, (i1, i2) in enumerate(_LSH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey")
-    # cap degenerate buckets (window count beats a groupBy+join: one
-    # shuffle on the same key the join needs anyway)
-    from pyspark.sql import Window
-
-    sz = F.count("*").over(Window.partitionBy("band", "bkey"))
-    bounded = bands.withColumn("_sz", sz).filter(F.col("_sz") <= _LSH_BUCKET_CAP)
-    a = bounded.alias("a")
-    b = bounded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bkey") == F.col("b.bkey"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_shared_bands"))
+    keys = F.array(
+        *[F.col(f"mh{i1}") * _MH_P + F.col(f"mh{i2}") for i1, i2 in _LSH_BANDS]
     )
+    bands = sig.select("doc_id", F.posexplode(keys).alias("band", "key"))
+    return band_pairs(bands, BAND_BUCKET_CAP)
 
 
 _CURATION_V2_ORACLE = f"""

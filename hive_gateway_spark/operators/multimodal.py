@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from hive_gateway_spark.functions.jpeg import jpeg_decode, jpeg_encode
+from hive_gateway_spark.operators.dedup import banded_hash_pairs
 from hive_gateway_spark.registry import query
 from hive_gateway_spark.session import load_tables
 from hive_gateway_spark.staging import SessionCache
@@ -473,69 +474,6 @@ def decode_assets(assets: DataFrame) -> DataFrame:
             yield out
 
     return assets.select("doc_id", "payload").mapInPandas(run, DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("thumb", T.BinaryType()),
-    ]
-)
-
-
-def resize_assets(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize kernel plumbing over mapInPandas: real schema/batching, the
-    pixel work stubbed deterministically (production swaps the kernel
-    for PIL/libvips). The fake thumb is a content-derived byte strip so
-    downstream hashing/dedup on thumbs is testable."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = [
-                bytes(b)[len(MAGIC) : len(MAGIC) + (width * height) % 97 + 16]
-                for b in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": width,
-                    "height": height,
-                    "thumb": thumbs,
-                }
-            )
-
-    return assets.select("doc_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(assets: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
-    """Frame sampling for "video" payloads: emit every Nth chunk as a
-    frame row (1→many via mapInPandas — the UDTF shape). Real codecs
-    replace the chunker; the fan-out, schema and per-partition batching
-    are the actual operator."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nos, frames = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                body = bytes(b)[len(MAGIC):]
-                for i in range(min(max_frames, max(1, len(body) // every_n_bytes))):
-                    ids.append(doc_id)
-                    nos.append(i)
-                    frames.append(body[i * every_n_bytes : (i + 1) * every_n_bytes])
-            yield pd.DataFrame({"doc_id": ids, "frame_no": nos, "frame": frames})
-
-    return assets.select("doc_id", "payload").mapInPandas(run, FRAMES_SCHEMA)
 
 
 @query("q_multimodal_decode")  # rows-only: the decode kernel has no SQL oracle
@@ -1046,70 +984,6 @@ PHASH_HAM_T = 10
 #: near-dup families, disjoint across seeds.
 PHASH_CLUSTER = 5
 
-#: Band-bucket membership cap for BOTH perceptual-hash legs (image
-#: pHash and audio fingerprint), same policy and default as the text
-#: family's JACCARD_DF_CAP / _LSH_BUCKET_CAP (VERDICT r7 task #3): a
-#: degenerate bucket with k members emits k² candidate pairs, so a
-#: corpus with thousands of IDENTICAL images (one logo stamped on
-#: every page — the realistic hot key) would otherwise explode the
-#: self-join quadratically. Buckets above the cap are dropped from
-#: pair generation; recall on planted {PHASH_CLUSTER}-doc families is
-#: untouched (5 ≪ 512) and pinned in tests/test_multimodal.py.
-PERCEPTUAL_BUCKET_CAP = 512
-
-
-def banded_hash_pairs(frame: DataFrame, hash_col: str, ham_t: int) -> DataFrame:
-    """Shared candidate-pair plan for 64-bit perceptual hashes: explode
-    into 4×16-bit LSH bands, drop band buckets above
-    {PERCEPTUAL_BUCKET_CAP} members (window count — one shuffle on the
-    same (band, key) the join needs anyway, the q_lsh_candidates
-    pattern), self-join bucket members, exact JVM bit_count(xor)
-    verify at ≤ ham_t. Emits (doc_a, doc_b, hamming), doc_a < doc_b.
-
-    Scale shape (100 TB): never all-pairs — one shuffle to band, a
-    capped equi-join on (band, key), verify on candidates only; the
-    cap bounds the worst bucket's fan-out at cap² regardless of how
-    many identical assets the corpus holds."""
-    from pyspark.sql import Window
-
-    bands = frame.select(
-        "doc_id",
-        F.col(hash_col).alias("h64"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col(hash_col), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "h64", "b.band", "b.key")
-    sz = F.count("*").over(Window.partitionBy("band", "key"))
-    bounded = bands.withColumn("_sz", sz).filter(
-        F.col("_sz") <= PERCEPTUAL_BUCKET_CAP
-    )
-    a = bounded.select(
-        F.col("doc_id").alias("doc_a"), F.col("h64").alias("ha"), "band", "key"
-    )
-    b = bounded.select(
-        F.col("doc_id").alias("doc_b"), F.col("h64").alias("hb"), "band", "key"
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ha", "hb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.select(
-        "doc_a", "doc_b", ham.cast("bigint").alias("hamming")
-    ).filter(F.col("hamming") <= ham_t)
-
 
 def _synth_texture(doc_id: int):
     """Deterministic 32×32 uint8 texture with rich LOW-frequency
@@ -1288,7 +1162,7 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: hash = one mapInPandas pass (8 B/doc out); candidate
     generation BANDS the hash (4×16-bit bands, capped bucket join —
     the LSH trick, no all-pairs, hot buckets bounded at
-    {PERCEPTUAL_BUCKET_CAP}); the Hamming verify is JVM-side
+    {BAND_BUCKET_CAP}); the Hamming verify is JVM-side
     bit_count(xor) on the candidates only."""
     t = load_tables(spark, sf_dir)
     return banded_hash_pairs(phash_frame(t["documents"]), "phash", PHASH_HAM_T)

@@ -40,13 +40,18 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 from hive_gateway_spark import registry
+from hive_gateway_spark.functions.binary import COMPRESS_MIN_BYTES
 from hive_gateway_spark.functions.msgpack_codec import packb, unpackb
 from hive_gateway_spark.session import TABLES, load_tables
 
-#: Reference constants (gateway.ts:144, :149, :110).
+#: Reference constants (gateway.ts:144, :149); the compression
+#: threshold (:110) is functions/binary.py's COMPRESS_MIN_BYTES.
 RATE_LIMIT = 10
 RATE_WINDOW_S = 1.0
-COMPRESS_MIN_BYTES = 1024
+
+#: Request-log entries kept: the log is a ring, so a long-lived server
+#: holds the newest LOG_MAXLEN calls, not one entry per call ever made.
+LOG_MAXLEN = 10_000
 
 
 class RateLimiter:
@@ -141,7 +146,7 @@ class GatewayServer:
         self.enable_sql = enable_sql
         self.allowed_origin = allowed_origin
         self.limiter = RateLimiter()
-        self.log: list[dict] = []
+        self.log: deque[dict] = deque(maxlen=LOG_MAXLEN)
         load_tables(spark, sf_dir)
         gw = self
 

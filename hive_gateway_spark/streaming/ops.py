@@ -584,58 +584,34 @@ def stream_image_phash_screen(
     are capped like the batch operator's; a pair whose earliest
     matching band was capped is suppressed with it — the recall trade
     the cap already makes, accepted for boundedness."""
-    from hive_gateway_spark.operators.multimodal import (
-        PHASH_HAM_T,
-        phash_frame,
+    from hive_gateway_spark.operators.dedup import (
+        BAND_BUCKET_CAP,
+        band_key,
+        cap_buckets,
+        hash_bands,
     )
+    from hive_gateway_spark.operators.multimodal import PHASH_HAM_T, phash_frame
+
+    n_bands = 4  # the batch perceptual legs' split
 
     def banded(df: DataFrame, id_out: str, ph_out: str) -> DataFrame:
-        return df.select(
-            F.col("doc_id").alias(id_out),
-            F.col("phash").alias(ph_out),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            F.shiftrightunsigned(F.col("phash"), 16 * i)
-                            .bitwiseAND(F.lit(0xFFFF))
-                            .alias("key"),
-                        )
-                        for i in range(4)
-                    ]
-                )
-            ).alias("b"),
-        ).select(id_out, ph_out, "b.band", "b.key")
-
-    from pyspark.sql import Window
-
-    from hive_gateway_spark.operators.multimodal import PERCEPTUAL_BUCKET_CAP
+        ph = df.select(F.col("doc_id").alias(id_out), F.col("phash").alias(ph_out))
+        return hash_bands(ph, ph_out, n_bands)
 
     new = banded(phash_frame(docs_stream), "doc_id", "ph_new")
     # cap hot STATIC-side buckets (same policy as banded_hash_pairs):
     # a corpus with thousands of identical images would otherwise emit
     # 1000s of flags per arriving near-dup; the window count runs on
     # the static frame once, so this stays stateless on the stream
-    idx_sz = F.count("*").over(Window.partitionBy("band", "key"))
-    idx = (
-        banded(corpus_phash, "corpus_doc", "ph_old")
-        .withColumn("_sz", idx_sz)
-        .filter(F.col("_sz") <= PERCEPTUAL_BUCKET_CAP)
-        .drop("_sz")
-    )
+    idx = cap_buckets(banded(corpus_phash, "corpus_doc", "ph_old"), BAND_BUCKET_CAP)
     ham = F.bit_count(F.col("ph_new").bitwiseXOR(F.col("ph_old")))
-
-    def bkey(col: str, j: int):
-        return F.shiftrightunsigned(F.col(col), 16 * j).bitwiseAND(F.lit(0xFFFF))
 
     # Stateless multi-band collapse: keep the row only if no band
     # BEFORE the joined one also matches — exactly one emit per pair.
     first_band = F.lit(True)
-    for j in range(3):
-        first_band = first_band & (
-            (F.col("band") <= j) | (bkey("ph_new", j) != bkey("ph_old", j))
-        )
+    for j in range(n_bands - 1):
+        new_j, old_j = (band_key(F.col(c), j, n_bands) for c in ("ph_new", "ph_old"))
+        first_band = first_band & ((F.col("band") <= j) | (new_j != old_j))
     # join strategy left to Catalyst (r8 broadcast self-audit): the
     # banded index is ~32 B/doc — BHJ is right while it fits (fixtures,
     # and any corpus under spark.sql.autoBroadcastJoinThreshold) but a

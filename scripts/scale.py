@@ -309,8 +309,9 @@ def multimodal(run: Run, n: int) -> None:
     """The perceptual operators synthesize each asset from doc_id, so
     only the ids matter; every PHASH_CLUSTER-doc family must pair up.
     The hot-bucket leg stamps HOT identical hashes in front of n random
-    ones: PERCEPTUAL_BUCKET_CAP must keep all their pairs out."""
-    from hive_gateway_spark.operators.multimodal import PHASH_CLUSTER as C, banded_hash_pairs
+    ones: BAND_BUCKET_CAP must keep all their pairs out."""
+    from hive_gateway_spark.operators.dedup import banded_hash_pairs
+    from hive_gateway_spark.operators.multimodal import PHASH_CLUSTER as C
 
     sf = run.write("documents", docs_table(["multimodal asset stub"] * n, np.repeat("en", n)))
     expected = (n // C) * (C * (C - 1) // 2)

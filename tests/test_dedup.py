@@ -379,3 +379,103 @@ def test_containment_catches_doc_in_doc_jaccard_misses(spark):
         (r["doc_a"], r["doc_b"]) for r in _jaccard_pairs(t).collect()
     }
     assert (1, 2) not in jacc, jacc
+
+
+def _planted_hashes(seed: int):
+    """Seeded random 64-bit hashes plus planted pairs at every Hamming
+    distance 0..12 (three per distance), as signed bigint rows."""
+    import random
+
+    rng = random.Random(seed)
+    hs = [rng.getrandbits(64) for _ in range(200)]
+    for d in range(13):
+        for _ in range(3):
+            base = rng.getrandbits(64)
+            flip = sum(1 << b for b in rng.sample(range(64), d))
+            hs += [base, base ^ flip]
+    return [(i, h - (1 << 64) if h >= 1 << 63 else h) for i, h in enumerate(hs)]
+
+
+def test_band_join_is_complete_below_band_count(spark):
+    """The shared band join plus Hamming verify finds every pair at
+    distance d < n_bands (pigeonhole: d flipped bits leave one of the
+    n_bands bands untouched): with 8 bands at t = 6 it equals brute
+    force, and with 4 bands at t = 10 it holds every pair at d ≤ 3 and
+    none beyond t."""
+    from collections import Counter
+
+    from hive_gateway_spark.operators.dedup import (
+        BAND_BUCKET_CAP,
+        banded_hash_pairs,
+        hash_bands,
+    )
+
+    rows = _planted_hashes(18)
+    frame = spark.createDataFrame(rows, "doc_id bigint, h bigint")
+    dist = {
+        (a, b): bin((ha ^ hb) & (2**64 - 1)).count("1")
+        for a, ha in rows
+        for b, hb in rows
+        if a < b
+    }
+
+    def brute(t):
+        return {p for p, d in dist.items() if d <= t}
+
+    for n_bands in (8, 4):  # no bucket reaches the cap: nothing is dropped
+        sizes = Counter(
+            (r["band"], r["key"]) for r in hash_bands(frame, "h", n_bands).collect()
+        )
+        assert max(sizes.values()) < BAND_BUCKET_CAP
+
+    def found(t, n_bands, cap):
+        out = banded_hash_pairs(frame, "h", t, n_bands=n_bands, cap=cap).collect()
+        assert all(r["hamming"] == dist[(r["doc_a"], r["doc_b"])] for r in out)
+        return {(r["doc_a"], r["doc_b"]) for r in out}
+
+    assert found(6, 8, None) == brute(6)
+    four = found(10, 4, BAND_BUCKET_CAP)
+    assert brute(3) <= four <= brute(10)
+    assert brute(3) < four  # some pairs past the guarantee still collide
+
+
+def test_one_band_join():
+    """Regrowth guard: one LSH band join for every near-dup family. The
+    window cap over (band, key) lives only in cap_buckets, the 64-bit
+    band shift only in band_key (which hash_bands and the ingest
+    screen read), and the per-family cap constants are gone."""
+    import ast
+    import pathlib
+
+    import hive_gateway_spark
+
+    pkg = pathlib.Path(hive_gateway_spark.__file__).parent
+    windows, shifts = [], []
+    for f in pkg.rglob("*.py"):
+        text = f.read_text()
+        for name in ("_LSH_BUCKET_CAP", "PERCEPTUAL_BUCKET_CAP"):
+            assert name not in text, (f, name)
+        fns = [n for n in ast.parse(text).body if isinstance(n, ast.FunctionDef)]
+        in_fns = 0
+        for fn in fns:
+            seg = ast.get_source_segment(text, fn)
+            hits = seg.count('partitionBy("band"')
+            in_fns += hits
+            windows += [(f.name, fn.name)] * hits
+            shifts += [
+                (f.name, fn.name, ast.get_source_segment(text, node.args[0]))
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("shiftright", "shiftrightunsigned")
+            ]
+        assert in_fns == text.count('partitionBy("band"'), f
+    assert windows == [("dedup.py", "cap_buckets")]
+    # the near-dup modules shift a hash only in band_key, apart from
+    # SimHash's per-bit sums over the shingle hashes
+    near_dup_modules = ("dedup.py", "multimodal.py", "ops.py")
+    near_dup = sorted(s for s in shifts if s[0] in near_dup_modules)
+    assert near_dup == [
+        ("dedup.py", "band_key", "h"),
+        ("dedup.py", "q_dedup_simhash", 'F.col("h")'),
+    ]

@@ -4,7 +4,6 @@ and the honest NotImplementedError on the real codec."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from hive_gateway_spark.operators import multimodal as mm
 from hive_gateway_spark.session import load_tables
@@ -32,24 +31,6 @@ def test_decode_assets_schema_and_determinism(spark, sf_dir):
         doc_id, width, height = row[0], row[1], row[2]
         assert width == meta[doc_id]["width"]
         assert height == meta[doc_id]["height"]
-
-
-def test_resize_and_frame_sample(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    assets = mm.payloads(t)
-    thumbs = mm.resize_assets(assets, 64, 48)
-    rows = thumbs.collect()
-    assert len(rows) == t["documents"].count()
-    assert all(r["width"] == 64 and r["height"] == 48 for r in rows)
-    assert all(len(bytes(r["thumb"])) > 0 for r in rows)
-
-    frames = mm.sample_frames(assets, every_n_bytes=64, max_frames=4)
-    fdf = frames.groupBy("doc_id").agg(F.count("*").alias("n"), F.max("frame_no").alias("mx"))
-    stats = fdf.collect()
-    assert all(1 <= r["n"] <= 4 and r["mx"] == r["n"] - 1 for r in stats)
-    # fan-out joins back 1:N cleanly
-    joined = frames.join(assets.select("doc_id", "source"), "doc_id")
-    assert joined.count() == frames.count()
 
 
 def _ppm(w, h, px):
@@ -760,17 +741,14 @@ def test_image_phash_planted_families(spark, sf_dir):
 def test_perceptual_hot_bucket_is_capped(spark):
     """Thousands of IDENTICAL hashes (one logo stamped on every page —
     the realistic hot key) must NOT quadratically explode the band
-    join: the {PERCEPTUAL_BUCKET_CAP} membership cap drops the
+    join: the {BAND_BUCKET_CAP} membership cap drops the
     degenerate bucket from pair generation entirely, while normal
     small families in the same frame keep full recall (VERDICT r7
     task #3 — the cap the text LSH path already had, applied to the
     perceptual legs)."""
-    from hive_gateway_spark.operators.multimodal import (
-        PERCEPTUAL_BUCKET_CAP,
-        banded_hash_pairs,
-    )
+    from hive_gateway_spark.operators.dedup import BAND_BUCKET_CAP, banded_hash_pairs
 
-    hot_n = PERCEPTUAL_BUCKET_CAP + 200
+    hot_n = BAND_BUCKET_CAP + 200
     rows = [(i, 0x0123456789ABCDEF) for i in range(hot_n)]
     # a healthy 3-doc family on a different hash, Hamming 0
     rows += [(10_000 + i, 0x7EADBEEFCAFE1234) for i in range(3)]
@@ -786,9 +764,9 @@ def test_perceptual_hot_bucket_is_capped(spark):
     }
     # just UNDER the cap still pairs (the cap is a bound, not a mute)
     under = spark.createDataFrame(
-        [(i, 42) for i in range(PERCEPTUAL_BUCKET_CAP)], "doc_id bigint, h bigint"
+        [(i, 42) for i in range(BAND_BUCKET_CAP)], "doc_id bigint, h bigint"
     )
-    n = PERCEPTUAL_BUCKET_CAP
+    n = BAND_BUCKET_CAP
     assert banded_hash_pairs(under, "h", 10).count() == n * (n - 1) // 2
 
 

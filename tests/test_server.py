@@ -218,3 +218,18 @@ def test_rejections_are_logged(gateway):
     rpc(gateway.port, "nope", "x", token="rej-log-tok")
     assert len(gateway.log) > before
     assert gateway.log[-1]["status"] == 404
+
+
+def test_request_log_is_bounded(spark, sf_dir):
+    """A long-lived server keeps the newest LOG_MAXLEN calls, not one
+    log entry per call ever made."""
+    from hive_gateway_spark.server import LOG_MAXLEN
+
+    srv = GatewayServer(spark, sf_dir)
+    try:
+        for i in range(LOG_MAXLEN + 1):
+            srv._log_call("query", f"q{i}", "session", 200, 0.0)
+        assert len(srv.log) == LOG_MAXLEN
+        assert srv.log[-1]["fun"] == f"q{LOG_MAXLEN}"
+    finally:
+        srv._httpd.server_close()
